@@ -3,8 +3,9 @@
 Mirrors the reference's Python surface
 (reference: python/pyspark_iforest/ml/iforest.py:11-361) over the
 ``graft.iforest`` Scala classes via pyspark's Java wrapper machinery,
-plus thin wrappers for the beyond-reference pipeline operators (dedup,
-near-dup clustering, splits, ANN) in :mod:`graft_iforest.pipeline`.
+plus :mod:`graft_iforest.pipeline`, a generic Py4J dispatch to the
+beyond-reference pipeline operators (dedup, near-dup clustering, splits,
+ANN, the incremental stores) with named aliases for the common verbs.
 """
 
 from graft_iforest.iforest import IForest, IForestModel, IForestSummary

@@ -615,6 +615,16 @@ def main():
     # happened to contain the expected substring must not self-satisfy
     assert raised, "unknown query name did not raise"
 
+    # --- the generic dispatch names a target that does not resolve ---
+    call_error = None
+    try:
+        gp.call(spark, "queries.NoSuchStore.absorb", sf_dir)
+    except Exception as e:
+        call_error = str(e)
+    assert call_error is not None and \
+        "graft.queries.NoSuchStore.absorb" in call_error, \
+        f"unknown call target did not raise naming it: {call_error!r}"
+
     print("PY_PIPELINE_OK docs=%d dedup_groups=%d multi_clusters=%d ann_rows=%d "
           "persisted_rows=%d mix_kept=%d mix_nogate=%d mix_cap2=%d take_rows=%d"
           % (n_docs, len(dedup), multi, len(ann), len(appended), len(mix),

@@ -3,19 +3,20 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
- * Py4J-friendly facade over the pipeline operators for the Python wrapper
- * (python/graft_iforest/pipeline.py). The Scala query surface is a
- * `Map[String, (SparkSession, String) => DataFrame]` — idiomatic from
- * Scala, but Scala function values and Maps are awkward through a Py4J
- * gateway, so this object exposes plain methods with JVM-native
- * signatures. Returned DataFrames are handed back as their Java peers and
- * re-wrapped on the Python side; execution stays entirely in the JVM.
+ * The JVM half of the Python pipeline access (python/graft_iforest/
+ * pipeline.py). Python reaches the library's Scala objects directly
+ * through `pipeline.call`, which resolves `graft.<Object>.<method>` over
+ * Py4J and invokes its static forwarder, so a plain forwarding method
+ * here would only repeat the library. What stays are the verbs Py4J
+ * cannot express in one call: the named-query map (a Scala `Map` of
+ * function values), parallel arrays into tuples, `Seq` results returned
+ * as arrays, and verbs that build their input slice before delegating.
  */
 object PipelineBridge {
 
   /** Run any named query from [[SparkEntry.queries]] against a data dir;
     * throws with the known names on a typo instead of a bare None.get. */
-  def query(s: SparkSession, name: String, dir: String): DataFrame =
+  def query(s: SparkSession, dir: String, name: String): DataFrame =
     SparkEntry.queries.getOrElse(name,
       throw new IllegalArgumentException(
         s"unknown query '$name' — known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
@@ -23,149 +24,10 @@ object PipelineBridge {
 
   def queryNames(): Array[String] = SparkEntry.queries.keys.toSeq.sorted.toArray
 
-  // Explicit ANN entry points (the knobs matter more than for the fixed
-  // queries map, and Python callers shouldn't need the defaults baked
-  // into q31/q49).
-  def annLshTopK(s: SparkSession, dir: String, numProbes: Int, k: Int): DataFrame =
-    similarity.AnnLsh.annTopK(s, dir, numProbes = numProbes, k = k)
-
-  def annIvfTopK(s: SparkSession, dir: String, numProbes: Int, k: Int): DataFrame =
-    similarity.AnnIvf.annTopK(s, dir, numProbes = numProbes, k = k)
-
-  /** Product-quantization variant (q130). rerank <= 0 resolves to the
-    * corpus-adaptive n/16 pool — see [[similarity.AnnPq]]. */
-  def annPqTopK(s: SparkSession, dir: String, numProbes: Int, k: Int,
-      rerank: Int): DataFrame =
-    similarity.AnnPq.annTopK(s, dir, numProbes = numProbes, k = k, rerank = rerank)
-
-  /** Composed IVF-PQ variant (q137): coarse-list pruning + residual ADC
-    * scoring + exact re-rank — see [[similarity.AnnIvfPq]]. */
-  def annIvfPqTopK(s: SparkSession, dir: String, numProbes: Int, k: Int): DataFrame =
-    similarity.AnnIvfPq.annTopK(s, dir, numProbes = numProbes, k = k)
-
-  // --- Persisted/appendable ANN index tier (the q58/q59 deployment
-  // shape: the index lives next to the data, query sessions validate and
-  // load instead of rebuilding). Explicit build/append/probe methods for
-  // callers managing index lifecycle themselves, plus the
-  // build-if-absent-or-stale probes with the append-first heal — the
-  // exact tiering SparkEntry's bench surface runs. ---
-
-  /** Build (or rebuild) the LSH index for `dir`'s embeddings at `path`. */
-  def buildLshIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.saveLsh(s, dir, path)
-
-  /** Build (or rebuild) the IVF index — geometry trained on the current
-    * corpus, trainedRows recorded for the append drift bound. */
-  def buildIvfIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.saveIvf(s, dir, path)
-
-  /** Incrementally index ONLY the corpus rows added since the last
-    * build/append (cost proportional to the added data); throws when the
-    * change was not a pure add — callers rebuild. */
-  def appendLshIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.appendLsh(s, dir, path)
-
-  /** IVF append — additionally refuses once the corpus outgrows the
-    * geometry's measured drift bound (see AnnIndex.ivfDriftBound). */
-  def appendIvfIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.appendIvf(s, dir, path)
-
-  /** Non-throwing probe: index exists, fully committed, fingerprint
-    * matches the live corpus. */
-  def isIndexCurrent(s: SparkSession, dir: String, path: String): Boolean =
-    similarity.AnnIndex.isCurrent(s, dir, path)
-
-  /** Top-k from the persisted LSH index with build-if-absent-or-stale
-    * semantics: loads and validates; on a stale/missing index appends
-    * first (when the corpus merely grew), rebuilds otherwise; a transient
-    * failure over a CURRENT index re-raises instead of healing. */
-  def persistedLshTopK(s: SparkSession, dir: String, path: String,
-      numProbes: Int, k: Int): DataFrame =
-    SparkEntry.buildIfStale(
-      similarity.AnnIndex.definitelyStale(s, dir, path),
-      similarity.AnnIndex.appendLsh(s, dir, path),
-      similarity.AnnIndex.saveLsh(s, dir, path))(
-      similarity.AnnIndex.lshTopK(s, dir, path, numProbes = numProbes, k = k))
-
-  /** IVF twin of [[persistedLshTopK]]. */
-  def persistedIvfTopK(s: SparkSession, dir: String, path: String,
-      numProbes: Int, k: Int): DataFrame =
-    SparkEntry.buildIfStale(
-      similarity.AnnIndex.definitelyStale(s, dir, path),
-      similarity.AnnIndex.appendIvf(s, dir, path),
-      similarity.AnnIndex.saveIvf(s, dir, path))(
-      similarity.AnnIndex.ivfTopK(s, dir, path, numProbes = numProbes, k = k))
-
-  /** Build (or rebuild) the PQ index — codes + codebooks persisted, the
-    * memory-bound tier's whole point (see AnnIndex.savePq). */
-  def buildPqIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.savePq(s, dir, path)
-
-  /** PQ append — encodes new rows against the FROZEN codebooks; refuses
-    * once the corpus outgrows 1.5x the training size (the measured
-    * pqdrift knee, see AnnIndex.pqDriftBound). */
-  def appendPqIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.appendPq(s, dir, path)
-
-  /** PQ twin of [[persistedLshTopK]] (the q133 surface). */
-  def persistedPqTopK(s: SparkSession, dir: String, path: String,
-      numProbes: Int, k: Int): DataFrame =
-    SparkEntry.buildIfStale(
-      similarity.AnnIndex.definitelyStale(s, dir, path),
-      similarity.AnnIndex.appendPq(s, dir, path),
-      similarity.AnnIndex.savePq(s, dir, path))(
-      similarity.AnnIndex.pqTopK(s, dir, path, numProbes = numProbes, k = k))
-
-  /** Build (or rebuild) the composed IVF-PQ index (q138's artifact). */
-  def buildIvfPqIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.saveIvfPq(s, dir, path)
-
-  /** IVF-PQ append — bounded at the coarse geometry's 1.25x knee. */
-  def appendIvfPqIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.appendIvfPq(s, dir, path)
-
-  /** IVF-PQ twin of [[persistedLshTopK]] (the q138 surface). */
-  def persistedIvfPqTopK(s: SparkSession, dir: String, path: String,
-      numProbes: Int, k: Int): DataFrame =
-    SparkEntry.buildIfStale(
-      similarity.AnnIndex.definitelyStale(s, dir, path),
-      similarity.AnnIndex.appendIvfPq(s, dir, path),
-      similarity.AnnIndex.saveIvfPq(s, dir, path))(
-      similarity.AnnIndex.ivfPqTopK(s, dir, path, numProbes = numProbes, k = k))
-
-  // --- Parameterized mix-shaping surface (the q73/q76 builders with the
-  // compile-time constants as arguments; defaults on the Scala side are
-  // the oracled values, so the named-query path is unchanged — Python
-  // callers pass all knobs explicitly because Py4J sees no defaults). ---
-
-  /** The q73 end-to-end training-mix pipeline with deployment-tunable
-    * gates: quality floor (quality_e4 units, oracled 6100), repetition
-    * threshold (char-coverage fraction, oracled 0.10), per-(lang, source)
-    * cap (oracled 5). */
-  def mixPipeline(s: SparkSession, dir: String, minQualityE4: Long,
-      repThreshold: Double, capK: Int): DataFrame =
-    queries.TextPipeline.mixPipeline(s, dir, minQualityE4, repThreshold, capK)
-
-  /** The q76 temperature-weighted token take with a caller-chosen total
-    * token budget (oracled 15,000): per-language budget_l = half-up
-    * weight_l x totalBudget, documents taken in deterministic md5-hash
-    * order while each language's running token total fits its budget. */
-  def weightedTake(s: SparkSession, dir: String, totalBudget: Long): DataFrame =
-    queries.TextPipeline.weightedTake(s, dir, totalBudget)
-
-  /** The q78 full mixture materialization: [[mixPipeline]]'s survivors fed
-    * into the weighted budgeted take, all four knobs tunable (defaults =
-    * the oracled constants; weights computed over SURVIVOR language
-    * counts, budget denominated in BPE tokens). */
-  def mixTake(s: SparkSession, dir: String, minQualityE4: Long,
-      repThreshold: Double, capK: Int, totalBudget: Long): DataFrame =
-    queries.TextPipeline.mixTake(s, dir, minQualityE4, repThreshold, capK,
-      totalBudget)
-
   /** The q79 redaction chain over the RAW documents table with a
     * caller-chosen pattern set: parallel arrays of (category name, Java
     * regex, replacement token), applied in order, per-category counts +
-    * residual re-scan in the output. Py4J-friendly (no Scala tuples). */
+    * residual re-scan in the output. */
   def scrub(s: SparkSession, dir: String, names: Array[String],
       patterns: Array[String], replacements: Array[String]): DataFrame = {
     require(names.length == patterns.length && names.length == replacements.length,
@@ -175,397 +37,45 @@ object PipelineBridge {
       names.toSeq.lazyZip(patterns.toSeq).lazyZip(replacements.toSeq).map((_, _, _)))
   }
 
-  // --- Incremental-dedup index lifecycle (the q84 deployment shape:
-  // fingerprint the corpus once, judge each incoming batch against the
-  // store, absorb the kept docs so the next batch sees them). ---
-
-  /** Fingerprint the corpus slice into the persisted dedup index;
-    * returns the index path. */
-  def buildDedupIndex(s: SparkSession, dir: String): String =
-    queries.DedupIndex.build(s, dir)
-
-  /** Judge the delta slice against the store: one row per delta doc with
-    * exact/near/unique verdict and the matching evidence. Pure read of
-    * the store. */
-  def dedupDeltaVerdicts(s: SparkSession, dir: String): DataFrame =
-    queries.DedupIndex.deltaVerdicts(s, dir)
-
-  /** The same judge run as a STREAM over the delta (stream-static joins
-    * against the store, in-row minhash signatures) — bit-equal to
-    * [[dedupDeltaVerdicts]]. */
-  def dedupStreamDeltaVerdicts(s: SparkSession, dir: String): DataFrame =
-    queries.DedupIndex.streamDeltaVerdicts(s, dir)
-
-  /** True iff the dedup store exists, matches the live corpus content,
-    * and has not been extended by an absorb. */
-  def isDedupIndexCurrent(s: SparkSession, dir: String): Boolean =
-    queries.DedupIndex.isCurrent(s, dir)
-
-  /** Build the dedup store only when missing/stale/absorbed-into. */
-  def buildDedupIndexIfStale(s: SparkSession, dir: String): String =
-    queries.DedupIndex.buildIfStale(s, dir)
-
-  /** Append the judged delta's kept ('unique') docs into the store. */
-  def absorbDedupDelta(s: SparkSession, dir: String): Unit =
-    queries.DedupIndex.absorb(s, dir)
-
-  /** Rewrite the absorb layers into one coalesced file set per store
-    * table — semantics-preserving (q143's oracled contract). */
-  def compactDedupIndex(s: SparkSession, dir: String): Unit =
-    queries.DedupIndex.compact(s, dir)
-
-  // --- Incremental-stats store lifecycle (q107: persisted moment-sum
-  // partials per (lang, source), merged with each batch's own partials —
-  // the O(batch) stats refresh). ---
-
-  /** Aggregate the corpus slice into persisted moment-sum partials;
-    * returns the store path. */
-  def buildStatsStore(s: SparkSession, dir: String): String =
-    queries.StatsStore.build(s, dir)
-
-  /** True iff the stats store exists and matches the live corpus. */
-  def isStatsStoreCurrent(s: SparkSession, dir: String): Boolean =
-    queries.StatsStore.isCurrent(s, dir)
-
-  /** Build the stats store only when missing or stale. */
-  def buildStatsStoreIfStale(s: SparkSession, dir: String): String =
-    queries.StatsStore.buildIfStale(s, dir)
-
-  /** Persisted corpus partials merged with the live delta's partials —
-    * finalized per-(lang, source) stats, exactly equal to a full
-    * recompute (integer moment sums). */
-  def mergedStats(s: SparkSession, dir: String): DataFrame =
-    queries.StatsStore.mergedStats(s, dir)
-
-  /** Append the delta's partials into the stats store permanently; the
-    * store then covers corpus ∪ delta on its own. */
-  def absorbStatsDelta(s: SparkSession, dir: String): Unit =
-    queries.StatsStore.absorb(s, dir)
-
-  /** Finalized stats from the store alone (no live delta read). */
-  def storedStats(s: SparkSession, dir: String): DataFrame =
-    queries.StatsStore.storedStats(s, dir)
-
-  /** Collapse the stats store's absorb layers to one row per group —
-    * stored stats are unchanged (q145's oracled contract). */
-  def compactStatsStore(s: SparkSession, dir: String): Unit =
-    queries.StatsStore.compact(s, dir)
-
-  // --- Batch-tagged retention store (q146): the expire verb. ---
-
-  /** Corpus partials tagged as epoch 0; returns the store path. */
-  def buildTaggedStatsStore(s: SparkSession, dir: String): String =
-    queries.StatsStore.buildTagged(s, dir)
-
-  /** Absorb the delta slice's partials as the given epoch. */
-  def absorbStatsEpoch(s: SparkSession, dir: String, epoch: Long): Unit =
-    queries.StatsStore.absorbBatch(s, dir,
-      queries.Tables.t(s, dir, "documents").where("doc_id % 10 >= 7"), epoch)
-
-  /** Drop every layer with epoch < keepFrom (retention window). */
-  def expireStatsEpochs(s: SparkSession, dir: String, keepFrom: Long): Unit =
-    queries.StatsStore.expire(s, dir, keepFrom)
-
-  /** Finalized stats from the tagged store's surviving epochs. */
-  def taggedStoredStats(s: SparkSession, dir: String): DataFrame =
-    queries.StatsStore.storedStats(s, dir, "rt")
-
-  // --- Time travel (q148) + changelog (q149) on the tagged store. ---
-
-  /** Stats as they stood after `epoch` — a layer filter, no snapshots.
-    * Ensures the tagged store first (build-once, fingerprint-guarded). */
+  /** Stats as they stood after `epoch` (q148) — a layer filter, no
+    * snapshots. Ensures the tagged store first (build-once,
+    * fingerprint-guarded). */
   def statsAsOf(s: SparkSession, dir: String, epoch: Long): DataFrame = {
     queries.StatsStore.ensureTagged(s, dir)
     queries.StatsStore.statsAsOf(s, dir, epoch)
   }
 
-  /** The stats contribution of epochs (from, to] alone — the diff read. */
+  /** The stats contribution of epochs (from, to] alone (q149). */
   def statsChanges(s: SparkSession, dir: String, from: Long, to: Long): DataFrame = {
     queries.StatsStore.ensureTagged(s, dir)
     queries.StatsStore.statsChanges(s, dir, from, to)
   }
 
-  // --- Transactional cross-store absorb (q147). ---
-
-  /** Drop all transactions (layers + commit log). */
-  def txReset(s: SparkSession, dir: String): Unit =
-    queries.StoreTxn.reset(s, dir)
-
-  /** Build the immutable base stores if missing/stale. */
-  def txEnsureBases(s: SparkSession, dir: String): Unit =
-    queries.StoreTxn.ensureBases(s, dir)
-
-  /** Atomically absorb the delta slice into BOTH stores (stage layers,
-    * then the one-row commit); returns the transaction id. */
+  /** Atomically absorb the delta slice into BOTH the dedup and stats
+    * stores (stage layers, then the one-row commit, q147); returns the
+    * transaction id. */
   def txAbsorbDelta(s: SparkSession, dir: String): Long =
     queries.StoreTxn.absorbBoth(s, dir,
       queries.DedupIndex.deltaDocs(s, dir),
       queries.Tables.t(s, dir, "documents").where("doc_id % 10 >= 7"))
 
-  /** Kept-document ids from base ∪ committed transaction layers. */
-  def txKeeperIds(s: SparkSession, dir: String): DataFrame =
-    queries.StoreTxn.keeperIdsTx(s, dir)
-
-  /** Finalized stats from base ∪ committed transaction layers. */
-  def txStoredStats(s: SparkSession, dir: String): DataFrame =
-    queries.StoreTxn.storedStatsTx(s, dir)
-
-  /** q83's vocabulary coverage from base ∪ committed transaction layers. */
-  def txVocabCoverage(s: SparkSession, dir: String): DataFrame =
-    queries.StoreTxn.vocabCoverageTx(s, dir)
-
-  /** Stats as of transaction `maxTxn` — log-prefix time travel, the
-    * cross-store-consistent historical read. */
-  def txStatsAsOf(s: SparkSession, dir: String, maxTxn: Long): DataFrame =
-    queries.StoreTxn.storedStatsTxAsOf(s, dir, maxTxn)
-
-  /** Fold every committed transaction layer into the base stores and
-    * truncate the commit log (the protocol's compaction verb). */
   /** Reclaim orphaned transaction staging (abandoned uncommitted t<id>
     * dirs + pre-marker checkpoint staging); returns reclaimed txn ids. */
   def txVacuum(s: SparkSession, dir: String): Array[Long] =
     queries.StoreTxn.vacuum(s, dir).toArray
 
-  def txCheckpoint(s: SparkSession, dir: String): Unit =
-    queries.StoreTxn.checkpoint(s, dir)
-
-  // --- Incremental graph-edge store (q150/q152). ---
-
-  /** Build the corpus co-purchase edge store if missing/stale. */
-  def buildGraphStoreIfStale(s: SparkSession, dir: String): String =
-    queries.GraphStore.buildIfStale(s, dir)
-
-  /** Absorb the delta orders' pair aggregation as a layer. */
-  def absorbGraphDelta(s: SparkSession, dir: String): Unit =
-    queries.GraphStore.absorb(s, dir)
-
-  /** The merged (a, b, w) edge list from the store alone. */
-  def graphStoreEdges(s: SparkSession, dir: String): DataFrame =
-    queries.GraphStore.mergedEdges(s, dir)
-
-  /** Collapse the edge store's layers to one row per pair (the additive
-    * merge is the compaction; reads are unchanged — q152's contract). */
-  def compactGraphStore(s: SparkSession, dir: String): Unit =
-    queries.GraphStore.compact(s, dir)
-
-  // --- Mergeable distinct-count store (q154): bitmap occupancy. ---
-
-  /** Build the corpus's occupied-bucket set if missing/stale. */
-  def buildDistinctStoreIfStale(s: SparkSession, dir: String): String =
-    queries.StatsStore.buildLcIfStale(s, dir)
-
-  /** Absorb the delta events' occupied buckets (union-merged layer). */
-  def absorbDistinctDelta(s: SparkSession, dir: String): Unit =
-    queries.StatsStore.absorbLc(s, dir)
-
-  /** Per-event-type bucket occupancy from the store alone (the linear-
-    * counting statistic; estimate = -m ln(1 - V/m) downstream). */
-  def distinctOccupancy(s: SparkSession, dir: String): DataFrame =
-    queries.StatsStore.lcOccupancy(s, dir)
-
-  // --- Persisted benchmark-decontamination store (q153). ---
-
-  /** Build the benchmark fingerprint store (tranche A) if missing/stale. */
-  def buildDecontamIndexIfStale(s: SparkSession, dir: String): String =
-    queries.DecontamIndex.buildIfStale(s, dir)
-
-  /** A new benchmark suite ships: absorb its fingerprints (tranche B). */
-  def absorbDecontamBench(s: SparkSession, dir: String): Unit =
-    queries.DecontamIndex.absorb(s, dir)
-
-  /** Judge a (doc_id, text) frame against the persisted benchmark
-    * fingerprints: a doc flags when it CONTAINS some benchmark doc (shared
-    * distinct fps >= half that bench doc's fingerprint set). */
-  def decontamJudge(s: SparkSession, dir: String, batch: DataFrame): DataFrame =
-    queries.DecontamIndex.judgeDocs(s, dir, batch)
-
-  /** q106's PageRank over the nation trade graph (fixed-point integer
-    * ranks, exact across engines). */
-  def pagerank(s: SparkSession, dir: String): DataFrame =
-    queries.Graph.pagerank(s, dir)
-
-  // --- ANN index compaction (one verb per persisted tier): collapse
-  // append layers under assignments/ into a few coalesced files;
-  // bit-identical answers before/after (AnnIndexSpec). ---
-
-  def compactLshIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.compactLsh(s, dir, path)
-
-  def compactIvfIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.compactIvf(s, dir, path)
-
-  def compactPqIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.compactPq(s, dir, path)
-
-  def compactIvfPqIndex(s: SparkSession, dir: String, path: String): Unit =
-    similarity.AnnIndex.compactIvfPq(s, dir, path)
-
-  // --- Incremental vocabulary store (q83/q140/q144). ---
-
-  /** Build the corpus word-count partials if missing/stale. */
-  def buildVocabStoreIfStale(s: SparkSession, dir: String): String =
-    queries.VocabStore.buildIfStale(s, dir)
-
-  /** Absorb the delta's word counts as an additive layer. */
-  def absorbVocabDelta(s: SparkSession, dir: String): Unit =
-    queries.VocabStore.absorb(s, dir)
-
-  /** q83's top-25 coverage read from the store alone. */
-  def vocabCoverage(s: SparkSession, dir: String): DataFrame =
-    queries.VocabStore.coverage(s, dir)
-
-  /** The frozen top-`k` tokenizer vocabulary from the store. */
-  def vocabWords(s: SparkSession, dir: String, k: Int): DataFrame =
-    queries.VocabStore.vocabWords(s, dir, k = k)
-
-  /** q144's per-language OOV drift gate of the delta vs the frozen
-    * vocabulary. */
-  def vocabOovRates(s: SparkSession, dir: String): DataFrame =
-    queries.VocabStore.oovRates(s, dir)
-
-  /** Collapse the vocab store's layers to one row per word. */
-  def compactVocabStore(s: SparkSession, dir: String): Unit =
-    queries.VocabStore.compact(s, dir)
-
-  // --- Incremental embedding-dedup store (q141/q142). ---
-
-  /** Build the corpus sign-bucket index if missing/stale. */
-  def buildEmbedIndexIfStale(s: SparkSession, dir: String): String =
-    queries.EmbedIndex.buildIfStale(s, dir)
-
-  /** Judge the canonical delta slice against the persisted index. */
-  def embedDeltaVerdicts(s: SparkSession, dir: String): DataFrame =
-    queries.EmbedIndex.deltaVerdicts(s, dir)
-
-  /** The q142 lifecycle's batch frames — (vec_id, e, bucket) with the
-    * planted duplicates — so Python callers can drive judge/absorb
-    * without rebuilding the bucketing arithmetic clientside. */
-  def embedBatch1(s: SparkSession, dir: String): DataFrame =
-    queries.EmbedIndex.batch1Vecs(s, dir)
-
-  def embedBatch2(s: SparkSession, dir: String): DataFrame =
-    queries.EmbedIndex.batch2Vecs(s, dir)
-
-  /** Judge an arbitrary (vec_id, e, bucket) frame against the index. */
-  def embedJudge(s: SparkSession, dir: String, batch: DataFrame): DataFrame =
-    queries.EmbedIndex.judgeVecs(s, dir, batch)
-
-  /** Absorb a judged batch's unique survivors into the index. */
-  def absorbEmbedBatch(s: SparkSession, dir: String, batch: DataFrame): Unit =
-    queries.EmbedIndex.absorbVecs(s, dir, batch)
-
-  /** Collapse the bucket index's absorb layers (judge-invisible). */
-  def compactEmbedIndex(s: SparkSession, dir: String): Unit =
-    queries.EmbedIndex.compact(s, dir)
-
-  // --- Persisted inverted-index search store (q181/q182/q185/q186). ---
-
-  /** Build the positional postings index if missing/stale. */
-  def buildSearchStoreIfStale(s: SparkSession, dir: String): String =
-    queries.SearchStore.buildIfStale(s, dir)
-
-  /** Append the delta's postings + stat partial (union merge). */
-  def absorbSearchDelta(s: SparkSession, dir: String): Unit =
-    queries.SearchStore.absorb(s, dir)
-
-  /** q99's BM25 top-10 answered from the index alone. */
-  def searchBm25(s: SparkSession, dir: String): DataFrame =
-    queries.SearchStore.bm25(s, dir)
-
-  /** Positional phrase search ("a immediately followed by b"). */
-  def searchPhrase(s: SparkSession, dir: String, a: String, b: String): DataFrame =
-    queries.SearchStore.phrase(s, dir, a, b)
-
-  /** Proximity-boosted composed ranking (q213): BM25 OR-candidates
-    * re-ranked by the exact-bigram adjacency boost BEFORE the top-10
-    * cut — both legs off one pruned postings scan. */
-  def proximitySearch(s: SparkSession, dir: String): DataFrame =
-    queries.SearchStore.proximityBm25(s, dir)
-
-  /** Fold appended posting layers, one file per term bucket. */
-  def compactSearchStore(s: SparkSession, dir: String): Unit =
-    queries.SearchStore.compact(s, dir)
-
-  /** Build/guard the search tier's immutable tx base (q185). */
-  def txEnsureSearchBase(s: SparkSession, dir: String): Unit =
-    queries.StoreTxn.ensureSearchBase(s, dir)
-
   /** Atomically absorb one doc tranche's postings + stats as a
-    * transaction; returns the txn id. */
+    * transaction (q185); returns the txn id. */
   def txAbsorbSearch(s: SparkSession, dir: String, tranchePred: String): Long =
     queries.StoreTxn.absorbSearch(s, dir,
       queries.Tables.t(s, dir, "documents").where(tranchePred))
 
-  /** BM25 off the transactional index (base ∪ committed layers). */
-  def txSearchBm25(s: SparkSession, dir: String): DataFrame =
-    queries.StoreTxn.bm25Tx(s, dir)
-
-  // --- Zone-map data-skipping store (q183). ---
-
-  /** Cluster + zone the base slice if missing/stale. */
-  def buildZoneMapStoreIfStale(s: SparkSession, dir: String): String =
-    queries.ZoneMapStore.buildIfStale(s, dir)
-
-  /** Append the delta's files and zone only the new ones. */
-  def absorbZoneMapDelta(s: SparkSession, dir: String): Unit =
-    queries.ZoneMapStore.absorb(s, dir)
-
-  /** The zone-pruned range aggregate (q183's read). */
-  def zoneMapRangeAggregate(s: SparkSession, dir: String): DataFrame =
-    queries.ZoneMapStore.rangeAggregate(s, dir)
-
-  /** Re-range overlapping absorbed files back to disjoint zones. */
-  def reclusterZoneMap(s: SparkSession, dir: String): Unit =
-    queries.ZoneMapStore.recluster(s, dir)
-
-  // --- Transactional table verbs (q191-q194). ---
-
-  /** Build/guard the table tier's clustered transactional base. */
-  def txEnsureZoneBase(s: SparkSession, dir: String): Unit =
-    queries.StoreTxn.ensureZoneBase(s, dir)
-
   /** Atomically append one order tranche (data files + manifest rows
-    * behind one commit row); returns the txn id. */
+    * behind one commit row, q191); returns the txn id. */
   def txAbsorbTableAppend(s: SparkSession, dir: String,
       tranchePred: String): Long =
     queries.StoreTxn.absorbTableAppend(s, dir,
       queries.Tables.t(s, dir, "orders").where(tranchePred))
-
-  /** Atomically retire a key slice as a delete-vector commit. */
-  def txAbsorbTableDelete(s: SparkSession, dir: String, pred: String): Long =
-    queries.StoreTxn.absorbTableDelete(s, dir, pred)
-
-  /** The range aggregate over the committed manifest minus the
-    * committed delete vector. */
-  def txTableRangeAggregate(s: SparkSession, dir: String): DataFrame =
-    queries.StoreTxn.tableRangeAggregateTx(s, dir)
-
-  /** The same read as of transaction `maxTxn` (snapshot time travel). */
-  def txTableRangeAggregateAsOf(s: SparkSession, dir: String,
-      maxTxn: Long): DataFrame =
-    queries.StoreTxn.tableRangeAggregateTxAsOf(s, dir, maxTxn)
-
-  /** Reclaim layout files no manifest references; returns their paths. */
-  def txVacuumTable(s: SparkSession, dir: String): Array[String] =
-    queries.StoreTxn.vacuumTable(s, dir).toArray
-
-  /** MERGE INTO as one transaction: delete the matching keys + append
-    * the replacing rows at the same sequence number; returns the id.
-    * `setExpr` is a SQL expression for the replacement o_totalprice. */
-  def txAbsorbTableUpsert(s: SparkSession, dir: String, pred: String,
-      setExpr: String): Long =
-    queries.StoreTxn.absorbTableUpsert(s, dir, pred,
-      queries.Tables.t(s, dir, "orders").where(pred)
-        .withColumn("o_totalprice",
-          org.apache.spark.sql.functions.expr(setExpr)))
-
-  /** Per-transaction rows-added / keys-deleted from the log alone. */
-  def txTableChangelog(s: SparkSession, dir: String): DataFrame =
-    queries.StoreTxn.tableChangelogTx(s, dir)
-
-  /** BM25 as of transaction `maxTxn` (q197 search time travel). */
-  def txSearchBm25AsOf(s: SparkSession, dir: String, maxTxn: Long): DataFrame =
-    queries.StoreTxn.bm25TxAsOf(s, dir, maxTxn)
 
   /** INSERT OVERWRITE: swap the table content for the tranche (q198). */
   def txAbsorbTableReplace(s: SparkSession, dir: String,
@@ -573,188 +83,19 @@ object PipelineBridge {
     queries.StoreTxn.absorbTableReplace(s, dir,
       queries.Tables.t(s, dir, "orders").where(tranchePred))
 
-  /** The incremental materialized view's read (q203). */
-  def txMatView(s: SparkSession, dir: String): DataFrame =
-    queries.StoreTxn.matViewTx(s, dir)
-
-  // --- Data-governance audits (q199-q202). ---
-
-  /** The one-scan expectations contract report. */
-  def auditExpectations(s: SparkSession, dir: String): DataFrame =
-    queries.Audit.expectations(s, dir)
-
-  /** Quasi-identifier groups below the anonymity threshold. */
-  def auditKAnonymity(s: SparkSession, dir: String, k: Int): DataFrame =
-    queries.Audit.kAnonymity(s, dir, k)
-
-  /** Orphan-foreign-key counts across the star schema. */
-  def auditFk(s: SparkSession, dir: String): DataFrame =
-    queries.Audit.fkAudit(s, dir)
-
-  // --- Ingest-pair transaction verbs (q162/q163): graph edge partials
-  // and embed bucket rows land under ONE commit row. ---
-
-  /** Build/guard the ingest pair's immutable tx bases (graph edges +
-    * embed buckets) — required before the first txAbsorbIngest. */
-  def txEnsureIngestBases(s: SparkSession, dir: String): Unit =
-    queries.StoreTxn.ensureIngestBases(s, dir)
+  /** Reclaim layout files no manifest references; returns their paths. */
+  def txVacuumTable(s: SparkSession, dir: String): Array[String] =
+    queries.StoreTxn.vacuumTable(s, dir).toArray
 
   /** Atomically absorb the delta orders' graph pairs and embed batch 1's
-    * unique survivors as one transaction; returns the txn id. */
+    * unique survivors as one transaction (q162/q163); returns the txn id. */
   def txAbsorbIngest(s: SparkSession, dir: String): Long =
     queries.StoreTxn.absorbIngest(s, dir,
       queries.EmbedIndex.batch1Vecs(s, dir))
-
-  /** The merged co-purchase edges over the transactional state. */
-  def txMergedEdges(s: SparkSession, dir: String): DataFrame =
-    queries.StoreTxn.mergedEdgesTx(s, dir)
 
   /** Judge embed batch 2 against the transactional index (base ∪
     * committed layers) — q142's verdicts when batch 1 rode a txn. */
   def txJudgeEmbedBatch2(s: SparkSession, dir: String): DataFrame =
     queries.StoreTxn.judgeEmbedTx(s, dir,
       queries.EmbedIndex.batch2Vecs(s, dir))
-
-  /** Build/guard the transactional ANN tier's base (q169) — required
-    * before the first withAnn ingest absorb. */
-  def txEnsureAnnBase(s: SparkSession, dir: String): Unit =
-    queries.StoreTxn.ensureAnnBase(s, dir)
-
-  /** Atomically absorb ingest tick 1 or 2 (embed batch + its order
-    * tranche's graph pairs), optionally landing the tick's survivors in
-    * the transactional ANN index too; returns the txn id. */
-  def txAbsorbIngestTick(s: SparkSession, dir: String, tick: Int,
-      withAnn: Boolean): Long =
-    queries.StoreTxn.absorbIngestTick(s, dir, tick, withAnn)
-
-  /** q54-geometry top-k probes against the transactional ANN index
-    * (base ∪ committed layers) — q169's terminal read. */
-  def txAnnTopK(s: SparkSession, dir: String): DataFrame =
-    queries.StoreTxn.annTopKTx(s, dir)
-
-  // --- Mergeable sketch store verbs (q170/q171/q175) ---
-
-  /** Build the count-min + candidate store from the corpus slice if its
-    * fingerprint is stale; returns the store root. */
-  def buildCmsIfStale(s: SparkSession, dir: String): String =
-    queries.SketchStore.buildCmsIfStale(s, dir)
-
-  /** Append the delta's counter + candidate layers (additive merge). */
-  def absorbCmsDelta(s: SparkSession, dir: String): Unit =
-    queries.SketchStore.absorbCms(s, dir)
-
-  /** Top-20 heavy-hitter estimates from the store alone. */
-  def cmsHeavyHitters(s: SparkSession, dir: String): DataFrame =
-    queries.SketchStore.heavyHitters(s, dir)
-
-  /** Rebuild the bottom-k sample store's corpus layer. */
-  def buildKmvStore(s: SparkSession, dir: String): Unit =
-    queries.SketchStore.buildKmv(s, dir)
-
-  /** Append the delta's bottom-k layer. */
-  def absorbKmvDelta(s: SparkSession, dir: String): Unit =
-    queries.SketchStore.absorbKmv(s, dir)
-
-  /** The merged bottom-64 sample — exactly the global bottom-k. */
-  def kmvSample(s: SparkSession, dir: String): DataFrame =
-    queries.SketchStore.kmvSample(s, dir)
-
-  // --- Verified-ML family (q207-q210): exactly-replayable training
-  // passes — each returns the same ledger/matrix the oracled queries
-  // pin, so a Python caller gets the cross-engine-verified shapes. ---
-
-  /** Two Lloyd's rounds over the embeddings, k = 4 deterministic init;
-    * (cid, n_members, cent_sum) per cluster. */
-  def mlKmeans(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.kmeans(s, dir)
-
-  /** Three batch-perceptron rounds; per-round misclassification counts
-    * and model checksums. */
-  def mlPerceptron(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.perceptron(s, dir)
-
-  /** 5-NN majority-vote confusion matrix over the bounded md5-rank eval
-    * set (cosine-equivalent integer ranking). */
-  def mlKnnClassify(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.knnClassify(s, dir)
-
-  /** DBSCAN over the embedding slice: (cluster_id, n_core, n_border)
-    * plus the -1 noise row; grid-blocked exact neighbor pass. */
-  def mlDbscan(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.dbscan(s, dir)
-
-  /** q214's production kNN: 5-NN vote over fixed-hyperplane bucket
-    * candidates (~1/16 of the brute sweep's distance evals), exact
-    * integer re-rank — the oracled approximate path. */
-  def mlKnnAnn(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.knnAnnClassify(s, dir)
-
-  /** q215's oracled recall audit: overlap@5 histogram between the exact
-    * and bucket-pruned 5-NN — the hash-checked recall measurement. */
-  def mlAnnRecall(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.annRecallAudit(s, dir)
-
-  /** q219's oracled IVF recall audit: overlap@5 histogram between the
-    * exact 5-NN and the nprobe=2 inverted-list candidates — the
-    * hash-checked recall measurement of the IVF family. */
-  def mlIvfRecall(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.ivfRecallAudit(s, dir)
-
-  /** q220's oracled PQ recall audit: overlap@5 histogram between the
-    * exact 5-NN and the distance-to-reconstruction ranking over
-    * deterministic per-subspace codebooks — the hash-checked recall
-    * measurement of the product-quantization family. */
-  def mlPqRecall(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.pqRecallAudit(s, dir)
-
-  /** q221's oracled IVF-PQ recall audit: overlap@5 under BOTH
-    * approximation layers — nprobe=2 list pruning plus residual-code
-    * quantization (the IVFADC composition). */
-  def mlIvfPqRecall(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.ivfPqRecallAudit(s, dir)
-
-  /** q217's SemDeDup pass: deterministic k-means blocking, then
-    * within-cluster near-dup drops (smaller-id keeper rule); per-cluster
-    * (n_members, n_dropped, kept_id_sum). */
-  def mlSemDedup(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.semDedup(s, dir)
-
-  /** q218's D4-style prototype pruning: drop the closest-to-centroid
-    * quarter of each cluster, keep the diverse tail. */
-  def mlProtoPrune(s: SparkSession, dir: String): DataFrame =
-    queries.Clustering.prototypePrune(s, dir)
-
-  // --- Cluster-profile store verbs (q211/q212): train-once/freeze
-  // geometry, additive assignment partials, k-sized reads. ---
-
-  /** Train + freeze the centroids on the corpus slice if the store is
-    * missing, stale, or torn; returns the store root. */
-  def buildClusterStoreIfStale(s: SparkSession, dir: String): String =
-    queries.ClusterStore.buildIfStale(s, dir)
-
-  /** Assign the delta against the FROZEN geometry and append its
-    * k-sized partial — idempotent for an unchanged, already-absorbed
-    * batch. */
-  def absorbClusterDelta(s: SparkSession, dir: String): Unit =
-    queries.ClusterStore.absorb(s, dir)
-
-  /** The merged cluster profile (k rows, e6 shares) from the store
-    * alone. */
-  def clusterProfile(s: SparkSession, dir: String): DataFrame =
-    queries.ClusterStore.profile(s, dir)
-
-  /** Corpus-vs-delta cluster shares and absolute drift (k rows). */
-  def clusterDrift(s: SparkSession, dir: String): DataFrame =
-    queries.ClusterStore.drift(s, dir)
-
-  /** Fold the batch partials to one row per (cid, batch) — read-
-    * invisible, same merge algebra as the reads. */
-  def compactClusterStore(s: SparkSession, dir: String): Unit =
-    queries.ClusterStore.compact(s, dir)
-
-  /** Unpersist every cache a query build registered — the same consumer
-    * contract Bench/Verify follow after each terminal action
-    * ([[graft.queries.Caches]]); long-lived Python sessions must call this
-    * between queries or cached partitions accrue. */
-  def releaseCaches(): Unit = queries.Caches.releaseAll()
 }

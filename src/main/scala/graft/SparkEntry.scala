@@ -170,54 +170,21 @@ object SparkEntry {
         load
     }
 
-  private def annPersisted(s: SparkSession, dir: String): DataFrame = {
-    val path = annIndexPath(dir, "lsh_q58")
+  /** Top-k from the persisted `method` index at `path` (a
+    * [[graft.similarity.AnnIndex.tier]] key), healed by
+    * [[buildIfStale]] — the one build-if-absent-or-stale probe behind
+    * q58 (LSH), q59 (IVF), q133 (PQ: the scan reads the persisted 16-byte
+    * codes, append bounded at 1.5x trained rows) and q138 (IVF-PQ: append
+    * bounded at the coarse geometry's 1.25x knee), and behind the Python
+    * `persisted_topk_*` aliases. */
+  def annPersistedTopK(s: SparkSession, dir: String, path: String, method: String,
+      numProbes: Int = 5, k: Int = 5): DataFrame = {
+    val t = graft.similarity.AnnIndex.tier(method)
     buildIfStale(
       graft.similarity.AnnIndex.definitelyStale(s, dir, path),
-      graft.similarity.AnnIndex.appendLsh(s, dir, path),
-      graft.similarity.AnnIndex.saveLsh(s, dir, path))(
-      graft.similarity.AnnIndex.lshTopK(s, dir, path))
-  }
-
-  /** q59: the IVF twin of q58 — same build-if-absent-or-stale contract,
-    * answering from the loaded centroids + inverted lists
-    * ([[graft.similarity.AnnIndex.ivfTopK]]), so the bench measures the
-    * IVF load path too, not just LSH's. */
-  private def annIvfPersisted(s: SparkSession, dir: String): DataFrame = {
-    val path = annIndexPath(dir, "ivf_q59")
-    buildIfStale(
-      graft.similarity.AnnIndex.definitelyStale(s, dir, path),
-      graft.similarity.AnnIndex.appendIvf(s, dir, path),
-      graft.similarity.AnnIndex.saveIvf(s, dir, path))(
-      graft.similarity.AnnIndex.ivfTopK(s, dir, path))
-  }
-
-  /** q133: the PQ twin of q58/q59 — build-if-absent-or-stale over the
-    * persisted codes + codebooks ([[graft.similarity.AnnIndex.pqTopK]]),
-    * so the bench measures the PQ load path: validate, load kilobyte
-    * geometry, compressed-scan the PERSISTED 16-byte codes (no float
-    * column on the scan), exact re-rank of the pool. Append encodes new
-    * rows against frozen codebooks, bounded at 1.5x trained rows. */
-  private def annPqPersisted(s: SparkSession, dir: String): DataFrame = {
-    val path = annIndexPath(dir, "pq_q133")
-    buildIfStale(
-      graft.similarity.AnnIndex.definitelyStale(s, dir, path),
-      graft.similarity.AnnIndex.appendPq(s, dir, path),
-      graft.similarity.AnnIndex.savePq(s, dir, path))(
-      graft.similarity.AnnIndex.pqTopK(s, dir, path))
-  }
-
-  /** q138: the persisted IVF-PQ — the FAISS-artifact shape (coarse +
-    * residual geometry, list-tagged 16-byte codes) behind the same
-    * build-if-absent-or-stale tiering; append bounded at the COARSE
-    * geometry's 1.25x knee (the binding bound of the composition). */
-  private def annIvfPqPersisted(s: SparkSession, dir: String): DataFrame = {
-    val path = annIndexPath(dir, "ivfpq_q138")
-    buildIfStale(
-      graft.similarity.AnnIndex.definitelyStale(s, dir, path),
-      graft.similarity.AnnIndex.appendIvfPq(s, dir, path),
-      graft.similarity.AnnIndex.saveIvfPq(s, dir, path))(
-      graft.similarity.AnnIndex.ivfPqTopK(s, dir, path))
+      t.append(s, dir, path),
+      t.save(s, dir, path))(
+      t.topK(s, dir, path, numProbes, k))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -228,8 +195,10 @@ object SparkEntry {
       "q30_binary_meta" -> ((s: SparkSession, dir: String) => Multimodal.binaryMetaQuery(s, dir)),
       "q31_ann_lsh" -> ((s: SparkSession, dir: String) => AnnLsh.annTopK(s, dir)),
       "q49_ann_ivf" -> ((s: SparkSession, dir: String) => AnnIvf.annTopK(s, dir)),
-      "q58_ann_persisted" -> ((s: SparkSession, dir: String) => annPersisted(s, dir)),
-      "q59_ann_ivf_persisted" -> ((s: SparkSession, dir: String) => annIvfPersisted(s, dir)),
+      "q58_ann_persisted" -> ((s: SparkSession, dir: String) =>
+        annPersistedTopK(s, dir, annIndexPath(dir, "lsh_q58"), "lsh")),
+      "q59_ann_ivf_persisted" -> ((s: SparkSession, dir: String) =>
+        annPersistedTopK(s, dir, annIndexPath(dir, "ivf_q59"), "ivf")),
       // Occupancy-budgeted LSH (worst-case-control variant): the id-only
       // pre-vote pool is HARD-bounded at ceil(0.85 * corpusN) rows per
       // probe, spent on the margin-cheapest buckets (see AnnLsh doc /
@@ -253,7 +222,7 @@ object SparkEntry {
       "q130_ann_pq" -> ((s: SparkSession, dir: String) =>
         graft.similarity.AnnPq.annTopK(s, dir)),
       "q133_ann_pq_persisted" -> ((s: SparkSession, dir: String) =>
-        annPqPersisted(s, dir)),
+        annPersistedTopK(s, dir, annIndexPath(dir, "pq_q133"), "pq")),
       // IVF-PQ (Jégou et al. 2011 §IV, the FAISS IVFADC composition):
       // coarse inverted lists prune WHICH rows are scored, 16-byte
       // residual codes decide HOW CHEAPLY — <q,x> ≈ <q,c_list> + ADC on
@@ -261,7 +230,7 @@ object SparkEntry {
       "q137_ann_ivfpq" -> ((s: SparkSession, dir: String) =>
         graft.similarity.AnnIvfPq.annTopK(s, dir)),
       "q138_ann_ivfpq_persisted" -> ((s: SparkSession, dir: String) =>
-        annIvfPqPersisted(s, dir)),
+        annPersistedTopK(s, dir, annIndexPath(dir, "ivfpq_q138"), "ivfpq")),
       "iforest_score" -> ((s: SparkSession, dir: String) => iforestScore(s, dir)),
     )
 

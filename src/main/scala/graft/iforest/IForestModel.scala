@@ -68,13 +68,16 @@ class IForestModel(
       else math.max(2, ($(maxSamples) * dataset.count()).toInt)
     val normFactor = IsolationMath.avgLength(possibleMaxSamples.toDouble)
     val spark = dataset.sparkSession
-    val bcForest = spark.sparkContext.broadcast(trees.map(FlatTree.fromNodes))
+    val forest = trees.map(FlatTree.fromNodes)
+    val bcForest = spark.sparkContext.broadcast(forest)
+    val minFeatures = forest.iterator.map(_.featureIndex.max).max + 1
     // Native codegen'd expression instead of a scalar UDF: see
     // IForestScoreExpression.scala for why (no Vector materialization, no
     // codegen fence; the forest still ships by broadcast).
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val scoreCol = ColumnBridge.column(
-      IForestScore(ColumnBridge.expression(col($(featuresCol))), bcForest, normFactor))
+      IForestScore(ColumnBridge.expression(col($(featuresCol))), bcForest, normFactor,
+        minFeatures))
     val scored = dataset.withColumn($(anomalyScoreCol), scoreCol)
     if (!hasThreshold) {
       thresholdValue = scored.select($(anomalyScoreCol)).stat

@@ -30,11 +30,16 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
  * Scoring math is identical to the UDF it replaces (sum of per-tree path
  * lengths / numTrees, then `2^(-avg/c(n))`), so scores are bit-identical;
  * IForestSpec and PythonBridgeSpec pin that at 1e-12.
+ *
+ * `minFeatures` is 1 + the largest feature index any split tests: a
+ * shorter vector fails with both sizes named, instead of failing inside
+ * the tree walk or, when its path misses that split, scoring silently.
  */
 case class IForestScore(
     child: Expression,
     bcForest: Broadcast[Array[FlatTree]],
-    normFactor: Double) extends UnaryExpression {
+    normFactor: Double,
+    minFeatures: Int) extends UnaryExpression {
 
   @transient private lazy val forest: Array[FlatTree] = bcForest.value
 
@@ -51,6 +56,11 @@ case class IForestScore(
   /** Hot path — called from both interpreted eval and generated code. */
   def scoreRow(row: InternalRow): Double = {
     val values = denseValues(row)
+    if (values.length < minFeatures) {
+      throw new IllegalArgumentException(
+        s"iforest_score: the forest splits on feature index ${minFeatures - 1}, " +
+          s"so it needs vectors of size >= $minFeatures, got size ${values.length}")
+    }
     val trees = forest
     var sum = 0.0
     var i = 0

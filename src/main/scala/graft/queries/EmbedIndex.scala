@@ -68,7 +68,7 @@ object EmbedIndex {
 
   /** Batch 1 of the two-batch lifecycle (q142): vec_id % 10 ∈ {7, 8},
     * mod-7 planting as in [[deltaVecs]]. */
-  private[graft] def batch1Vecs(s: SparkSession, dir: String): DataFrame =
+  def batch1Vecs(s: SparkSession, dir: String): DataFrame =
     deltaVecs(s, dir).where("vec_id % 10 < 9")
 
   /** Batch 2 (q142): vec_id % 10 = 9, with vec_id % 20 = 9 vectors
@@ -76,7 +76,7 @@ object EmbedIndex {
     * so whether the copy reads 'exact' depends on batch 1's own verdicts
     * against the store: the absorbed state under test. [[deltaVecs]]
     * (q141's contract) keeps mod-9 vectors raw. */
-  private[graft] def batch2Vecs(s: SparkSession, dir: String): DataFrame = {
+  def batch2Vecs(s: SparkSession, dir: String): DataFrame = {
     val all = TextPipeline.embDoubles(s, dir)
     all.where("vec_id % 10 = 9").select(col("vec_id"), col("e"), col("bucket"))
       .join(all.select(col("vec_id").as("src_id"), col("e").as("src_e"),

@@ -465,7 +465,7 @@ object TextPipeline {
     // (bounded by 5 x |domains|), so the corpus never shuffles for it.
     // Body lives in [[mixPipeline]] — this entry runs it at the ORACLED
     // defaults; deployments tune the thresholds through that builder (and
-    // PipelineBridge.mixPipeline from Python).
+    // the `mix_pipeline` alias from Python).
     "q73_mix_pipeline" -> ((s, dir) => mixPipeline(s, dir)),
 
     // TOKEN-BUDGET SAMPLING — q72's weights say how much of each language
@@ -522,7 +522,7 @@ object TextPipeline {
     // either, and no per-language corpus-slice window task exists.
     // Body lives in [[weightedTake]] — this entry runs it at the ORACLED
     // total budget; deployments choose theirs through that builder (and
-    // PipelineBridge.weightedTake from Python).
+    // the `weighted_take` alias from Python).
     "q76_weighted_take" -> ((s, dir) => weightedTake(s, dir)),
 
     // FULL MIXTURE MATERIALIZATION — the q73 pipeline's survivors fed
@@ -535,7 +535,7 @@ object TextPipeline {
     // are hash-checked, not assumed from the fragments' stage-wise green.
     // Body lives in [[mixTake]] — this entry runs the ORACLED defaults;
     // deployments tune all four knobs there (and
-    // PipelineBridge.mixTake from Python).
+    // the `mix_take` alias from Python).
     "q78_mix_take" -> ((s, dir) => mixTake(s, dir)),
 
     // PII REDACTION — the scrub pass every training-data pipeline runs
@@ -1539,7 +1539,7 @@ object TextPipeline {
     * patterns. Pure scan+project — every regexp is a codegen'd builtin;
     * zero joins, zero shuffles. q79 is this chain with the email/ip/phone
     * defaults and the deterministic plant; deployments call it with their
-    * own pattern set via [[graft.PipelineBridge.scrub]]. */
+    * own pattern set via [[graft.PipelineBridge.scrub]] (Python `scrub`). */
   private[graft] def scrubChain(docs: DataFrame,
       specs: Seq[(String, String, String)]): DataFrame = {
     require(specs.nonEmpty, "scrubChain needs at least one pattern")
@@ -1612,8 +1612,8 @@ object TextPipeline {
   private[queries] val repetitivePred = repetitivePredAt(0.10)
 
   /** The q73 end-to-end training-mix pipeline with the gate thresholds as
-    * PARAMETERS — the deployment surface (exposed to Python via
-    * [[graft.PipelineBridge.mixPipeline]], same pattern as the ANN knobs).
+    * PARAMETERS — the deployment surface (Python calls it directly as the
+    * `mix_pipeline` alias of graft_iforest.pipeline, as for the ANN knobs).
     * Defaults are exactly the oracled constants, so the `q73_mix_pipeline`
     * entry delegates here and the hash-checked query surface is unchanged.
     *

@@ -256,6 +256,34 @@ object AnnIndex {
     catch { case _: IllegalStateException => true } // infra exceptions propagate
   }
 
+  /** One persisted tier's build, append and probe verbs. */
+  final case class Tier(
+      save: (SparkSession, String, String) => Unit,
+      append: (SparkSession, String, String) => Unit,
+      topK: (SparkSession, String, String, Int, Int) => DataFrame)
+
+  /** The tier switch, keyed by the method name the metadata records:
+    * every tier-generic caller (the build-if-stale probe of
+    * q58/q59/q133/q138, [[build]], [[append]]) resolves through here. */
+  def tier(method: String): Tier = method match {
+    case "lsh" => Tier(saveLsh(_, _, _), appendLsh, lshTopK)
+    case "ivf" => Tier(saveIvf(_, _, _), appendIvf, ivfTopK)
+    case "pq" => Tier(savePq(_, _, _), appendPq, pqTopK)
+    case "ivfpq" => Tier(saveIvfPq(_, _, _), appendIvfPq, ivfPqTopK)
+    case other => throw new IllegalArgumentException(
+      s"unknown ANN index method '$other' — expected lsh, ivf, pq or ivfpq")
+  }
+
+  /** Build (or rebuild) the `method` index for `dir`'s embeddings at
+    * `path`, with that tier's default knobs. */
+  def build(s: SparkSession, dir: String, path: String, method: String): Unit =
+    tier(method).save(s, dir, path)
+
+  /** Index only the rows added since the last build/append; throws when
+    * the change was not a pure add or the tier's drift bound refuses. */
+  def append(s: SparkSession, dir: String, path: String, method: String): Unit =
+    tier(method).append(s, dir, path)
+
   /**
    * The adds-only guard shared by [[appendLsh]]/[[appendIvf]]: proves the
    * grown corpus is a PURE SUPERSET of the one the index was built over,

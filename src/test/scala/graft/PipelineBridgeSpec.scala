@@ -32,18 +32,15 @@ class PipelineBridgeSpec extends AnyFunSuite {
     assert(new java.io.File(pythonDir, "graft_iforest/pipeline.py").isFile,
       s"python package not found under $pythonDir")
 
-    val work = java.nio.file.Files.createTempDirectory("graft-pypipeline").toFile
     val cmd = Seq(python, s"$pythonDir/tests/test_pipeline_bridge.py",
       classesDir.getAbsolutePath, "/root/testdata/sf0.001")
     val out = new StringBuilder
     val logger = ProcessLogger(l => { out ++= l; out += '\n' }, l => { out ++= l; out += '\n' })
-    val installed = Process(Seq(python, "-c", "import graft_iforest"),
-      cwd = work).! == 0
-    val env = if (installed) Seq.empty[(String, String)]
-      else Seq("PYTHONPATH" -> pythonDir.getAbsolutePath)
-    info(if (installed) "using installed graft_iforest package"
-      else "package not installed; falling back to PYTHONPATH")
-    val exit = Process(cmd, Some(pythonDir), env: _*).!(logger)
+    // The repo tree's package comes first on PYTHONPATH, so an installed
+    // copy of graft_iforest is never tested in its place.
+    val pythonPath = (pythonDir.getAbsolutePath +: sys.env.get("PYTHONPATH").toSeq)
+      .mkString(java.io.File.pathSeparator)
+    val exit = Process(cmd, Some(pythonDir), "PYTHONPATH" -> pythonPath).!(logger)
     assert(exit == 0, s"python pipeline bridge test failed (exit $exit):\n$out")
     assert(out.toString.contains("PY_PIPELINE_OK"),
       s"python pipeline bridge test did not report success:\n$out")

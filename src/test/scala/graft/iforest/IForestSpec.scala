@@ -190,6 +190,20 @@ class IForestSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.codegen.factoryMode", prev)
   }
 
+  test("scoring expression: a vector shorter than the forest's splits is rejected by size") {
+    import spark.implicits._
+    val model = new IForest().setNumTrees(8).setMaxDepth(5).setSeed(11L)
+      .fit(rampData(40, 4))
+    assert(model.trees.map(FlatTree.fromNodes).exists(_.featureIndex.contains(3)),
+      "no tree splits on the last feature, so a 3-dim vector would not reach it")
+    val short = Seq(Tuple1(Vectors.dense(1.0, 2.0, 3.0))).toDF("features")
+    val e = intercept[Exception](model.transform(short).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toList
+    assert(messages.exists(m => m != null && m.contains("size >= 4, got size 3")),
+      messages.mkString("\n"))
+  }
+
   test("copy preserves params, threshold, and summary") {
     val model = new IForest().setNumTrees(4).setMaxDepth(4).setSeed(2L)
       .fit(rampData(12, 2))

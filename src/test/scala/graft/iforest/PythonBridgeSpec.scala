@@ -72,18 +72,11 @@ class PythonBridgeSpec extends AnyFunSuite {
       classesDir.getAbsolutePath, fixturePath, expectedPath, work.toString)
     val out = new StringBuilder
     val logger = ProcessLogger(l => { out ++= l; out += '\n' }, l => { out ++= l; out += '\n' })
-    // Prefer the pip/setup.py-installed package (python/pyproject.toml) so
-    // this exercises what a user actually imports; fall back to PYTHONPATH
-    // in a sandbox where the wrapper was never installed. The probe runs
-    // from a neutral cwd so an installed package is detected, not the
-    // source tree picked up from the working directory.
-    val installed = Process(Seq(python, "-c", "import graft_iforest"),
-      cwd = work).! == 0
-    val env = if (installed) Seq.empty[(String, String)]
-      else Seq("PYTHONPATH" -> pythonDir.getAbsolutePath)
-    info(if (installed) "using installed graft_iforest package"
-      else "package not installed; falling back to PYTHONPATH")
-    val exit = Process(cmd, Some(pythonDir), env: _*).!(logger)
+    // The repo tree's package comes first on PYTHONPATH, so an installed
+    // copy of graft_iforest is never tested in its place.
+    val pythonPath = (pythonDir.getAbsolutePath +: sys.env.get("PYTHONPATH").toSeq)
+      .mkString(java.io.File.pathSeparator)
+    val exit = Process(cmd, Some(pythonDir), "PYTHONPATH" -> pythonPath).!(logger)
     assert(exit == 0, s"python bridge test failed (exit $exit):\n$out")
     assert(out.toString.contains("PY_BRIDGE_OK"),
       s"python bridge test did not report success:\n$out")
