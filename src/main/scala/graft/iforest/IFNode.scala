@@ -93,61 +93,111 @@ object IsolationMath {
 }
 
 /**
- * Struct-of-arrays encoding of one isolation tree for allocation-free,
- * iterative scoring (no recursion, no pointer chasing). Leaf adjustment
- * `c(numInstance)` is pre-computed once at encode time instead of per row
- * (the reference recomputes it inside the scoring UDF for every row,
- * reference: IForest.scala:133-144 — hoisted here per SURVEY §4).
+ * The whole forest packed into flat arrays and walked with a fixed number
+ * of branchless steps, four trees in lock-step.
+ *
+ * Node `i` of the concatenated forest has its children at `kids(2*i)`
+ * (left) and `kids(2*i+1)` (right), its split in `feat(i)`/`thr(i)`, and,
+ * if it is a leaf, its path length `depth + c(numInstance)` in
+ * `leafVal(i)` — pre-computed once here instead of per row (the reference
+ * recomputes it inside the scoring UDF for every row, reference:
+ * IForest.scala:133-144 — hoisted per SURVEY §4). A leaf points to itself
+ * in both child slots and splits on feature 0, so steps past it keep it in
+ * place: tree `t` is walked from `root(t)` for exactly `depth(t)` (its
+ * deepest leaf) steps with no exit test, and a group of four trees for the
+ * largest of their four depths. One step is one compare feeding an index,
+ * so the four walks' loads overlap instead of waiting on a mispredicted
+ * branch each. NaN compares false and goes right, as in the reference.
+ *
+ * Leaf values are added in tree order, so the sum is bit-identical to
+ * summing per-tree path lengths one tree at a time.
  */
-final class FlatTree private (
-    val featureIndex: Array[Int],
-    val featureValue: Array[Double],
-    val left: Array[Int],
-    val right: Array[Int],
-    val leafAdjustment: Array[Double]) extends Serializable {
+final class FlatForest private (
+    kids: Array[Int],
+    feat: Array[Int],
+    thr: Array[Double],
+    leafVal: Array[Double],
+    root: Array[Int],
+    depth: Array[Int],
+    val minFeatures: Int) extends Serializable {
 
-  /** Path length of one instance through this tree. */
-  def pathLength(features: org.apache.spark.ml.linalg.Vector): Double =
-    pathLength(features match {
-      case d: org.apache.spark.ml.linalg.DenseVector => d.values
-      case s => s.toArray
-    })
+  def numTrees: Int = root.length
 
-  /** Array form: callers scoring a whole forest extract the backing array
-    * once per row instead of paying a virtual Vector.apply per node visit
-    * (numTrees x depth accesses per row). */
-  def pathLength(values: Array[Double]): Double = {
-    var id = 0
-    var depth = 0.0
-    while (featureIndex(id) >= 0) {
-      id = if (values(featureIndex(id)) < featureValue(id)) left(id) else right(id)
-      depth += 1.0
+  /** Sum over all trees, in tree order, of the path length of `v`. Reads
+    * `v` at split features, and at 0 while a walk waits at a leaf, so
+    * `v.length >= minFeatures` suffices: any split makes `minFeatures`
+    * at least 1, and a forest of single leaves takes no steps. */
+  def pathLengthSum(v: Array[Double]): Double = {
+    var sum = 0.0
+    var t = 0
+    while (t + 4 <= root.length) {
+      var a = root(t)
+      var b = root(t + 1)
+      var c = root(t + 2)
+      var d = root(t + 3)
+      var steps = math.max(math.max(depth(t), depth(t + 1)), math.max(depth(t + 2), depth(t + 3)))
+      while (steps > 0) {
+        a = kids(2 * a + (if (v(feat(a)) < thr(a)) 0 else 1))
+        b = kids(2 * b + (if (v(feat(b)) < thr(b)) 0 else 1))
+        c = kids(2 * c + (if (v(feat(c)) < thr(c)) 0 else 1))
+        d = kids(2 * d + (if (v(feat(d)) < thr(d)) 0 else 1))
+        steps -= 1
+      }
+      sum += leafVal(a)
+      sum += leafVal(b)
+      sum += leafVal(c)
+      sum += leafVal(d)
+      t += 4
     }
-    depth + leafAdjustment(id)
+    while (t < root.length) {
+      var a = root(t)
+      var steps = depth(t)
+      while (steps > 0) {
+        a = kids(2 * a + (if (v(feat(a)) < thr(a)) 0 else 1))
+        steps -= 1
+      }
+      sum += leafVal(a)
+      t += 1
+    }
+    sum
   }
 }
 
-object FlatTree {
-  def fromNodes(root: IFNode): FlatTree = fromNodeData(NodeData.flatten(root).toArray)
-
-  def fromNodeData(data: Array[NodeData]): FlatTree = {
-    val sorted = data.sortBy(_.id)
-    val n = sorted.length
-    val fi = new Array[Int](n)
-    val fv = new Array[Double](n)
-    val l = new Array[Int](n)
-    val r = new Array[Int](n)
-    val adj = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val d = sorted(i)
-      fi(i) = d.featureIndex
-      fv(i) = d.featureValue
-      l(i) = d.leftChild
-      r(i) = d.rightChild
-      adj(i) = if (d.featureIndex == -1) IsolationMath.avgLength(d.numInstance.toDouble) else 0.0
-      i += 1
+object FlatForest {
+  def apply(trees: Array[IFNode]): FlatForest = {
+    def size(n: IFNode): Int = n match {
+      case _: IFLeafNode => 1
+      case in: IFInternalNode => 1 + size(in.left) + size(in.right)
     }
-    new FlatTree(fi, fv, l, r, adj)
+    val n = trees.iterator.map(size).sum
+    val kids = new Array[Int](2 * n)
+    val feat = new Array[Int](n)
+    val thr = new Array[Double](n)
+    val leafVal = new Array[Double](n)
+    val root = new Array[Int](trees.length)
+    val depth = new Array[Int](trees.length)
+    var next = 0
+    var maxFeature = -1
+    // pre-order ids; returns the node's id and records the tree's deepest leaf
+    def put(node: IFNode, d: Int, t: Int): Int = {
+      val id = next
+      next += 1
+      node match {
+        case leaf: IFLeafNode =>
+          kids(2 * id) = id
+          kids(2 * id + 1) = id
+          leafVal(id) = d + IsolationMath.avgLength(leaf.numInstance.toDouble)
+          depth(t) = math.max(depth(t), d)
+        case in: IFInternalNode =>
+          feat(id) = in.featureIndex
+          thr(id) = in.featureValue
+          maxFeature = math.max(maxFeature, in.featureIndex)
+          kids(2 * id) = put(in.left, d + 1, t)
+          kids(2 * id + 1) = put(in.right, d + 1, t)
+      }
+      id
+    }
+    trees.indices.foreach(t => root(t) = put(trees(t), 0, t))
+    new FlatForest(kids, feat, thr, leafVal, root, depth, maxFeature + 1)
   }
 }

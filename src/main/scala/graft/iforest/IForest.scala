@@ -13,24 +13,33 @@ import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
+import graft.JobPhase
+
 /**
  * Distributed isolation-forest estimator (Liu/Ting/Zhou, ICDM 2008).
  *
  * Training dataflow (reference semantics: IForest.scala:404-549, re-derived
  * Spark-first):
  *
- *  1. one `count()` job;
+ *  1. one job that counts the rows of each partition of the features RDD;
+ *     `numRows` is their sum and each partition's first row id their
+ *     prefix sum (the ids `zipWithIndex` would assign, without its
+ *     separate size job or a second `count()`);
  *  2. driver-side per-tree row-id sampling — O(numTrees * maxSamples) time
  *     and memory, independent of dataset size (see [[TreeBuilder]]);
  *  3. the inverted rowId -> (treeId, copies) map is broadcast — the manual
  *     form of a broadcast semi-join against the sampled-id list;
  *  4. ONE distributed pass over the data: prune to the features column
  *     (explicit select keeps Catalyst pruning across the `.rdd` hop),
- *     `zipWithIndex`, filter to sampled rows, multicast each row to its
- *     trees, then a single shuffle (`reduceByKey`, map-side combined) that
+ *     number rows from the partition offsets, filter to sampled rows,
+ *     multicast each row to its trees, then a single shuffle (`reduceByKey`, map-side combined) that
  *     co-locates each tree's ~maxSamples vectors;
  *  5. model-wise parallelism: one task per tree builds an iTree locally;
  *     only the forest (megabytes) is collected to the driver.
+ *
+ * The jobs carry the descriptions `graft:iforest:size`,
+ * `graft:iforest:build` and (from the summary's transform)
+ * `graft:iforest:threshold`.
  *
  * Scale posture (100 TB): the full dataset is never materialized, the only
  * shuffle moves numTrees * maxSamples vectors, and driver memory is bounded
@@ -62,7 +71,7 @@ class IForest(override val uid: String)
     transformSchema(dataset.schema)
     val spark = dataset.sparkSession
     // Standard MLlib handlePersistence pattern: fit reads the data three
-    // times (count, sampling pass, summary/threshold scoring pass) — cache
+    // times (size, sampling pass, summary/threshold scoring pass) — cache
     // it for the duration of fit unless the caller already did.
     val input = dataset.toDF()
     val handlePersistence =
@@ -75,8 +84,18 @@ class IForest(override val uid: String)
   }
 
   private def fitImpl(dataset: Dataset[_]): IForestModel = {
-    val spark = dataset.sparkSession
-    val numRows = dataset.count()
+    val sc = dataset.sparkSession.sparkContext
+    val features: RDD[Vector] = dataset.select(col($(featuresCol))).rdd
+      .map { case Row(v: Vector) => v }
+    val partitionSizes = JobPhase(sc, "iforest:size") {
+      sc.runJob(features, (it: Iterator[Vector]) => {
+        var n = 0L
+        while (it.hasNext) { it.next(); n += 1 }
+        n
+      })
+    }
+    val firstRowIds = partitionSizes.scanLeft(0L)(_ + _)
+    val numRows = firstRowIds.last
     require(numRows > 0, "cannot fit an isolation forest on an empty dataset")
     val possibleMaxSamples =
       if ($(maxSamples) > 1) {
@@ -109,25 +128,26 @@ class IForest(override val uid: String)
       logger.warn(s"estimated driver-side forest footprint ~${estimateMb} MB; " +
         "consider lowering numTrees or maxSamples")
     }
-    val bcRowInfo = spark.sparkContext.broadcast(
+    val bcRowInfo = sc.broadcast(
       rowInfo.map { case (k, v) => (k, v.toArray) }.toMap)
 
     // One distributed pass + one small shuffle keyed by treeId.
-    val perTree: RDD[(Int, Array[Vector])] = dataset
-      .select(col($(featuresCol))).rdd
-      .map { case Row(v: Vector) => v }
-      .zipWithIndex()
-      .flatMap { case (vec, rowId) =>
-        bcRowInfo.value.get(rowId) match {
-          case Some(packed) =>
-            packed.grouped(2).map { case Array(tid, copies) =>
-              (tid, Array.fill(copies)(vec))
-            }
-          case None => Iterator.empty
+    val perTree: RDD[(Int, Array[Vector])] = features
+      .mapPartitionsWithIndex { (p, vecs) =>
+        var rowId = firstRowIds(p) - 1
+        vecs.flatMap { vec =>
+          rowId += 1
+          bcRowInfo.value.get(rowId) match {
+            case Some(packed) =>
+              packed.grouped(2).map { case Array(tid, copies) =>
+                (tid, Array.fill(copies)(vec))
+              }
+            case None => Iterator.empty
+          }
         }
       }
       .reduceByKey(
-        new HashPartitioner(math.min(trees, spark.sparkContext.defaultParallelism * 4)),
+        new HashPartitioner(math.min(trees, sc.defaultParallelism * 4)),
         (a, b) => a ++ b)
 
     val seedBase = $(seed)
@@ -136,12 +156,14 @@ class IForest(override val uid: String)
       $(maxDepth),
       math.ceil(math.log(math.max(possibleMaxSamples, 2).toDouble) / math.log(2)).toInt)
 
-    val builtTrees = perTree.map { case (tid, points) =>
-      val treeRng = new Random(seedBase ^ (tid.toLong * 0x9E3779B97F4A7C15L))
-      val matrix = points.map(_.toArray)
-      val (sampled, featureMap) = TreeBuilder.sampleFeatures(matrix, maxFeaturesVal, treeRng)
-      (tid, TreeBuilder.buildTree(sampled, depthCap, featureMap, treeRng))
-    }.collect().sortBy(_._1).map(_._2)
+    val builtTrees = JobPhase(sc, "iforest:build") {
+      perTree.map { case (tid, points) =>
+        val treeRng = new Random(seedBase ^ (tid.toLong * 0x9E3779B97F4A7C15L))
+        val matrix = points.map(_.toArray)
+        val (sampled, featureMap) = TreeBuilder.sampleFeatures(matrix, maxFeaturesVal, treeRng)
+        (tid, TreeBuilder.buildTree(sampled, depthCap, featureMap, treeRng))
+      }.collect().sortBy(_._1).map(_._2)
+    }
 
     val model = copyValues(new IForestModel(uid, builtTrees).setParent(this))
     // Materialize the training summary; this runs the prediction lifecycle

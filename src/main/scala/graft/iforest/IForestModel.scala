@@ -9,21 +9,25 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.JobPhase
+
 /**
  * Fitted isolation forest.
  *
  * Scoring is data-parallel: the forest is broadcast once per transform as
- * struct-of-arrays [[FlatTree]]s (cache-friendly iterative walks, leaf
- * normalizers pre-computed), the per-dataset normalization factor is hoisted
- * out of the per-row path (the reference recomputes it per row inside its
- * UDF, reference: IForest.scala:92-99), and the 0/1 label is a plain
- * `when(score > threshold)` Catalyst expression instead of a second UDF
- * (reference: IForest.scala:108-111).
+ * one packed [[FlatForest]] (flat arrays walked four trees at a time with
+ * branchless steps, leaf path lengths pre-computed), the per-dataset
+ * normalization factor is hoisted out of the per-row path (the reference
+ * recomputes it per row inside its UDF, reference: IForest.scala:92-99),
+ * and the 0/1 label is a plain `when(score > threshold)` Catalyst
+ * expression instead of a second UDF (reference: IForest.scala:108-111).
  *
  * Threshold semantics match the reference (reference: IForest.scala:50,
  * 68-75, 101-105): computed lazily from the first transformed dataset as the
  * `1 - contamination` quantile of scores, cached on the instance, not
- * persisted, overridable via [[setThreshold]].
+ * persisted, overridable via [[setThreshold]]. Its quantile job carries
+ * the description `graft:iforest:threshold` (and the dataset count, when
+ * `maxSamples <= 1` needs one, `graft:iforest:count`).
  */
 class IForestModel(
     override val uid: String,
@@ -63,26 +67,25 @@ class IForestModel(
    */
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
+    val sc = dataset.sparkSession.sparkContext
     val possibleMaxSamples =
       if ($(maxSamples) > 1) $(maxSamples).toInt
-      else math.max(2, ($(maxSamples) * dataset.count()).toInt)
+      else math.max(2, ($(maxSamples) * JobPhase(sc, "iforest:count")(dataset.count())).toInt)
     val normFactor = IsolationMath.avgLength(possibleMaxSamples.toDouble)
-    val spark = dataset.sparkSession
-    val forest = trees.map(FlatTree.fromNodes)
-    val bcForest = spark.sparkContext.broadcast(forest)
-    val minFeatures = forest.iterator.map(_.featureIndex.max).max + 1
+    val bcForest = sc.broadcast(FlatForest(trees))
     // Native codegen'd expression instead of a scalar UDF: see
     // IForestScoreExpression.scala for why (no Vector materialization, no
     // codegen fence; the forest still ships by broadcast).
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val scoreCol = ColumnBridge.column(
-      IForestScore(ColumnBridge.expression(col($(featuresCol))), bcForest, normFactor,
-        minFeatures))
+      IForestScore(ColumnBridge.expression(col($(featuresCol))), bcForest, normFactor))
     val scored = dataset.withColumn($(anomalyScoreCol), scoreCol)
     if (!hasThreshold) {
-      thresholdValue = scored.select($(anomalyScoreCol)).stat
-        .approxQuantile($(anomalyScoreCol), Array(1 - $(contamination)),
-          $(approxQuantileRelativeError))(0)
+      thresholdValue = JobPhase(sc, "iforest:threshold") {
+        scored.select($(anomalyScoreCol)).stat
+          .approxQuantile($(anomalyScoreCol), Array(1 - $(contamination)),
+            $(approxQuantileRelativeError))(0)
+      }
     }
     scored.withColumn($(predictionCol),
       when(col($(anomalyScoreCol)) > lit(thresholdValue), 1.0).otherwise(0.0))

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
  * generated projection calls [[scoreRow]] directly on the UDT's internal
  * struct (`(type tinyint, size int, indices array<int>, values
  * array<double>)`), extracts the dense values with one `arraycopy`, and
- * walks the struct-of-arrays [[FlatTree]]s — no Vector object, no boxing,
- * no codegen fence.
+ * walks the packed [[FlatForest]] four trees at a time with branchless
+ * steps — no Vector object, no boxing, no codegen fence.
  *
  * The forest travels as a [[Broadcast]] handle: the expression serialized
  * into the task binary is a few bytes, and executors fetch the (possibly
@@ -28,20 +28,21 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
  * — the scale-correct shipping path for a 1000-executor cluster.
  *
  * Scoring math is identical to the UDF it replaces (sum of per-tree path
- * lengths / numTrees, then `2^(-avg/c(n))`), so scores are bit-identical;
- * IForestSpec and PythonBridgeSpec pin that at 1e-12.
+ * lengths in tree order / numTrees, then `2^(-avg/c(n))`), so scores are
+ * bit-identical; IForestSpec and PythonBridgeSpec pin that at 1e-12, and
+ * PropertySpec pins the forest sum bit-equal to per-tree ADT walks.
  *
- * `minFeatures` is 1 + the largest feature index any split tests: a
- * shorter vector fails with both sizes named, instead of failing inside
- * the tree walk or, when its path misses that split, scoring silently.
+ * A vector shorter than [[FlatForest.minFeatures]] (1 + the largest
+ * feature index any split tests) fails with both sizes named, instead of
+ * failing inside the tree walk or, when its path misses that split,
+ * scoring silently.
  */
 case class IForestScore(
     child: Expression,
-    bcForest: Broadcast[Array[FlatTree]],
-    normFactor: Double,
-    minFeatures: Int) extends UnaryExpression {
+    bcForest: Broadcast[FlatForest],
+    normFactor: Double) extends UnaryExpression {
 
-  @transient private lazy val forest: Array[FlatTree] = bcForest.value
+  @transient private lazy val forest: FlatForest = bcForest.value
 
   override def dataType: DataType = DoubleType
 
@@ -56,19 +57,13 @@ case class IForestScore(
   /** Hot path — called from both interpreted eval and generated code. */
   def scoreRow(row: InternalRow): Double = {
     val values = denseValues(row)
-    if (values.length < minFeatures) {
+    val f = forest
+    if (values.length < f.minFeatures) {
       throw new IllegalArgumentException(
-        s"iforest_score: the forest splits on feature index ${minFeatures - 1}, " +
-          s"so it needs vectors of size >= $minFeatures, got size ${values.length}")
+        s"iforest_score: the forest splits on feature index ${f.minFeatures - 1}, " +
+          s"so it needs vectors of size >= ${f.minFeatures}, got size ${values.length}")
     }
-    val trees = forest
-    var sum = 0.0
-    var i = 0
-    while (i < trees.length) {
-      sum += trees(i).pathLength(values)
-      i += 1
-    }
-    IsolationMath.score(sum / trees.length, normFactor)
+    IsolationMath.score(f.pathLengthSum(values) / f.numTrees, normFactor)
   }
 
   /**

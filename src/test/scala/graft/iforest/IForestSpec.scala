@@ -2,7 +2,10 @@ package graft.iforest
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.param.ParamMap
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -194,7 +197,7 @@ class IForestSpec extends AnyFunSuite {
     import spark.implicits._
     val model = new IForest().setNumTrees(8).setMaxDepth(5).setSeed(11L)
       .fit(rampData(40, 4))
-    assert(model.trees.map(FlatTree.fromNodes).exists(_.featureIndex.contains(3)),
+    assert(FlatForest(model.trees).minFeatures == 4,
       "no tree splits on the last feature, so a 3-dim vector would not reach it")
     val short = Seq(Tuple1(Vectors.dense(1.0, 2.0, 3.0))).toDF("features")
     val e = intercept[Exception](model.transform(short).collect())
@@ -211,5 +214,48 @@ class IForestSpec extends AnyFunSuite {
     assert(copied.getNumTrees == 4)
     assert(copied.getThreshold == model.getThreshold)
     assert(copied.hasSummary)
+  }
+
+  test("fit and transform label their jobs graft:iforest:<phase> and restore the caller's") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"job-descriptions-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) {
+          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+        }
+    }
+    val df = rampData(200, 2).cache()
+    df.count()
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "outer")
+    try {
+      // The bus is asynchronous but ordered: once the end marker's job
+      // start arrives, every earlier one has. A phase may run more than
+      // one job (adaptive execution), so phases are compared distinct.
+      def phasesOf[T](body: => T): (T, List[String]) = {
+        val result = body
+        assert(sc.getLocalProperty("spark.job.description") == "outer")
+        graft.JobPhase(sc, "end")(sc.parallelize(Seq(1), 1).count())
+        val deadline = System.nanoTime() + 30e9.toLong
+        while (!seen.contains("graft:end") && System.nanoTime() < deadline) Thread.sleep(20)
+        val jobs = List.from(seen.iterator().asScala)
+        seen.clear()
+        (result, jobs.takeWhile(_ != "graft:end").distinct)
+      }
+      // maxSamples = 1.0 (the default) makes transform count its input
+      val (model, fitPhases) = phasesOf(new IForest().setNumTrees(4).setSeed(1L).fit(df))
+      assert(fitPhases == List("graft:iforest:size", "graft:iforest:build",
+        "graft:iforest:count", "graft:iforest:threshold"))
+      val (_, transformPhases) =
+        phasesOf(model.copy(ParamMap.empty).setThreshold(Double.NaN).transform(df))
+      assert(transformPhases == List("graft:iforest:count", "graft:iforest:threshold"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      df.unpersist()
+    }
   }
 }

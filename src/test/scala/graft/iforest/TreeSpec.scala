@@ -84,9 +84,9 @@ class TreeSpec extends AnyFunSuite {
     val rows = Array.tabulate(128)(_ => Array(rng.nextDouble(), rng.nextDouble())) :+
       Array(1000.0, 1000.0)
     val tree = TreeBuilder.buildTree(rows, 10, Array(0, 1), new Random(42))
-    val flat = FlatTree.fromNodes(tree)
-    val outlierLen = flat.pathLength(org.apache.spark.ml.linalg.Vectors.dense(1000.0, 1000.0))
-    val inlierLen = flat.pathLength(org.apache.spark.ml.linalg.Vectors.dense(0.5, 0.5))
+    val forest = FlatForest(Array(tree))
+    val outlierLen = forest.pathLengthSum(Array(1000.0, 1000.0))
+    val inlierLen = forest.pathLengthSum(Array(0.5, 0.5))
     assert(outlierLen < inlierLen)
   }
 
@@ -108,20 +108,14 @@ class TreeSpec extends AnyFunSuite {
   }
 
   test("FlatTree path length equals recursive walk over the ADT") {
-    def walk(node: IFNode, v: org.apache.spark.ml.linalg.Vector, depth: Double): Double =
-      node match {
-        case l: IFLeafNode => depth + IsolationMath.avgLength(l.numInstance.toDouble)
-        case i: IFInternalNode =>
-          if (v(i.featureIndex) < i.featureValue) walk(i.left, v, depth + 1)
-          else walk(i.right, v, depth + 1)
-      }
+    // a one-tree FlatForest is the flat layout of a single tree
     val rng = new Random(8)
     val rows = Array.tabulate(256)(_ => Array(rng.nextDouble(), rng.nextDouble(), rng.nextDouble()))
     val tree = TreeBuilder.buildTree(rows, 10, Array(0, 1, 2), new Random(13))
-    val flat = FlatTree.fromNodes(tree)
+    val forest = FlatForest(Array(tree))
     (0 until 50).foreach { _ =>
-      val v = org.apache.spark.ml.linalg.Vectors.dense(rng.nextDouble(), rng.nextDouble(), rng.nextDouble())
-      assert(math.abs(flat.pathLength(v) - walk(tree, v, 0.0)) < 1e-12)
+      val v = Array(rng.nextDouble(), rng.nextDouble(), rng.nextDouble())
+      assert(forest.pathLengthSum(v) == TreeOracle.pathLength(tree, v))
     }
   }
 }
