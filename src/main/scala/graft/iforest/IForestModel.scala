@@ -24,10 +24,22 @@ import graft.JobPhase
  *
  * Threshold semantics match the reference (reference: IForest.scala:50,
  * 68-75, 101-105): computed lazily from the first transformed dataset as the
- * `1 - contamination` quantile of scores, cached on the instance, not
- * persisted, overridable via [[setThreshold]]. Its quantile job carries
- * the description `graft:iforest:threshold` (and the dataset count, when
- * `maxSamples <= 1` needs one, `graft:iforest:count`).
+ * `1 - contamination` quantile of the non-null scores, cached on the
+ * instance, not persisted, overridable via [[setThreshold]]. At the default
+ * `approxQuantileRelativeError = 0` it is the score at 1-based rank
+ * `ceil((1 - contamination) * n)` among the `n` non-null scores, bit for bit
+ * what `approxQuantile(…, 0.0)` returns, found by [[ExactQuantile]] in two
+ * jobs instead of a GK merge of every score in one task: the first sorts
+ * and caches each partition's scores and samples their order statistics,
+ * the second collects only the scores in a bracket round that rank (or,
+ * past about a million of them, samples the bracket for one more round).
+ * So the driver holds a bounded number of scores whatever `n` is, and the
+ * cached scores are dropped before `transform` returns. A positive relative
+ * error keeps Spark's bounded GK sketch (`approxQuantile`), which caches
+ * nothing. The threshold jobs carry the description
+ * `graft:iforest:threshold` (and the dataset count, when `maxSamples <= 1`
+ * needs one, `graft:iforest:count`). With no non-null score to take the
+ * quantile of, `transform` throws an `IllegalArgumentException`.
  */
 class IForestModel(
     override val uid: String,
@@ -62,7 +74,7 @@ class IForestModel(
    * The dataset is counted only when `maxSamples <= 1` (fraction form),
    * because only then does the score normalizer depend on dataset size
    * (reference always counts, IForest.scala:87 — skipping it saves a full
-   * scan per transform at scale). The quantile job for the threshold runs
+   * scan per transform at scale). The quantile jobs for the threshold run
    * over a score-only projection so Catalyst prunes every other column.
    */
   override def transform(dataset: Dataset[_]): DataFrame = {
@@ -81,11 +93,18 @@ class IForestModel(
       IForestScore(ColumnBridge.expression(col($(featuresCol))), bcForest, normFactor))
     val scored = dataset.withColumn($(anomalyScoreCol), scoreCol)
     if (!hasThreshold) {
-      thresholdValue = JobPhase(sc, "iforest:threshold") {
-        scored.select($(anomalyScoreCol)).stat
-          .approxQuantile($(anomalyScoreCol), Array(1 - $(contamination)),
-            $(approxQuantileRelativeError))(0)
+      val scores = scored.select($(anomalyScoreCol))
+      val q = 1 - $(contamination)
+      val relErr = $(approxQuantileRelativeError)
+      val t = JobPhase(sc, "iforest:threshold") {
+        if (relErr == 0) ExactQuantile(scores, q)
+        else scores.stat.approxQuantile($(anomalyScoreCol), Array(q), relErr)
+          .headOption.getOrElse(Double.NaN)
       }
+      if (t.isNaN) throw new IllegalArgumentException(
+        "no non-null anomaly scores to take the 1 - contamination quantile of; " +
+          "setThreshold sets a threshold without the quantile")
+      thresholdValue = t
     }
     scored.withColumn($(predictionCol),
       when(col($(anomalyScoreCol)) > lit(thresholdValue), 1.0).otherwise(0.0))

@@ -1,15 +1,17 @@
 package graft.iforest
 
 import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
 /** Inputs the reference meets in practice, on tiny data: constant rows,
-  * sparse rows, forest sizes off the four-tree grouping, and more trees
-  * than input partitions (one of them empty). Scores are checked bit for
-  * bit against [[TreeOracle]]'s per-tree ADT walks. */
+  * sparse rows, forest sizes off the four-tree grouping, more trees than
+  * input partitions (one of them empty), and nothing to take a threshold
+  * from. Scores are checked bit for bit against [[TreeOracle]]'s per-tree
+  * ADT walks, and the threshold leaves no cached scores behind. */
 class IForestRobustnessSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -86,5 +88,43 @@ class IForestRobustnessSpec extends AnyFunSuite {
     }
     assert(model.trees.map(leafRows).toSeq == Seq.fill(9)(12L))
     assert(scores(model, frame(kept)) == oracle(model, kept))
+  }
+
+  /** The model with its threshold cleared, so the next transform takes the quantile. */
+  private def unthresholded(model: IForestModel, relErr: Double = 0.0): IForestModel =
+    model.copy(ParamMap(model.approxQuantileRelativeError -> relErr)).setThreshold(Double.NaN)
+
+  test("nothing to score: an empty dataset or all-null features raise a clear error") {
+    val model = new IForest().setNumTrees(4).setMaxSamples(16).setSeed(11L)
+      .fit(frame(randomVecs(30, 7)))
+    val empty = frame(Seq.empty)
+    val allNull = frame(Seq.fill(5)(null))
+    for (df <- Seq(empty, allNull); relErr <- Seq(0.0, 0.01)) {
+      val e = intercept[IllegalArgumentException](unthresholded(model, relErr).transform(df))
+      assert(e.getMessage.contains("no non-null anomaly scores") &&
+        e.getMessage.contains("1 - contamination") && e.getMessage.contains("setThreshold"),
+        e.getMessage)
+    }
+    // a set threshold skips the quantile: nothing to score is then no error
+    assert(model.transform(allNull).where("anomalyScore is not null").count() == 0)
+  }
+
+  test("the threshold caches nothing it leaves behind, also when the scoring job fails") {
+    val sc = spark.sparkContext
+    val vecs = randomVecs(60, 8)
+    val model = new IForest().setNumTrees(8).setMaxSamples(32).setSeed(12L).fit(frame(vecs))
+    val before = sc.getPersistentRDDs.keySet
+    val fresh = unthresholded(model).transform(frame(vecs))
+    assert(fresh.count() == 60)
+    assert(sc.getPersistentRDDs.keySet == before)
+
+    assert(FlatForest(model.trees).minFeatures == 3)
+    val short = frame(Seq.fill(10)(Vectors.dense(1.0, 2.0)))
+    val e = intercept[Exception](unthresholded(model).transform(short))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toList
+    assert(messages.exists(m => m != null && m.contains("size >= 3, got size 2")),
+      messages.mkString("\n"))
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 }
