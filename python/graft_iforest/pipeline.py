@@ -123,7 +123,7 @@ _ALIASES = {
     "ann_topk_lsh": ("similarity.AnnLsh.annTopK",
                      "num_probes=5 k=5 14 16 768 7919 False 2 0.0 False"),
     "ann_topk_pq": ("similarity.AnnPq.annTopK",
-                    "num_probes=5 k=5 rerank=0 16 16 4099 None"),
+                    "num_probes=5 k=5 rerank=0 16 16 4099"),
     "build_ann_index": ("similarity.AnnIndex.build",
                         "index_path method='lsh'"),
     "append_ann_index": ("similarity.AnnIndex.append",

@@ -170,8 +170,8 @@ object SparkEntry {
         load
     }
 
-  /** Top-k from the persisted `method` index at `path` (a
-    * [[graft.similarity.AnnIndex.tier]] key), healed by
+  /** Top-k from the persisted `method` index at `path` (lsh, ivf, pq or
+    * ivfpq), healed by
     * [[buildIfStale]] — the one build-if-absent-or-stale probe behind
     * q58 (LSH), q59 (IVF), q133 (PQ: the scan reads the persisted 16-byte
     * codes, append bounded at 1.5x trained rows) and q138 (IVF-PQ: append
@@ -179,12 +179,12 @@ object SparkEntry {
     * `persisted_topk_*` aliases. */
   def annPersistedTopK(s: SparkSession, dir: String, path: String, method: String,
       numProbes: Int = 5, k: Int = 5): DataFrame = {
-    val t = graft.similarity.AnnIndex.tier(method)
+    import graft.similarity.AnnIndex
     buildIfStale(
-      graft.similarity.AnnIndex.definitelyStale(s, dir, path),
-      t.append(s, dir, path),
-      t.save(s, dir, path))(
-      t.topK(s, dir, path, numProbes, k))
+      AnnIndex.definitelyStale(s, dir, path),
+      AnnIndex.append(s, dir, path, method),
+      AnnIndex.build(s, dir, path, method))(
+      AnnIndex.topK(s, dir, path, method, numProbes, k))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

@@ -258,7 +258,7 @@ object DedupIndex {
     * fingerprints and absorbs EMPTY shingle/band sets (the r15 q135
     * oracle caught exactly this: absorbed docs were exact-visible but
     * never near-visible). The staging read decouples every append from
-    * the store state, the same device as AnnIndex.appendLsh's
+    * the store state, the same device as AnnIndex.append's
     * materialize-before-mutate.
     *
     * Crash bracket: meta flips to non-pristine FIRST, so an absorb killed

@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -87,7 +87,7 @@ object AnnIvf {
 
   /** Memoized corpus row count (signature-stamped like the quantizers) —
     * shared with [[AnnPq]]'s adaptive re-rank resolution. */
-  private[similarity] def corpusCount(s: SparkSession, dir: String): Long = {
+  private[graft] def corpusCount(s: SparkSession, dir: String): Long = {
     val sig = corpusSignature(s, dir)
     corpusCounts.compute(dir, (d, prev) =>
       if (prev != null && prev._1 == sig) prev
@@ -169,7 +169,7 @@ object AnnIvf {
   }
 
   /** Memoized spherical k-means quantizer fit for `dir`'s embeddings —
-    * shared by the query path and [[AnnIndex.saveIvf]] so a persisted
+    * shared by the query path and [[IvfTier]]'s build so a persisted
     * index carries the exact centroids the live path would use. */
   private[similarity] def fitQuantizer(
       s: SparkSession, dir: String, nlist: Int, seed: Long): Array[Array[Double]] = {
@@ -212,75 +212,8 @@ object AnnIvf {
       numProbes: Int = 5,
       nlist: Int = 0,
       nprobe: Int = 0,
-      seed: Long = 4099L): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    val (rNlist, rNprobe) = resolveKnobs(s, dir, nlist, nprobe)
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS e")
-    val centroids = fitQuantizer(s, dir, rNlist, seed)
-    val bc = s.sparkContext.broadcast(centroids)
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    // Corpus side: each vector lands in its single nearest list — identical
-    // assignments to model.transform, but from the broadcast centroid array
-    // (nlist x dim doubles) with no ML fit on the query path. Assignment is
-    // the codegen'd IvfLists expression taking the RAW vector and
-    // unit-normalizing in compiled code (same index-order fold, sqrt, floor
-    // and division as the fit's SQL HOF, so assignments are bit-identical)
-    // — keeping both the interpreted-lambda machinery AND the ScalaUDF
-    // boxing off the per-query path entirely (the former lambda was ~1.5 s
-    // of q49's 2.0 s steady-state at sf0.1: the aggregate() in the lambda
-    // body re-runs for every element, dim x dim evals per row).
-    val assignList = element_at(ColumnBridge.column(
-      IvfLists(ColumnBridge.expression(col("e")), bc, 1)), 1)
-    val assigned = emb.select(col("vec_id"), col("e"), assignList.as("list_id"))
-
-    // nprobe nearest centroids per probe vector (normalized in the expression)
-    val probeLists = ColumnBridge.column(
-      IvfLists(ColumnBridge.expression(col("e")), bc, rNprobe))
-    val probes = emb.filter(col("vec_id") < numProbes)
-      .select(col("vec_id").as("q_id"), col("e").as("ae"),
-        explode(probeLists).as("list_id"))
-
-    broadcast(probes)
-      .join(assigned.select(col("vec_id"), col("e").as("be"), col("list_id")), Seq("list_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id AS neighbor_id", "cosine_similarity(ae, be) AS cos")
-  }
-
-  /** [[candidates]] with the quantizer trained on a DIFFERENT corpus
-    * (`trainDir` — a prefix of `dir`'s corpus in AnnTune's drift mode):
-    * the measurement harness behind the append drift bound. Knobs resolve
-    * corpus-adaptively from the TRAINING corpus, exactly like an index
-    * built at that size and then appended to `dir`'s size with the
-    * geometry frozen — nlist undersized for the grown corpus AND
-    * centroids fit on the old distribution, the two decay mechanisms
-    * [[AnnIndex.appendIvf]]'s bound exists to cap. */
-  private[graft] def frozenGeometryCandidates(
-      s: SparkSession,
-      dir: String,
-      trainDir: String,
-      numProbes: Int = 5,
-      seed: Long = 4099L): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    val (rNlist, rNprobe) = resolveKnobs(s, trainDir, 0, 0)
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS e")
-    val centroids = fitQuantizer(s, trainDir, rNlist, seed)
-    val bc = s.sparkContext.broadcast(centroids)
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val assignList = element_at(ColumnBridge.column(
-      IvfLists(ColumnBridge.expression(col("e")), bc, 1)), 1)
-    val assigned = emb.select(col("vec_id"), col("e"), assignList.as("list_id"))
-    val probeLists = ColumnBridge.column(
-      IvfLists(ColumnBridge.expression(col("e")), bc, rNprobe))
-    val probes = emb.filter(col("vec_id") < numProbes)
-      .select(col("vec_id").as("q_id"), col("e").as("ae"),
-        explode(probeLists).as("list_id"))
-    broadcast(probes)
-      .join(assigned.select(col("vec_id"), col("e").as("be"), col("list_id")), Seq("list_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id AS neighbor_id", "cosine_similarity(ae, be) AS cos")
-  }
+      seed: Long = 4099L): DataFrame =
+    AnnTier.liveCandidates(s, dir, IvfTier(nlist, nprobe, seed), numProbes)
 
   def annTopK(
       s: SparkSession,
@@ -289,12 +222,83 @@ object AnnIvf {
       k: Int = 5,
       nlist: Int = 0,
       nprobe: Int = 0,
-      seed: Long = 4099L): DataFrame = {
-    val scored = candidates(s, dir, numProbes, nlist, nprobe, seed)
-    // Bounded top-k aggregation — see TopKPerKey: map-side partials keep
-    // <= k candidates per probe, so the exchange stays k-bounded even when
-    // nprobe lists are large.
-    graft.plans.TopKPerKey.topK(scored, "q_id", "cos", "neighbor_id", k, "cosine")
-      .orderBy(col("q_id"), col("rn"))
+      seed: Long = 4099L): DataFrame =
+    AnnTier.liveTopK(s, dir, IvfTier(nlist, nprobe, seed), numProbes, k)
+
+  /** The `nprobe` nearest lists per row, exploded, from the broadcast
+    * centroids (the codegen'd [[IvfLists]] normalizes inside). */
+  private[similarity] def probeLists(s: SparkSession, centroids: Array[Array[Double]],
+      nprobe: Int): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    explode(ColumnBridge.column(IvfLists(ColumnBridge.expression(col("e")),
+      s.sparkContext.broadcast(centroids), nprobe)))
   }
+}
+
+/**
+ * The IVF tier: the geometry is the spherical k-means centroids, the
+ * assignments one (vec_id, list_id) row per vector. nlist/nprobe = 0
+ * resolve corpus-adaptively ([[AnnIvf.resolveKnobs]]) and the metadata
+ * records the RESOLVED values, so a loaded index keeps its build-time
+ * operating point even if the corpus — and the auto rule's answer —
+ * later grows. Appends assign to the FROZEN centroids, so for IVF
+ * "append ≡ rebuild" holds for the assignments given the geometry, not
+ * for the geometry itself; past [[AnnIndex.ivfDriftBound]] the undersized
+ * nlist and stale centroids decay scan and recall, and the append refuses.
+ */
+final case class IvfTier(nlist: Int = 0, nprobe: Int = 0, seed: Long = 4099L)
+    extends AnnTier {
+  import org.json4s.JsonDSL._
+
+  type Geometry = Array[Array[Double]]
+
+  def method: String = "ivf"
+
+  def knobs: org.json4s.JObject = ("nlist" -> nlist) ~ ("nprobe" -> nprobe) ~ ("seed" -> seed)
+
+  override def resolve(s: SparkSession, dir: String): AnnTier = {
+    val (l, p) = AnnIvf.resolveKnobs(s, dir, nlist, nprobe)
+    copy(nlist = l, nprobe = p)
+  }
+
+  def fit(s: SparkSession, dir: String, dim: => Int): Geometry =
+    AnnIvf.fitQuantizer(s, dir, nlist, seed)
+
+  def writeGeometry(s: SparkSession, path: String, centroids: Geometry): Unit =
+    AnnTier.writeModel(path, AnnTier.idVectorRows(s, centroids, "list_id", "center"))
+
+  def readGeometry(s: SparkSession, path: String): Geometry = AnnTier.readIdVectors(s, path)
+
+  /** Each row lands in its single nearest list — identical to
+    * model.transform, but from the broadcast centroid array with no ML
+    * fit on the query path. The codegen'd [[IvfLists]] takes the RAW
+    * vector and unit-normalizes in compiled code (same index-order fold,
+    * sqrt, floor and division as the fit's SQL HOF, so assignments are
+    * bit-identical), keeping interpreted lambdas and ScalaUDF boxing off
+    * the per-query path (the former lambda was ~1.5 s of q49's 2.0 s
+    * steady-state at sf0.1: its aggregate() re-ran for every element). */
+  def encode(s: SparkSession, centroids: Geometry, rows: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    rows.select(col("vec_id"), element_at(ColumnBridge.column(IvfLists(
+      ColumnBridge.expression(col("e")), s.sparkContext.broadcast(centroids), 1)), 1)
+      .as("list_id"))
+  }
+
+  /** Probes fan out to their `nprobe` nearest lists; the candidates are
+    * the list members, rehydrated from the corpus by vec_id. */
+  def scan(s: SparkSession, centroids: Geometry, emb: DataFrame, assignments: DataFrame,
+      numProbes: Int): DataFrame = {
+    graft.functions.CosineSimilarity.register(s)
+    val probes = emb.filter(col("vec_id") < numProbes)
+      .select(col("vec_id").as("q_id"), col("e").as("ae"),
+        AnnIvf.probeLists(s, centroids, nprobe).as("list_id"))
+    broadcast(probes)
+      .join(assignments, Seq("list_id"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .join(emb.select(col("vec_id"), col("e").as("be")), Seq("vec_id"))
+      .selectExpr("q_id", "vec_id AS neighbor_id", "cosine_similarity(ae, be) AS cos")
+  }
+
+  override def driftBound: Option[(Double, String)] = Some((AnnIndex.ivfDriftBound,
+    "recall/scan decay past the measured knee (TUNE_r12.txt ivfdrift)"))
 }

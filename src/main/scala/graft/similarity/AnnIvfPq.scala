@@ -109,45 +109,8 @@ object AnnIvfPq {
       nprobe: Int = 0,
       m: Int = AnnPq.defaultM,
       k: Int = AnnPq.defaultK,
-      seed: Long = 4099L,
-      trainDir: String = null): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    // trainDir != null: BOTH geometries (coarse quantizer + residual
-    // codebooks) and the knobs resolve from a smaller training corpus —
-    // AnnTune's ivfpqdrift harness pricing the frozen-geometry decay a
-    // persisted-then-appended q138 index would serve
-    val train = Option(trainDir).getOrElse(dir)
-    val (rNlist, rNprobe) = AnnIvf.resolveKnobs(s, train, nlist, nprobe)
-    val centroids = AnnIvf.fitQuantizer(s, train, rNlist, seed)
-    val books = fitResidualBooks(s, train, rNlist, m, k, seed)
-    val bcC = s.sparkContext.broadcast(centroids)
-    val bcB = s.sparkContext.broadcast(books)
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS e")
-    // corpus side: one struct(list_id, codes) per vector — assignment,
-    // residual, and encode fused into one codegen'd pass over the scan
-    val enc = ColumnBridge.column(IvfPqCodes(ColumnBridge.expression(col("e")), bcC, bcB))
-    val codes = emb.select(col("vec_id"), enc.as("enc"))
-      .select(col("vec_id"), col("enc.list_id").as("list_id"), col("enc.codes").as("codes"))
-    // probe side: nprobe lists, the <q, c_l> term per probed list, and
-    // the residual-codebook LUT (PqLut unit-normalizes the query inside)
-    val probeLists = ColumnBridge.column(
-      IvfLists(ColumnBridge.expression(col("e")), bcC, rNprobe))
-    val qdotc = ColumnBridge.column(
-      IvfCentroidDots(ColumnBridge.expression(col("e")), bcC))
-    val probes = emb.filter(col("vec_id") < numProbes)
-      .select(col("vec_id").as("q_id"),
-        ColumnBridge.column(PqLut(ColumnBridge.expression(col("e")), bcB)).as("lut"),
-        qdotc.as("cdots"),
-        explode(probeLists).as("list_id"))
-      .selectExpr("q_id", "lut", "list_id", "element_at(cdots, list_id + 1) AS qdotc")
-    broadcast(probes).join(codes, Seq("list_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        (col("qdotc") + ColumnBridge.column(PqAdc(
-          ColumnBridge.expression(col("codes")),
-          ColumnBridge.expression(col("lut")), k))).as("adc"))
-  }
+      seed: Long = 4099L): DataFrame =
+    AnnTier.liveCandidates(s, dir, IvfPqTier(nlist, nprobe, m, k, seed), numProbes)
 
   /** Pruned residual-ADC scan → top-`rerank` pool → exact-cosine re-rank
     * → top-k; output matches every other ANN variant. */
@@ -161,27 +124,94 @@ object AnnIvfPq {
       nprobe: Int = 0,
       m: Int = AnnPq.defaultM,
       kCodes: Int = AnnPq.defaultK,
-      seed: Long = 4099L,
-      trainDir: String = null): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    // frozen geometries keep the TRAINING corpus's re-rank depth too —
-    // exactly the decay channel under test (see AnnPq.annTopK)
-    val rr = if (rerank > 0) rerank
-      else AnnPq.autoRerank(AnnIvf.corpusCount(s, Option(trainDir).getOrElse(dir)))
-    val scanned = prunedScan(s, dir, numProbes, nlist, nprobe, m, kCodes, seed, trainDir)
-    val pool = graft.plans.TopKPerKey.topK(
-      scanned, "q_id", "adc", "neighbor_id", rr, "adc", roundTo = 9)
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS e")
-    val probeVecs = emb.filter(col("vec_id") < numProbes)
-      .select(col("vec_id").as("q_id"), col("e").as("ae"))
-    val exact = emb.join(broadcast(pool.select(col("q_id"), col("neighbor_id"))),
-        col("vec_id") === col("neighbor_id"))
-      .join(broadcast(probeVecs), Seq("q_id"))
-      .selectExpr("q_id", "neighbor_id", "cosine_similarity(ae, e) AS cos")
-    graft.plans.TopKPerKey.topK(exact, "q_id", "cos", "neighbor_id", k, "cosine")
-      .orderBy(col("q_id"), col("rn"))
+      seed: Long = 4099L): DataFrame =
+    AnnTier.liveTopK(s, dir, IvfPqTier(nlist, nprobe, m, kCodes, seed, rerank), numProbes, k)
+}
+
+/**
+ * The IVF-PQ tier — the artifact FAISS ships as `IVFx,PQy`: the geometry
+ * is the coarse centroids AND the residual codebooks, in one `model/`
+ * tagged by a `kind` column ('coarse' rows are (list_id, center),
+ * 'residual' rows (sub_id, code_id, center), flattened into the same
+ * (kind, id_a, id_b, center) shape); the assignments are
+ * (vec_id, list_id, codes), so the scan reads list-pruned 16-byte rows
+ * and never the floats. Appends are bounded by the coarse half's
+ * [[AnnIndex.ivfDriftBound]], the binding bound of the composition.
+ */
+final case class IvfPqTier(
+    nlist: Int = 0,
+    nprobe: Int = 0,
+    m: Int = AnnPq.defaultM,
+    kCodes: Int = AnnPq.defaultK,
+    seed: Long = 4099L,
+    rerank: Int = 0) extends AdcRerank {
+  import org.apache.spark.sql.graftbridge.ColumnBridge
+  import org.json4s.JsonDSL._
+
+  /** (coarse centroids, residual codebooks) */
+  type Geometry = (Array[Array[Double]], Array[Array[Array[Double]]])
+
+  def method: String = "ivfpq"
+
+  def knobs: org.json4s.JObject =
+    ("nlist" -> nlist) ~ ("nprobe" -> nprobe) ~ ("m" -> m) ~ ("k" -> kCodes) ~ ("seed" -> seed)
+
+  override def resolve(s: SparkSession, dir: String): AnnTier = {
+    val (l, p) = AnnIvf.resolveKnobs(s, dir, nlist, nprobe)
+    copy(nlist = l, nprobe = p)
   }
+
+  def fit(s: SparkSession, dir: String, dim: => Int): Geometry =
+    (AnnIvf.fitQuantizer(s, dir, nlist, seed),
+      AnnIvfPq.fitResidualBooks(s, dir, nlist, m, kCodes, seed))
+
+  def writeGeometry(s: SparkSession, path: String, g: Geometry): Unit = {
+    import s.implicits._
+    val coarse = g._1.toIndexedSeq.zipWithIndex.map { case (c, i) => ("coarse", i, 0, c.toSeq) }
+    val residual = AnnPq.bookRows(g._2).map { case (sub, code, c) => ("residual", sub, code, c) }
+    AnnTier.writeModel(path,
+      s.createDataset(coarse ++ residual).toDF("kind", "id_a", "id_b", "center"))
+  }
+
+  def readGeometry(s: SparkSession, path: String): Geometry = {
+    val rows = s.read.parquet(s"$path/model").collect()
+    val coarse = rows.filter(_.getString(0) == "coarse")
+      .sortBy(_.getInt(1)).map(_.getSeq[Double](3).toArray)
+    require(coarse.length == nlist,
+      s"IVF-PQ model at $path has ${coarse.length} coarse centroids, expected $nlist")
+    val residual = rows.filter(_.getString(0) == "residual")
+      .sortBy(r => (r.getInt(1), r.getInt(2))).map(_.getSeq[Double](3).toArray)
+    (coarse, AnnPq.booksOf(residual, m, kCodes, "IVF-PQ residual model", path))
+  }
+
+  /** Assignment, residual and encode fused into one codegen'd pass. */
+  def encode(s: SparkSession, g: Geometry, rows: DataFrame): DataFrame = {
+    val enc = ColumnBridge.column(IvfPqCodes(ColumnBridge.expression(col("e")),
+      s.sparkContext.broadcast(g._1), s.sparkContext.broadcast(g._2)))
+    rows.select(col("vec_id"), enc.as("enc"))
+      .select(col("vec_id"), col("enc.list_id").as("list_id"), col("enc.codes").as("codes"))
+  }
+
+  /** Probe side: `nprobe` lists, the <q, c_l> term per probed list, and
+    * the residual-codebook LUT (PqLut unit-normalizes the query inside);
+    * the scan touches only the probed lists' code rows. */
+  def scan(s: SparkSession, g: Geometry, emb: DataFrame, codes: DataFrame,
+      numProbes: Int): DataFrame = {
+    val qdotc = ColumnBridge.column(
+      IvfCentroidDots(ColumnBridge.expression(col("e")), s.sparkContext.broadcast(g._1)))
+    val probes = emb.filter(col("vec_id") < numProbes)
+      .select(col("vec_id").as("q_id"), AnnPq.lut(s, g._2).as("lut"), qdotc.as("cdots"),
+        AnnIvf.probeLists(s, g._1, nprobe).as("list_id"))
+      .selectExpr("q_id", "lut", "list_id", "element_at(cdots, list_id + 1) AS qdotc")
+    broadcast(probes).join(codes, Seq("list_id"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
+        (col("qdotc") + AnnPq.adc(kCodes)).as("adc"))
+  }
+
+  override def driftBound: Option[(Double, String)] = Some((AnnIndex.ivfDriftBound,
+    "the coarse quantizer's scan/recall decay past the measured knee " +
+      "(TUNE_r12.txt ivfdrift) binds the composition"))
 }
 
 /** Fused corpus-side IVF-PQ encode: unit-normalize, assign the nearest

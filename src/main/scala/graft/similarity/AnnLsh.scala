@@ -179,97 +179,21 @@ object AnnLsh {
     out.toArray
   }
 
+  /** THE representation switch, in one place: the carried-vector column
+    * for scoring — int8 (registering quantize_vec) or the raw doubles —
+    * so the probe and candidate sides can never drift onto different
+    * representations. */
+  private[similarity] def vecOf(s: SparkSession, quantized: Boolean, c: String) =
+    if (quantized) { graft.functions.QuantizeVec.register(s); expr(s"quantize_vec($c)") }
+    else col(c)
+
   /**
    * Bucket-pruned, deduped, cosine-scored candidate pairs — the pool
    * [[annTopK]] ranks, as (q_id, neighbor_id, cos). Exposed separately so
    * tests can measure pool sizes / scan fraction by counting directly
    * instead of ranking with a sentinel k (the top-k insert is O(k) per
    * element, so an effectively unbounded k degrades to O(n^2) per group).
-   * The join key is `tb = table * 2^numPlanes + bucket`, so buckets from
-   * different tables never collide.
    */
-  /** The bucket-exploded probe and index frames the candidate join runs
-    * over — (probes: q_id, ae, tb), (indexed: vec_id, be, tb), plus the
-    * corpus (vec_id, e). Shared by [[candidates]] and [[collisionStats]]
-    * so diagnostics measure exactly the shipped frames. */
-  private def bucketFrames(
-      s: SparkSession,
-      dir: String,
-      numProbes: Int,
-      numPlanes: Int,
-      numTables: Int,
-      probesPerTable: Int,
-      seed: Long,
-      adaptive: Boolean,
-      poolFrac: Double,
-      quantized: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS e")
-    val dim = emb.selectExpr("size(e)").first().getInt(0)
-    val bc = s.sparkContext.broadcast(planes(numTables * numPlanes, dim, seed))
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    // Corpus side: ONE bucket per table per row — index size L per vector.
-    // Both assignments are codegen'd LshBuckets expressions (no ScalaUDF on
-    // the index-build or probe-fanout path); probe side emits each table's
-    // probesPerTable most-probable buckets in margin order (fixed per-table
-    // quota — measured better than the adaptive global-budget merge, see
-    // LshBuckets doc) — query-time fan-out only, the index is untouched.
-    val indexBuckets = ColumnBridge.column(
-      LshBuckets(ColumnBridge.expression(col("e")), bc, numTables, numPlanes, 1))
-    // poolFrac > 0 switches the probe side to OCCUPANCY-BUDGETED probing:
-    // one ids-only aggregation derives per-bucket occupancies (array sized
-    // by the lattice — numTables * 2^numPlanes ints — NOT the corpus, so
-    // the broadcast stays sub-MB at 100 TB; the aggregation itself is a
-    // map-side-combined count over the same assignments the index pass
-    // already computes, and the persisted-index path reads it from the
-    // saved assignments instead, see AnnIndex.lshTopK). Each probe then
-    // takes margin-ordered buckets merged across tables while their summed
-    // occupancy fits ceil(poolFrac * corpusN) rows, making the id-only
-    // pre-vote pool a HARD bound instead of an emergent number.
-    val probeBuckets =
-      if (poolFrac > 0) {
-        val countRows = emb.select(explode(indexBuckets).as("tb"))
-          .groupBy("tb").count().collect()
-        // Long counts + Long budget: a >2^31-row bucket (or budget) would
-        // wrap an Int and silently break the hard per-probe bound — the
-        // guarantee only matters at exactly that scale.
-        val counts = new Array[Long](numTables << numPlanes)
-        var totalAssign = 0L
-        countRows.foreach { r =>
-          counts(r.getInt(0)) = r.getLong(1)
-          totalAssign += r.getLong(1)
-        }
-        val corpusN = totalAssign / numTables
-        val budget = math.max(1L, math.ceil(poolFrac * corpusN).toLong)
-        val bcCounts = s.sparkContext.broadcast(counts)
-        ColumnBridge.column(
-          LshBuckets(ColumnBridge.expression(col("e")), bc, numTables, numPlanes,
-            probesPerTable, adaptive, bcCounts, budget))
-      } else ColumnBridge.column(
-        LshBuckets(ColumnBridge.expression(col("e")), bc, numTables, numPlanes, probesPerTable,
-          adaptive))
-    // `quantized`: the carried vector narrows to int8 BEFORE the bucket
-    // explode — Generate replicates the projected columns, so the
-    // quantization runs once per vector, not once per (vector, bucket)
-    // row — while BUCKETING stays on the raw doubles (the candidate pool,
-    // and so every gated pool number, is byte-identical to the exact path;
-    // only the scoring representation changes).
-    val indexed = emb
-      .select(col("vec_id"), vecOf(s, quantized, "e").as("be"), explode(indexBuckets).as("tb"))
-    val probes = emb.filter(col("vec_id") < numProbes)
-      .select(col("vec_id").as("q_id"), vecOf(s, quantized, "e").as("ae"),
-        explode(probeBuckets).as("tb"))
-    (probes, indexed, emb)
-  }
-
-  /** THE representation switch, in one place: the carried-vector column
-    * for scoring — int8 (registering quantize_vec) or the raw doubles.
-    * Used by [[bucketFrames]] and the voted branch's rehydration so the
-    * two paths can never drift onto different representations. */
-  private def vecOf(s: SparkSession, quantized: Boolean, c: String) =
-    if (quantized) { graft.functions.QuantizeVec.register(s); expr(s"quantize_vec($c)") }
-    else col(c)
-
   def candidates(
       s: SparkSession,
       dir: String,
@@ -281,43 +205,9 @@ object AnnLsh {
       adaptive: Boolean = false,
       minCollisions: Int = 2,
       poolFrac: Double = 0.0,
-      quantized: Boolean = false): DataFrame = {
-    val (probes, indexed, emb) = bucketFrames(s, dir, numProbes, numPlanes, numTables,
-      probesPerTable, seed, adaptive, poolFrac, quantized)
-    // `quantized` scores candidates on TRUE int8 vectors (QuantizeVec →
-    // array<tinyint>, CosineSimilarityI8 on the bytes): bucketing and the
-    // collision vote are UNCHANGED (same candidate pool, same pool
-    // gates), only the carried vectors and the cosine kernel switch to
-    // the 8x narrower representation — at 100 TB the candidate
-    // rehydration join is the widest data movement in this plan.
-    // Ranking degradation is measured in ModulesSpec (quantized-default
-    // recall on both gated corpora), not guessed.
-    val cosExpr =
-      if (quantized) { graft.functions.CosineSimilarityI8.register(s)
-        "cosine_similarity_i8(ae, be)" }
-      else { graft.functions.CosineSimilarity.register(s)
-        "cosine_similarity(ae, be)" }
-    if (minCollisions <= 1) {
-      // A neighbor sharing buckets in several tables/probes would be ranked
-      // (and counted) more than once, so pairs are deduped — AFTER scoring,
-      // not before: the cosine is a cheap codegen'd map-side expression, and
-      // scoring first means the dedup exchange shuffles (q_id, neighbor_id,
-      // cos) rows instead of dragging both full embedding vectors through it
-      // (at dim=1024 that's a ~100x lighter shuffle; every duplicate scores
-      // the same pair, so the kept row is identical either way).
-      broadcast(probes)
-        .join(indexed, Seq("tb"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .selectExpr("q_id", "vec_id AS neighbor_id", s"$cosExpr AS cos")
-        .dropDuplicates("q_id", "neighbor_id")
-    } else {
-      val probeVecs = emb.filter(col("vec_id") < numProbes)
-      scoreVoted(probes.select("q_id", "tb"), indexed.select(col("vec_id"), col("tb")),
-        probeVecs.select(col("vec_id").as("q_id"), vecOf(s, quantized, "e").as("ae")),
-        emb.select(col("vec_id"), vecOf(s, quantized, "e").as("be")),
-        minCollisions, cosExpr)
-    }
-  }
+      quantized: Boolean = false): DataFrame =
+    AnnTier.liveCandidates(s, dir, LshTier(numPlanes, numTables, probesPerTable, seed,
+      adaptive, minCollisions, poolFrac, quantized), numProbes)
 
   /**
    * Diagnostic surface for the gates: the vote's INPUT (q_id, vec_id,
@@ -338,10 +228,25 @@ object AnnLsh {
       seed: Long = 7919L,
       adaptive: Boolean = false,
       poolFrac: Double = 0.0): DataFrame = {
-    val (probes, indexed, _) = bucketFrames(s, dir, numProbes, numPlanes, numTables,
-      probesPerTable, seed, adaptive, poolFrac)
-    collisionCounts(probes.select("q_id", "tb"), indexed.select(col("vec_id"), col("tb")))
+    val t = LshTier(numPlanes, numTables, probesPerTable, seed, adaptive, poolFrac = poolFrac)
+    val emb = AnnTier.vectors(s, dir)
+    val planes = t.fit(s, dir, AnnTier.dimOf(emb))
+    val indexed = t.encode(s, planes, emb)
+    collisionCounts(t.probes(s, planes, emb, indexed, numProbes).select("q_id", "tb"), indexed)
   }
+
+  /** The pre-threshold collision counts (q_id, vec_id, n_hits) — the
+    * id-only aggregation [[scoreVoted]] filters. Exposed so the gates can
+    * measure BOTH pool numbers the scan fraction excludes: sum(n_hits) is
+    * the MULTIPLICITY pool (the rows the bucket join actually emits into
+    * the counting aggregate — the true shuffle/aggregation cost at scale),
+    * count(*) the DISTINCT pool (unique candidate pairs). */
+  private[similarity] def collisionCounts(
+      probeIds: DataFrame, indexIds: DataFrame): DataFrame =
+    broadcast(probeIds)
+      .join(indexIds, Seq("tb"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .groupBy("q_id", "vec_id").agg(count(lit(1)).as("n_hits"))
 
   /**
    * COLLISION VOTING: count bucket co-occurrences per (probe, vector)
@@ -356,22 +261,7 @@ object AnnLsh {
    * whenever the vectors are wide. Vectors are rehydrated afterwards:
    * probes from a broadcast (numProbes rows), candidates from a hash
    * join against the corpus that scales with the filtered pool.
-   * Shared by the live path above and [[AnnIndex.lshTopK]]'s loaded
-   * (tb, vec_id) assignments, so persisted-index voting is the same plan.
    */
-  /** The pre-threshold collision counts (q_id, vec_id, n_hits) — the
-    * id-only aggregation [[scoreVoted]] filters. Exposed so the gates can
-    * measure BOTH pool numbers the scan fraction excludes: sum(n_hits) is
-    * the MULTIPLICITY pool (the rows the bucket join actually emits into
-    * the counting aggregate — the true shuffle/aggregation cost at scale),
-    * count(*) the DISTINCT pool (unique candidate pairs). */
-  private[similarity] def collisionCounts(
-      probeIds: DataFrame, indexIds: DataFrame): DataFrame =
-    broadcast(probeIds)
-      .join(indexIds, Seq("tb"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id").agg(count(lit(1)).as("n_hits"))
-
   private[similarity] def scoreVoted(
       probeIds: DataFrame,   // (q_id, tb)
       indexIds: DataFrame,   // (vec_id, tb)
@@ -404,13 +294,130 @@ object AnnLsh {
       adaptive: Boolean = false,
       minCollisions: Int = 2,
       poolFrac: Double = 0.0,
-      quantized: Boolean = false): DataFrame = {
-    val scored = candidates(s, dir, numProbes, numPlanes, numTables, probesPerTable, seed,
-      adaptive, minCollisions, poolFrac, quantized)
-    // Bounded top-k aggregation (not a rank window): candidates are already
-    // bucket-pruned, but the final rank must not funnel them into #probes
-    // sort tasks either — TopKPerKey keeps <= k per (partition, probe).
-    graft.plans.TopKPerKey.topK(scored, "q_id", "cos", "neighbor_id", k, "cosine")
-      .orderBy(col("q_id"), col("rn"))
+      quantized: Boolean = false): DataFrame =
+    AnnTier.liveTopK(s, dir, LshTier(numPlanes, numTables, probesPerTable, seed,
+      adaptive, minCollisions, poolFrac, quantized), numProbes, k)
+}
+
+/**
+ * The LSH tier: the geometry is the `numTables * numPlanes` seeded
+ * hyperplanes (a pure function of (seed, dim), so an appended index is
+ * bit-for-bit a rebuild — hence no drift bound); the assignments are one
+ * (vec_id, tb) row per table, `tb = table * 2^numPlanes + bucket`, so
+ * buckets from different tables never collide. Every knob, including the
+ * query-side vote threshold and budget, goes into the metadata, so a
+ * loaded index probes as it was built even if library defaults move.
+ * `quantized` is the one live-only knob: the q62 scoring representation,
+ * never persisted (a persisted index scores on the raw doubles).
+ */
+final case class LshTier(
+    numPlanes: Int = 14,
+    numTables: Int = 16,
+    probesPerTable: Int = 768,
+    seed: Long = 7919L,
+    adaptive: Boolean = false,
+    minCollisions: Int = 2,
+    poolFrac: Double = 0.0,
+    quantized: Boolean = false) extends AnnTier {
+  import org.apache.spark.sql.graftbridge.ColumnBridge
+  import org.json4s.JsonDSL._
+
+  // Fails when the tier is named, not at every later load: adaptive and
+  // budgeted probing are mutually exclusive (LshBuckets enforces the same).
+  require(!(adaptive && poolFrac > 0),
+    "LSH: adaptive and occupancy-budgeted (poolFrac > 0) probing are mutually exclusive")
+
+  type Geometry = Array[Array[Double]]
+
+  def method: String = "lsh"
+
+  def knobs: org.json4s.JObject =
+    ("numPlanes" -> numPlanes) ~ ("numTables" -> numTables) ~
+      ("probesPerTable" -> probesPerTable) ~ ("adaptive" -> adaptive) ~
+      ("minCollisions" -> minCollisions) ~ ("poolFrac" -> poolFrac) ~ ("seed" -> seed)
+
+  def fit(s: SparkSession, dir: String, dim: => Int): Geometry =
+    AnnLsh.planes(numTables * numPlanes, dim, seed)
+
+  def writeGeometry(s: SparkSession, path: String, planes: Geometry): Unit =
+    AnnTier.writeModel(path, AnnTier.idVectorRows(s, planes, "plane_id", "weights"))
+
+  def readGeometry(s: SparkSession, path: String): Geometry = AnnTier.readIdVectors(s, path)
+
+  /** Corpus side: ONE bucket per table per row — index size L per vector
+    * (codegen'd [[LshBuckets]], no ScalaUDF on the index pass). */
+  def encode(s: SparkSession, planes: Geometry, rows: DataFrame): DataFrame = {
+    val bc = s.sparkContext.broadcast(planes)
+    rows.select(col("vec_id"), explode(ColumnBridge.column(
+      LshBuckets(ColumnBridge.expression(col("e")), bc, numTables, numPlanes, 1))).as("tb"))
+  }
+
+  /** The probe side, (q_id, ae, tb): each table's `probesPerTable` most
+    * probable buckets in margin order — query-time fan-out only, the
+    * index is untouched. `poolFrac > 0` switches to OCCUPANCY-BUDGETED
+    * probing: per-bucket occupancies come from an ids-only aggregation
+    * over `assignments` (sized by the lattice — numTables * 2^numPlanes
+    * longs — not the corpus, so the broadcast stays sub-MB at 100 TB; a
+    * persisted index never re-touches a vector byte for it), and each
+    * probe takes margin-ordered buckets merged across tables while their
+    * summed occupancy fits ceil(poolFrac * corpusN) rows — a HARD bound on
+    * the id-only pre-vote pool. */
+  private[similarity] def probes(s: SparkSession, planes: Geometry, emb: DataFrame,
+      assignments: DataFrame, numProbes: Int): DataFrame = {
+    val bc = s.sparkContext.broadcast(planes)
+    val e = ColumnBridge.expression(col("e"))
+    val buckets =
+      if (poolFrac > 0) {
+        // Long counts + Long budget: a >2^31-row bucket (or budget) would
+        // wrap an Int and silently break the hard per-probe bound — the
+        // guarantee only matters at exactly that scale.
+        val counts = new Array[Long](numTables << numPlanes)
+        var totalAssign = 0L
+        assignments.groupBy("tb").count().collect().foreach { r =>
+          counts(r.getInt(0)) = r.getLong(1)
+          totalAssign += r.getLong(1)
+        }
+        val budget = math.max(1L, math.ceil(poolFrac * (totalAssign / numTables)).toLong)
+        LshBuckets(e, bc, numTables, numPlanes, probesPerTable, adaptive,
+          s.sparkContext.broadcast(counts), budget)
+      } else LshBuckets(e, bc, numTables, numPlanes, probesPerTable, adaptive)
+    emb.filter(col("vec_id") < numProbes)
+      .select(col("vec_id").as("q_id"), AnnLsh.vecOf(s, quantized, "e").as("ae"),
+        explode(ColumnBridge.column(buckets)).as("tb"))
+  }
+
+  /** probes x assignments is a bucket equi-join; candidate vectors are
+    * rehydrated from the corpus by vec_id (broadcast probes stay the small
+    * side; the rehydration scales with the candidate pool, not the
+    * corpus). `quantized` scores on TRUE int8 vectors (QuantizeVec →
+    * array<tinyint>, CosineSimilarityI8): the buckets and the vote — so
+    * the pool and every pool gate — are unchanged, only the carried
+    * vectors and the cosine kernel run 8x narrower. */
+  def scan(s: SparkSession, planes: Geometry, emb: DataFrame, assignments: DataFrame,
+      numProbes: Int): DataFrame = {
+    val probed = probes(s, planes, emb, assignments, numProbes)
+    val cosExpr =
+      if (quantized) { graft.functions.CosineSimilarityI8.register(s)
+        "cosine_similarity_i8(ae, be)" }
+      else { graft.functions.CosineSimilarity.register(s)
+        "cosine_similarity(ae, be)" }
+    val corpusVecs = emb.select(col("vec_id"), AnnLsh.vecOf(s, quantized, "e").as("be"))
+    if (minCollisions <= 1) {
+      // A neighbor sharing buckets in several tables/probes is joined more
+      // than once, so pairs are deduped — AFTER scoring: every duplicate
+      // scores the same pair, and the dedup exchange then shuffles
+      // (q_id, neighbor_id, cos) rows, not vectors.
+      broadcast(probed)
+        .join(assignments, Seq("tb"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .join(corpusVecs, Seq("vec_id"))
+        .selectExpr("q_id", "vec_id AS neighbor_id", s"$cosExpr AS cos")
+        .dropDuplicates("q_id", "neighbor_id")
+    } else {
+      AnnLsh.scoreVoted(probed.select("q_id", "tb"), assignments,
+        emb.filter(col("vec_id") < numProbes)
+          .select(col("vec_id").as("q_id"), AnnLsh.vecOf(s, quantized, "e").as("ae")),
+        corpusVecs, minCollisions, cosExpr)
+    }
   }
 }

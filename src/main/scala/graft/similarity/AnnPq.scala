@@ -3,7 +3,7 @@ package graft.similarity
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -46,16 +46,16 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType}
  * recall@5 against exhaustive brute force on BOTH gated corpora, plus
  * ADC-estimator sanity on the compressed scan itself.
  *
- * The PERSISTED tier lives in [[AnnIndex]] (savePq/appendPq/pqTopK, the
- * q133 surface): codes are the assignments, codebooks the geometry, with
+ * The PERSISTED tier is [[PqTier]] under [[AnnIndex]] (the q133
+ * surface): codes are the assignments, codebooks the geometry, with
  * the same fingerprint staleness guard and meta-LAST crash bracket as
- * LSH/IVF; appends encode new vectors against the frozen codebooks and
- * REFUSE past [[AnnIndex.pqDriftBound]] (1.5×) — the bound is MEASURED
- * (TUNE_r14.txt pqdrift, the ivfdrift protocol): the 0.85 recall floor
- * holds through +50% appended rows on both gated corpora (0.888/0.880),
- * thins at +100% (0.920/0.864) and breaks at +200% (0.800); 1.5× is one
- * notch conservative of the observed knee, the same discipline as
- * [[AnnIndex.appendIvf]]'s 1.25×.
+ * every tier; appends encode new vectors against the frozen codebooks
+ * and REFUSE past [[AnnIndex.pqDriftBound]] (1.5×) — the bound is
+ * MEASURED (TUNE_r14.txt pqdrift, the ivfdrift protocol): the 0.85
+ * recall floor holds through +50% appended rows on both gated corpora
+ * (0.888/0.880), thins at +100% (0.920/0.864) and breaks at +200%
+ * (0.800); 1.5× is one notch conservative of the observed knee, the
+ * same discipline as [[AnnIndex.ivfDriftBound]]'s 1.25×.
  */
 object AnnPq {
 
@@ -184,28 +184,8 @@ object AnnPq {
       numProbes: Int = 5,
       m: Int = defaultM,
       k: Int = defaultK,
-      seed: Long = 4099L,
-      trainDir: String = null): DataFrame = {
-    // trainDir != null: codebooks fit on a DIFFERENT (smaller) corpus —
-    // AnnTune's pqdrift harness pricing the frozen-codebook decay a
-    // persisted-then-appended PQ index would carry
-    val books = fitCodebooks(s, Option(trainDir).getOrElse(dir), m, k, seed)
-    val bc = s.sparkContext.broadcast(books)
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS e")
-    val codes = emb.select(col("vec_id"),
-      ColumnBridge.column(PqCodes(ColumnBridge.expression(col("e")), bc)).as("codes"))
-    val probes = emb.filter(col("vec_id") < numProbes)
-      .select(col("vec_id").as("q_id"),
-        ColumnBridge.column(PqLut(ColumnBridge.expression(col("e")), bc)).as("lut"))
-    broadcast(probes).crossJoin(codes)
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        ColumnBridge.column(PqAdc(
-          ColumnBridge.expression(col("codes")),
-          ColumnBridge.expression(col("lut")), k)).as("adc"))
-  }
+      seed: Long = 4099L): DataFrame =
+    AnnTier.liveCandidates(s, dir, PqTier(m, k, seed), numProbes)
 
   /** ADC scan → top-`rerank` per probe → exact-cosine re-rank → top-k.
     * Output matches the other ANN variants: (q_id, neighbor_id, cos, rn)
@@ -218,34 +198,96 @@ object AnnPq {
       rerank: Int = 0,
       m: Int = defaultM,
       kCodes: Int = defaultK,
-      seed: Long = 4099L,
-      trainDir: String = null): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    // with frozen codebooks the re-rank depth ALSO resolves from the
-    // training corpus — an index built at size N and appended to N(1+f)
-    // keeps the pool it was built with, exactly the decay under test
-    val rr = if (rerank > 0) rerank
-      else autoRerank(AnnIvf.corpusCount(s, Option(trainDir).getOrElse(dir)))
-    val scanned = compressedScan(s, dir, numProbes, m, kCodes, seed, trainDir)
-    // ADC scores are quantized estimates shared by construction across
-    // engines-with-the-same-fit but NOT meaningful beyond pool selection;
-    // keep full precision (roundTo below only affects the reported cos).
-    val pool = graft.plans.TopKPerKey.topK(
-      scanned, "q_id", "adc", "neighbor_id", rr, "adc", roundTo = 9)
-    // Rehydrate ONLY the pool (numProbes × rerank rows — broadcast-sized)
-    // for exact scoring: one more corpus scan, joined on the broadcast
-    // candidate set, never a corpus-wide shuffle.
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS e")
-    val probeVecs = emb.filter(col("vec_id") < numProbes)
-      .select(col("vec_id").as("q_id"), col("e").as("ae"))
-    val exact = emb.join(broadcast(pool.select(col("q_id"), col("neighbor_id"))),
-        col("vec_id") === col("neighbor_id"))
-      .join(broadcast(probeVecs), Seq("q_id"))
-      .selectExpr("q_id", "neighbor_id", "cosine_similarity(ae, e) AS cos")
-    graft.plans.TopKPerKey.topK(exact, "q_id", "cos", "neighbor_id", k, "cosine")
-      .orderBy(col("q_id"), col("rn"))
+      seed: Long = 4099L): DataFrame =
+    AnnTier.liveTopK(s, dir, PqTier(m, kCodes, seed, rerank), numProbes, k)
+
+  /** The per-query ADC lookup table of `e` over codebooks `books`. */
+  private[similarity] def lut(s: SparkSession, books: Array[Array[Array[Double]]]): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(PqLut(ColumnBridge.expression(col("e")), s.sparkContext.broadcast(books)))
   }
+
+  /** PQ codebooks as (sub_id, code_id, center) rows. */
+  private[similarity] def bookRows(books: Array[Array[Array[Double]]])
+      : IndexedSeq[(Int, Int, Seq[Double])] =
+    for {
+      (book, sub) <- books.toIndexedSeq.zipWithIndex
+      (cent, code) <- book.toIndexedSeq.zipWithIndex
+    } yield (sub, code, cent.toSeq)
+
+  /** Codebook rows sorted by (sub_id, code_id), `k` per book, back to
+    * books(sub)(code). */
+  private[similarity] def booksOf(rows: Array[Array[Double]], m: Int, k: Int,
+      what: String, path: String): Array[Array[Array[Double]]] = {
+    require(rows.length == m * k,
+      s"$what at $path has ${rows.length} sub-centroids, expected ${m * k}")
+    rows.grouped(k).toArray
+  }
+
+  /** The ADC estimate column over `codes` and `lut`. */
+  private[similarity] def adc(kCodes: Int): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(PqAdc(
+      ColumnBridge.expression(col("codes")), ColumnBridge.expression(col("lut")), kCodes))
+  }
+}
+
+/**
+ * The PQ tier: the geometry is `m` sub-codebooks of `kCodes` centroids
+ * each, model rows (sub_id, code_id, center); the assignments are the
+ * m-byte code word per vector, (vec_id, codes array<tinyint>) — unlike
+ * LSH/IVF the assignment IS the compressed representation the scan
+ * reads, not a pointer into the corpus, and that table plus the
+ * kilobyte codebooks is what still fits in cluster memory at 100 TB. The
+ * re-rank depth resolves from the rows the codebooks were trained at
+ * (metadata `trainedRows`), so an appended index keeps the pool it was
+ * built with — exactly the decay [[AnnIndex.pqDriftBound]] bounds.
+ * `rerank` is a live-only knob (0: [[AnnPq.autoRerank]]).
+ */
+final case class PqTier(
+    m: Int = AnnPq.defaultM,
+    kCodes: Int = AnnPq.defaultK,
+    seed: Long = 4099L,
+    rerank: Int = 0) extends AdcRerank {
+  import org.json4s.JsonDSL._
+
+  type Geometry = Array[Array[Array[Double]]]
+
+  def method: String = "pq"
+
+  def knobs: org.json4s.JObject = ("m" -> m) ~ ("k" -> kCodes) ~ ("seed" -> seed)
+
+  def fit(s: SparkSession, dir: String, dim: => Int): Geometry =
+    AnnPq.fitCodebooks(s, dir, m, kCodes, seed)
+
+  def writeGeometry(s: SparkSession, path: String, books: Geometry): Unit = {
+    import s.implicits._
+    AnnTier.writeModel(path,
+      s.createDataset(AnnPq.bookRows(books)).toDF("sub_id", "code_id", "center"))
+  }
+
+  def readGeometry(s: SparkSession, path: String): Geometry =
+    AnnPq.booksOf(s.read.parquet(s"$path/model").collect()
+      .sortBy(r => (r.getInt(0), r.getInt(1))).map(_.getSeq[Double](2).toArray),
+      m, kCodes, "PQ model", path)
+
+  def encode(s: SparkSession, books: Geometry, rows: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val bc = s.sparkContext.broadcast(books)
+    rows.select(col("vec_id"),
+      ColumnBridge.column(PqCodes(ColumnBridge.expression(col("e")), bc)).as("codes"))
+  }
+
+  def scan(s: SparkSession, books: Geometry, emb: DataFrame, codes: DataFrame,
+      numProbes: Int): DataFrame =
+    broadcast(emb.filter(col("vec_id") < numProbes)
+        .select(col("vec_id").as("q_id"), AnnPq.lut(s, books).as("lut")))
+      .crossJoin(codes)
+      .filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("neighbor_id"), AnnPq.adc(kCodes).as("adc"))
+
+  override def driftBound: Option[(Double, String)] = Some((AnnIndex.pqDriftBound,
+    "recall decays past the measured knee (TUNE_r14.txt pqdrift)"))
 }
 
 /** PQ codes for a vector (unit-normalized inside, like [[IvfLists]]):

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.similarity.{AnnIvf, AnnLsh}
+import graft.similarity.{AnnIndex, AnnIvf, AnnLsh, AnnTier, IvfPqTier, IvfTier, LshTier, PqTier}
 
 /**
  * Offline knob sweep for the ANN operating point: prints mean recall@5 and
@@ -65,6 +65,39 @@ object AnnTune {
         f" prevote=${n.toDouble / (nProbes.toLong * total)}%.3f"
       }.getOrElse("")
       println(f"$label%-46s recall@$k=$recall%.3f scan=$frac%.3f$pre")
+    }
+
+    def rm(p: java.io.File): Unit = {
+      Option(p.listFiles).foreach(_.foreach(rm))
+      p.delete()
+    }
+
+    /** `body` over a temp copy of the corpus's first N/(1+f) vec_ids —
+      * the build-time corpus of an index then appended by fraction f —
+      * removed afterwards (each fraction copies up to the whole corpus;
+      * undeleted copies would accrete in tmp until the disk fills). */
+    def withPrefix(mode: String, f: Double)(body: (String, Long) => Unit): Unit = {
+      val cutoff = math.round(total / (1.0 + f))
+      val prefix = java.nio.file.Files.createTempDirectory(s"graft-$mode-$f-").toString
+      try {
+        spark.read.parquet(s"$dir/embeddings.parquet")
+          .where(s"vec_id < $cutoff")
+          .write.mode("overwrite").parquet(s"$prefix/embeddings.parquet")
+        body(prefix, cutoff)
+      } finally rm(new java.io.File(prefix))
+    }
+
+    /** FROZEN geometry: `tier`'s knobs resolved and its geometry fit on
+      * the prefix corpus at `prefix`, scanning the FULL corpus — what a
+      * persisted index built at the prefix's size and appended to the
+      * full size serves (undersized knobs, stale fit, the training
+      * corpus's re-rank depth). Returns (candidates, top-k). */
+    def frozen(tier: AnnTier, prefix: String)
+        : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      val t = tier.resolve(spark, prefix)
+      val emb = AnnTier.vectors(spark, dir)
+      val cands = t.liveScan(spark, emb, t.fit(spark, prefix, AnnTier.dimOf(emb)), nProbes)
+      (cands, t.rank(spark, cands, emb, nProbes, k, AnnIvf.corpusCount(spark, prefix)))
     }
 
     if (which == "lsh" || which == "both") {
@@ -221,37 +254,19 @@ object AnnTune {
       // every vector of the FULL corpus is assigned to the frozen
       // centroids, and recall@5 over the standard 25 probes is measured
       // against brute force on the full corpus. f = 0 is the
-      // fresh-rebuild baseline; the knee picks appendIvf's refusal bound.
-      for (f <- Seq(0.0, 0.25, 0.5, 1.0, 2.0)) {
-        val cutoff = math.round(total / (1.0 + f))
-        val trainDir = java.nio.file.Files
-          .createTempDirectory(s"graft-ivfdrift-$f-").toString
-        try {
-          spark.read.parquet(s"$dir/embeddings.parquet")
-            .where(s"vec_id < $cutoff")
-            .write.mode("overwrite").parquet(s"$trainDir/embeddings.parquet")
-          val cands = AnnIvf.frozenGeometryCandidates(spark, dir, trainDir, nProbes)
-          evalOne(f"ivfdrift appended=${(f * 100).toInt}%d%% trained=$cutoff of $total",
-            cands,
-            graft.plans.TopKPerKey.topK(cands, "q_id", "cos", "neighbor_id", k, "cosine"))
-        } finally {
-          // each fraction copies up to the whole corpus — five undeleted
-          // copies per lap would accrete in tmp until the disk fills
-          def rm(p: java.io.File): Unit = {
-            Option(p.listFiles).foreach(_.foreach(rm))
-            p.delete()
-          }
-          rm(new java.io.File(trainDir))
-        }
+      // fresh-rebuild baseline; the knee picks the IVF append bound.
+      for (f <- Seq(0.0, 0.25, 0.5, 1.0, 2.0)) withPrefix("ivfdrift", f) { (prefix, cutoff) =>
+        val (cands, top) = frozen(IvfTier(), prefix)
+        evalOne(f"ivfdrift appended=${(f * 100).toInt}%d%% trained=$cutoff of $total", cands, top)
       }
     }
     if (which == "lshdrift") {
       // LSH APPEND-DRIFT measurement (r13): LSH geometry (hyperplanes) is
-      // a pure function of (seed, dim) — appendLsh SHOULD be structurally
+      // a pure function of (seed, dim) — an LSH append SHOULD be structurally
       // drift-free, unlike IVF whose frozen centroids decay (ivfdrift).
       // This mode turns that argument into numbers instead of trust: for
       // appended fraction f, build a persisted index over the first
-      // N/(1+f) vec_ids, grow the corpus by new part files, appendLsh the
+      // N/(1+f) vec_ids, grow the corpus by new part files, append the
       // rest, and compare against a FRESH rebuild over the full corpus —
       //  - deltaAssign: symmetric difference of (vec_id, tb) assignment
       //    sets (0 = the appended index is bit-identical structure);
@@ -259,8 +274,8 @@ object AnnTune {
       //  - bucket-occupancy distribution of the appended index (mean,
       //    max bucket share, top-1%-of-buckets share): occupancy skew
       //    amplification under append-heavy growth is the cost knee that
-      //    would warrant an appendLsh bound the way ivfdrift's recall
-      //    knee bounded appendIvf.
+      //    would warrant an LSH append bound the way ivfdrift's recall
+      //    knee bounded the IVF append.
       for (f <- Seq(0.0, 0.25, 0.5, 1.0)) {
         val cutoff = math.round(total / (1.0 + f))
         val work = java.nio.file.Files
@@ -271,15 +286,15 @@ object AnnTune {
             .where(s"vec_id < $cutoff")
             .write.parquet(s"$corpus/embeddings.parquet")
           val appended = s"$work/appended"
-          graft.similarity.AnnIndex.saveLsh(spark, corpus, appended)
+          AnnIndex.build(spark, corpus, appended, LshTier())
           if (f > 0) {
             spark.read.parquet(s"$dir/embeddings.parquet")
               .where(s"vec_id >= $cutoff")
               .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-            graft.similarity.AnnIndex.appendLsh(spark, corpus, appended)
+            AnnIndex.append(spark, corpus, appended, "lsh")
           }
           val rebuilt = s"$work/rebuilt"
-          graft.similarity.AnnIndex.saveLsh(spark, corpus, rebuilt)
+          AnnIndex.build(spark, corpus, rebuilt, LshTier())
           def assigns(p: String): Set[(Long, Int)] =
             spark.read.parquet(s"$p/assignments")
               .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
@@ -291,8 +306,7 @@ object AnnTune {
           val maxShare = occ.last.toDouble / rows
           val top1Share = occ.takeRight(math.max(1, occ.size / 100))
             .sum.toDouble / rows
-          val ann = graft.similarity.AnnIndex
-            .lshTopK(spark, corpus, appended, nProbes, k)
+          val ann = AnnIndex.topK(spark, corpus, appended, "lsh", nProbes, k)
             .collect().map(r => (r.getLong(0), r.getLong(1)))
             .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
           val recall = (0 until nProbes).map(q =>
@@ -302,13 +316,7 @@ object AnnTune {
             f"deltaAssign=$delta recall@$k=$recall%.3f " +
             f"occ[buckets=${occ.size} mean=${rows.toDouble / occ.size}%.1f " +
             f"maxShare=$maxShare%.4f top1pctShare=$top1Share%.4f]")
-        } finally {
-          def rm(p: java.io.File): Unit = {
-            Option(p.listFiles).foreach(_.foreach(rm))
-            p.delete()
-          }
-          rm(new java.io.File(work))
-        }
+        } finally rm(new java.io.File(work))
       }
     }
     if (which == "ivf" || which == "both") {
@@ -387,10 +395,10 @@ object AnnTune {
         val threeQ = (total * 3) / 4
         val src = spark.read.parquet(s"$dir/embeddings.parquet")
         src.where(s"vec_id < $half").write.parquet(s"$corpus/embeddings.parquet")
-        graft.similarity.AnnIndex.saveLsh(spark, corpus, idx)
+        AnnIndex.build(spark, corpus, idx, LshTier())
         def stage(label: String): Unit = {
           val rebuilt = s"$work/rebuilt_$label"
-          graft.similarity.AnnIndex.saveLsh(spark, corpus, rebuilt)
+          AnnIndex.build(spark, corpus, rebuilt, LshTier())
           def assigns(p: String): Set[(Long, Int)] =
             spark.read.parquet(s"$p/assignments")
               .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
@@ -415,7 +423,7 @@ object AnnTune {
           val scanned = cands.groupBy("q_id").count()
             .collect().map(_.getLong(1)).sum
           val frac = scanned.toDouble / (nProbes.toLong * live.size)
-          val ann = graft.similarity.AnnIndex.lshTopK(spark, corpus, idx, nProbes, k)
+          val ann = AnnIndex.topK(spark, corpus, idx, "lsh", nProbes, k)
             .collect().map(r => (r.getLong(0), r.getLong(1)))
             .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
           val recall = (0 until nProbes).map(q =>
@@ -430,21 +438,15 @@ object AnnTune {
         stage("base(50%raw)")
         src.where(s"vec_id >= $half AND vec_id < $threeQ")
           .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-        graft.similarity.AnnIndex.appendLsh(spark, corpus, idx)
+        AnnIndex.append(spark, corpus, idx, "lsh")
         stage("appendA(+25%raw)")
         src.where(s"vec_id >= $threeQ")
           .selectExpr("vec_id", "label",
             "transform(embedding, x -> cast(x + 0.6 AS float)) AS embedding")
           .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-        graft.similarity.AnnIndex.appendLsh(spark, corpus, idx)
+        AnnIndex.append(spark, corpus, idx, "lsh")
         stage("appendB(+25%shifted)")
-      } finally {
-        def rm(p: java.io.File): Unit = {
-          Option(p.listFiles).foreach(_.foreach(rm))
-          p.delete()
-        }
-        rm(new java.io.File(work))
-      }
+      } finally rm(new java.io.File(work))
     }
     if (which == "ivfpq") {
       // COMPOSED IVF-PQ (residual ADC over inverted lists): recall is
@@ -468,25 +470,9 @@ object AnnTune {
       // persisted q138 index appended without refitting serves. Measures
       // whether the coarse half's 1.25x knee (ivfdrift) indeed BINDS the
       // composition, or the residual codes decay it sooner.
-      import graft.similarity.AnnIvfPq
-      for (f <- Seq(0.0, 0.25, 0.5, 1.0)) {
-        val cutoff = math.round(total / (1.0 + f))
-        val trainDir = java.nio.file.Files
-          .createTempDirectory(s"graft-ivfpqdrift-$f-").toString
-        try {
-          spark.read.parquet(s"$dir/embeddings.parquet")
-            .where(s"vec_id < $cutoff")
-            .write.mode("overwrite").parquet(s"$trainDir/embeddings.parquet")
-          evalOne(f"ivfpqdrift appended=${(f * 100).toInt}%d%% trained=$cutoff of $total",
-            AnnIvfPq.prunedScan(spark, dir, nProbes, trainDir = trainDir),
-            AnnIvfPq.annTopK(spark, dir, nProbes, k, trainDir = trainDir))
-        } finally {
-          def rm(p: java.io.File): Unit = {
-            Option(p.listFiles).foreach(_.foreach(rm))
-            p.delete()
-          }
-          rm(new java.io.File(trainDir))
-        }
+      for (f <- Seq(0.0, 0.25, 0.5, 1.0)) withPrefix("ivfpqdrift", f) { (prefix, cutoff) =>
+        val (cands, top) = frozen(IvfPqTier(), prefix)
+        evalOne(f"ivfpqdrift appended=${(f * 100).toInt}%d%% trained=$cutoff of $total", cands, top)
       }
     }
     if (which == "pqdrift") {
@@ -498,28 +484,12 @@ object AnnTune {
       // decay channels: the frozen pool's shrinking effective fraction
       // (rr/N vs rr/N(1+f)) and codebook mismatch on the appended tail
       // (nil on this isotropic corpus; real on drifting embeddings).
-      import graft.similarity.AnnPq
-      for (f <- Seq(0.0, 0.25, 0.5, 1.0, 2.0)) {
-        val cutoff = math.round(total / (1.0 + f))
-        val trainDir = java.nio.file.Files
-          .createTempDirectory(s"graft-pqdrift-$f-").toString
-        try {
-          spark.read.parquet(s"$dir/embeddings.parquet")
-            .where(s"vec_id < $cutoff")
-            .write.mode("overwrite").parquet(s"$trainDir/embeddings.parquet")
-          val rr = math.max(64L, cutoff / 16L).toInt
-          val scan = AnnPq.compressedScan(spark, dir, nProbes, trainDir = trainDir)
-          val pool = graft.plans.TopKPerKey.topK(
-            scan, "q_id", "adc", "neighbor_id", rr, "adc", roundTo = 9)
-          evalOne(f"pqdrift appended=${(f * 100).toInt}%d%% trained=$cutoff of $total",
-            pool, AnnPq.annTopK(spark, dir, nProbes, k, trainDir = trainDir))
-        } finally {
-          def rm(p: java.io.File): Unit = {
-            Option(p.listFiles).foreach(_.foreach(rm))
-            p.delete()
-          }
-          rm(new java.io.File(trainDir))
-        }
+      for (f <- Seq(0.0, 0.25, 0.5, 1.0, 2.0)) withPrefix("pqdrift", f) { (prefix, cutoff) =>
+        val (cands, top) = frozen(PqTier(), prefix)
+        val pool = graft.plans.TopKPerKey.topK(
+          cands, "q_id", "adc", "neighbor_id", math.max(64L, cutoff / 16L).toInt, "adc",
+          roundTo = 9)
+        evalOne(f"pqdrift appended=${(f * 100).toInt}%d%% trained=$cutoff of $total", pool, top)
       }
     }
     spark.stop()

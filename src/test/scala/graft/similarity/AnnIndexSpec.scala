@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** Round-trip proof for the persisted ANN indexes: an index written to
-  * parquet and loaded back must reproduce the live [[AnnLsh]]/[[AnnIvf]]
-  * results bit-for-bit — the same guarantee the iforest model round-trip
+  * parquet and loaded back must reproduce the live top-k of its tier
+  * bit-for-bit — the same guarantee the iforest model round-trip
   * gives (same scores from a loaded model as from the fitted one). */
 class AnnIndexSpec extends AnyFunSuite {
 
@@ -23,9 +23,9 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("LSH: persisted index reproduces the live annTopK bit-for-bit") {
     val path = s"$root/lsh"
-    AnnIndex.saveLsh(spark, sf, path)
+    AnnIndex.build(spark, sf, path, "lsh")
     val live = rows(AnnLsh.annTopK(spark, sf, numProbes = 5, k = 5))
-    val loaded = rows(AnnIndex.lshTopK(spark, sf, path, numProbes = 5, k = 5))
+    val loaded = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     assert(loaded == live)
   }
 
@@ -34,10 +34,10 @@ class AnnIndexSpec extends AnyFunSuite {
     // knobs, not the library defaults — the loader reads them from
     // metadata, so a knob mismatch between writer and reader is impossible.
     val path = s"$root/lsh_alt"
-    AnnIndex.saveLsh(spark, sf, path, numPlanes = 8, numTables = 5, probesPerTable = 28)
+    AnnIndex.build(spark, sf, path, LshTier(numPlanes = 8, numTables = 5, probesPerTable = 28))
     val live = rows(AnnLsh.annTopK(spark, sf, numProbes = 5, k = 5,
       numPlanes = 8, numTables = 5, probesPerTable = 28))
-    val loaded = rows(AnnIndex.lshTopK(spark, sf, path, numProbes = 5, k = 5))
+    val loaded = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     assert(loaded == live)
   }
 
@@ -47,10 +47,10 @@ class AnnIndexSpec extends AnyFunSuite {
     // for the no-vote configuration must be queried without the vote even
     // though the library default is now the voting point.
     val path = s"$root/lsh_novote"
-    AnnIndex.saveLsh(spark, sf, path, numTables = 6, probesPerTable = 64, minCollisions = 1)
+    AnnIndex.build(spark, sf, path, LshTier(numTables = 6, probesPerTable = 64, minCollisions = 1))
     val live = rows(AnnLsh.annTopK(spark, sf, numProbes = 5, k = 5,
       numTables = 6, probesPerTable = 64, minCollisions = 1))
-    val loaded = rows(AnnIndex.lshTopK(spark, sf, path, numProbes = 5, k = 5))
+    val loaded = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     assert(loaded == live)
   }
 
@@ -61,18 +61,18 @@ class AnnIndexSpec extends AnyFunSuite {
     // from the fingerprint's corpusRows, so budgeted probing from a loaded
     // index is bit-identical to the live q60 path.
     val path = s"$root/lsh_budget"
-    AnnIndex.saveLsh(spark, sf, path, probesPerTable = 1024, poolFrac = 0.85)
+    AnnIndex.build(spark, sf, path, LshTier(probesPerTable = 1024, poolFrac = 0.85))
     val live = rows(AnnLsh.annTopK(spark, sf, numProbes = 5, k = 5,
       probesPerTable = 1024, poolFrac = 0.85))
-    val loaded = rows(AnnIndex.lshTopK(spark, sf, path, numProbes = 5, k = 5))
+    val loaded = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     assert(loaded == live)
   }
 
   test("IVF: persisted index reproduces the live annTopK bit-for-bit") {
     val path = s"$root/ivf"
-    AnnIndex.saveIvf(spark, sf, path)
+    AnnIndex.build(spark, sf, path, "ivf")
     val live = rows(AnnIvf.annTopK(spark, sf, numProbes = 5, k = 5))
-    val loaded = rows(AnnIndex.ivfTopK(spark, sf, path, numProbes = 5, k = 5))
+    val loaded = rows(AnnIndex.topK(spark, sf, path, "ivf", numProbes = 5, k = 5))
     assert(loaded == live)
   }
 
@@ -83,22 +83,22 @@ class AnnIndexSpec extends AnyFunSuite {
     orig.write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
     val lshPath = s"$root/lsh_stale"
     val ivfPath = s"$root/ivf_stale"
-    AnnIndex.saveLsh(spark, corpus, lshPath)
-    AnnIndex.saveIvf(spark, corpus, ivfPath)
+    AnnIndex.build(spark, corpus, lshPath, "lsh")
+    AnnIndex.build(spark, corpus, ivfPath, "ivf")
     assert(AnnIndex.isCurrent(spark, corpus, lshPath))
     assert(AnnIndex.isCurrent(spark, corpus, ivfPath))
-    assert(AnnIndex.lshTopK(spark, corpus, lshPath).collect().nonEmpty)
+    assert(AnnIndex.topK(spark, corpus, lshPath, "lsh").collect().nonEmpty)
     // row-count mutation: drop one vector — both loaders must refuse
     orig.filter(col("vec_id") =!= 399L)
       .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
     assert(!AnnIndex.isCurrent(spark, corpus, lshPath))
     assert(!AnnIndex.isCurrent(spark, corpus, ivfPath))
     val e = intercept[IllegalStateException] {
-      AnnIndex.lshTopK(spark, corpus, lshPath).collect()
+      AnnIndex.topK(spark, corpus, lshPath, "lsh").collect()
     }
     assert(e.getMessage.contains("stale"))
     intercept[IllegalStateException] {
-      AnnIndex.ivfTopK(spark, corpus, ivfPath).collect()
+      AnnIndex.topK(spark, corpus, ivfPath, "ivf").collect()
     }
     // content mutation at SAME row count: rewrite a sampled row's vector
     // in place (vec_id 0 satisfies the clustered content sample rule
@@ -110,9 +110,9 @@ class AnnIndexSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
     assert(!AnnIndex.isCurrent(spark, corpus, lshPath))
     // rebuild heals — the q58/q59 build-if-absent-or-stale contract
-    AnnIndex.saveLsh(spark, corpus, lshPath)
+    AnnIndex.build(spark, corpus, lshPath, "lsh")
     assert(AnnIndex.isCurrent(spark, corpus, lshPath))
-    assert(AnnIndex.lshTopK(spark, corpus, lshPath).collect().nonEmpty)
+    assert(AnnIndex.topK(spark, corpus, lshPath, "lsh").collect().nonEmpty)
   }
 
   test("staleness guard: in-place rewrite of an UNSAMPLED vector is refused") {
@@ -127,7 +127,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val orig = spark.read.parquet(s"$sf/embeddings.parquet")
     orig.write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/lsh_unsampled"
-    AnnIndex.saveLsh(spark, corpus, path, numTables = 6, probesPerTable = 64)
+    AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
     assert(AnnIndex.isCurrent(spark, corpus, path))
     orig.selectExpr("vec_id",
         "CASE WHEN vec_id = 200 THEN transform(embedding, x -> x + 1.0f)" +
@@ -137,10 +137,10 @@ class AnnIndexSpec extends AnyFunSuite {
     // only the listing catches it
     assert(!AnnIndex.isCurrent(spark, corpus, path))
     val e = intercept[IllegalStateException] {
-      AnnIndex.lshTopK(spark, corpus, path).collect()
+      AnnIndex.topK(spark, corpus, path, "lsh").collect()
     }
     assert(e.getMessage.contains("listing"))
-    AnnIndex.saveLsh(spark, corpus, path, numTables = 6, probesPerTable = 64)
+    AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
     assert(AnnIndex.isCurrent(spark, corpus, path))
   }
 
@@ -157,30 +157,30 @@ class AnnIndexSpec extends AnyFunSuite {
     deleteRec(fs)
     all.filter(col("vec_id") < 400).write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/lsh_append"
-    AnnIndex.saveLsh(spark, corpus, path, numTables = 6, probesPerTable = 64)
+    AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
     all.filter(col("vec_id") >= 400)
       .write.mode("append").parquet(s"$corpus/embeddings.parquet")
     // grown corpus: the old index must refuse, the append must heal
     assert(!AnnIndex.isCurrent(spark, corpus, path))
-    AnnIndex.appendLsh(spark, corpus, path)
+    AnnIndex.append(spark, corpus, path, "lsh")
     assert(AnnIndex.isCurrent(spark, corpus, path))
     // equivalence: the hyperplanes depend only on (seed, dim), so a FULL
     // rebuild over the grown corpus produces the same geometry — appended
     // assignments and query answers must match it bit-for-bit
     val rebuilt = s"$root/lsh_append_rebuilt"
-    AnnIndex.saveLsh(spark, corpus, rebuilt, numTables = 6, probesPerTable = 64)
+    AnnIndex.build(spark, corpus, rebuilt, LshTier(numTables = 6, probesPerTable = 64))
     def assignSet(p: String) = spark.read.parquet(s"$p/assignments")
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(assignSet(path) == assignSet(rebuilt))
-    assert(rows(AnnIndex.lshTopK(spark, corpus, path, numProbes = 5, k = 5)) ==
-      rows(AnnIndex.lshTopK(spark, corpus, rebuilt, numProbes = 5, k = 5)))
+    assert(rows(AnnIndex.topK(spark, corpus, path, "lsh", numProbes = 5, k = 5)) ==
+      rows(AnnIndex.topK(spark, corpus, rebuilt, "lsh", numProbes = 5, k = 5)))
     // a SECOND append with nothing new is a no-op that still validates
-    AnnIndex.appendLsh(spark, corpus, path)
+    AnnIndex.append(spark, corpus, path, "lsh")
     assert(assignSet(path) == assignSet(rebuilt))
     // COMPACTION: the append layers collapse to <= 4 files, and the index
     // still validates and answers bit-for-bit what the layered one did
-    val topkBefore = rows(AnnIndex.lshTopK(spark, corpus, path, numProbes = 5, k = 5))
-    AnnIndex.compactLsh(spark, corpus, path)
+    val topkBefore = rows(AnnIndex.topK(spark, corpus, path, "lsh", numProbes = 5, k = 5))
+    AnnIndex.compact(spark, path, "lsh")
     assert(AnnIndex.isCurrent(spark, corpus, path),
       "compaction must not invalidate the index")
     assert(assignSet(path) == assignSet(rebuilt),
@@ -188,7 +188,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val files = new java.io.File(s"$path/assignments").listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(files <= 4, s"assignments not compacted: $files files")
-    assert(rows(AnnIndex.lshTopK(spark, corpus, path, numProbes = 5, k = 5)) ==
+    assert(rows(AnnIndex.topK(spark, corpus, path, "lsh", numProbes = 5, k = 5)) ==
       topkBefore, "compaction changed a topk answer")
   }
 
@@ -208,7 +208,7 @@ class AnnIndexSpec extends AnyFunSuite {
     all.filter(col("vec_id") < 400)
       .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/lsh_legacy"
-    AnnIndex.saveLsh(spark, corpus, path, numTables = 6, probesPerTable = 64)
+    AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
     // downgrade the persisted shape to the pre-upgrade format
     val legacy = AnnIndex.legacyListingDigest(AnnIndex.corpusListing(spark, corpus))
     val js = JsonMethods.parse(
@@ -226,17 +226,17 @@ class AnnIndexSpec extends AnyFunSuite {
       .repartition(1).write.mode("overwrite").parquet(s"$path/listing")
     // the pre-upgrade index VALIDATES and serves
     assert(AnnIndex.isCurrent(spark, corpus, path))
-    assert(AnnIndex.lshTopK(spark, corpus, path, numProbes = 5, k = 5)
+    assert(AnnIndex.topK(spark, corpus, path, "lsh", numProbes = 5, k = 5)
       .collect().nonEmpty)
     // pure growth: stale as usual — but the append tier refuses LOUDLY on
     // the unverifiable listing instead of guessing adds-only
     all.filter(col("vec_id") >= 400)
       .write.mode("append").parquet(s"$corpus/embeddings.parquet")
     assert(!AnnIndex.isCurrent(spark, corpus, path))
-    val e = intercept[IllegalStateException] { AnnIndex.appendLsh(spark, corpus, path) }
+    val e = intercept[IllegalStateException] { AnnIndex.append(spark, corpus, path, "lsh") }
     assert(e.getMessage.contains("pre-checksum"), e.getMessage)
     // the rebuild fallback heals and re-persists the checksummed shape
-    AnnIndex.saveLsh(spark, corpus, path, numTables = 6, probesPerTable = 64)
+    AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
     assert(AnnIndex.isCurrent(spark, corpus, path))
     assert(spark.read.parquet(s"$path/listing").columns.contains("chk"))
   }
@@ -248,15 +248,42 @@ class AnnIndexSpec extends AnyFunSuite {
     all.filter(col("vec_id") < 400)
       .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/lsh_notadd"
-    AnnIndex.saveLsh(spark, corpus, path, numTables = 6, probesPerTable = 64)
+    AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
     // an overwrite (even to a superset of the rows) rewrites every file —
     // the per-file listing check must refuse the shortcut
     all.write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-    val e = intercept[IllegalStateException] { AnnIndex.appendLsh(spark, corpus, path) }
+    val e = intercept[IllegalStateException] { AnnIndex.append(spark, corpus, path, "lsh") }
     assert(e.getMessage.contains("rebuild"))
     // the full rebuild (the q58 fallback tier) heals
-    AnnIndex.saveLsh(spark, corpus, path, numTables = 6, probesPerTable = 64)
+    AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
     assert(AnnIndex.isCurrent(spark, corpus, path))
+  }
+
+  test("append: the new rows leave the cache whether the write succeeds or fails") {
+    import org.apache.spark.sql.functions.col
+    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_cache_corpus"
+    val all = spark.read.parquet(s"$sf/embeddings.parquet")
+    def deleteRec(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
+    }
+    deleteRec(new java.io.File(corpus))
+    all.filter(col("vec_id") < 200).write.parquet(s"$corpus/embeddings.parquet")
+    val path = s"$root/lsh_cache"
+    AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
+    def cached = spark.sparkContext.getPersistentRDDs.keySet
+    val before = cached
+    all.filter(col("vec_id") >= 200 && col("vec_id") < 240)
+      .write.mode("append").parquet(s"$corpus/embeddings.parquet")
+    AnnIndex.append(spark, corpus, path, "lsh")
+    assert(AnnIndex.isCurrent(spark, corpus, path))
+    assert((cached -- before).isEmpty, "a successful append left its new rows cached")
+    // a plain file where the committer makes its _temporary directory:
+    // readers skip it, so the append gets as far as its write, which fails
+    all.filter(col("vec_id") >= 240 && col("vec_id") < 280)
+      .write.mode("append").parquet(s"$corpus/embeddings.parquet")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$path/assignments/_temporary"))
+    intercept[Exception] { AnnIndex.append(spark, corpus, path, "lsh") }
+    assert((cached -- before).isEmpty, "a failed append left its new rows cached")
   }
 
   test("IVF append: new vectors join the frozen geometry's lists; old rows untouched") {
@@ -270,7 +297,7 @@ class AnnIndexSpec extends AnyFunSuite {
     deleteRec(fs)
     all.write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/ivf_append"
-    AnnIndex.saveIvf(spark, corpus, path)
+    AnnIndex.build(spark, corpus, path, "ivf")
     def assigns(p: String) = spark.read.parquet(s"$p/assignments")
       .collect().map(r => (r.getLong(0), r.getInt(1))).toMap // vec_id -> list
     val before = assigns(path)
@@ -280,7 +307,7 @@ class AnnIndexSpec extends AnyFunSuite {
     all.filter(col("vec_id") < 50)
       .selectExpr("vec_id + 10000 AS vec_id", "embedding", "label")
       .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-    AnnIndex.appendIvf(spark, corpus, path)
+    AnnIndex.append(spark, corpus, path, "ivf")
     assert(AnnIndex.isCurrent(spark, corpus, path))
     val after = assigns(path)
     assert(before.forall { case (id, l) => after(id) == l }, "old assignments changed")
@@ -290,15 +317,15 @@ class AnnIndexSpec extends AnyFunSuite {
     // COMPACTION: the append layers collapse to <= 4 files; the index
     // still validates and answers bit-for-bit (the q143 invisibility
     // contract applied to the IVF tier)
-    val topkBefore = rows(AnnIndex.ivfTopK(spark, corpus, path))
-    AnnIndex.compactIvf(spark, corpus, path)
+    val topkBefore = rows(AnnIndex.topK(spark, corpus, path, "ivf"))
+    AnnIndex.compact(spark, path, "ivf")
     assert(AnnIndex.isCurrent(spark, corpus, path),
       "compaction must not invalidate the index")
     assert(assigns(path) == after, "compaction changed the assignment rows")
     val files = new java.io.File(s"$path/assignments").listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(files <= 4, s"assignments not compacted: $files files")
-    assert(rows(AnnIndex.ivfTopK(spark, corpus, path)) == topkBefore,
+    assert(rows(AnnIndex.topK(spark, corpus, path, "ivf")) == topkBefore,
       "compaction changed a topk answer")
   }
 
@@ -309,8 +336,8 @@ class AnnIndexSpec extends AnyFunSuite {
     // interrupted state (artifacts present, metadata gone): the loader
     // must throw, and the q58-style build-if-stale retry must heal it.
     val path = s"$root/lsh_interrupted"
-    AnnIndex.saveLsh(spark, sf, path, numTables = 6, probesPerTable = 64)
-    val before = rows(AnnIndex.lshTopK(spark, sf, path, numProbes = 5, k = 5))
+    AnnIndex.build(spark, sf, path, LshTier(numTables = 6, probesPerTable = 64))
+    val before = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     // simulate the mid-rebuild kill window: metadata deleted, old
     // model/assignments still on disk
     def deleteRec(f: java.io.File): Unit = {
@@ -318,10 +345,10 @@ class AnnIndexSpec extends AnyFunSuite {
     }
     deleteRec(new java.io.File(s"$path/metadata"))
     assert(!AnnIndex.isCurrent(spark, sf, path))
-    intercept[Exception] { AnnIndex.lshTopK(spark, sf, path, numProbes = 5, k = 5).collect() }
+    intercept[Exception] { AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5).collect() }
     // rebuild heals and reproduces the original answers
-    AnnIndex.saveLsh(spark, sf, path, numTables = 6, probesPerTable = 64)
-    assert(rows(AnnIndex.lshTopK(spark, sf, path, numProbes = 5, k = 5)) == before)
+    AnnIndex.build(spark, sf, path, LshTier(numTables = 6, probesPerTable = 64))
+    assert(rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5)) == before)
   }
 
   test("IVF: corpus-adaptive memos drop when the corpus files change") {
@@ -344,7 +371,7 @@ class AnnIndexSpec extends AnyFunSuite {
   test("IVF append: refuses past the measured drift bound; rebuild heals") {
     // The geometry (nlist + centroids) freezes at build time; TUNE_r12.txt
     // "ivfdrift" measured the (recall >= 0.85, scan <= 0.25) box holding
-    // at +25% appended rows and breaking beyond — appendIvf must refuse
+    // at +25% appended rows and breaking beyond — the IVF append must refuse
     // (BEFORE mutating anything) once live rows exceed 1.25x trainedRows.
     import org.apache.spark.sql.functions.col
     val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_drift_corpus"
@@ -355,16 +382,16 @@ class AnnIndexSpec extends AnyFunSuite {
     deleteRec(new java.io.File(corpus))
     all.filter(col("vec_id") < 200).write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/ivf_drift"
-    AnnIndex.saveIvf(spark, corpus, path) // trainedRows = 200
+    AnnIndex.build(spark, corpus, path, "ivf") // trainedRows = 200
     // +20% growth (240 <= 1.25 * 200): the append tier serves it
     all.filter(col("vec_id") >= 200 && col("vec_id") < 240)
       .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-    AnnIndex.appendIvf(spark, corpus, path)
+    AnnIndex.append(spark, corpus, path, "ivf")
     assert(AnnIndex.isCurrent(spark, corpus, path))
     // grow to 500 total (2.5x the trained 200): refuse, index left intact
     all.filter(col("vec_id") >= 240)
       .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-    val e = intercept[IllegalStateException] { AnnIndex.appendIvf(spark, corpus, path) }
+    val e = intercept[IllegalStateException] { AnnIndex.append(spark, corpus, path, "ivf") }
     assert(e.getMessage.contains("trained at 200"), e.getMessage)
     // the refusal mutated NOTHING: the index still answers for the corpus
     // it last committed (240 rows) — stale for the live one, not broken
@@ -372,9 +399,9 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(spark.read.text(s"$path/metadata").count() == 1,
       "refusal must not clear the metadata commit record")
     // the rebuild tier heals with refit geometry and a fresh trainedRows
-    AnnIndex.saveIvf(spark, corpus, path)
+    AnnIndex.build(spark, corpus, path, "ivf")
     assert(AnnIndex.isCurrent(spark, corpus, path))
-    AnnIndex.appendIvf(spark, corpus, path) // no-op growth: serves again
+    AnnIndex.append(spark, corpus, path, "ivf") // no-op growth: serves again
     assert(AnnIndex.isCurrent(spark, corpus, path))
   }
 
@@ -438,7 +465,7 @@ class AnnIndexSpec extends AnyFunSuite {
     rm(new java.io.File(path))
     // absent index: definitively stale (commit record missing)
     assert(AnnIndex.definitelyStale(spark, sf, path))
-    AnnIndex.saveLsh(spark, sf, path)
+    AnnIndex.build(spark, sf, path, "lsh")
     assert(!AnnIndex.definitelyStale(spark, sf, path))
     // corpus changed out from under the index: a definitive verdict
     val corpus2 = java.nio.file.Files.createTempDirectory("graft-stale-corpus").toString
@@ -456,45 +483,45 @@ class AnnIndexSpec extends AnyFunSuite {
     val path = s"$root/ivf"
     // depends on the '$root/ivf' index written by "IVF: persisted index
     // reproduces..." above (suite runs in declaration order); clearing
-    // the memo proves ivfTopK reads centroids from parquet, not a refit
+    // the memo proves topK reads centroids from parquet, not a refit
     AnnIvf.clearQuantizerCache()
-    val loaded = AnnIndex.ivfTopK(spark, sf, path, numProbes = 5, k = 5).collect()
+    val loaded = AnnIndex.topK(spark, sf, path, "ivf", numProbes = 5, k = 5).collect()
     assert(loaded.nonEmpty)
   }
 
   test("PQ: persisted index reproduces the live annTopK bit-for-bit") {
     val path = s"$root/pq"
-    AnnIndex.savePq(spark, sf, path)
+    AnnIndex.build(spark, sf, path, "pq")
     val live = rows(AnnPq.annTopK(spark, sf, numProbes = 5, k = 5))
-    val loaded = rows(AnnIndex.pqTopK(spark, sf, path, numProbes = 5, k = 5))
+    val loaded = rows(AnnIndex.topK(spark, sf, path, "pq", numProbes = 5, k = 5))
     assert(loaded == live)
   }
 
   test("PQ: loaded index needs no codebook fit (memo cold)") {
     val path = s"$root/pq"
     // depends on '$root/pq' from the test above; clearing the memo
-    // proves pqTopK reads codebooks from parquet, not a refit
+    // proves topK reads codebooks from parquet, not a refit
     AnnPq.clearCodebookCache()
-    val loaded = AnnIndex.pqTopK(spark, sf, path, numProbes = 5, k = 5).collect()
+    val loaded = AnnIndex.topK(spark, sf, path, "pq", numProbes = 5, k = 5).collect()
     assert(loaded.nonEmpty)
   }
 
   test("IVF-PQ: persisted index reproduces the live annTopK bit-for-bit") {
     val path = s"$root/ivfpq"
-    AnnIndex.saveIvfPq(spark, sf, path)
+    AnnIndex.build(spark, sf, path, "ivfpq")
     val live = rows(AnnIvfPq.annTopK(spark, sf, numProbes = 5, k = 5))
-    val loaded = rows(AnnIndex.ivfPqTopK(spark, sf, path, numProbes = 5, k = 5))
+    val loaded = rows(AnnIndex.topK(spark, sf, path, "ivfpq", numProbes = 5, k = 5))
     assert(loaded == live)
   }
 
   test("IVF-PQ: loaded index needs neither k-means fit (both memos cold)") {
     val path = s"$root/ivfpq"
     // depends on '$root/ivfpq' above; clearing BOTH memos proves
-    // ivfPqTopK reads coarse centroids and residual codebooks from
+    // topK reads coarse centroids and residual codebooks from
     // parquet, never a refit
     AnnIvf.clearQuantizerCache()
     AnnIvfPq.clearResidualCache()
-    val loaded = AnnIndex.ivfPqTopK(spark, sf, path, numProbes = 5, k = 5).collect()
+    val loaded = AnnIndex.topK(spark, sf, path, "ivfpq", numProbes = 5, k = 5).collect()
     assert(loaded.nonEmpty)
   }
 
@@ -508,14 +535,14 @@ class AnnIndexSpec extends AnyFunSuite {
     deleteRec(new java.io.File(corpus))
     all.filter(col("vec_id") < 200).write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/ivfpq_drift"
-    AnnIndex.saveIvfPq(spark, corpus, path) // trainedRows = 200
+    AnnIndex.build(spark, corpus, path, "ivfpq") // trainedRows = 200
     val beforeCodes = spark.read.parquet(s"$path/assignments").collect()
       .map(r => r.getLong(0) -> (r.getInt(1), r.getSeq[Byte](2))).toMap
     assert(beforeCodes.size == 200)
     // +20% growth (240 <= 1.25 * 200): the append tier serves it
     all.filter(col("vec_id") >= 200 && col("vec_id") < 240)
       .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-    AnnIndex.appendIvfPq(spark, corpus, path)
+    AnnIndex.append(spark, corpus, path, "ivfpq")
     assert(AnnIndex.isCurrent(spark, corpus, path))
     val after = spark.read.parquet(s"$path/assignments")
     assert(after.count() == 240L)
@@ -525,20 +552,20 @@ class AnnIndexSpec extends AnyFunSuite {
       "append rewrote pre-existing list assignments or code words")
     // COMPACTION between appends: rows identical, index current, and the
     // drift-bound refusal below still fires off the preserved metadata
-    val topkBeforeCompact = rows(AnnIndex.ivfPqTopK(spark, corpus, path))
-    AnnIndex.compactIvfPq(spark, corpus, path)
+    val topkBeforeCompact = rows(AnnIndex.topK(spark, corpus, path, "ivfpq"))
+    AnnIndex.compact(spark, path, "ivfpq")
     assert(AnnIndex.isCurrent(spark, corpus, path),
       "compaction must not invalidate the index")
     assert(spark.read.parquet(s"$path/assignments").collect()
       .map(r => r.getLong(0) -> (r.getInt(1), r.getSeq[Byte](2))).toMap
       .view.filterKeys(_ < 200).toMap == beforeCodes,
       "compaction changed code rows")
-    assert(rows(AnnIndex.ivfPqTopK(spark, corpus, path)) == topkBeforeCompact,
+    assert(rows(AnnIndex.topK(spark, corpus, path, "ivfpq")) == topkBeforeCompact,
       "compaction changed a topk answer")
     // grow to 500 (2.5x trained): the COARSE 1.25x bound refuses
     all.filter(col("vec_id") >= 240)
       .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-    val e = intercept[IllegalStateException] { AnnIndex.appendIvfPq(spark, corpus, path) }
+    val e = intercept[IllegalStateException] { AnnIndex.append(spark, corpus, path, "ivfpq") }
     assert(e.getMessage.contains("trained at 200"), e.getMessage)
     assert(!AnnIndex.isCurrent(spark, corpus, path))
     assert(spark.read.text(s"$path/metadata").count() == 1,
@@ -546,9 +573,9 @@ class AnnIndexSpec extends AnyFunSuite {
     // rebuild heals with refit coarse + residual geometry
     AnnIvf.clearQuantizerCache()
     AnnIvfPq.clearResidualCache()
-    AnnIndex.saveIvfPq(spark, corpus, path)
+    AnnIndex.build(spark, corpus, path, "ivfpq")
     assert(AnnIndex.isCurrent(spark, corpus, path))
-    assert(AnnIndex.ivfPqTopK(spark, corpus, path).collect().nonEmpty)
+    assert(AnnIndex.topK(spark, corpus, path, "ivfpq").collect().nonEmpty)
   }
 
   test("PQ append: frozen-codebook encoding; refuses past 1.5x; rebuild heals") {
@@ -561,7 +588,7 @@ class AnnIndexSpec extends AnyFunSuite {
     deleteRec(new java.io.File(corpus))
     all.filter(col("vec_id") < 200).write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/pq_drift"
-    AnnIndex.savePq(spark, corpus, path) // trainedRows = 200
+    AnnIndex.build(spark, corpus, path, "pq") // trainedRows = 200
     val beforeCodes = spark.read.parquet(s"$path/assignments").collect()
       .map(r => r.getLong(0) -> r.getSeq[Byte](1)).toMap
     assert(beforeCodes.size == 200)
@@ -570,7 +597,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // bit-compare against a rebuild-free re-encode of the new rows
     all.filter(col("vec_id") >= 200 && col("vec_id") < 290)
       .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-    AnnIndex.appendPq(spark, corpus, path)
+    AnnIndex.append(spark, corpus, path, "pq")
     assert(AnnIndex.isCurrent(spark, corpus, path))
     val after = spark.read.parquet(s"$path/assignments")
     assert(after.count() == 290L)
@@ -580,28 +607,34 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(oldCodes == beforeCodes, "append rewrote pre-existing code words")
     // COMPACTION between appends: rows identical, index current, and the
     // drift-bound refusal below still fires off the preserved metadata
-    val topkBeforeCompact = rows(AnnIndex.pqTopK(spark, corpus, path))
-    AnnIndex.compactPq(spark, corpus, path)
+    val topkBeforeCompact = rows(AnnIndex.topK(spark, corpus, path, "pq"))
+    AnnIndex.compact(spark, path, "pq")
     assert(AnnIndex.isCurrent(spark, corpus, path),
       "compaction must not invalidate the index")
     assert(spark.read.parquet(s"$path/assignments").collect()
       .map(r => r.getLong(0) -> r.getSeq[Byte](1)).toMap
       .view.filterKeys(_ < 200).toMap == beforeCodes,
       "compaction changed code rows")
-    assert(rows(AnnIndex.pqTopK(spark, corpus, path)) == topkBeforeCompact,
+    assert(rows(AnnIndex.topK(spark, corpus, path, "pq")) == topkBeforeCompact,
       "compaction changed a topk answer")
     // grow to 500 total (2.5x the trained 200): refuse, index left intact
     all.filter(col("vec_id") >= 290)
       .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-    val e = intercept[IllegalStateException] { AnnIndex.appendPq(spark, corpus, path) }
+    val e = intercept[IllegalStateException] { AnnIndex.append(spark, corpus, path, "pq") }
     assert(e.getMessage.contains("trained at 200"), e.getMessage)
     assert(!AnnIndex.isCurrent(spark, corpus, path))
+    // the stale load names this index's own method and the build verb
+    val stale = intercept[IllegalStateException] {
+      AnnIndex.topK(spark, corpus, path, "pq").collect()
+    }
+    assert(stale.getMessage.contains("rebuild the 'pq' index with AnnIndex.build"),
+      stale.getMessage)
     assert(spark.read.text(s"$path/metadata").count() == 1,
       "refusal must not clear the metadata commit record")
     // the rebuild tier heals with refit codebooks and fresh trainedRows
     AnnPq.clearCodebookCache() // corpus files changed; drop the fit memo
-    AnnIndex.savePq(spark, corpus, path)
+    AnnIndex.build(spark, corpus, path, "pq")
     assert(AnnIndex.isCurrent(spark, corpus, path))
-    assert(AnnIndex.pqTopK(spark, corpus, path).collect().nonEmpty)
+    assert(AnnIndex.topK(spark, corpus, path, "pq").collect().nonEmpty)
   }
 }
