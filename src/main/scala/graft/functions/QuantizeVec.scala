@@ -24,9 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType}
  *
  * WHY an expression and not a SQL HOF: the max-abs scale inside a
  * `transform(e, ...)` lambda is re-evaluated per ELEMENT (CollapseProject
- * inlines any hoisted scale column back into the lambda — the same dim^2
- * trap AnnIvf.scala documents on its fit path), and HOF lambdas evaluate
- * interpreted. This is one fused two-pass loop (maxabs, then scale) in
+ * inlines any hoisted scale column back into the lambda — dim^2 work per
+ * row), and HOF lambdas evaluate interpreted. This is one fused two-pass loop (maxabs, then scale) in
  * whole-stage codegen. Same floor/greatest arithmetic as the DuckDB
  * oracle (the byte values equal the oracle's floor() doubles exactly —
  * both land in [-128, 127]), so q61's hash check covers it end to end.

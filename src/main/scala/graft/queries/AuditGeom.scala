@@ -20,8 +20,9 @@ import org.apache.spark.sql.SparkSession
  * deterministic) and both stay oracle-green.
  *
  * NOTE the audits deliberately do NOT read the production q133/q138
- * index geometry: those tiers fit gaussian-seeded ML k-means (16x16),
- * a different — unoracled — geometry. The audit's own deterministic
+ * index geometry: those tiers fit k-means++-seeded floating-point
+ * Lloyd's on unit-normalized vectors (AnnLloyd; PQ at 16x16), a
+ * different — unoracled — geometry. The audit's own deterministic
  * geometry is what the DuckDB oracle replays, so that is what persists.
  *
  * Store discipline (the family's): geometry parquet first, meta

@@ -334,7 +334,7 @@ object Clustering {
     * the overlap histogram — replays bit-for-bit in DuckDB, so the IVF
     * recall NUMBER is hash-checked the way q215 hash-checks the
     * hyperplane tier's: the last ANN family whose recall was only
-    * spec-gated (ModulesSpec floors on the gaussian-seeded q49/q59
+    * spec-gated (ModulesSpec floors on the k-means++-seeded q49/q59
     * production tiers) now has an oracled twin. Scale: centroids are
     * k×dim broadcast geometry; the inverted lists partition by cid
     * (nothing corpus-sized broadcasts — the probe set is ≤ evalN ×
@@ -399,10 +399,11 @@ object Clustering {
   // ---- q220/q221: the PQ + IVF-PQ oracled recall audits ----
 
   /** 4 subspaces × 16 dims over the 64-dim grid. The production tier
-    * (AnnPq) ships 16×16 with gaussian-seeded ML k-means; the AUDIT twin
-    * trades subspace count for an oracle — each codebook is the q207
-    * engineered-deterministic integer Lloyd's on a grid slice, so the
-    * whole encode→ADC→overlap chain replays bit-for-bit in DuckDB. Fewer
+    * (AnnPq) ships 16×16 with k-means++-seeded floating-point Lloyd's on
+    * unit-normalized vectors (AnnLloyd); the AUDIT twin trades subspace
+    * count for an oracle — each codebook is the q207 engineered-
+    * deterministic integer Lloyd's on a grid slice, so the whole
+    * encode→ADC→overlap chain replays bit-for-bit in DuckDB. Fewer
     * subspaces = coarser codes = honestly LOWER recall; the contract is
     * the measurement, exactly q215/q219's stance toward their production
     * siblings. */

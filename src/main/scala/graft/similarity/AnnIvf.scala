@@ -1,7 +1,5 @@
 package graft.similarity
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,17 +13,17 @@ import org.apache.spark.sql.functions._
  * data distribution (bucket sizes follow density), at the cost of a
  * training pass. Candidate count per probe ~ nprobe/nlist of the corpus.
  *
- * The quantizer is SPHERICAL: vectors are L2-normalized before the k-means
- * fit and list assignment, so the euclidean distance the quantizer
- * minimizes is monotone in the cosine the final ranking maximizes
- * (||a-b||^2 = 2 - 2*cos on the unit sphere). Quantizing the raw vectors
- * instead partitions by magnitude as much as by direction and silently
- * tanks recall to roughly half the normalized quantizer's gated floor
- * (ModulesSpec pins the floor; TUNE_r9.txt holds the swept points).
+ * The quantizer ([[AnnLloyd]]) is fit and assigned on UNIT-NORMALIZED
+ * vectors, so the euclidean distance it minimizes is monotone in the
+ * cosine the final ranking maximizes (||a-b||^2 = 2 - 2*cos on the unit
+ * sphere). Quantizing the raw vectors instead partitions by magnitude as
+ * much as by direction and silently tanks recall to roughly half the
+ * normalized quantizer's gated floor (ModulesSpec pins the floor;
+ * TUNE_r9.txt holds the swept points).
  *
- * The k-means fit is seeded but engine-specific, so (like AnnLsh) this is
- * a rows-only query for the driver; ModulesSpec asserts cosine
- * correctness, rank order, pruning, and recall@k against brute force.
+ * The fit is deterministic but not an engine the DuckDB oracle has, so
+ * (like AnnLsh) this is a rows-only query for the driver; ModulesSpec
+ * asserts cosine correctness, rank order, pruning, and recall@k.
  *
  * DEFAULT KNOBS ARE CORPUS-ADAPTIVE (nlist=0/nprobe=0 below): a fixed
  * nlist tuned on one corpus silently falls off the operating box when the
@@ -44,7 +42,8 @@ import org.apache.spark.sql.functions._
  * lists, nprobe 73, scan <= 0.189) across all five draws, and /6 — still
  * better recall — breaks the 0.25 scan ceiling on sf0.001. Probed
  * fraction stays a constant ~14% of lists while list occupancy grows
- * only as sqrt(n).
+ * only as sqrt(n). On the driver-side Lloyd's fit (TUNE_r23.txt) the /7
+ * minima are 0.920 / 0.848: one sf0.1 draw now sits under the floor.
  */
 object AnnIvf {
 
@@ -59,12 +58,13 @@ object AnnIvf {
 
   /** Cheap file-level signature of the corpus parquet (file count, total
     * bytes, max mtime — a directory listing, NO data scan), mixed into
-    * every memo key below: a corpus REPLACED mid-session must not serve
-    * the old corpus's memoized row count or centroids. A rebuilt index
-    * would otherwise inherit old-corpus state under a fresh content
-    * fingerprint — the adaptive-knob regression the memos' round-10
-    * review flagged. Listed through the Hadoop FileSystem of the path's
-    * own scheme (a java.io.File listing would silently return nothing —
+    * the row-count memo below and [[AnnLloyd.geometry]]'s: a corpus
+    * REPLACED mid-session must not serve the old corpus's memoized row
+    * count or geometry. A rebuilt index would otherwise inherit
+    * old-corpus state under a fresh content fingerprint — the
+    * adaptive-knob regression the memos' round-10 review flagged. Listed
+    * through the Hadoop FileSystem of the path's own scheme (a
+    * java.io.File listing would silently return nothing —
     * a CONSTANT signature, i.e. no invalidation at all — for file:/hdfs:/
     * s3a: URIs that spark.read handles fine). The content fingerprint in
     * AnnIndex stays the load-time guard; this is only memo invalidation,
@@ -85,7 +85,7 @@ object AnnIvf {
   private val corpusCounts =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
-  /** Memoized corpus row count (signature-stamped like the quantizers) —
+  /** Memoized corpus row count (signature-stamped like the fits) —
     * shared with [[AnnPq]]'s adaptive re-rank resolution. */
   private[graft] def corpusCount(s: SparkSession, dir: String): Long = {
     val sig = corpusSignature(s, dir)
@@ -103,25 +103,10 @@ object AnnIvf {
     (rl, rp)
   }
 
-  /** Driver-side quantizer memo. The k-means fit is INDEX-BUILD work — in a
-    * real deployment the inverted lists are built once and reused by every
-    * query — so charging a full fit to every invocation misstates the query
-    * cost (~3 s of q49's 3.1 s at sf0.1). Keyed by (dir, nlist, seed) and
-    * STAMPED with the corpus file signature ([[corpusSignature]]): a
-    * changed signature refits IN PLACE, so centroids fit on a replaced
-    * corpus's predecessor are never reused AND superseded entries don't
-    * accumulate (each live entry is nlist x dim doubles — a bounded map
-    * would otherwise grow by one centroid table per corpus replacement in
-    * a long session). */
-  private val quantizers = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Long), (String, Array[Array[Double]])]()
-
-  private[similarity] def clearQuantizerCache(): Unit = quantizers.clear()
-
-  /** Unit-normalize with the zero-guard floor, matching the fit-side SQL
-    * `transform(e, x -> x / greatest(sqrt(aggregate(e, 0D, (a,v) -> a+v*v)),
-    * 1e-30D))` operation-for-operation (index-order sum, sqrt, max-floor,
-    * divide) so UDF-side assignment is bit-identical to fit-side. */
+  /** Unit-normalize with a zero-guard floor (an all-zero vector stays at
+    * the origin instead of turning NaN): index-order sum of squares, sqrt,
+    * max-floor, divide. The fit's sample and every encode and probe
+    * normalize through this one function, so they agree bit for bit. */
   private[similarity] def unitNorm(arr: Array[Double]): Array[Double] = {
     var ss = 0.0
     var i = 0
@@ -133,79 +118,50 @@ object AnnIvf {
     out
   }
 
-  /** Indices of the `n` nearest centroids by euclidean distance — the same
-    * assignment rule (and first-min tie-break) KMeansModel.transform uses,
-    * so cached-centroid assignment matches a fresh model.transform.
-    *
-    * This runs once per CORPUS ROW on the q49 index pass (n=1) — with the
-    * corpus-adaptive defaults that is nlist ~ 11*sqrt(corpus) distance
-    * computations per row, so the n=1 path is a primitive argmin (no
-    * tuple boxing, no sort); first-min tie-break preserved. n>1 (the
-    * probe side, numProbes rows) keeps the simple sort. */
-  private[similarity] def nearestLists(cs: Array[Array[Double]], en: Array[Double], n: Int): Array[Int] = {
-    def distTo(c: Array[Double]): Double = {
-      var d = 0.0
-      var j = 0
-      val lim = math.min(c.length, en.length)
-      while (j < lim) {
-        val diff = c(j) - en(j); d += diff * diff; j += 1
-      }
-      d
+  /** Squared euclidean distance of centroid `c` to the slice of `v` at
+    * `off` (c.length wide, clipped at v's end). */
+  private[similarity] def dist2(c: Array[Double], v: Array[Double], off: Int): Double = {
+    var d = 0.0
+    var j = 0
+    val lim = math.min(c.length, v.length - off)
+    while (j < lim) {
+      val diff = c(j) - v(off + j); d += diff * diff; j += 1
     }
-    if (n == 1) {
-      var best = 0
-      var bestD = Double.PositiveInfinity
-      var i = 0
-      while (i < cs.length) {
-        val d = distTo(cs(i))
-        if (d < bestD) { bestD = d; best = i }
-        i += 1
-      }
-      Array(best)
-    } else {
-      cs.zipWithIndex.map { case (c, i) => (distTo(c), i) }
-        .sortBy(_._1).take(n).map(_._2)
-    }
+    d
   }
 
-  /** Memoized spherical k-means quantizer fit for `dir`'s embeddings —
-    * shared by the query path and [[IvfTier]]'s build so a persisted
-    * index carries the exact centroids the live path would use. */
-  private[similarity] def fitQuantizer(
-      s: SparkSession, dir: String, nlist: Int, seed: Long): Array[Array[Double]] = {
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS e")
-    val sig = corpusSignature(s, dir)
-    quantizers.compute((dir, nlist, seed), (_, prev) =>
-      if (prev != null && prev._1 == sig) prev
-      else (sig, {
-      // unit-normalize for the quantizer fit; the cosine ranking below is
-      // scale-invariant so it keeps using the raw vectors. greatest(..,tiny)
-      // keeps an all-zero embedding at the origin instead of NaN-poisoning
-      // the k-means fit and every distance computed from it. This SQL HOF
-      // runs interpreted with the aggregate() re-evaluated per element
-      // (CollapseProject inlines any hoisted norm column right back into
-      // the lambda) — acceptable ONLY here, on the one-time memoized
-      // index-build; the per-query path below normalizes inside the
-      // compiled UDF instead.
-      val fitInput = emb.withColumn("en",
-        expr("transform(e, x -> x / greatest(sqrt(aggregate(e, 0D, (a, v) -> a + v * v)), 1e-30D))"))
-      val km = new KMeans()
-        .setK(nlist).setSeed(seed).setMaxIter(10)
-        .setFeaturesCol("fv").setPredictionCol("list_id")
-      km.fit(fitInput.withColumn("fv", array_to_vector(col("en"))))
-        .clusterCenters.map(_.toArray)
-    }))._2
+  /** Index of the centroid in `cs` nearest to the slice of `v` at `off`,
+    * first min on ties — the one assignment rule of the fit
+    * ([[AnnLloyd.fit]]), every encode and the probe side. A primitive
+    * argmin (no tuple boxing, no sort): it runs once per corpus row per
+    * codebook on every index pass. */
+  private[similarity] def nearest(cs: Array[Array[Double]], v: Array[Double], off: Int): Int = {
+    var best = 0
+    var bestD = Double.PositiveInfinity
+    var i = 0
+    while (i < cs.length) {
+      val d = dist2(cs(i), v, off)
+      if (d < bestD) { bestD = d; best = i }
+      i += 1
+    }
+    best
   }
+
+  /** Indices of the `n` nearest centroids, nearest first, ties by index
+    * ([[nearest]] when n = 1; the probe side's n > 1 keeps the simple
+    * sort over numProbes rows). */
+  private[similarity] def nearestLists(cs: Array[Array[Double]], en: Array[Double], n: Int): Array[Int] =
+    if (n == 1) Array(nearest(cs, en, 0))
+    else cs.indices.map(i => (dist2(cs(i), en, 0), i)).sortBy(_._1).take(n).map(_._2).toArray
 
   /** Inverted-list-pruned, cosine-scored candidate pairs — the pool
     * [[annTopK]] ranks, as (q_id, neighbor_id, cos). Exposed separately so
     * tests can count pool sizes directly instead of ranking with a
     * sentinel k. nlist/nprobe = 0 (the default) resolves corpus-adaptively
     * (see the class doc): (256, 36) on sf0.001 = recall@5 0.936 at scan
-    * 0.218, (512, 73) on sf0.1 = 0.928 at 0.189 at the shipped seed
-    * (TUNE_r11.txt ivfseeds; gated in ModulesSpec at recall >= 0.85,
-    * scan <= 0.25 on both corpora, with 5-seed minima 0.920/0.856). */
+    * 0.209, (512, 73) on sf0.1 = 0.880 at 0.189 at the shipped seed
+    * (TUNE_r23.txt ivfseeds; gated in ModulesSpec at recall >= 0.85,
+    * scan <= 0.25 on both corpora, with 5-seed minima 0.920/0.848). */
   def candidates(
       s: SparkSession,
       dir: String,
@@ -236,7 +192,8 @@ object AnnIvf {
 }
 
 /**
- * The IVF tier: the geometry is the spherical k-means centroids, the
+ * The IVF tier: the geometry is the k-means centroids of the
+ * unit-normalized corpus ([[AnnLloyd]]), the
  * assignments one (vec_id, list_id) row per vector. nlist/nprobe = 0
  * resolve corpus-adaptively ([[AnnIvf.resolveKnobs]]) and the metadata
  * records the RESOLVED values, so a loaded index keeps its build-time
@@ -262,19 +219,18 @@ final case class IvfTier(nlist: Int = 0, nprobe: Int = 0, seed: Long = 4099L)
   }
 
   def fit(s: SparkSession, dir: String, dim: => Int): Geometry =
-    AnnIvf.fitQuantizer(s, dir, nlist, seed)
+    AnnLloyd.geometry(s, dir, s"ivf nlist=$nlist seed=$seed", nlist)(
+      en => AnnLloyd.fit(en, 0, en(0).length, nlist, seed))
 
   def writeGeometry(s: SparkSession, path: String, centroids: Geometry): Unit =
     AnnTier.writeModel(path, AnnTier.idVectorRows(s, centroids, "list_id", "center"))
 
   def readGeometry(s: SparkSession, path: String): Geometry = AnnTier.readIdVectors(s, path)
 
-  /** Each row lands in its single nearest list — identical to
-    * model.transform, but from the broadcast centroid array with no ML
-    * fit on the query path. The codegen'd [[IvfLists]] takes the RAW
-    * vector and unit-normalizes in compiled code (same index-order fold,
-    * sqrt, floor and division as the fit's SQL HOF, so assignments are
-    * bit-identical), keeping interpreted lambdas and ScalaUDF boxing off
+  /** Each row lands in its single nearest list, from the broadcast
+    * centroid array. The codegen'd [[IvfLists]] takes the RAW vector and
+    * unit-normalizes in compiled code ([[AnnIvf.unitNorm]], as the fit
+    * does), keeping interpreted lambdas and ScalaUDF boxing off
     * the per-query path (the former lambda was ~1.5 s of q49's 2.0 s
     * steady-state at sf0.1: its aggregate() re-ran for every element). */
   def encode(s: SparkSession, centroids: Geometry, rows: DataFrame): DataFrame = {

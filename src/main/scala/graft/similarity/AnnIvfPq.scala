@@ -1,8 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -24,7 +22,7 @@ import org.apache.spark.sql.types._
  * coarse centroid absorbs the vector's position, so the same 16 bytes
  * buy materially less distortion than whole-vector codes.
  *
- * Score decomposition (unit vectors, spherical coarse quantizer):
+ * Score decomposition (unit vectors, coarse quantizer fit on them):
  *   <q, x> = <q, c_l> + <q, r>  ≈  <q, c_l> + Σ_m <q_m, r̂_m>
  * where r̂ is r's sub-centroid. The first term is one lookup in a
  * broadcast nlist-sized table per probed list; the second is [[PqAdc]]
@@ -37,65 +35,28 @@ import org.apache.spark.sql.types._
  * rows — nprobe/nlist of the corpus at 16 bytes/vector (vs AnnPq's
  * all-rows compressed scan and AnnIvf's float-width candidate reads);
  * the float column is read exclusively for the broadcast-sized re-rank
- * pool, exactly like the other variants. Both fits are one-time
- * memoized index-build work; everything per-query is codegen'd
- * ([[IvfLists]] assignment, [[IvfPqCodes]] encode, [[PqLut]]/[[PqAdc]]
- * scoring).
+ * pool, exactly like the other variants. Both fits are one driver-side
+ * index-build step over one corpus sample ([[AnnLloyd]]); everything
+ * per-query is codegen'd ([[IvfLists]] assignment, [[IvfPqCodes]]
+ * encode, [[PqLut]]/[[PqAdc]] scoring).
  *
- * Like q31/q49/q130, the k-means fits make this rows-only for the
- * driver; ModulesSpec gates recall@5 on both corpora (5-seed minima,
- * AnnTune `ivfpq` grid).
+ * Like q31/q49/q130, the k-means geometry (not an engine the DuckDB
+ * oracle has) makes this rows-only for the driver; ModulesSpec gates
+ * recall@5 on both corpora (5-seed minima, AnnTune `ivfpq` grid).
  */
 object AnnIvfPq {
 
-  /** Residual codebooks: m × k sub-centroids fit on en − c(list) over the
-    * corpus. Memoized like [[AnnPq.fitCodebooks]], keyed on the corpus
-    * signature so a replaced corpus refits in place. */
-  private val residualBooks = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Int, Long), (String, Array[Array[Array[Double]]])]()
-
-  private[similarity] def clearResidualCache(): Unit = residualBooks.clear()
-
-  private[similarity] def fitResidualBooks(
-      s: SparkSession, dir: String, nlist: Int, m: Int, k: Int,
-      seed: Long): Array[Array[Array[Double]]] = {
-    val sig = AnnIvf.corpusSignature(s, dir)
-    residualBooks.compute((dir, nlist, m, k, seed), (_, prev) =>
-      if (prev != null && prev._1 == sig) prev
-      else (sig, {
-        import org.apache.spark.sql.graftbridge.ColumnBridge
-        val centroids = AnnIvf.fitQuantizer(s, dir, nlist, seed)
-        val bc = s.sparkContext.broadcast(centroids)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
-          .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS e")
-          // interpreted HOF acceptable: one-time memoized fit (see AnnIvf)
-          .withColumn("en", expr(
-            "transform(e, x -> x / greatest(sqrt(aggregate(e, 0D, (a, v) -> a + v * v)), 1e-30D))"))
-        val assign = element_at(ColumnBridge.column(
-          IvfLists(ColumnBridge.expression(col("e")), bc, 1)), 1)
-        val cdf = s.createDataFrame(
-          s.sparkContext.parallelize(centroids.toIndexedSeq.zipWithIndex
-            .map { case (c, i) => org.apache.spark.sql.Row(i, c.toSeq) }),
-          StructType(Seq(StructField("list_id", IntegerType),
-            StructField("center", ArrayType(DoubleType)))))
-        val resid = emb.select(col("en"), assign.as("list_id"))
-          .join(broadcast(cdf), Seq("list_id"))
-          .selectExpr("zip_with(en, center, (x, y) -> x - y) AS r")
-        val dim = resid.selectExpr("size(r)").first().getInt(0)
-        val base = dim / m
-        val rem = dim % m
-        var off = 0
-        (0 until m).toArray.map { sub =>
-          val w = base + (if (sub < rem) 1 else 0)
-          val slice = resid.selectExpr(s"slice(r, ${off + 1}, $w) AS sv")
-          off += w
-          val km = new KMeans()
-            .setK(k).setSeed(seed + 100 + sub).setMaxIter(10)
-            .setFeaturesCol("fv").setPredictionCol("c")
-          km.fit(slice.withColumn("fv", array_to_vector(col("sv"))))
-            .clusterCenters.map(_.toArray)
-        }
-      }))._2
+  /** (list, en − c(list)): the nearest coarse centroid of a
+    * unit-normalized vector and the residual the codes quantize — one
+    * function for the fit and every encode. */
+  private[similarity] def residual(centroids: Array[Array[Double]],
+      en: Array[Double]): (Int, Array[Double]) = {
+    val list = AnnIvf.nearest(centroids, en, 0)
+    val cent = centroids(list)
+    val r = new Array[Double](en.length)
+    var i = 0
+    while (i < en.length) { r(i) = en(i) - cent(i); i += 1 }
+    (list, r)
   }
 
   /** IVF-pruned, residual-ADC-scored candidates as
@@ -161,9 +122,14 @@ final case class IvfPqTier(
     copy(nlist = l, nprobe = p)
   }
 
+  /** Coarse centroids fit as [[IvfTier]]'s, then residual books on
+    * en − c(list) of the same sample from seeds seed + 100 + sub. */
   def fit(s: SparkSession, dir: String, dim: => Int): Geometry =
-    (AnnIvf.fitQuantizer(s, dir, nlist, seed),
-      AnnIvfPq.fitResidualBooks(s, dir, nlist, m, kCodes, seed))
+    AnnLloyd.geometry(s, dir, s"ivfpq nlist=$nlist m=$m k=$kCodes seed=$seed",
+        math.max(nlist, kCodes)) { en =>
+      val coarse = AnnLloyd.fit(en, 0, en(0).length, nlist, seed)
+      (coarse, AnnPq.books(en.map(AnnIvfPq.residual(coarse, _)._2), m, kCodes, seed + 100))
+    }
 
   def writeGeometry(s: SparkSession, path: String, g: Geometry): Unit = {
     import s.implicits._
@@ -238,12 +204,7 @@ case class IvfPqCodes(
   }
 
   def encOf(a: ArrayData): InternalRow = {
-    val en = AnnIvf.unitNorm(a.toDoubleArray())
-    val list = AnnIvf.nearestLists(centroids, en, 1)(0)
-    val cent = centroids(list)
-    val r = new Array[Double](en.length)
-    var i = 0
-    while (i < en.length) { r(i) = en(i) - cent(i); i += 1 }
+    val (list, r) = AnnIvfPq.residual(centroids, AnnIvf.unitNorm(a.toDoubleArray()))
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](list, new GenericArrayData(AnnPq.encodeOf(books, r))))
   }

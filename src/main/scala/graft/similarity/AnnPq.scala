@@ -1,8 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -35,16 +33,16 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType}
  *     final order: ADC distortion decides who makes the pool, never the
  *     reported ranking.
  *
- * Like [[AnnIvf]], the codebooks are SPHERICAL (vectors unit-normalized
- * before both fit and encode), so subspace dots sum to the cosine the
- * final ranking maximizes: Σ_m <q_m, x_m> = <q, x> = cos(q, x) on unit
- * vectors, and the ADC estimate substitutes x_m's sub-centroid — the
- * standard inner-product PQ estimator.
+ * Like [[AnnIvf]], codebooks ([[AnnLloyd]]) and encodes use UNIT-NORMALIZED
+ * vectors, so subspace dots sum to the cosine the final ranking maximizes:
+ * Σ_m <q_m, x_m> = <q, x> = cos(q, x) on unit vectors, and the ADC
+ * estimate substitutes x_m's sub-centroid — the standard inner-product
+ * PQ estimator.
  *
- * The k-means fits are seeded but engine-specific, so (like the other
- * ANN variants) q130 is rows-only for the driver; ModulesSpec gates
- * recall@5 against exhaustive brute force on BOTH gated corpora, plus
- * ADC-estimator sanity on the compressed scan itself.
+ * The fits are deterministic but not an engine the DuckDB oracle has, so
+ * (like the other ANN variants) q130 is rows-only for the driver;
+ * ModulesSpec gates recall@5 against exhaustive brute force on BOTH
+ * gated corpora, plus ADC-estimator sanity on the compressed scan.
  *
  * The PERSISTED tier is [[PqTier]] under [[AnnIndex]] (the q133
  * surface): codes are the assignments, codebooks the geometry, with
@@ -74,74 +72,38 @@ object AnnPq {
     * distortion band around the top-k boundary grows linearly with n —
     * so a fixed pool decays with corpus growth (measured: rerank=64 is
     * 0.984 recall@5 on 500 vectors but 0.856 on 2000; n/16 holds
-    * 0.984/0.960 — TUNE_r14.txt pq grids) and the honest default is a
-    * constant FRACTION, mirroring AnnIvf's sqrt-occupancy rule. */
+    * 0.984/0.960 — TUNE_r14.txt pq grids; 0.912/0.928 on the driver-side
+    * fit, TUNE_r23.txt) and the honest default is a constant FRACTION,
+    * mirroring AnnIvf's sqrt-occupancy rule. */
   private[similarity] def autoRerank(n: Long): Int =
     math.max(64L, n / 16L).toInt
 
-  /** Per-subspace codebooks as books(m)(code) = centroid (subDim doubles).
-    * Fit is INDEX-BUILD work, memoized like [[AnnIvf.fitQuantizer]] and
-    * stamped with the corpus file signature so a replaced corpus refits
-    * in place. The m small fits each scan only a subDim-wide slice. */
-  private val codebooks = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Long), (String, Array[Array[Array[Double]]])]()
-
-  private[similarity] def clearCodebookCache(): Unit = codebooks.clear()
-
-  private[similarity] def fitCodebooks(
-      s: SparkSession, dir: String, m: Int, k: Int, seed: Long): Array[Array[Array[Double]]] = {
-    val sig = AnnIvf.corpusSignature(s, dir)
-    codebooks.compute((dir, m, k, seed), (_, prev) =>
-      if (prev != null && prev._1 == sig) prev
-      else (sig, {
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
-          .selectExpr("transform(embedding, x -> cast(x AS double)) AS e")
-          // interpreted HOF acceptable here: one-time memoized fit (the
-          // per-query path normalizes inside compiled code — see AnnIvf)
-          .withColumn("en", expr(
-            "transform(e, x -> x / greatest(sqrt(aggregate(e, 0D, (a, v) -> a + v * v)), 1e-30D))"))
-        val dim = emb.selectExpr("size(en)").first().getInt(0)
-        val base = dim / m
-        val rem = dim % m
-        var off = 0
-        (0 until m).toArray.map { sub =>
-          val w = base + (if (sub < rem) 1 else 0)
-          val slice = emb.selectExpr(s"slice(en, ${off + 1}, $w) AS sv")
-          off += w
-          val km = new KMeans()
-            .setK(k).setSeed(seed + sub).setMaxIter(10)
-            .setFeaturesCol("fv").setPredictionCol("c")
-          km.fit(slice.withColumn("fv", array_to_vector(col("sv"))))
-            .clusterCenters.map(_.toArray)
-        }
-      }))._2
+  /** Per-subspace codebooks of `points` (unit-normalized rows) as
+    * books(sub)(code) = centroid: subspace `sub` is the next dim/m
+    * coordinates (the first dim % m subspaces one wider), fit by
+    * [[AnnLloyd.fit]] from seed `seed + sub`. */
+  private[similarity] def books(points: Array[Array[Double]], m: Int, k: Int,
+      seed: Long): Array[Array[Array[Double]]] = {
+    val dim = points(0).length
+    var off = 0
+    Array.tabulate(m) { sub =>
+      val w = dim / m + (if (sub < dim % m) 1 else 0)
+      val book = AnnLloyd.fit(points, off, w, k, seed + sub)
+      off += w
+      book
+    }
   }
 
   /** Encode a unit-normalized vector: per subspace, the first-min nearest
-    * sub-centroid (same tie-break as [[AnnIvf.nearestLists]]). */
+    * sub-centroid ([[AnnIvf.nearest]]). */
   private[similarity] def encodeOf(
       books: Array[Array[Array[Double]]], en: Array[Double]): Array[Byte] = {
     val out = new Array[Byte](books.length)
     var off = 0
     var m = 0
     while (m < books.length) {
-      val cents = books(m)
-      val w = cents(0).length
-      var best = 0
-      var bestD = Double.PositiveInfinity
-      var c = 0
-      while (c < cents.length) {
-        val cent = cents(c)
-        var d = 0.0
-        var j = 0
-        while (j < w) {
-          val diff = cent(j) - en(off + j); d += diff * diff; j += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      out(m) = best.toByte
-      off += w
+      out(m) = AnnIvf.nearest(books(m), en, off).toByte
+      off += books(m)(0).length
       m += 1
     }
     out
@@ -258,7 +220,8 @@ final case class PqTier(
   def knobs: org.json4s.JObject = ("m" -> m) ~ ("k" -> kCodes) ~ ("seed" -> seed)
 
   def fit(s: SparkSession, dir: String, dim: => Int): Geometry =
-    AnnPq.fitCodebooks(s, dir, m, kCodes, seed)
+    AnnLloyd.geometry(s, dir, s"pq m=$m k=$kCodes seed=$seed", kCodes)(
+      AnnPq.books(_, m, kCodes, seed))
 
   def writeGeometry(s: SparkSession, path: String, books: Geometry): Unit = {
     import s.implicits._

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -8,12 +9,21 @@ import graft.SparkTestSession
   * parquet and loaded back must reproduce the live top-k of its tier
   * bit-for-bit — the same guarantee the iforest model round-trip
   * gives (same scores from a loaded model as from the fitted one). */
-class AnnIndexSpec extends AnyFunSuite {
+class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
-  private val root =
-    s"${sys.props("java.io.tmpdir")}/graft_ann_index_${Integer.toHexString(sf.hashCode)}"
+  /** Every index and corpus copy of this run lives under one fresh temp
+    * dir, removed after the suite: two checkouts tested at once never
+    * read or overwrite each other's indexes. */
+  private val tmp = java.nio.file.Files.createTempDirectory("graft-ann-index-spec").toString
+  private val root = s"$tmp/index"
+
+  private def deleteRec(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
+  }
+
+  override def afterAll(): Unit = try deleteRec(new java.io.File(tmp)) finally super.afterAll()
 
   /** Collected (q_id, neighbor_id, cosine-bits, rn) rows — cosine compared
     * via raw long bits so "bit-for-bit" means exactly that. */
@@ -78,7 +88,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("staleness guard: an index built before the corpus changed refuses to serve") {
     import org.apache.spark.sql.functions.col
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_stale_corpus"
+    val corpus = s"$tmp/stale_corpus"
     val orig = spark.read.parquet(s"$sf/embeddings.parquet")
     orig.write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
     val lshPath = s"$root/lsh_stale"
@@ -123,7 +133,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // closes it: no store rewrites a parquet file without changing one of
     // those. vec_id 200 has pmod(200, 9973) = 200 >= 103 — unsampled.
     import org.apache.spark.sql.functions.col
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_unsampled_corpus"
+    val corpus = s"$tmp/unsampled_corpus"
     val orig = spark.read.parquet(s"$sf/embeddings.parquet")
     orig.write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/lsh_unsampled"
@@ -148,13 +158,8 @@ class AnnIndexSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     // build over the first 400 vectors, then the corpus GROWS by 100 (a
     // parquet append — new part files only, old files untouched)
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_grow_corpus"
+    val corpus = s"$tmp/grow_corpus"
     val all = spark.read.parquet(s"$sf/embeddings.parquet")
-    val fs = new java.io.File(corpus)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-    }
-    deleteRec(fs)
     all.filter(col("vec_id") < 400).write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/lsh_append"
     AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
@@ -203,7 +208,7 @@ class AnnIndexSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_legacy_corpus"
+    val corpus = s"$tmp/legacy_corpus"
     val all = spark.read.parquet(s"$sf/embeddings.parquet")
     all.filter(col("vec_id") < 400)
       .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
@@ -243,7 +248,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("LSH append refuses when the change was not a pure add") {
     import org.apache.spark.sql.functions.col
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_notadd_corpus"
+    val corpus = s"$tmp/notadd_corpus"
     val all = spark.read.parquet(s"$sf/embeddings.parquet")
     all.filter(col("vec_id") < 400)
       .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
@@ -261,12 +266,8 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("append: the new rows leave the cache whether the write succeeds or fails") {
     import org.apache.spark.sql.functions.col
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_cache_corpus"
+    val corpus = s"$tmp/cache_corpus"
     val all = spark.read.parquet(s"$sf/embeddings.parquet")
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-    }
-    deleteRec(new java.io.File(corpus))
     all.filter(col("vec_id") < 200).write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/lsh_cache"
     AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
@@ -288,13 +289,8 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("IVF append: new vectors join the frozen geometry's lists; old rows untouched") {
     import org.apache.spark.sql.functions.col
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_ivfgrow_corpus"
+    val corpus = s"$tmp/ivfgrow_corpus"
     val all = spark.read.parquet(s"$sf/embeddings.parquet")
-    val fs = new java.io.File(corpus)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-    }
-    deleteRec(fs)
     all.write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/ivf_append"
     AnnIndex.build(spark, corpus, path, "ivf")
@@ -340,9 +336,6 @@ class AnnIndexSpec extends AnyFunSuite {
     val before = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     // simulate the mid-rebuild kill window: metadata deleted, old
     // model/assignments still on disk
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-    }
     deleteRec(new java.io.File(s"$path/metadata"))
     assert(!AnnIndex.isCurrent(spark, sf, path))
     intercept[Exception] { AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5).collect() }
@@ -358,7 +351,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // under a fresh fingerprint). 500 rows -> nlist 256; grow the same
     // dir to 2000 rows -> the adaptive default must move to 512.
     import org.apache.spark.sql.functions.col
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_memo_corpus"
+    val corpus = s"$tmp/memo_corpus"
     val small = spark.read.parquet(s"$sf/embeddings.parquet")
     small.write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
     assert(AnnIvf.resolveKnobs(spark, corpus, 0, 0) == ((256, 36)))
@@ -374,12 +367,8 @@ class AnnIndexSpec extends AnyFunSuite {
     // at +25% appended rows and breaking beyond — the IVF append must refuse
     // (BEFORE mutating anything) once live rows exceed 1.25x trainedRows.
     import org.apache.spark.sql.functions.col
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_drift_corpus"
+    val corpus = s"$tmp/drift_corpus"
     val all = spark.read.parquet(s"$sf/embeddings.parquet")
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-    }
-    deleteRec(new java.io.File(corpus))
     all.filter(col("vec_id") < 200).write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/ivf_drift"
     AnnIndex.build(spark, corpus, path, "ivf") // trainedRows = 200
@@ -456,19 +445,12 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("definitelyStale: verdicts on absence/staleness, propagation on probe failure") {
     val path = s"$root/stale_probe"
-    // $root is a FIXED tmpdir, so a prior run of this suite in the same
-    // boot leaves the index behind — clear it so the absence verdict
-    // below is actually about absence, not about last run's artifact
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    rm(new java.io.File(path))
     // absent index: definitively stale (commit record missing)
     assert(AnnIndex.definitelyStale(spark, sf, path))
     AnnIndex.build(spark, sf, path, "lsh")
     assert(!AnnIndex.definitelyStale(spark, sf, path))
     // corpus changed out from under the index: a definitive verdict
-    val corpus2 = java.nio.file.Files.createTempDirectory("graft-stale-corpus").toString
+    val corpus2 = s"$tmp/stale_probe_corpus"
     spark.read.parquet(s"$sf/embeddings.parquet").limit(100)
       .write.parquet(s"$corpus2/embeddings.parquet")
     assert(AnnIndex.definitelyStale(spark, corpus2, path))
@@ -484,7 +466,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // depends on the '$root/ivf' index written by "IVF: persisted index
     // reproduces..." above (suite runs in declaration order); clearing
     // the memo proves topK reads centroids from parquet, not a refit
-    AnnIvf.clearQuantizerCache()
+    AnnLloyd.clearFits()
     val loaded = AnnIndex.topK(spark, sf, path, "ivf", numProbes = 5, k = 5).collect()
     assert(loaded.nonEmpty)
   }
@@ -501,7 +483,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val path = s"$root/pq"
     // depends on '$root/pq' from the test above; clearing the memo
     // proves topK reads codebooks from parquet, not a refit
-    AnnPq.clearCodebookCache()
+    AnnLloyd.clearFits()
     val loaded = AnnIndex.topK(spark, sf, path, "pq", numProbes = 5, k = 5).collect()
     assert(loaded.nonEmpty)
   }
@@ -516,23 +498,18 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("IVF-PQ: loaded index needs neither k-means fit (both memos cold)") {
     val path = s"$root/ivfpq"
-    // depends on '$root/ivfpq' above; clearing BOTH memos proves
+    // depends on '$root/ivfpq' above; clearing the fit memo proves
     // topK reads coarse centroids and residual codebooks from
     // parquet, never a refit
-    AnnIvf.clearQuantizerCache()
-    AnnIvfPq.clearResidualCache()
+    AnnLloyd.clearFits()
     val loaded = AnnIndex.topK(spark, sf, path, "ivfpq", numProbes = 5, k = 5).collect()
     assert(loaded.nonEmpty)
   }
 
   test("IVF-PQ append: frozen geometries encode adds; refuses past 1.25x; rebuild heals") {
     import org.apache.spark.sql.functions.col
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_ivfpqdrift_corpus"
+    val corpus = s"$tmp/ivfpqdrift_corpus"
     val all = spark.read.parquet(s"$sf/embeddings.parquet")
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-    }
-    deleteRec(new java.io.File(corpus))
     all.filter(col("vec_id") < 200).write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/ivfpq_drift"
     AnnIndex.build(spark, corpus, path, "ivfpq") // trainedRows = 200
@@ -571,8 +548,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(spark.read.text(s"$path/metadata").count() == 1,
       "refusal must not clear the metadata commit record")
     // rebuild heals with refit coarse + residual geometry
-    AnnIvf.clearQuantizerCache()
-    AnnIvfPq.clearResidualCache()
+    AnnLloyd.clearFits()
     AnnIndex.build(spark, corpus, path, "ivfpq")
     assert(AnnIndex.isCurrent(spark, corpus, path))
     assert(AnnIndex.topK(spark, corpus, path, "ivfpq").collect().nonEmpty)
@@ -580,12 +556,8 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("PQ append: frozen-codebook encoding; refuses past 1.5x; rebuild heals") {
     import org.apache.spark.sql.functions.col
-    val corpus = s"${sys.props("java.io.tmpdir")}/graft_ann_pqdrift_corpus"
+    val corpus = s"$tmp/pqdrift_corpus"
     val all = spark.read.parquet(s"$sf/embeddings.parquet")
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-    }
-    deleteRec(new java.io.File(corpus))
     all.filter(col("vec_id") < 200).write.parquet(s"$corpus/embeddings.parquet")
     val path = s"$root/pq_drift"
     AnnIndex.build(spark, corpus, path, "pq") // trainedRows = 200
@@ -632,7 +604,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(spark.read.text(s"$path/metadata").count() == 1,
       "refusal must not clear the metadata commit record")
     // the rebuild tier heals with refit codebooks and fresh trainedRows
-    AnnPq.clearCodebookCache() // corpus files changed; drop the fit memo
+    AnnLloyd.clearFits() // corpus files changed; drop the fit memo
     AnnIndex.build(spark, corpus, path, "pq")
     assert(AnnIndex.isCurrent(spark, corpus, path))
     assert(AnnIndex.topK(spark, corpus, path, "pq").collect().nonEmpty)
