@@ -32,10 +32,10 @@ import org.apache.spark.sql.functions._
  */
 object AnnTxStore {
 
-  private[graft] def root(dir: String): String = {
-    val h = Tables.dirHash(dir)
-    s"${sys.props("java.io.tmpdir")}/graft_anntx_$h"
-  }
+  private val store = new StoreMeta.Store("anntx", fingerprint,
+    StoreMeta.pristine)
+
+  private[graft] def root(dir: String): String = store.root(dir)
 
   /** q54's fixed-hyperplane bucket over a double-array column `e` —
     * shared with the oracle side via TextPipeline.fixedBucket. */
@@ -55,25 +55,16 @@ object AnnTxStore {
 
   def build(s: SparkSession, dir: String): String = {
     val path = root(dir)
-    import s.implicits._
     withB54(TextPipeline.embDoubles(s, dir).where("vec_id % 10 < 7"))
       .select(col("b54"), col("vec_id"))
       .write.mode("overwrite").parquet(s"$path/buckets")
-    Seq(fingerprint(s, dir)).toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    store.built(s, dir)
     path
   }
 
-  def isCurrent(s: SparkSession, dir: String): Boolean =
-    try {
-      s.read.parquet(s"${root(dir)}/meta").head().getString(0) ==
-        fingerprint(s, dir)
-    } catch { case _: Exception => false }
+  def isCurrent(s: SparkSession, dir: String): Boolean = store.isCurrent(s, dir)
 
-  /** Delete the meta record so the next ensure rebuilds — the
-    * store-owned invalidation verb (see DedupIndex.invalidate). */
-  private[graft] def invalidate(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${root(dir)}/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+  /** Delete the meta record so the next ensure rebuilds. */
+  private[graft] def invalidate(s: SparkSession, dir: String): Unit =
+    store.invalidate(s, dir)
 }

@@ -99,16 +99,10 @@ object Audit {
     * row-local, batch boundaries cannot change it — the full-table
     * oracle applies verbatim. */
   def streamExpectations(s: SparkSession, dir: String): DataFrame = {
-    val h = Tables.dirHash(dir)
-    val tmp = sys.props("java.io.tmpdir")
-    val feed = s"$tmp/graft_dq_feed_$h"
-    val ckpt = s"$tmp/graft_dq_ckpt_$h"
-    val accepted = s"$tmp/graft_dq_accepted_$h"
-    val quarantine = s"$tmp/graft_dq_quarantine_$h"
-    val fs = new org.apache.hadoop.fs.Path(feed)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    for (p <- Seq(ckpt, accepted, quarantine))
-      fs.delete(new org.apache.hadoop.fs.Path(p), true)
+    val feed = StoreMeta.root("dq_feed", dir)
+    val accepted = StoreMeta.root("dq_accepted", dir)
+    val quarantine = StoreMeta.root("dq_quarantine", dir)
+    for (p <- Seq(accepted, quarantine)) StoreMeta.delete(s, p)
     // deterministic per-corpus feed — staged once per corpus content
     // (Tables.stagedOnce, the q40 staged-events device); batch order is
     // irrelevant here (row-local verdicts), so no mtime choreography
@@ -124,24 +118,15 @@ object Audit {
         |     WHEN lang NOT IN ('en', 'de', 'fr', 'es', 'zh') THEN 'lang_domain'
         |     WHEN size(split(text, ' ')) < 15 THEN 'min_tokens'
         |     ELSE 'ok' END""".stripMargin
-    val stream = s.readStream.schema(s.read.parquet(feed).schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-    val gateBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val judged = batch.toDF().withColumn("check_failed", expr(verdictExpr))
-        judged.where(col("check_failed") === "ok")
-          .select(col("doc_id"), col("lang"))
-          .write.mode("append").parquet(accepted)
-        judged.where(col("check_failed") =!= "ok")
-          .select(col("doc_id"), col("lang"), col("check_failed"))
-          .write.mode("append").parquet(quarantine)
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(gateBatch)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StoreMeta.drain(s, "dq", dir) { batch =>
+      val judged = batch.withColumn("check_failed", expr(verdictExpr))
+      judged.where(col("check_failed") === "ok")
+        .select(col("doc_id"), col("lang"))
+        .write.mode("append").parquet(accepted)
+      judged.where(col("check_failed") =!= "ok")
+        .select(col("doc_id"), col("lang"), col("check_failed"))
+        .write.mode("append").parquet(quarantine)
+    }
     val acc = s.read.parquet(accepted)
       .groupBy(col("lang")).agg(count(lit(1)).as("n_accepted"))
     val quar = s.read.parquet(quarantine)

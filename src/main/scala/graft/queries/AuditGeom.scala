@@ -25,10 +25,10 @@ import org.apache.spark.sql.SparkSession
  * different — unoracled — geometry. The audit's own deterministic
  * geometry is what the DuckDB oracle replays, so that is what persists.
  *
- * Store discipline (the family's): geometry parquet first, meta
- * (content fingerprint) written LAST — a crashed save is metadata-less
- * and refits; a regenerated corpus fails the fingerprint compare and
- * refits. The fingerprint recompute itself sits behind the file-stat
+ * Store discipline (the kernel's, [[StoreMeta]]): geometry parquet
+ * first, the `base` meta row (content fingerprint) written LAST — a
+ * crashed save is metadata-less and refits; a regenerated corpus fails
+ * the fingerprint compare and refits; an unreadable meta throws. The fingerprint recompute itself sits behind the file-stat
  * stamp memo ([[Tables.memoFingerprint]]), so steady-state probes are
  * metadata-only.
  */
@@ -39,7 +39,7 @@ private[queries] object AuditGeom {
   type Books = Seq[Seq[(Long, Seq[Long])]]
 
   private def root(dir: String, leaf: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_audit_geom_${Tables.dirHash(dir)}/$leaf"
+    s"${StoreMeta.root("audit_geom", dir)}/$leaf"
 
   /** Content fingerprint of the FULL embeddings table (every audit fit
     * derives from semGrid over all vectors): count + order-independent
@@ -58,18 +58,15 @@ private[queries] object AuditGeom {
     import s.implicits._
     rows.toDF("grp", "cid", "e")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/geom")
-    Seq(fp).toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    StoreMeta.write(s, path, Seq("base" -> fp))
   }
 
   private def load(s: SparkSession, path: String,
       fp: String): Option[Seq[(Long, Long, Seq[Long])]] =
-    try {
-      if (s.read.parquet(s"$path/meta").head().getString(0) != fp) None
-      else Some(s.read.parquet(s"$path/geom").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
-        .toSeq.sortBy(t => (t._1, t._2)))
-    } catch { case _: Exception => None }
+    if (!StoreMeta.rows(s, path).get("base").contains(fp)) None
+    else Some(s.read.parquet(s"$path/geom").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+      .toSeq.sortBy(t => (t._1, t._2)))
 
   /** Load the persisted geometry for `leaf`, or run `fit`, persist its
     * result, and return it. The flattened row form keeps one meta per

@@ -23,29 +23,19 @@ import org.apache.spark.sql.functions._
  */
 object ClusterStore {
 
-  private[graft] def root(dir: String, variant: String = ""): String = {
-    val v = if (variant.isEmpty) "" else s"_$variant"
-    s"${sys.props("java.io.tmpdir")}/graft_cluster_store_${Tables.dirHash(dir)}$v"
-  }
+  /** LAYERED meta: the base row tracks the training slice and the
+    * batch row the absorbed delta, so an absorbed-and-current lap
+    * touches NOTHING (no retrain, no re-assignment). */
+  private val store = new StoreMeta.Store("cluster_store", fingerprint,
+    StoreMeta.layered)
+
+  private[graft] def root(dir: String, variant: String = ""): String =
+    store.root(dir, variant)
 
   private def corpusSe(s: SparkSession, dir: String): DataFrame =
     Clustering.scaled(s, dir).where("vec_id % 10 < 7")
   private def deltaSe(s: SparkSession, dir: String): DataFrame =
     Clustering.scaled(s, dir).where("vec_id % 10 >= 7")
-
-  /** LAYERED meta — (kind, fp) rows, one for the base geometry and one
-    * per absorbed batch — so "absorbed and current" is distinguishable
-    * from "stale": the base row tracks the training slice, the batch
-    * rows track each absorbed delta, and a read lifecycle whose rows
-    * all match touches NOTHING (no retrain, no re-assignment — the
-    * steady state DedupIndex/StatsStore have and this store previously
-    * lacked: its absorb used to stamp meta "absorbed", forcing a full
-    * rebuild every lap). */
-  private def writeMeta(s: SparkSession, path: String,
-      rows: Seq[(String, String)]): Unit = StoreMeta.write(s, path, rows)
-
-  private def metaRows(s: SparkSession, path: String): Map[String, String] =
-    StoreMeta.rows(s, path)
 
   /** Content fingerprint over the integer grid of a slice. */
   private def fingerprintOf(se: DataFrame): String = {
@@ -74,23 +64,17 @@ object ClusterStore {
       .groupBy(col("cid")).agg(count(lit(1)).as("n"))
       .withColumn("batch", lit(0L))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/partials")
-    // meta written LAST, base row only: a build clears every batch row
-    // (partials were overwritten wholesale above)
-    writeMeta(s, path, Seq("base" -> fingerprint(s, dir)))
+    store.built(s, dir, variant)
     path
   }
 
-  /** Current = the base geometry matches the training slice AND no
-    * absorb died mid-append (an in-flight batch row reads "absorbing").
-    * Batch rows do NOT make the store stale — that is the point. */
-  def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean = {
-    val rows = metaRows(s, root(dir, variant))
-    rows.get("base").contains(fingerprint(s, dir)) &&
-      !rows.values.exists(_ == "absorbing")
-  }
+  /** Current = the base geometry matches the training slice AND no verb
+    * died mid-write. Batch rows do NOT make the store stale. */
+  def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean =
+    store.isCurrent(s, dir, variant)
 
   def buildIfStale(s: SparkSession, dir: String, variant: String = ""): String =
-    if (isCurrent(s, dir, variant)) root(dir, variant) else build(s, dir, variant)
+    store.buildIfStale(s, dir, variant)(build(s, dir, variant))
 
   /** The frozen geometry back as driver-side arrays (k×dim longs — the
     * same bounded collect every ANN tier's geometry load is). */
@@ -103,74 +87,36 @@ object ClusterStore {
       .toSeq.sortBy(_._1)
 
   /** Absorb the delta: one assignment pass against the FROZEN geometry,
-    * one additive k-sized partial appended — IDEMPOTENT under the
-    * layered meta: an already-absorbed, unchanged batch is a no-op
-    * (q211's lap pays zero after the first run), a changed batch or a
-    * torn previous absorb rebuilds first (append-only partials cannot
-    * retract a half-written layer), and the batch row flips to
-    * "absorbing" BEFORE the append so a crash between the two leaves a
-    * store isCurrent reads as stale rather than double-counts. */
-  def absorb(s: SparkSession, dir: String, variant: String = ""): Unit = {
-    var path = root(dir, variant)
-    val dfp = deltaFingerprint(s, dir)
-    val baseFp = fingerprint(s, dir)
-    val rows = metaRows(s, path)
-    if (rows.get("batch1").contains(dfp) && rows.get("base").contains(baseFp))
-      return // already absorbed, nothing changed — the steady state
-    if (rows.contains("batch1") || !rows.get("base").contains(baseFp))
-      path = build(s, dir, variant)
-    val base = baseFp
-    writeMeta(s, path, Seq("base" -> base, "batch1" -> "absorbing"))
-    Clustering.assignTo(s, deltaSe(s, dir), loadCents(s, dir, variant))
-      .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-      .withColumn("batch", lit(1L))
-      .coalesce(1).write.mode("append").parquet(s"$path/partials")
-    writeMeta(s, path, Seq("base" -> base, "batch1" -> dfp))
-  }
+    * one additive k-sized partial appended — idempotent under the
+    * kernel's verified absorb (q211's lap pays zero after the first
+    * run). */
+  def absorb(s: SparkSession, dir: String, variant: String = ""): Unit =
+    store.absorbOnce(s, dir, variant, deltaFingerprint(s, dir),
+        build(s, dir, variant)) {
+      Clustering.assignTo(s, deltaSe(s, dir), loadCents(s, dir, variant))
+        .groupBy(col("cid")).agg(count(lit(1)).as("n"))
+        .withColumn("batch", lit(1L))
+        .coalesce(1).write.mode("append").parquet(s"${root(dir, variant)}/partials")
+    }
 
   /** COMPACT the batch partials: absorb appends one k-sized layer per
     * batch, so the table grows #batches × k rows in #batches files —
     * the fold collapses it to one row per (cid, batch) in one file,
     * and every read (profile, drift) answers identically (the merge is
-    * the partials' own sum algebra). StatsStore.compact's write
-    * discipline: staged copy first (the rewrite reads the path it
-    * overwrites), meta invalidated during the rewrite and restored
-    * after, so a crash mid-rewrite rebuilds rather than serves torn
-    * partials. */
+    * the partials' own sum algebra). The kernel's staged compact
+    * refuses a torn store (ClusterStoreSpec pins it). */
   def compact(s: SparkSession, dir: String, variant: String = ""): Unit = {
     val path = root(dir, variant)
-    val staging = s"$path/staging_compact"
-    val saved = metaRows(s, path).toSeq
-    // the fold re-blesses whatever it reads: if the meta is already
-    // torn (a batch row still "absorbing" after a crashed absorb, or a
-    // prior compact's own "compacting" base), the partials may hold a
-    // half-written layer — folding it and restoring the torn rows
-    // verbatim would launder the tear into a "current"-looking store.
-    // Refuse loudly; the heal is absorb/buildIfStale, whose staleness
-    // check rebuilds from scratch (absorb's own docstring contract).
-    if (saved.isEmpty || saved.exists(_._2 == "absorbing") ||
-        saved.exists(_._2 == "compacting"))
-      throw new IllegalStateException(
-        s"cluster store at $path is torn or unbuilt (meta = $saved) — " +
-          "compact would fold and re-bless a half-written layer; run " +
-          "absorb/buildIfStale to heal before compacting")
-    s.read.parquet(s"$path/partials")
-      .groupBy(col("cid"), col("batch")).agg(sum(col("n")).as("n"))
-      .select(col("cid"), col("n"), col("batch"))
-      .coalesce(1).write.mode("overwrite").parquet(staging)
-    writeMeta(s, path, Seq("base" -> "compacting"))
-    StoreMeta.swapIn(s, staging, s"$path/partials")
-    writeMeta(s, path, saved)
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    store.compact(s, dir, variant, Seq("partials")) { staging =>
+      s.read.parquet(s"$path/partials")
+        .groupBy(col("cid"), col("batch")).agg(sum(col("n")).as("n"))
+        .select(col("cid"), col("n"), col("batch"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/partials")
+    }
   }
 
   private[graft] def invalidate(s: SparkSession, dir: String,
-      variant: String = ""): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${root(dir, variant)}/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+      variant: String = ""): Unit = store.invalidate(s, dir, variant)
 
   /** q211's read: the merged cluster profile with e6 shares — k rows,
     * from the store alone. */

@@ -48,10 +48,10 @@ import org.apache.spark.sql.functions._
  */
 object DecontamIndex {
 
-  private[graft] def root(dir: String): String = {
-    val h = Tables.dirHash(dir)
-    s"${sys.props("java.io.tmpdir")}/graft_decontam_idx_$h"
-  }
+  private val store = new StoreMeta.Store("decontam_idx", fingerprint,
+    StoreMeta.pristine)
+
+  private[graft] def root(dir: String): String = store.root(dir)
 
   /** q114's planted source: docs with doc_id % 97 = 1 carry the text of
     * doc (doc_id − 1) — a benchmark (% 97 = 0) doc — so contaminated
@@ -84,19 +84,8 @@ object DecontamIndex {
       .select(col("doc_id"), col("text"))
 
   private def fingerprint(s: SparkSession, dir: String): String =
-    Tables.memoFingerprint(s, dir, "decontam.base") {
-      val r = benchTranche(s, dir, even = true)
-        .selectExpr("cast(conv(substring(md5(text), 1, 8), 16, 10) AS bigint) AS h")
-        .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-        .head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-    }
-
-  private def writeMeta(s: SparkSession, path: String, fp: String): Unit = {
-    import s.implicits._
-    Seq(fp).toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+    Tables.memoFingerprint(s, dir, "decontam.base")(
+      StoreMeta.fingerprintOf(benchTranche(s, dir, even = true), "text"))
 
   /** Build from benchmark tranche A; meta (tranche fingerprint) LAST. */
   def build(s: SparkSession, dir: String): String = {
@@ -104,63 +93,39 @@ object DecontamIndex {
     fpsOf(s, benchTranche(s, dir, even = true))
       .selectExpr("doc_id AS bench_id", "fp")
       .write.mode("overwrite").parquet(s"$path/fps")
-    writeMeta(s, path, fingerprint(s, dir))
+    store.built(s, dir)
     path
   }
 
-  def isCurrent(s: SparkSession, dir: String): Boolean =
-    try s.read.parquet(s"${root(dir)}/meta").head().getString(0) ==
-      fingerprint(s, dir)
-    catch { case _: Exception => false }
+  def isCurrent(s: SparkSession, dir: String): Boolean = store.isCurrent(s, dir)
 
   def buildIfStale(s: SparkSession, dir: String): String =
-    if (isCurrent(s, dir)) root(dir) else build(s, dir)
+    store.buildIfStale(s, dir)(build(s, dir))
 
-  /** A new benchmark suite ships: absorb its fingerprints as a layer.
-    * Meta flips first (invalidate-before-mutate, the family bracket). */
-  def absorb(s: SparkSession, dir: String): Unit = {
-    val path = root(dir)
-    writeMeta(s, path, "absorbed")
-    fpsOf(s, benchTranche(s, dir, even = false))
+  /** A new benchmark suite ships: absorb its fingerprints as a layer,
+    * after the kernel's stale meta write. */
+  def absorb(s: SparkSession, dir: String): Unit =
+    store.absorb(s, dir)(fpsOf(s, benchTranche(s, dir, even = false))
       .selectExpr("doc_id AS bench_id", "fp")
-      .write.mode("append").parquet(s"$path/fps")
-  }
+      .write.mode("append").parquet(s"${root(dir)}/fps"))
 
-  /** Delete the meta record so the next buildIfStale rebuilds — the
-    * store-owned invalidation verb every other store in the family has
-    * (see DedupIndex.invalidate); callers that mutate the benchmark
-    * corpus out-of-band use it instead of reaching into the directory. */
-  private[graft] def invalidate(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${root(dir)}/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+  /** Delete the meta record so the next buildIfStale rebuilds — callers
+    * that mutate the benchmark corpus out-of-band use it instead of
+    * reaching into the directory. */
+  private[graft] def invalidate(s: SparkSession, dir: String): Unit =
+    store.invalidate(s, dir)
 
   /** COMPACT the layered store: absorb is append-only, so every shipped
     * benchmark suite stacks another file layer under fps/ — compaction
-    * rewrites the table as one merged, coalesced layer, reclaiming the
-    * listing + open cost. Rows are copied, not recomputed, so it is
-    * reader-invisible by construction — q161 oracles exactly that
-    * (judge-after-compact shares q153's oracle verbatim).
-    *
-    * Same staged-rewrite discipline as DedupIndex.compact:
-    *   1. STAGE the merged copy to a sibling dir first — the rewrite
-    *      plan reads the very path it overwrites;
-    *   2. meta invalidated BEFORE the rewrite and restored AFTER, so a
-    *      crash mid-rewrite leaves isCurrent false (rebuild) rather
-    *      than a torn table served as current. */
-  def compact(s: SparkSession, dir: String): Unit = {
-    val path = root(dir)
-    val staging = s"$path/staging_compact"
-    val meta = s.read.parquet(s"$path/meta").head()
-    s.read.parquet(s"$path/fps").coalesce(4)
-      .write.mode("overwrite").parquet(s"$staging/fps")
-    writeMeta(s, path, "compacting")
-    StoreMeta.swapIn(s, s"$staging/fps", s"$path/fps")
-    writeMeta(s, path, meta.getString(0))
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-  }
+    * rewrites the table as one merged, coalesced layer under the
+    * kernel's staged compact, reclaiming the listing + open cost. Rows
+    * are copied, not recomputed, so it is reader-invisible by
+    * construction — q161 oracles exactly that (judge-after-compact
+    * shares q153's oracle verbatim). */
+  def compact(s: SparkSession, dir: String): Unit =
+    store.compact(s, dir, "", Seq("fps"))(staging =>
+      s.read.parquet(s"${root(dir)}/fps").coalesce(4)
+        .write.mode("overwrite").parquet(s"$staging/fps"))
 
   /** Judge a batch of documents against the store: fingerprint the
     * BATCH only, broadcast-join the persisted benchmark fingerprints,
@@ -204,13 +169,9 @@ object DecontamIndex {
     // pre-stream registration (Registration.ensureAllNative's note):
     // the in-batch judge needs winnow_fingerprints bound before .start()
     graft.functions.Registration.ensureAllNative(s)
-    val h = Tables.dirHash(dir)
-    val out = s"${sys.props("java.io.tmpdir")}/graft_decontam_gate_$h"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_decontam_gate_ckpt_$h"
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(out), true)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    val out = StoreMeta.root("decontam_gate", dir)
+    val ckpt = StoreMeta.root("decontam_gate_ckpt", dir)
+    for (p <- Seq(out, ckpt)) StoreMeta.delete(s, p)
     val raw = s.read.parquet(s"$dir/documents.parquet") // schema probe
     val srcTexts = Tables.t(s, dir, "documents")
       .select(col("doc_id").as("p_id"), col("text").as("p_text"))
@@ -221,20 +182,8 @@ object DecontamIndex {
       .selectExpr("doc_id",
         "CASE WHEN doc_id % 97 = 1 AND p_text IS NOT NULL THEN p_text" +
           " ELSE text END AS text")
-    // explicit function value — the inline lambda is ambiguous between
-    // the Scala and Java foreachBatch overloads on 2.13 (q131's note)
-    val judgeBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        judgeDocs(s, dir, batch.toDF())
-          .write.mode("append").parquet(out)
-        ()
-      }
-    val q = feed.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(judgeBatch)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StoreMeta.drainStream(feed, ckpt)(batch =>
+      judgeDocs(s, dir, batch).write.mode("append").parquet(out))
     s.read.parquet(out).orderBy(col("doc_id"))
   }
 

@@ -41,13 +41,13 @@ import org.apache.spark.sql.functions._
 object EmbedIndex {
 
   // variant: independent store instances, same rationale as
-  // DedupIndex.root — the absorbing q142 lifecycle must not flip q141's
+  // DedupIndex's — the absorbing q142 lifecycle must not flip q141's
   // pristine store non-current between bench laps.
-  private[graft] def root(dir: String, variant: String = ""): String = {
-    val h = Tables.dirHash(dir)
-    val v = if (variant.isEmpty) "" else s"_$variant"
-    s"${sys.props("java.io.tmpdir")}/graft_embed_idx_$h$v"
-  }
+  private val store = new StoreMeta.Store("embed_idx", fingerprint,
+    StoreMeta.pristine)
+
+  private[graft] def root(dir: String, variant: String = ""): String =
+    store.root(dir, variant)
 
   private def corpusVecs(s: SparkSession, dir: String): DataFrame =
     TextPipeline.embDoubles(s, dir).where("vec_id % 10 < 7")
@@ -99,18 +99,11 @@ object EmbedIndex {
       s"${r.getLong(0)}:${r.getLong(1)}"
     }
 
-  private def writeMeta(s: SparkSession, path: String, fp: String,
-      pristine: Boolean): Unit = {
-    import s.implicits._
-    Seq((fp, pristine)).toDF("fp", "pristine")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
   def build(s: SparkSession, dir: String, variant: String = ""): String = {
     val path = root(dir, variant)
     corpusVecs(s, dir).select(col("bucket"), col("vec_id"))
       .write.mode("overwrite").parquet(s"$path/buckets")
-    writeMeta(s, path, fingerprint(s, dir), pristine = true)
+    store.built(s, dir, variant)
     path
   }
 
@@ -118,21 +111,13 @@ object EmbedIndex {
     * extended it past the pristine corpus-only state (q141's oracled
     * contract — same semantics as DedupIndex.isCurrent). */
   def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean =
-    try {
-      val r = s.read.parquet(s"${root(dir, variant)}/meta").head()
-      r.getString(0) == fingerprint(s, dir) && r.getBoolean(1)
-    } catch { case _: Exception => false }
+    store.isCurrent(s, dir, variant)
 
   def buildIfStale(s: SparkSession, dir: String, variant: String = ""): String =
-    if (isCurrent(s, dir, variant)) root(dir, variant) else build(s, dir, variant)
+    store.buildIfStale(s, dir, variant)(build(s, dir, variant))
 
-  /** Delete the meta record so the next buildIfStale rebuilds — the
-    * store-owned invalidation verb (see DedupIndex.invalidate). */
   private[graft] def invalidate(s: SparkSession, dir: String,
-      variant: String = ""): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${root(dir, variant)}/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+      variant: String = ""): Unit = store.invalidate(s, dir, variant)
 
   /** Judge every delta vector against the persisted bucket index: one
     * bucket equi-join for candidates, one vec_id equi-join to rehydrate
@@ -188,7 +173,8 @@ object EmbedIndex {
     * is STAGED before the bucket append — the keptIds plan READS the
     * bucket table through the judge, and Spark recaches path reads after
     * a write to that path (the r15 DedupIndex.absorb lesson; see that
-    * scaladoc) — and meta flips non-pristine FIRST (crash bracket). */
+    * scaladoc) — and the append runs after the kernel's stale meta
+    * write. */
   def absorbVecs(s: SparkSession, dir: String, delta: DataFrame,
       variant: String = ""): Unit = {
     val path = root(dir, variant)
@@ -198,33 +184,18 @@ object EmbedIndex {
     delta.select(col("bucket"), col("vec_id")).join(keptIds, Seq("vec_id"))
       .select(col("bucket"), col("vec_id"))
       .write.mode("overwrite").parquet(staging)
-    val fp = try s.read.parquet(s"$path/meta").head().getString(0)
-             catch { case _: Exception => "" }
-    writeMeta(s, path, fp, pristine = false)
-    s.read.parquet(staging).write.mode("append").parquet(s"$path/buckets")
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    store.absorb(s, dir, variant)(
+      s.read.parquet(staging).write.mode("append").parquet(s"$path/buckets"))
+    StoreMeta.delete(s, staging)
   }
 
   /** COMPACT the absorb layers under buckets/ into one coalesced file
-    * set — semantics-preserving row copy, the [[DedupIndex.compact]]
-    * discipline verbatim: staged copy (the rewrite reads the dir it
-    * overwrites), meta invalidated before the rewrite and restored
-    * after (IncrementalOpsSpec pins judge-answer preservation). */
-  def compact(s: SparkSession, dir: String, variant: String = ""): Unit = {
-    val path = root(dir, variant)
-    val staging = s"$path/staging_compact"
-    val meta = s.read.parquet(s"$path/meta").head()
-    s.read.parquet(s"$path/buckets").coalesce(4)
-      .write.mode("overwrite").parquet(staging)
-    writeMeta(s, path, "compacting", pristine = false)
-    s.read.parquet(staging).write.mode("overwrite").parquet(s"$path/buckets")
-    writeMeta(s, path, meta.getString(0), meta.getBoolean(1))
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-  }
+    * set — semantics-preserving row copy under the kernel's staged
+    * compact (IncrementalOpsSpec pins judge-answer preservation). */
+  def compact(s: SparkSession, dir: String, variant: String = ""): Unit =
+    store.compact(s, dir, variant, Seq("buckets"))(staging =>
+      s.read.parquet(s"${root(dir, variant)}/buckets").coalesce(4)
+        .write.mode("overwrite").parquet(s"$staging/buckets"))
 
   /** STREAMING SEMANTIC ARRIVAL GATE — the two-batch lifecycle (q142)
     * under streaming cadence: the vector feed arrives as micro-batches
@@ -247,56 +218,22 @@ object EmbedIndex {
     // (Registration.ensureAllNative's note) — the judge's
     // cosine_similarity must be bound before .start()
     graft.functions.Registration.ensureAllNative(s)
-    val h = Tables.dirHash(dir)
-    val feed = s"${sys.props("java.io.tmpdir")}/graft_embed_gate_feed_$h"
-    val out = s"${sys.props("java.io.tmpdir")}/graft_embed_gate_out_$h"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_embed_gate_ckpt_$h"
-    val feedPath = new org.apache.hadoop.fs.Path(feed)
-    val fs = feedPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(out), true)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    val out = StoreMeta.root("embed_gate_out", dir)
+    StoreMeta.delete(s, out)
     // deterministic per-corpus feed — staged once per corpus content
-    // (Tables.stagedOnce, the q40 staged-events device): re-writing the
-    // identical two tick files every lap paid two write jobs for bytes
-    // that cannot differ
-    Tables.stagedOnce(s, dir, feed, "embed_gate;ticks=2") { () =>
-      batch1Vecs(s, dir).withColumn("epoch", lit(1))
-        .coalesce(1).write.mode("overwrite").parquet(feed)
-      val base = System.currentTimeMillis() - 3600000L
-      val aParts = fs.listStatus(feedPath)
-        .filter(_.getPath.getName.startsWith("part-"))
-      aParts.foreach(st => fs.setTimes(st.getPath, base, -1))
-      batch2Vecs(s, dir).withColumn("epoch", lit(2))
-        .coalesce(1).write.mode("append").parquet(feed)
-      val aNames = aParts.map(_.getPath.getName).toSet
-      fs.listStatus(feedPath)
-        .filter(st => st.getPath.getName.startsWith("part-") &&
-          !aNames(st.getPath.getName))
-        .foreach(st => fs.setTimes(st.getPath, base + 60000L, -1))
+    // (the q40 staged-events device): re-writing the identical two tick
+    // files every lap paid two write jobs for bytes that cannot differ
+    StoreMeta.stageTicks(s, "embed_gate", dir)(
+      () => batch1Vecs(s, dir).withColumn("epoch", lit(1)),
+      () => batch2Vecs(s, dir).withColumn("epoch", lit(2)))
+    StoreMeta.drain(s, "embed_gate", dir) { b =>
+      // tick tag — single-valued by maxFilesPerTrigger=1 (q166's note)
+      val epoch = b.agg(max(col("epoch"))).head().getInt(0)
+      val delta = b.drop("epoch")
+      judgeVecs(s, dir, delta, "sg").withColumn("epoch", lit(epoch))
+        .write.mode("append").parquet(out)
+      absorbVecs(s, dir, delta, "sg")
     }
-
-    val schema = s.read.parquet(feed).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-    // explicit function value — the inline lambda is ambiguous between
-    // the Scala and Java foreachBatch overloads on 2.13 (q131's note)
-    val gateTick: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        // tick tag — single-valued by maxFilesPerTrigger=1 (q166's note)
-        val epoch = b.agg(max(col("epoch"))).head().getInt(0)
-        val delta = b.drop("epoch")
-        judgeVecs(s, dir, delta, "sg").withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(out)
-        absorbVecs(s, dir, delta, "sg")
-        ()
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(gateTick)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     s.read.parquet(out).where("epoch = 2")
       .select(col("vec_id"), col("n_sim"), col("best_match"),
         col("best_cos_r"), col("verdict"))

@@ -32,14 +32,16 @@ import org.apache.spark.sql.functions._
  */
 object GraphStore {
 
-  // md5 fragment, not hashCode — the family's path-keying standard.
-  // variant: independent store instances (EmbedIndex.root's rationale);
-  // StoreTxn's immutable base lives under the "tx" variant.
-  private[graft] def root(dir: String, variant: String = ""): String = {
-    val h = Tables.dirHash(dir)
-    val v = if (variant.isEmpty) "" else s"_$variant"
-    s"${sys.props("java.io.tmpdir")}/graft_graph_store_$h$v"
-  }
+  /** LAYERED meta: `base` tracks the corpus slice, `batch1` the absorbed
+    * delta, `compacted` stamps an already-folded layer set — so the
+    * steady-state lifecycle (build + absorb + compact on an unchanged
+    * corpus) is a NO-OP beyond the two fingerprint aggregations.
+    * StoreTxn's immutable base lives under the "tx" variant. */
+  private val store = new StoreMeta.Store("graph_store", fingerprint,
+    StoreMeta.layered)
+
+  private[graft] def root(dir: String, variant: String = ""): String =
+    store.root(dir, variant)
 
   private def orderParts(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "lineitem")
@@ -59,90 +61,41 @@ object GraphStore {
   /** Corpus-slice content fingerprint: distinct (o, p) count +
     * order-independent hash-sum — any membership change moves it. */
   private def fingerprint(s: SparkSession, dir: String): String =
-    Tables.memoFingerprint(s, dir, "graph.base") {
-      val r = corpusOp(s, dir).distinct()
-        .selectExpr("cast(conv(substring(md5(concat_ws('|', cast(o AS string), " +
-          "cast(p AS string))), 1, 8), 16, 10) AS bigint) AS h")
-        .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-        .head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-    }
+    Tables.memoFingerprint(s, dir, "graph.base")(
+      StoreMeta.fingerprintOf(corpusOp(s, dir).distinct(), pairKey))
 
-  /** LAYERED meta — (kind, fp) rows, ClusterStore's device: `base`
-    * tracks the corpus slice, `batch1` the absorbed delta, `compacted`
-    * stamps an already-folded layer set — so "absorbed and current" is
-    * distinguishable from "stale" and the steady-state lifecycle
-    * (build + absorb + compact on an unchanged corpus) is a NO-OP
-    * beyond the two fingerprint aggregations. The old flat meta
-    * stamped "absorbed" and forced a full rebuild + re-absorb +
-    * re-fold every lap — the exact per-lap probe cost the r17 verdict
-    * priced for this family. */
-  private def writeMeta(s: SparkSession, path: String,
-      rows: Seq[(String, String)]): Unit = StoreMeta.write(s, path, rows)
-
-  private def metaRows(s: SparkSession, path: String): Map[String, String] =
-    StoreMeta.rows(s, path)
+  private val pairKey = "concat_ws('|', cast(o AS string), cast(p AS string))"
 
   private def deltaFingerprint(s: SparkSession, dir: String): String =
-    Tables.memoFingerprint(s, dir, "graph.delta") {
-      val r = deltaOp(s, dir).distinct()
-        .selectExpr("cast(conv(substring(md5(concat_ws('|', cast(o AS string), " +
-          "cast(p AS string))), 1, 8), 16, 10) AS bigint) AS h")
-        .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-        .head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-    }
+    Tables.memoFingerprint(s, dir, "graph.delta")(
+      StoreMeta.fingerprintOf(deltaOp(s, dir).distinct(), pairKey))
 
   def build(s: SparkSession, dir: String, variant: String = ""): String = {
     val path = root(dir, variant)
     Graph.coPairsOf(corpusOp(s, dir))
       .write.mode("overwrite").parquet(s"$path/edges")
-    // meta written LAST, base row only: a build clears batch/compacted
-    writeMeta(s, path, Seq("base" -> fingerprint(s, dir)))
+    store.built(s, dir, variant)
     path
   }
 
-  /** Current = base geometry matches the corpus slice AND no verb died
-    * mid-write ("absorbing"/"compacting" rows). An absorbed batch row
-    * does NOT make the store stale — that is the point. */
-  def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean = {
-    val rows = metaRows(s, root(dir, variant))
-    rows.get("base").contains(fingerprint(s, dir)) &&
-      !rows.values.exists(v => v == "absorbing" || v == "compacting")
-  }
+  /** Current = base matches the corpus slice AND no verb died
+    * mid-write. An absorbed batch row does NOT make the store stale. */
+  def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean =
+    store.isCurrent(s, dir, variant)
 
   def buildIfStale(s: SparkSession, dir: String, variant: String = ""): String =
-    if (isCurrent(s, dir, variant)) root(dir, variant) else build(s, dir, variant)
+    store.buildIfStale(s, dir, variant)(build(s, dir, variant))
 
-  /** Delete the meta record so the next buildIfStale rebuilds — the
-    * store-owned invalidation verb (see DedupIndex.invalidate). */
   private[graft] def invalidate(s: SparkSession, dir: String,
-      variant: String = ""): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${root(dir, variant)}/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+      variant: String = ""): Unit = store.invalidate(s, dir, variant)
 
   /** Absorb the delta orders: ONE pair aggregation over the batch,
-    * appended as a layer — IDEMPOTENT under the layered meta: an
-    * already-absorbed, unchanged batch is a no-op, a changed batch or
-    * a torn previous absorb rebuilds first (append-only layers cannot
-    * retract), and the batch row flips to "absorbing" BEFORE the
-    * append so a crash between the two reads as stale, never as a
-    * double-count. */
-  def absorb(s: SparkSession, dir: String): Unit = {
-    var path = root(dir)
-    val dfp = deltaFingerprint(s, dir)
-    val bfp = fingerprint(s, dir)
-    val rows = metaRows(s, path)
-    if (rows.get("batch1").contains(dfp) && rows.get("base").contains(bfp))
-      return // already absorbed, nothing changed — the steady state
-    if (rows.contains("batch1") || !rows.get("base").contains(bfp))
-      path = build(s, dir)
-    writeMeta(s, path, Seq("base" -> bfp, "batch1" -> "absorbing"))
-    Graph.coPairsOf(deltaOp(s, dir))
-      .write.mode("append").parquet(s"$path/edges")
-    writeMeta(s, path, Seq("base" -> bfp, "batch1" -> dfp))
-  }
+    * appended as a layer — idempotent under the kernel's verified
+    * absorb. */
+  def absorb(s: SparkSession, dir: String): Unit =
+    store.absorbOnce(s, dir, "", deltaFingerprint(s, dir), build(s, dir))(
+      Graph.coPairsOf(deltaOp(s, dir))
+        .write.mode("append").parquet(s"${root(dir)}/edges"))
 
   /** The merged edge list: one groupBy over the #pairs-sized store.
     * Equals the full-table [[Graph.coPairsOf]] exactly — additive
@@ -151,39 +104,15 @@ object GraphStore {
     s.read.parquet(s"${root(dir)}/edges")
       .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
 
-  private def foldStamp(rows: Map[String, String]): String =
-    s"${rows.getOrElse("base", "")}|${rows.getOrElse("batch1", "")}"
-
   /** COMPACT the layered edges to one row per pair — the additive merge
-    * IS the compaction (StatsStore.compact's algebra). Same write
-    * discipline: the merged copy is STAGED (the rewrite reads the path
-    * it overwrites) and meta is invalidated before the rewrite and
-    * restored after, so a crash mid-rewrite rebuilds rather than serves
-    * torn layers. REFUSES on torn meta (ClusterStore.compact's guard —
-    * folding would re-bless a half-written layer) and is a NO-OP when
-    * the current layer set is already folded (the `compacted` stamp).
-    * O(|store|), never O(corpus). */
-  def compact(s: SparkSession, dir: String): Unit = {
-    val path = root(dir)
-    val staging = s"$path/staging_compact"
-    val saved = metaRows(s, path)
-    if (saved.isEmpty || saved.values.exists(v =>
-        v == "absorbing" || v == "compacting"))
-      throw new IllegalStateException(
-        s"graph store at $path is torn or unbuilt (meta = $saved) — " +
-          "run absorb/buildIfStale to heal before compacting")
-    if (saved.get("compacted").contains(foldStamp(saved)))
-      return // this exact layer set is already one row per pair
-    mergedEdges(s, dir)
-      .coalesce(4).write.mode("overwrite").parquet(staging)
-    writeMeta(s, path, Seq("base" -> "compacting"))
-    StoreMeta.swapIn(s, staging, s"$path/edges")
-    writeMeta(s, path, (saved - "compacted").toSeq :+
-      ("compacted" -> foldStamp(saved)))
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-  }
+    * IS the compaction (StatsStore.compact's algebra), under the
+    * kernel's staged compact with the fold stamp: a no-op when the
+    * current layer set is already folded. O(|store|), never O(corpus). */
+  def compact(s: SparkSession, dir: String): Unit =
+    store.compact(s, dir, "", Seq("edges"), foldOnce = true) { staging =>
+      mergedEdges(s, dir)
+        .coalesce(4).write.mode("overwrite").parquet(s"$staging/edges")
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // build the corpus edge store, absorb the delta orders' pairs, then

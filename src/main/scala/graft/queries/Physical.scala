@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
  */
 object Physical {
 
-  private def outRoot(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_physical_${Integer.toHexString(dir.hashCode)}"
+  private def outRoot(dir: String): String = StoreMeta.root("physical", dir)
 
   /** SQL for the 32-bit Morton code of two 16-bit coordinates — bit i of
     * `x` lands at position 2i, bit i of `y` at 2i+1, identically to the

@@ -127,8 +127,13 @@ object QualityModel {
   // train — which is exactly what lets q179 share q159's oracle
   // verbatim: gate-from-store must reproduce gate-from-scratch.
 
-  private def lmRoot(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_lm_store_${Tables.dirHash(dir)}"
+  /** LAYERED meta (ClusterStore's device): `base` tracks the training
+    * slice, `batch1` the absorbed delta — an absorbed-and-current lap
+    * skips retrain AND re-absorb (two fingerprint passes, no writes). */
+  private val lmStore = new StoreMeta.Store("lm_store", lmFingerprint,
+    StoreMeta.layered)
+
+  private def lmRoot(dir: String): String = lmStore.root(dir)
 
   private def lmCorpus(s: SparkSession, dir: String): DataFrame =
     plantedNorm(s, dir).where("doc_id % 10 < 7")
@@ -142,63 +147,30 @@ object QualityModel {
       .groupBy(col("bg")).agg(count(lit(1)).as("c"))
   }
 
-  private def fingerprintOf(df: DataFrame): String = {
-    val r = df
-      .selectExpr("cast(conv(substring(md5(nt), 1, 8), 16, 10) AS bigint) AS h")
-      .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-      .head()
-    s"${r.getLong(0)}:${r.getLong(1)}"
-  }
-
   private def lmFingerprint(s: SparkSession, dir: String): String =
-    Tables.memoFingerprint(s, dir, "lm.base")(fingerprintOf(lmCorpus(s, dir)))
+    Tables.memoFingerprint(s, dir, "lm.base")(
+      StoreMeta.fingerprintOf(lmCorpus(s, dir), "nt"))
   private def lmDeltaFingerprint(s: SparkSession, dir: String): String =
-    Tables.memoFingerprint(s, dir, "lm.delta")(fingerprintOf(lmDelta(s, dir)))
-
-  /** LAYERED meta (ClusterStore's device): `base` tracks the training
-    * slice, `batch1` the absorbed delta — an absorbed-and-current lap
-    * skips retrain AND re-absorb (two fingerprint passes, no writes),
-    * where the old flat "absorbed" stamp forced both every lap. */
-  private def writeLmMeta(s: SparkSession, dir: String,
-      rows: Seq[(String, String)]): Unit = StoreMeta.write(s, lmRoot(dir), rows)
-
-  private def lmMetaRows(s: SparkSession, dir: String): Map[String, String] =
-    StoreMeta.rows(s, lmRoot(dir))
+    Tables.memoFingerprint(s, dir, "lm.delta")(
+      StoreMeta.fingerprintOf(lmDelta(s, dir), "nt"))
 
   def buildLm(s: SparkSession, dir: String): Unit = {
     lmPartials(lmCorpus(s, dir))
       .coalesce(1).write.mode("overwrite").parquet(s"${lmRoot(dir)}/counts")
-    // meta written LAST, base row only: a build clears the batch row
-    writeLmMeta(s, dir, Seq("base" -> lmFingerprint(s, dir)))
+    lmStore.built(s, dir)
   }
 
-  def isLmCurrent(s: SparkSession, dir: String): Boolean = {
-    val rows = lmMetaRows(s, dir)
-    rows.get("base").contains(lmFingerprint(s, dir)) &&
-      !rows.values.exists(_ == "absorbing")
-  }
+  def isLmCurrent(s: SparkSession, dir: String): Boolean = lmStore.isCurrent(s, dir)
 
   def buildLmIfStale(s: SparkSession, dir: String): Unit =
-    if (!isLmCurrent(s, dir)) buildLm(s, dir)
+    lmStore.buildIfStale(s, dir)(buildLm(s, dir))
 
-  /** Absorb the delta's 729-cell partial — IDEMPOTENT under the layered
-    * meta (an unchanged absorbed batch is a no-op); a changed batch or
-    * torn previous absorb rebuilds first (append-only partials cannot
-    * retract), and the batch row flips to "absorbing" before the append
-    * so a crash between the two reads as stale, never double-counts. */
-  def absorbLm(s: SparkSession, dir: String): Unit = {
-    val dfp = lmDeltaFingerprint(s, dir)
-    val bfp = lmFingerprint(s, dir)
-    val rows = lmMetaRows(s, dir)
-    if (rows.get("batch1").contains(dfp) && rows.get("base").contains(bfp))
-      return // already absorbed, nothing changed — the steady state
-    if (rows.contains("batch1") || !rows.get("base").contains(bfp))
-      buildLm(s, dir)
-    writeLmMeta(s, dir, Seq("base" -> bfp, "batch1" -> "absorbing"))
-    lmPartials(lmDelta(s, dir))
-      .coalesce(1).write.mode("append").parquet(s"${lmRoot(dir)}/counts")
-    writeLmMeta(s, dir, Seq("base" -> bfp, "batch1" -> dfp))
-  }
+  /** Absorb the delta's 729-cell partial — idempotent under the kernel's
+    * verified absorb (an unchanged absorbed batch is a no-op). */
+  def absorbLm(s: SparkSession, dir: String): Unit =
+    lmStore.absorbOnce(s, dir, "", lmDeltaFingerprint(s, dir), buildLm(s, dir))(
+      lmPartials(lmDelta(s, dir))
+        .coalesce(1).write.mode("append").parquet(s"${lmRoot(dir)}/counts"))
 
   /** The merged model from the store alone — ≤ #batches × 729 rows in,
     * ≤ 729 out; the same bounded-collect class as the live train. */

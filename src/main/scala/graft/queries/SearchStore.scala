@@ -44,36 +44,25 @@ import org.apache.spark.sql.functions._
  */
 object SearchStore {
 
-  // md5-fragment path keying — see DedupIndex.root.
-  private def root(dir: String, variant: String = ""): String = {
-    val v = if (variant.isEmpty) "" else s"_$variant"
-    s"${sys.props("java.io.tmpdir")}/graft_search_store_${Tables.dirHash(dir)}$v"
-  }
+  /** LAYERED meta: `base` tracks the indexed corpus slice, `batch1` the
+    * absorbed delta (a FINGERPRINT when a verified absorb landed it, the
+    * opaque `absorbed` when a frame-explicit caller did), `deleted` marks
+    * a tombstoned membership, `compacted` an already-folded layer set.
+    * Current = base matches, every absorbed batch is fingerprint-verified
+    * (an opaque `absorbed` can be anything), no tombstones, and no verb
+    * died mid-write (`purging` included). */
+  private val store = new StoreMeta.Store("search_store", fingerprint,
+    r => !r.contains("deleted") &&
+      !r.values.exists(v => v == "absorbed" || StoreMeta.torn(v)))
+
+  private def root(dir: String, variant: String = ""): String =
+    store.root(dir, variant)
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents").where("doc_id % 10 < 7")
 
   private def deltaDocs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents").where("doc_id % 10 >= 7")
-
-  /** LAYERED meta — (kind, fp) rows, ClusterStore's device: `base`
-    * tracks the indexed corpus slice, `batch1` the absorbed delta (a
-    * FINGERPRINT when a verified absorb landed it, the opaque
-    * "absorbed" when a frame-explicit caller did), `deleted` marks a
-    * tombstoned membership, `compacted` an already-folded layer set.
-    * "Absorbed and current" (fingerprinted batch, no tombstones) is a
-    * NO-OP lifecycle — the old flat stamp forced a full re-index every
-    * lap. An old single-column meta fails the (kind, fp) read and
-    * self-heals as stale. */
-  private def writeMeta(s: SparkSession, path: String,
-      rows: Seq[(String, String)]): Unit = StoreMeta.write(s, path, rows)
-
-  private def metaRows(s: SparkSession, path: String): Map[String, String] =
-    StoreMeta.rows(s, path)
-
-  /** Verbs that died mid-write — folding or serving these is the
-    * corruption the meta exists to prevent. */
-  private val tornValues = Set("absorbing", "compacting", "purging")
 
   /** Corpus-slice content fingerprint (VocabStore's device), memoized
     * behind the data dir's file-stat stamp ([[Tables.memoFingerprint]]) —
@@ -87,13 +76,8 @@ object SearchStore {
     Tables.memoFingerprint(s, dir, "search.delta")(
       fingerprintOf(deltaDocs(s, dir)))
 
-  private def fingerprintOf(df: DataFrame): String = {
-    val r = df
-      .selectExpr("cast(conv(substring(md5(text), 1, 8), 16, 10) AS bigint) AS h")
-      .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-      .head()
-    s"${r.getLong(0)}:${r.getLong(1)}"
-  }
+  private def fingerprintOf(df: DataFrame): String =
+    StoreMeta.fingerprintOf(df, "text")
 
   /** Term-hash partition fanout. 16 directories keeps the sandbox file
     * count sane; at 100 TB the same layout widens to 1-4k buckets so each
@@ -136,45 +120,24 @@ object SearchStore {
     // overwrite semantics must cover the delete layer too: a tombstone
     // set surviving a rebuild would exclude docs whose negative stat
     // partials the fresh stats table no longer carries
-    val ts = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    ts.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ts, true)
-    // meta written LAST, base row only: a build clears batch/deleted
-    writeMeta(s, path, Seq("base" -> fingerprint(s, dir)))
+    StoreMeta.delete(s, s"$path/tombstones")
+    store.built(s, dir, variant)
     path
   }
 
-  /** Current = base matches the corpus slice, every absorbed batch is
-    * fingerprint-verified (an opaque "absorbed" can be anything), no
-    * tombstones, and no verb died mid-write. */
-  def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean = {
-    val rows = metaRows(s, root(dir, variant))
-    rows.get("base").contains(fingerprint(s, dir)) &&
-      !rows.contains("deleted") &&
-      !rows.values.exists(v => v == "absorbed" || tornValues(v))
-  }
+  def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean =
+    store.isCurrent(s, dir, variant)
 
   def buildIfStale(s: SparkSession, dir: String, variant: String = ""): String =
-    if (isCurrent(s, dir, variant)) root(dir, variant) else build(s, dir, variant)
+    store.buildIfStale(s, dir, variant)(build(s, dir, variant))
 
   /** Absorb a delta batch: append its postings under the same `tb=`
     * directories (new files per partition — union merge, no read-modify-
-    * write) and its one stat row; flip meta non-pristine LAST so a crash
-    * between the appends reads as stale, never as silently current. */
-  def absorb(s: SparkSession, dir: String, variant: String = ""): Unit = {
-    val path = root(dir, variant)
-    val dfp = deltaFingerprint(s, dir)
-    val bfp = fingerprint(s, dir)
-    val rows = metaRows(s, path)
-    if (rows.get("batch1").contains(dfp) && rows.get("base").contains(bfp) &&
-        !rows.contains("deleted"))
-      return // already absorbed, nothing changed — the steady state
-    if (rows.contains("batch1") || rows.contains("deleted") ||
-        !rows.get("base").contains(bfp))
-      build(s, dir, variant)
-    writeMeta(s, path, Seq("base" -> bfp, "batch1" -> "absorbing"))
-    appendFrame(s, deltaDocs(s, dir), path)
-    writeMeta(s, path, Seq("base" -> bfp, "batch1" -> dfp))
-  }
+    * write) and its one stat row, inside the kernel's verified absorb. */
+  def absorb(s: SparkSession, dir: String, variant: String = ""): Unit =
+    store.absorbOnce(s, dir, variant, deltaFingerprint(s, dir),
+      build(s, dir, variant))(
+      appendFrame(s, deltaDocs(s, dir), root(dir, variant)))
 
   private def appendFrame(s: SparkSession, batch: DataFrame,
       path: String): Unit =
@@ -190,59 +153,32 @@ object SearchStore {
     * rebuilds. Callers with a deterministic delta use [[absorb]] (the
     * idempotent fast path); streaming drains use [[streamAbsorb]]. */
   def absorbFrame(s: SparkSession, batch: DataFrame, dir: String,
-      variant: String = ""): Unit = {
-    val path = root(dir, variant)
-    // Same invalidate-BEFORE-mutate bracket as [[absorb]]: flip the
-    // batch row torn first, so a crash mid-append reads as stale (the
-    // next lifecycle rebuilds) — appending first would leave a store
-    // with half a batch's postings that isCurrent reports as current,
-    // and the retry would append the batch a SECOND time (double-counted
-    // df/tf served silently).
-    val base = metaRows(s, path).getOrElse("base", "")
-    writeMeta(s, path, Seq("base" -> base, "batch1" -> "absorbing"))
-    appendFrame(s, batch, path)
-    writeMeta(s, path, Seq("base" -> base, "batch1" -> "absorbed"))
-  }
+      variant: String = ""): Unit =
+    store.absorb(s, dir, variant)(appendFrame(s, batch, root(dir, variant)))
 
   /** COMPACT the appended posting layers: per-batch files under each
     * `tb=` directory fold into one rewrite (rows are already disjoint —
     * compaction here is file-count hygiene, not a merge), stats fold to
-    * one row. [[VocabStore.compact]]'s staged-rewrite discipline: stage,
-    * flip meta, swap, restore meta, delete staging — a reader at any
-    * point sees either the old layout or the new, both complete. */
-  private def foldStamp(rows: Map[String, String]): String =
-    s"${rows.getOrElse("base", "")}|${rows.getOrElse("batch1", "")}"
+    * one row — the kernel's staged compact, a no-op when the current
+    * layer set is already folded. */
+  def compact(s: SparkSession, dir: String, variant: String = ""): Unit =
+    store.compact(s, dir, variant, Seq("postings", "stats"),
+      foldOnce = true)(stageFold(s, dir, variant, identity))
 
-  def compact(s: SparkSession, dir: String, variant: String = ""): Unit = {
+  /** Stage the folded postings (through `keep`) and stats. Repartition
+    * BY the partition column: every bucket's rows land in one task, so
+    * each tb= dir folds to a single file (without it, each read task
+    * re-writes a sliver into every bucket and the file count never
+    * drops). Parallelism = #buckets. */
+  private def stageFold(s: SparkSession, dir: String, variant: String,
+      keep: DataFrame => DataFrame)(staging: String): Unit = {
     val path = root(dir, variant)
-    val staging = s"$path/staging_compact"
-    val saved = metaRows(s, path)
-    // ClusterStore.compact's guard: folding a torn store would re-bless
-    // a half-written layer; an already-folded layer set is a no-op
-    if (saved.isEmpty || saved.values.exists(tornValues))
-      throw new IllegalStateException(
-        s"search store at $path is torn or unbuilt (meta = $saved) — " +
-          "run absorb/buildIfStale to heal before compacting")
-    if (saved.get("compacted").contains(foldStamp(saved)))
-      return // this exact layer set is already one file per bucket
-    // repartition BY the partition column: every bucket's rows land in one
-    // task, so each tb= dir folds to a single file (without it, each read
-    // task re-writes a sliver into every bucket and the file count never
-    // drops — the whole point of the verb). Parallelism = #buckets.
     Jobs.par(
-      () => s.read.parquet(s"$path/postings").repartition(col("tb"))
+      () => keep(s.read.parquet(s"$path/postings")).repartition(col("tb"))
         .write.mode("overwrite").partitionBy("tb").parquet(s"$staging/postings"),
       () => s.read.parquet(s"$path/stats")
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
         .coalesce(1).write.mode("overwrite").parquet(s"$staging/stats"))
-    writeMeta(s, path, Seq("base" -> "compacting"))
-    StoreMeta.swapIn(s, s"$staging/postings", s"$path/postings")
-    StoreMeta.swapIn(s, s"$staging/stats", s"$path/stats")
-    writeMeta(s, path, (saved - "compacted").toSeq :+
-      ("compacted" -> foldStamp(saved)))
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
   }
 
   // root is private; the spec reaches the layers through these.
@@ -253,10 +189,7 @@ object SearchStore {
 
   /** Delete the meta record so the next buildIfStale rebuilds. */
   private[graft] def invalidate(s: SparkSession, dir: String,
-      variant: String = ""): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${root(dir, variant)}/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+      variant: String = ""): Unit = store.invalidate(s, dir, variant)
 
   /** The query terms' bucket literals, resolved through the SAME `hash`
     * expression the writer used (one LocalTableScan job over |terms|
@@ -292,51 +225,19 @@ object SearchStore {
     * boundaries and arrival order, so the drained store state equals the
     * one-shot absorb exactly — q99's full-table oracle applies verbatim.
     * The delta is staged into 4 range files replayed one per micro-batch
-    * (the q131 cadence device); meta flips non-pristine BEFORE the
-    * stream starts (invalidate-before-mutate, the absorb bracket). */
+    * (the q131 cadence device) and drained inside the kernel's verified
+    * absorb: the drained state equals the one-shot absorb exactly, so an
+    * already-drained, unchanged delta is a no-op (no staging, no
+    * stream). */
   def streamAbsorb(s: SparkSession, dir: String, variant: String): Unit = {
     val path = root(dir, variant)
-    // the drained state equals the one-shot absorb exactly, so the
-    // layered idempotence applies verbatim: an already-drained,
-    // unchanged delta is a no-op lifecycle (no staging, no stream)
-    val dfp = deltaFingerprint(s, dir)
-    val bfp = fingerprint(s, dir)
-    val rows = metaRows(s, path)
-    if (rows.get("batch1").contains(dfp) && rows.get("base").contains(bfp) &&
-        !rows.contains("deleted"))
-      return
-    if (rows.contains("batch1") || rows.contains("deleted") ||
-        !rows.get("base").contains(bfp))
-      build(s, dir, variant)
-    val h = Tables.dirHash(dir)
-    val staged = s"${sys.props("java.io.tmpdir")}/graft_search_feed_$h"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_search_ckpt_$h"
-    deltaDocs(s, dir).select(col("doc_id"), col("text"))
-      .repartitionByRange(4, col("doc_id"))
-      .write.mode("overwrite").parquet(staged)
-    val fs = new org.apache.hadoop.fs.Path(ckpt)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    writeMeta(s, path, Seq("base" -> bfp, "batch1" -> "absorbing"))
-    val stream = s.readStream.schema(s.read.parquet(staged).schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
-    // explicit function value — the inline lambda is ambiguous between
-    // the Scala and Java foreachBatch overloads on 2.13 (q131's note)
-    val absorbBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        postings(b)
-          .write.mode("append").partitionBy("tb").parquet(s"$path/postings")
-        statPartial(b)
-          .coalesce(1).write.mode("append").parquet(s"$path/stats")
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(absorbBatch)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    writeMeta(s, path, Seq("base" -> bfp, "batch1" -> dfp))
+    store.absorbOnce(s, dir, variant, deltaFingerprint(s, dir),
+        build(s, dir, variant)) {
+      deltaDocs(s, dir).select(col("doc_id"), col("text"))
+        .repartitionByRange(4, col("doc_id"))
+        .write.mode("overwrite").parquet(StoreMeta.root("search_feed", dir))
+      StoreMeta.drain(s, "search", dir)(appendFrame(s, _, path))
+    }
   }
 
   /** q99's BM25 (k1=1.2, b=0.75, linear N/df idf, exact e4 integer
@@ -550,8 +451,8 @@ object SearchStore {
       () => statPartial(victims)
         .selectExpr("-n_docs AS n_docs", "-sum_dl AS sum_dl")
         .coalesce(1).write.mode("append").parquet(s"$path/stats"))
-    writeMeta(s, path,
-      (metaRows(s, path) - "deleted").toSeq :+ ("deleted" -> "true"))
+    StoreMeta.write(s, path,
+      (store.rows(s, dir, variant) - "deleted").toSeq :+ ("deleted" -> "true"))
   }
 
   private def tombstones(s: SparkSession, dir: String,
@@ -582,26 +483,14 @@ object SearchStore {
     * tombstones drop. Stats are already exact (the negative partials
     * landed at delete time) so they only fold, never re-derive. */
   def purge(s: SparkSession, dir: String, variant: String = ""): Unit = {
-    val path = root(dir, variant)
-    val staging = s"$path/staging_purge"
-    // the deleted row SURVIVES the purge: membership still diverges
-    // from corpus ∪ delta, so the store must keep reading stale
-    val saved = metaRows(s, path)
-    Jobs.par(
-      () => live(s, dir, s.read.parquet(s"$path/postings"), variant)
-        .repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$staging/postings"),
-      () => s.read.parquet(s"$path/stats")
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/stats"))
-    writeMeta(s, path, Seq("base" -> "purging"))
-    StoreMeta.swapIn(s, s"$staging/postings", s"$path/postings")
-    StoreMeta.swapIn(s, s"$staging/stats", s"$path/stats")
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    writeMeta(s, path, saved.toSeq)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    // the deleted row SURVIVES the purge (the kernel restores the saved
+    // meta): membership still diverges from corpus ∪ delta, so the store
+    // must keep reading stale. Tombstones drop only after the swap — a
+    // crash before that leaves them anti-joining already-purged postings,
+    // which reads identically.
+    store.compact(s, dir, variant, Seq("postings", "stats"), flip = "purging")(
+      stageFold(s, dir, variant, live(s, dir, _, variant)))
+    StoreMeta.delete(s, s"${root(dir, variant)}/tombstones")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -37,11 +37,11 @@ import org.apache.spark.sql.functions._
  */
 object SketchStore {
 
-  // md5-fragment path keying — see DedupIndex.root.
-  private def root(dir: String, variant: String = ""): String = {
-    val v = if (variant.isEmpty) "" else s"_$variant"
-    s"${sys.props("java.io.tmpdir")}/graft_sketch_store_${Tables.dirHash(dir)}$v"
-  }
+  private val store = new StoreMeta.Store("sketch_store", fingerprint,
+    StoreMeta.pristine)
+
+  private def root(dir: String, variant: String = ""): String =
+    store.root(dir, variant)
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents").where("doc_id % 10 < 7")
@@ -49,20 +49,10 @@ object SketchStore {
   private def deltaDocs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents").where("doc_id % 10 >= 7")
 
-  private def writeMeta(s: SparkSession, path: String, v: String): Unit = {
-    import s.implicits._
-    Seq(v).toDF("fp").coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
   /** Corpus-slice content fingerprint (VocabStore's device). */
   private def fingerprint(s: SparkSession, dir: String): String =
-    Tables.memoFingerprint(s, dir, "sketch.base") {
-      val r = corpusDocs(s, dir)
-        .selectExpr("cast(conv(substring(md5(text), 1, 8), 16, 10) AS bigint) AS h")
-        .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-        .head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-    }
+    Tables.memoFingerprint(s, dir, "sketch.base")(
+      StoreMeta.fingerprintOf(corpusDocs(s, dir), "text"))
 
   // ---- q170: count-min sketch + heavy-hitter candidates ----
 
@@ -110,28 +100,25 @@ object SketchStore {
       .write.mode("overwrite").parquet(s"$path/cms")
     candPartials(corpusDocs(s, dir))
       .write.mode("overwrite").parquet(s"$path/cands")
-    writeMeta(s, path, fingerprint(s, dir))
+    store.built(s, dir, variant)
     path
   }
 
   def isCmsCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean =
-    try s.read.parquet(s"${root(dir, variant)}/meta").head().getString(0) ==
-      fingerprint(s, dir)
-    catch { case _: Exception => false }
+    store.isCurrent(s, dir, variant)
 
   def buildCmsIfStale(s: SparkSession, dir: String, variant: String = ""): String =
-    if (isCmsCurrent(s, dir, variant)) root(dir, variant)
-    else buildCms(s, dir, variant)
+    store.buildIfStale(s, dir, variant)(buildCms(s, dir, variant))
 
-  /** ABSORB: append the delta's counter layer + candidate layer; meta
-    * flips non-pristine so the next lap's pristine-build guard rebuilds
-    * (the family's discipline — see StatsStore.absorb). */
-  def absorbCms(s: SparkSession, dir: String): Unit = {
-    val path = root(dir)  // batch lifecycle only — q175 streams into "strm"
+  /** ABSORB: append the delta's counter layer + candidate layer after
+    * the kernel's stale meta write; the store is past its pristine
+    * slice, so the next lap's build guard rebuilds (the flat ladder). */
+  def absorbCms(s: SparkSession, dir: String): Unit =
+    store.absorb(s, dir)(appendCms(deltaDocs(s, dir), root(dir)))
 
-    writeMeta(s, path, "absorbed")
-    cmsPartials(deltaDocs(s, dir)).write.mode("append").parquet(s"$path/cms")
-    candPartials(deltaDocs(s, dir)).write.mode("append").parquet(s"$path/cands")
+  private def appendCms(batch: DataFrame, path: String): Unit = {
+    cmsPartials(batch).write.mode("append").parquet(s"$path/cms")
+    candPartials(batch).write.mode("append").parquet(s"$path/cands")
   }
 
   /** Heavy-hitter read from the STORE ALONE: merge the counter layers
@@ -169,35 +156,12 @@ object SketchStore {
     * two. */
   def streamAbsorbCms(s: SparkSession, dir: String): Unit = {
     val path = root(dir, "strm")
-    val h = Tables.dirHash(dir)
-    val staged = s"${sys.props("java.io.tmpdir")}/graft_sketch_feed_$h"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_sketch_ckpt_$h"
-    val fs = new org.apache.hadoop.fs.Path(ckpt)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
     // one part file per micro-batch (maxFilesPerTrigger=1)
-    deltaDocs(s, dir).where("doc_id % 10 < 9")
-      .coalesce(1).write.mode("overwrite").parquet(staged)
-    deltaDocs(s, dir).where("doc_id % 10 = 9")
-      .coalesce(1).write.mode("append").parquet(staged)
-    writeMeta(s, path, "absorbed")
-    val schema = s.read.parquet(staged).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
-    // explicit function value — the inline lambda is ambiguous between
-    // the Scala and Java foreachBatch overloads on 2.13 (q131's note)
-    val absorbBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        cmsPartials(b).write.mode("append").parquet(s"$path/cms")
-        candPartials(b).write.mode("append").parquet(s"$path/cands")
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(absorbBatch)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StoreMeta.stageTicks(s, "sketch", dir)(
+      () => deltaDocs(s, dir).where("doc_id % 10 < 9"),
+      () => deltaDocs(s, dir).where("doc_id % 10 = 9"))
+    store.absorb(s, dir, "strm")(
+      StoreMeta.drain(s, "sketch", dir)(appendCms(_, path)))
   }
 
   // ---- q171: bottom-k (KMV) mergeable sample ----

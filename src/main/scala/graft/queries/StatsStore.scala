@@ -30,15 +30,18 @@ import org.apache.spark.sql.functions._
  */
 object StatsStore {
 
-  // md5 fragment, not hashCode — see DedupIndex.root / annIndexPath.
   // `variant` separates independent store instances (the absorbing
   // lifecycles q134/q136 vs q107's pristine-store contract) — see
-  // DedupIndex.root's note.
-  private[graft] def root(dir: String, variant: String = ""): String = {
-    val h = Tables.dirHash(dir)
-    val v = if (variant.isEmpty) "" else s"_$variant"
-    s"${sys.props("java.io.tmpdir")}/graft_stats_store_$h$v"
-  }
+  // DedupIndex's note. The histogram (`qh`) and tagged (`rt`, `tt`)
+  // instances share the corpus fingerprint; the bitmap store (`lc`)
+  // fingerprints the events slice.
+  private val store = new StoreMeta.Store("stats_store", fingerprint,
+    StoreMeta.pristine)
+  private val lcStore = new StoreMeta.Store("stats_store", lcFingerprint,
+    StoreMeta.pristine)
+
+  private[graft] def root(dir: String, variant: String = ""): String =
+    store.root(dir, variant)
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents").where("doc_id % 10 < 7")
@@ -62,92 +65,58 @@ object StatsStore {
     * hash-sum over the stat-relevant columns) — any change to membership,
     * grouping keys, or n_chars moves it. */
   private def fingerprint(s: SparkSession, dir: String): String =
-    Tables.memoFingerprint(s, dir, "stats.base") {
-      val r = corpusDocs(s, dir)
-        .selectExpr("cast(conv(substring(md5(concat_ws('|', lang, source, " +
-          "cast(n_chars AS string))), 1, 8), 16, 10) AS bigint) AS h")
-        .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-        .head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-    }
+    Tables.memoFingerprint(s, dir, "stats.base")(
+      StoreMeta.fingerprintOf(corpusDocs(s, dir),
+        "concat_ws('|', lang, source, cast(n_chars AS string))"))
 
   def build(s: SparkSession, dir: String, variant: String = ""): String = {
     val path = root(dir, variant)
     partials(corpusDocs(s, dir))
       .write.mode("overwrite").parquet(s"$path/partials")
-    import s.implicits._
-    Seq(fingerprint(s, dir)).toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    store.built(s, dir, variant)
     path
   }
 
   def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean =
-    try s.read.parquet(s"${root(dir, variant)}/meta").head().getString(0) ==
-      fingerprint(s, dir)
-    catch { case _: Exception => false }
+    store.isCurrent(s, dir, variant)
 
   def buildIfStale(s: SparkSession, dir: String, variant: String = ""): String =
-    if (isCurrent(s, dir, variant)) root(dir, variant) else build(s, dir, variant)
+    store.buildIfStale(s, dir, variant)(build(s, dir, variant))
 
   /** ABSORB: append the delta's partials into the store so the stats
     * advance permanently — afterwards the store alone covers corpus ∪
     * delta, and the next batch merges against it without re-reading
-    * either. Append-only (no store rewrite); the meta fingerprint is NOT
-    * updated to the corpus slice (the store no longer equals it), so
-    * `isCurrent` correctly reads false and the oracled q107 path — which
-    * needs the pristine corpus-only store — rebuilds via buildIfStale.
-    * The partials table stays #batches × #groups rows; a periodic
-    * `build` compacts it back to #groups. */
-  def absorb(s: SparkSession, dir: String, variant: String = ""): Unit = {
-    val path = root(dir, variant)
-    partials(deltaDocs(s, dir))
-      .write.mode("append").parquet(s"$path/partials")
-    import s.implicits._
-    Seq("absorbed").toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+    * either. Append-only (no store rewrite), after the kernel's stale
+    * meta write; the store is no longer pristine, so `isCurrent` reads
+    * false and the oracled q107 path — which needs the pristine
+    * corpus-only store — rebuilds via buildIfStale. The partials table
+    * stays #batches × #groups rows until [[compact]]. */
+  def absorb(s: SparkSession, dir: String, variant: String = ""): Unit =
+    store.absorb(s, dir, variant)(partials(deltaDocs(s, dir))
+      .write.mode("append").parquet(s"${root(dir, variant)}/partials"))
 
   /** COMPACT the layered partials back to one row per group: absorb is
     * append-only, so the table grows a #groups-sized layer per batch —
     * the merge algebra (sum/sum/sum/min/max) means collapsing the layers
     * is itself just the merge aggregate, and the compacted store answers
     * every read identically (q145 oracles compact-then-read against the
-    * full recompute). Same write discipline as DedupIndex.compact: the
-    * merged copy is STAGED (the rewrite plan reads the path it
-    * overwrites), and meta is invalidated before the rewrite and restored
-    * after, so a crash mid-rewrite leaves a store that rebuilds rather
-    * than serves torn partials. */
+    * full recompute). The kernel's staged compact brackets the
+    * rewrite, which reads the path it replaces. */
   def compact(s: SparkSession, dir: String, variant: String = ""): Unit = {
     val path = root(dir, variant)
-    val staging = s"$path/staging_compact"
-    val meta = s.read.parquet(s"$path/meta").head().getString(0)
-    s.read.parquet(s"$path/partials")
-      .groupBy(col("lang"), col("source"))
-      .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"),
-        sum(col("s2")).as("s2"), min(col("mn")).as("mn"),
-        max(col("mx")).as("mx"))
-      .coalesce(1).write.mode("overwrite").parquet(staging)
-    writeMeta(s, path, "compacting")
-    StoreMeta.swapIn(s, staging, s"$path/partials")
-    writeMeta(s, path, meta)
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    store.compact(s, dir, variant, Seq("partials")) { staging =>
+      s.read.parquet(s"$path/partials")
+        .groupBy(col("lang"), col("source"))
+        .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"),
+          sum(col("s2")).as("s2"), min(col("mn")).as("mn"),
+          max(col("mx")).as("mx"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/partials")
+    }
   }
 
-  private def writeMeta(s: SparkSession, path: String, fp: String): Unit = {
-    import s.implicits._
-    Seq(fp).toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Delete the meta record so the next buildIfStale rebuilds — the
-    * store-owned invalidation verb (see VocabStore.invalidate). */
+  /** Delete the meta record so the next buildIfStale rebuilds. */
   private[queries] def invalidate(s: SparkSession, dir: String,
-      variant: String = ""): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${root(dir, variant)}/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+      variant: String = ""): Unit = store.invalidate(s, dir, variant)
 
   /** STREAMING store maintenance (q145): the delta arrives as a stream
     * and each micro-batch absorbs its OWN partials into the store via
@@ -158,34 +127,15 @@ object StatsStore {
     * boundaries and arrival order — which is exactly what lets the
     * full-recompute oracle apply verbatim after the stream drains.
     * The delta is staged into 4 range files replayed one per micro-batch
-    * (the q131 cadence device); meta is invalidated BEFORE the stream
-    * starts (invalidate-before-mutate, the absorb bracket). */
+    * (the q131 cadence device), drained after the absorb's stale meta
+    * write. */
   def streamAbsorb(s: SparkSession, dir: String, variant: String): Unit = {
     val path = root(dir, variant)
-    val h = Tables.dirHash(dir)
-    val staged = s"${sys.props("java.io.tmpdir")}/graft_stats_feed_$h"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_stats_ckpt_$h"
     deltaDocs(s, dir).select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       .repartitionByRange(4, col("doc_id"))
-      .write.mode("overwrite").parquet(staged)
-    val fs = new org.apache.hadoop.fs.Path(ckpt)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    writeMeta(s, path, "absorbed")
-    val schema = s.read.parquet(staged).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
-    // explicit function value — the inline lambda is ambiguous between
-    // the Scala and Java foreachBatch overloads on 2.13 (q131's note)
-    val absorbBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => partials(batch.toDF())
-        .write.mode("append").parquet(s"$path/partials")
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(absorbBatch)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .write.mode("overwrite").parquet(StoreMeta.root("stats_feed", dir))
+    store.absorb(s, dir, variant)(StoreMeta.drain(s, "stats", dir)(batch =>
+      partials(batch).write.mode("append").parquet(s"$path/partials")))
   }
 
   /** Finalized stats from the STORE ALONE (no live delta) — the read a
@@ -227,40 +177,30 @@ object StatsStore {
     * "stats over the last N epochs" = rewrite the partials keeping
     * `batch >= cutoff`. This is how windowed corpus dashboards work at
     * 100 TB (last-90-days token stats): per-epoch partial layers, expiry
-    * drops whole layers, never touches row-level data. The rewrite reads
-    * the path it overwrites, so it stages first and brackets meta exactly
-    * like [[compact]]. */
+    * drops whole layers, never touches row-level data. The rewrite is
+    * the kernel's staged compact with a filter in place of the merge. */
   def buildTagged(s: SparkSession, dir: String, variant: String = "rt"): String = {
     val path = root(dir, variant)
     partials(corpusDocs(s, dir)).withColumn("batch", lit(0L))
       .write.mode("overwrite").parquet(s"$path/partials")
-    writeMeta(s, path, fingerprint(s, dir))
+    store.built(s, dir, variant)
     path
   }
 
   def absorbBatch(s: SparkSession, dir: String, delta: DataFrame,
-      batchId: Long, variant: String = "rt"): Unit = {
-    val path = root(dir, variant)
-    writeMeta(s, path, "absorbed")
-    partials(delta).withColumn("batch", lit(batchId))
-      .write.mode("append").parquet(s"$path/partials")
-  }
+      batchId: Long, variant: String = "rt"): Unit =
+    store.absorb(s, dir, variant)(partials(delta).withColumn("batch", lit(batchId))
+      .write.mode("append").parquet(s"${root(dir, variant)}/partials"))
 
   /** Drop every layer with `batch < keepFrom`. O(|store|), not O(corpus):
     * the rewrite touches the #groups × #epochs partials table only. */
   def expire(s: SparkSession, dir: String, keepFrom: Long,
       variant: String = "rt"): Unit = {
     val path = root(dir, variant)
-    val staging = s"$path/staging_expire"
-    val meta = s.read.parquet(s"$path/meta").head().getString(0)
-    s.read.parquet(s"$path/partials").where(col("batch") >= keepFrom)
-      .coalesce(1).write.mode("overwrite").parquet(staging)
-    writeMeta(s, path, "expiring")
-    StoreMeta.swapIn(s, staging, s"$path/partials")
-    writeMeta(s, path, meta)
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    store.compact(s, dir, variant, Seq("partials")) { staging =>
+      s.read.parquet(s"$path/partials").where(col("batch") >= keepFrom)
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/partials")
+    }
   }
 
   // ---- time travel (q148) + changelog (q149) on the tagged store ----
@@ -276,12 +216,9 @@ object StatsStore {
   private[graft] def ensureTagged(s: SparkSession, dir: String,
       variant: String = "tt"): Unit = {
     val path = root(dir, variant)
-    val ok =
-      try s.read.parquet(s"$path/meta").head().getString(0) ==
-          fingerprint(s, dir) &&
-        s.read.parquet(s"$path/partials")
-          .agg(max(col("batch"))).head().getLong(0) == 2L
-      catch { case _: Exception => false }
+    val ok = store.isCurrent(s, dir, variant) &&
+      s.read.parquet(s"$path/partials")
+        .agg(max(col("batch"))).head().getLong(0) == 2L
     if (!ok) {
       partials(corpusDocs(s, dir)).withColumn("batch", lit(0L))
         .write.mode("overwrite").parquet(s"$path/partials")
@@ -291,7 +228,7 @@ object StatsStore {
       partials(deltaDocs(s, dir).where("doc_id % 10 = 9"))
         .withColumn("batch", lit(2L))
         .write.mode("append").parquet(s"$path/partials")
-      writeMeta(s, path, fingerprint(s, dir))
+      store.built(s, dir, variant)
     }
   }
 
@@ -344,29 +281,19 @@ object StatsStore {
     val path = root(dir, variant)
     histPartials(corpusDocs(s, dir))
       .write.mode("overwrite").parquet(s"$path/hist")
-    import s.implicits._
-    Seq(fingerprint(s, dir)).toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    store.built(s, dir, variant)
     path
   }
 
   def isHistCurrent(s: SparkSession, dir: String, variant: String = "qh"): Boolean =
-    try s.read.parquet(s"${root(dir, variant)}/meta").head().getString(0) ==
-      fingerprint(s, dir)
-    catch { case _: Exception => false }
+    store.isCurrent(s, dir, variant)
 
   def buildHistIfStale(s: SparkSession, dir: String, variant: String = "qh"): String =
-    if (isHistCurrent(s, dir, variant)) root(dir, variant)
-    else buildHist(s, dir, variant)
+    store.buildIfStale(s, dir, variant)(buildHist(s, dir, variant))
 
-  def absorbHist(s: SparkSession, dir: String, variant: String = "qh"): Unit = {
-    val path = root(dir, variant)
-    histPartials(deltaDocs(s, dir))
-      .write.mode("append").parquet(s"$path/hist")
-    import s.implicits._
-    Seq("absorbed").toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+  def absorbHist(s: SparkSession, dir: String, variant: String = "qh"): Unit =
+    store.absorb(s, dir, variant)(histPartials(deltaDocs(s, dir))
+      .write.mode("append").parquet(s"${root(dir, variant)}/hist"))
 
   /** Quantile estimates from the STORE ALONE: merge the bin layers
     * (groupBy + sum over a #bins-sized table), then per language take
@@ -427,37 +354,27 @@ object StatsStore {
     // memoized behind the source file-stat stamp like the other store
     // probes (r21) — the steady-state lap pays a metadata stat, not a
     // corpus scan; any events-table change busts the stamp
-    Tables.memoFingerprint(s, dir, "stats.lc") {
-      val r = corpusEvents(s, dir)
-        .selectExpr("cast(conv(substring(md5(concat_ws('|', event_type, " +
-          "cast(user_id AS string))), 1, 8), 16, 10) AS bigint) AS h")
-        .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-        .head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-    }
+    Tables.memoFingerprint(s, dir, "stats.lc")(
+      StoreMeta.fingerprintOf(corpusEvents(s, dir),
+        "concat_ws('|', event_type, cast(user_id AS string))"))
 
   def buildLc(s: SparkSession, dir: String): String = {
     val path = root(dir, "lc")
     lcPartials(corpusEvents(s, dir))
       .write.mode("overwrite").parquet(s"$path/lc")
-    writeMeta(s, path, lcFingerprint(s, dir))
+    lcStore.built(s, dir, "lc")
     path
   }
 
   def isLcCurrent(s: SparkSession, dir: String): Boolean =
-    try s.read.parquet(s"${root(dir, "lc")}/meta").head().getString(0) ==
-      lcFingerprint(s, dir)
-    catch { case _: Exception => false }
+    lcStore.isCurrent(s, dir, "lc")
 
   def buildLcIfStale(s: SparkSession, dir: String): String =
-    if (isLcCurrent(s, dir)) root(dir, "lc") else buildLc(s, dir)
+    lcStore.buildIfStale(s, dir, "lc")(buildLc(s, dir))
 
-  def absorbLc(s: SparkSession, dir: String): Unit = {
-    val path = root(dir, "lc")
-    writeMeta(s, path, "absorbed")
-    lcPartials(deltaEvents(s, dir))
-      .write.mode("append").parquet(s"$path/lc")
-  }
+  def absorbLc(s: SparkSession, dir: String): Unit =
+    lcStore.absorb(s, dir, "lc")(lcPartials(deltaEvents(s, dir))
+      .write.mode("append").parquet(s"${root(dir, "lc")}/lc"))
 
   /** Per-type occupancy from the STORE ALONE: union-distinct the layers
     * (a bounded ≤ #types × m table), count occupied buckets. Equals the

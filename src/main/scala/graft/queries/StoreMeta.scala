@@ -1,29 +1,65 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** The layered store meta — (kind, fp) rows under `<store>/meta` — in
-  * its ONE mechanical home. Four stores (ClusterStore, GraphStore,
-  * SearchStore, QualityModel's LM tier) each carried this read/write
-  * pair verbatim and had already started to diverge in whitespace;
-  * sharing the IO keeps the `meta written LAST` / `torn value first`
-  * brackets writing the same shape everywhere. The staleness LADDERS
-  * stay per-store on purpose: their kinds and torn-value sets differ
-  * (SearchStore adds `deleted`/`purging`), and flattening those into a
-  * generic policy object would trade four explicit ladders for one
-  * configurable one — harder to audit, same line count. */
-private[queries] object StoreMeta {
+/** The STORE KERNEL — the one owner of what every persisted store in
+  * `graft.queries` shares: the md5-keyed tmpdir root, the (kind, fp)
+  * meta record under `<root>/meta`, the content fingerprint, and the
+  * lifecycle verbs (invalidate, isCurrent/buildIfStale, the absorbs,
+  * the staged compact, the AvailableNow drain of a staged feed).
+  * A store keeps only its tables, partials, fold and read verbs, and
+  * passes its staleness ladder as a predicate over the meta rows.
+  *
+  * Meta kinds: `base` (the base slice's fingerprint, written LAST by a
+  * build), `batch1` (an absorbed layer: its fingerprint when verified,
+  * the opaque `absorbed` otherwise, `absorbing` while in flight),
+  * `compacted` (the fold stamp of an already-folded layer set) and
+  * SearchStore's `deleted`. A verb that dies mid-write leaves one of the
+  * [[torn]] values behind, which reads stale and makes compact refuse.
+  *
+  * Folding fourteen hand-rolled lifecycles into this kernel took 556
+  * code lines out of `src/main` net (15,799 → 15,243; comment lines
+  * 8,035 → 7,984), and the ladders stay explicit: [[pristine]] for the
+  * flat stores, [[layered]] for the layered ones, SearchStore's own. */
+private[graft] object StoreMeta {
+
+  /** `<tmpdir>/graft_<name>_<md5 fragment of dir>[_<variant>]` — the
+    * md5 fragment, not `hashCode`: a 32-bit collision between two data
+    * roots would alternate a store fingerprint-stale and rebuild it on
+    * every access. `variant` separates independent instances over the
+    * same corpus (an absorbing lifecycle must not flip the pristine
+    * store another query's contract needs). */
+  def root(name: String, dir: String, variant: String = ""): String = {
+    val v = if (variant.isEmpty) "" else s"_$variant"
+    s"${sys.props("java.io.tmpdir")}/graft_${name}_${Tables.dirHash(dir)}$v"
+  }
+
+  def delete(s: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
+  /** Content fingerprint: row count + order-independent sum of the md5
+    * prefixes of `key` (a SQL string expression). One cheap scan — any
+    * membership or content change of the slice moves it. */
+  def fingerprintOf(df: DataFrame, key: String): String = {
+    val r = df
+      .selectExpr(s"cast(conv(substring(md5($key), 1, 8), 16, 10) AS bigint) AS h")
+      .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
+      .head()
+    s"${r.getLong(0)}:${r.getLong(1)}"
+  }
 
   /** Swap a fully-staged table dir into its live location as a METADATA
     * move (delete + rename) instead of a second read-rewrite Spark job
-    * over the same bytes (r22, guide §6 — move bytes once). The staged
-    * dir was already written complete; renaming preserves its files
-    * (and any range-disjointness their writer arranged) exactly. Crash
-    * story is unchanged: callers flip the meta torn BEFORE the swap, so
-    * a failure between the delete and the rename reads as torn and the
-    * next lifecycle heals by rebuild. On object stores a dir rename
-    * degrades to a server-side copy — still strictly cheaper than
-    * re-reading and re-writing the bytes through Spark tasks. */
+    * over the same bytes. The staged dir was already written complete;
+    * renaming preserves its files (and any range-disjointness their
+    * writer arranged) exactly. The delete and the rename are two steps,
+    * NOT atomic (on object stores the rename is a server-side copy):
+    * [[Store.compact]] flips the meta torn BEFORE the swap, so a failure
+    * between them reads as torn and the next lifecycle heals by rebuild. */
   def swapIn(s: SparkSession, staging: String, live: String): Unit = {
     val src = new org.apache.hadoop.fs.Path(staging)
     val fs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -33,12 +69,18 @@ private[queries] object StoreMeta {
       throw new java.io.IOException(s"swap rename $src -> $dst failed")
   }
 
+  /** Built from Rows against a fixed schema: a tuple `toDF` derives its
+    * encoder by Scala reflection on every call, which a store lifecycle
+    * pays on each meta write. */
   def write(s: SparkSession, path: String,
       rows: Seq[(String, String)]): Unit = {
-    import s.implicits._
-    rows.toDF("kind", "fp").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(rows.map { case (k, v) => Row(k, v) }.asJava, metaSchema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
+
+  private val metaSchema = StructType(Seq(
+    StructField("kind", StringType), StructField("fp", StringType)))
 
   /** The two AnalysisException conditions that genuinely mean "meta was
     * never written": a nonexistent path, and a dir holding no readable
@@ -46,32 +88,27 @@ private[queries] object StoreMeta {
     * cannot infer a schema from _SUCCESS alone). Every OTHER condition
     * an AnalysisException can carry (access/permission surfaced through
     * the analyzer, schema-resolution failures, a null legacy condition)
-    * is a present-store problem and must rethrow — the r19 ADVICE
-    * narrowing: the broad catch silently demoted those to a full store
-    * rebuild. Factored on the condition STRING so the classifier is
-    * directly spec-able without constructing private exceptions. */
+    * is a present-store problem and must rethrow. Factored on the
+    * condition STRING so the classifier is directly spec-able. */
   private[queries] def benignMetaCondition(condition: String): Boolean =
     condition == "PATH_NOT_FOUND" || condition == "UNABLE_TO_INFER_SCHEMA"
 
-  /** MISSING or WRONG-SHAPED meta reads as EMPTY — the torn/stale
-    * default every caller's ladder rebuilds from. Two benign classes:
+  /** MISSING or WRONG-SHAPED meta reads as EMPTY — the stale default
+    * every ladder rebuilds from. Two benign classes:
     *   - missing/never-written: FileNotFound from the scan, or Spark's
     *     AnalysisException carrying one of the two never-written
     *     conditions ([[benignMetaCondition]]);
     *   - legacy/foreign LAYOUT: a readable parquet whose schema is not
-    *     two leading string columns — e.g. the pre-r18 single-column
-    *     flat stamp, whose documented contract (SearchStore's ladder)
-    *     is "fails the (kind, fp) read and self-heals as stale". The
-    *     shape is checked BEFORE collecting so the heal stays a schema
-    *     decision, never an exception-classification one.
+    *     two leading string columns — the pre-kernel `fp` and
+    *     `(fp, pristine)` stamps, which therefore rebuild once on first
+    *     use. The shape is checked BEFORE collecting so the heal stays a
+    *     schema decision, never an exception-classification one.
     * Any OTHER failure rethrows: a transient IO error (corrupt footer,
-    * permission failure) — or an AnalysisException outside the two
-    * benign conditions — swallowed as "empty" would silently trigger a
-    * full store rebuild instead of a retry; the opposite of the
-    * refuse-loudly policy the commit log enforces for exactly this
-    * class of failure. */
+    * permission failure) swallowed as "empty" would silently trigger a
+    * full store rebuild instead of a retry — the opposite of the
+    * refuse-loudly policy the commit log enforces for the same class of
+    * failure. This is the ONLY meta read in the package. */
   def rows(s: SparkSession, path: String): Map[String, String] = {
-    import org.apache.spark.sql.types.StringType
     val df =
       try s.read.parquet(s"$path/meta")
       catch {
@@ -83,5 +120,168 @@ private[queries] object StoreMeta {
       df.schema.take(2).forall(_.dataType == StringType)
     if (!shapeOk) return Map.empty // legacy/foreign layout ⇒ stale
     df.collect().map(r => (r.getString(0), r.getString(1))).toMap
+  }
+
+  /** Values a verb leaves behind when it dies mid-write. */
+  val torn: Set[String] = Set("absorbing", "compacting", "purging")
+
+  type Ladder = Map[String, String] => Boolean
+
+  /** The flat stores: current only while PRISTINE — the base row alone;
+    * any absorbed layer makes the next lifecycle rebuild. */
+  val pristine: Ladder = _.size == 1
+
+  /** The fingerprinted-batch stores: a verified absorbed layer keeps the
+    * store current; only a torn verb does not. */
+  val layered: Ladder = !_.values.exists(torn)
+
+  /** One persisted store family: the root `name`, the base-slice
+    * fingerprint `fp` (memoized by the caller) and the `ladder` that
+    * decides which meta states beyond a matching base count as current. */
+  final class Store(name: String, fp: (SparkSession, String) => String,
+      ladder: Ladder) {
+
+    def root(dir: String, variant: String = ""): String =
+      StoreMeta.root(name, dir, variant)
+
+    def rows(s: SparkSession, dir: String, variant: String = ""): Map[String, String] =
+      StoreMeta.rows(s, root(dir, variant))
+
+    def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean = {
+      val r = rows(s, dir, variant)
+      r.get("base").exists(_ == fp(s, dir)) && ladder(r)
+    }
+
+    def buildIfStale(s: SparkSession, dir: String, variant: String = "")(
+        build: => Any): String = {
+      if (!isCurrent(s, dir, variant)) build
+      root(dir, variant)
+    }
+
+    /** A build's LAST step: the base row alone, clearing every batch,
+      * stamp and tombstone row — a crashed build leaves no meta and
+      * rebuilds. */
+    def built(s: SparkSession, dir: String, variant: String = ""): Unit =
+      write(s, root(dir, variant), Seq("base" -> fp(s, dir)))
+
+    /** Delete the meta record so the next buildIfStale rebuilds — the
+      * store-owned invalidation verb ([[StoreTxn]] invalidates through it
+      * instead of carving paths from outside). */
+    def invalidate(s: SparkSession, dir: String, variant: String = ""): Unit =
+      delete(s, s"${root(dir, variant)}/meta")
+
+    /** Absorb a batch the store cannot fingerprint-verify. The meta
+      * becomes the one OPAQUE row `batch1 = absorbed` BEFORE `append`
+      * mutates anything: the store is past whatever base it was built
+      * from, every ladder reads it stale from then on, and a crash
+      * mid-append leaves that same stale state — which is also why a
+      * compact may fold it (its restored meta stays stale). */
+    def absorb(s: SparkSession, dir: String, variant: String = "")(
+        append: => Unit): Unit = {
+      write(s, root(dir, variant), Seq("batch1" -> "absorbed"))
+      append
+    }
+
+    /** Absorb a batch whose fingerprint is `batchFp` — IDEMPOTENT: an
+      * already-absorbed, unchanged batch over a current base is a no-op
+      * (the steady state), while a changed batch, a torn previous absorb
+      * or a stale base rebuilds first (append-only layers cannot retract
+      * a half-written one). The torn-first bracket: `batch1` flips to
+      * `absorbing` before the append and to `batchFp` after, so a crash
+      * between the two reads stale, never as silently current. */
+    def absorbOnce(s: SparkSession, dir: String, variant: String,
+        batchFp: String, rebuild: => Any)(append: => Unit): Unit = {
+      val path = root(dir, variant)
+      val r = StoreMeta.rows(s, path)
+      val base = fp(s, dir)
+      val current = r.get("base").contains(base) && ladder(r)
+      if (current && r.get("batch1").contains(batchFp)) return
+      if (!current || r.contains("batch1")) rebuild
+      write(s, path, Seq("base" -> base, "batch1" -> "absorbing"))
+      append
+      write(s, path, Seq("base" -> base, "batch1" -> batchFp))
+    }
+
+    /** The staged compact. `stage` writes each of `tables` complete
+      * under the staging dir it is given; then the meta flips to the
+      * torn `flip` value, each table swaps in ([[swapIn]]), the meta is
+      * restored and the staging dir dropped. REFUSES on torn or unbuilt
+      * meta: folding a half-written layer and restoring the torn rows
+      * verbatim would launder the tear into a current-looking store —
+      * the heal is absorb/buildIfStale. With `foldOnce` the restored
+      * meta carries a `compacted` stamp and an already-folded layer set
+      * is a no-op. */
+    def compact(s: SparkSession, dir: String, variant: String,
+        tables: Seq[String], flip: String = "compacting",
+        foldOnce: Boolean = false)(stage: String => Unit): Unit = {
+      val path = root(dir, variant)
+      val saved = StoreMeta.rows(s, path)
+      if (saved.isEmpty || saved.values.exists(torn))
+        throw new IllegalStateException(
+          s"store at $path is torn or unbuilt (meta = $saved) — run " +
+            "absorb/buildIfStale to heal before compacting")
+      val fold = s"${saved.getOrElse("base", "")}|${saved.getOrElse("batch1", "")}"
+      if (foldOnce && saved.get("compacted").contains(fold)) return
+      val staging = s"$path/staging_compact"
+      stage(staging)
+      write(s, path, Seq("base" -> flip))
+      tables.foreach(t => swapIn(s, s"$staging/$t", s"$path/$t"))
+      write(s, path,
+        if (foldOnce) (saved - "compacted").toSeq :+ ("compacted" -> fold)
+        else saved.toSeq)
+      delete(s, staging)
+    }
+  }
+
+  /** Stage the feed [[drain]] reads as deterministic micro-batch TICKS,
+    * once per corpus content ([[Tables.stagedOnce]]): one file per tick,
+    * with mtimes a minute apart so `maxFilesPerTrigger=1` replays them
+    * in tick order. */
+  def stageTicks(s: SparkSession, name: String, dir: String)(
+      ticks: (() => DataFrame)*): Unit = {
+    val feed = root(s"${name}_feed", dir)
+    Tables.stagedOnce(s, dir, feed, s"${name}_feed;ticks=${ticks.size}") { () =>
+      val feedPath = new org.apache.hadoop.fs.Path(feed)
+      val fs = feedPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val base = System.currentTimeMillis() - 3600000L
+      var seen = Set.empty[String]
+      ticks.zipWithIndex.foreach { case (tick, i) =>
+        tick().coalesce(1)
+          .write.mode(if (i == 0) "overwrite" else "append").parquet(feed)
+        val fresh = fs.listStatus(feedPath).filter(st =>
+          st.getPath.getName.startsWith("part-") && !seen(st.getPath.getName))
+        fresh.foreach(st => fs.setTimes(st.getPath, base + 60000L * i, -1))
+        seen ++= fresh.map(_.getPath.getName)
+      }
+    }
+  }
+
+  /** Drain the staged feed `<tmpdir>/graft_<name>_feed_<h>` to completion:
+    * one file per micro-batch (`maxFilesPerTrigger=1`), each handed to
+    * `batch` through foreachBatch under an AvailableNow trigger, from a
+    * fresh checkpoint. */
+  def drain(s: SparkSession, name: String, dir: String)(
+      batch: DataFrame => Unit): Unit = {
+    val feed = root(s"${name}_feed", dir)
+    val ckpt = root(s"${name}_ckpt", dir)
+    delete(s, ckpt)
+    drainStream(s.readStream.schema(s.read.parquet(feed).schema)
+      .option("maxFilesPerTrigger", "1").parquet(feed), ckpt)(batch)
+  }
+
+  /** [[drain]] over an explicit streaming source, resuming from whatever
+    * `ckpt` already holds. */
+  def drainStream(stream: DataFrame, ckpt: String)(
+      batch: DataFrame => Unit): Unit = {
+    // explicit function value — the inline lambda is ambiguous between
+    // the Scala and Java foreachBatch overloads on 2.13
+    val each: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      (b, _) => batch(b.toDF())
+    stream.writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch(each)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
   }
 }

@@ -87,7 +87,7 @@ object StoreMix {
 
   /** q134's own store instances — the q84/q107 contracts need the
     * PRISTINE default stores, and an absorb here must not force their
-    * next lap into a rebuild (see DedupIndex.root's variant note). */
+    * next lap into a rebuild (see StoreMeta.root's variant note). */
   private val variant = "mix"
 
   /** The full loop: (re)build pristine stores, judge + absorb the delta

@@ -65,15 +65,12 @@ object StoreTxn {
   @transient private lazy val logger =
     org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** The base stores' variant — see DedupIndex.root's note on variant
+  /** The base stores' variant — see StoreMeta.root's note on variant
     * isolation. The `tx` bases stay PRISTINE forever (all mutation is
     * transaction layers), so buildIfStale skips the rebuild every lap. */
   private val variant = "tx"
 
-  private[graft] def root(dir: String): String = {
-    val h = Tables.dirHash(dir)
-    s"${sys.props("java.io.tmpdir")}/graft_store_txn_$h"
-  }
+  private[graft] def root(dir: String): String = StoreMeta.root("store_txn", dir)
 
   /** Drop every transaction (layers + commit log). The lifecycle queries
     * reset first so each lap replays a deterministic history.
@@ -584,65 +581,50 @@ object StoreTxn {
     * freshly-built base — without this, a corpus regeneration would
     * rebuild the bases pristine while `layered` kept unioning the old
     * generation's layers into every read. */
-  def ensureBases(s: SparkSession, dir: String): Unit = {
-    val fresh = DedupIndex.isCurrent(s, dir, variant) &&
+  def ensureBases(s: SparkSession, dir: String): Unit =
+    ensureGeneration(s, dir, DedupIndex.isCurrent(s, dir, variant) &&
       StatsStore.isCurrent(s, dir, variant) &&
-      VocabStore.isCurrent(s, dir, variant)
-    if (!fresh) {
-      val p = new org.apache.hadoop.fs.Path(root(dir))
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(p, true)
-      fs.delete(foldedFlag(dir), true)
+      VocabStore.isCurrent(s, dir, variant)) {
       DedupIndex.build(s, dir, variant)
       StatsStore.build(s, dir, variant)
       VocabStore.build(s, dir, variant)
     }
-  }
 
   /** [[ensureBases]] for the INGEST pair (graph edges + embed buckets) —
     * a separate verb, not more stores in ensureBases, so the text-family
     * transactions (q147/q151/q155-158) don't pay two extra corpus-slice
-    * staleness probes per run for stores they never read. Same
-    * generation rule: a stale base drops the whole transaction root,
-    * because layers computed against the old corpus generation must not
-    * survive under a freshly-built base. */
-  def ensureIngestBases(s: SparkSession, dir: String): Unit = {
-    val fresh = GraphStore.isCurrent(s, dir, variant) &&
-      EmbedIndex.isCurrent(s, dir, variant)
-    if (!fresh) {
-      val p = new org.apache.hadoop.fs.Path(root(dir))
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(p, true)
-      fs.delete(foldedFlag(dir), true)
+    * staleness probes per run for stores they never read. */
+  def ensureIngestBases(s: SparkSession, dir: String): Unit =
+    ensureGeneration(s, dir, GraphStore.isCurrent(s, dir, variant) &&
+      EmbedIndex.isCurrent(s, dir, variant)) {
       GraphStore.build(s, dir, variant)
       EmbedIndex.build(s, dir, variant)
     }
-  }
 
-  /** [[ensureIngestBases]]' generation rule for the ANN tier — its own
-    * verb for the same reason the ingest pair got one: only the search
-    * transaction (q169) pays this staleness probe. */
-  def ensureAnnBase(s: SparkSession, dir: String): Unit = {
-    if (!AnnTxStore.isCurrent(s, dir)) {
-      val p = new org.apache.hadoop.fs.Path(root(dir))
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(p, true)
-      fs.delete(foldedFlag(dir), true)
-      AnnTxStore.build(s, dir)
-    }
-  }
+  /** The generation rule for the ANN tier — its own verb for the same
+    * reason the ingest pair got one: only the search transaction (q169)
+    * pays this staleness probe. */
+  def ensureAnnBase(s: SparkSession, dir: String): Unit =
+    ensureGeneration(s, dir, AnnTxStore.isCurrent(s, dir))(AnnTxStore.build(s, dir))
 
   /** The generation rule for the inverted-index base (q185) — its own
     * verb so only the search transaction pays the staleness probe. */
-  def ensureSearchBase(s: SparkSession, dir: String): Unit = {
-    if (!SearchStore.isCurrent(s, dir, variant)) {
-      val p = new org.apache.hadoop.fs.Path(root(dir))
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(p, true)
-      fs.delete(foldedFlag(dir), true)
-      SearchStore.build(s, dir, variant)
+  def ensureSearchBase(s: SparkSession, dir: String): Unit =
+    ensureGeneration(s, dir, SearchStore.isCurrent(s, dir, variant))(
+      SearchStore.build(s, dir, variant))
+
+  /** The generation rule every ensure verb shares: when a base is stale
+    * (first build, corpus regenerated, or reset-invalidated), the
+    * transaction root and the folded flag are dropped before `build`:
+    * layers and commits computed against the OLD corpus generation must
+    * not survive under a freshly-built base. */
+  private def ensureGeneration(s: SparkSession, dir: String,
+      fresh: Boolean)(build: => Unit): Unit =
+    if (!fresh) {
+      StoreMeta.delete(s, root(dir))
+      StoreMeta.delete(s, foldedFlag(dir).toString)
+      build
     }
-  }
 
   // ---- the reader surface (base ∪ committed layers) ----
 
@@ -1066,15 +1048,9 @@ object StoreTxn {
   // inside it, vacuum for unreferenced files). ----
 
   /** The generation rule for the table tier's clustered base. */
-  def ensureZoneBase(s: SparkSession, dir: String): Unit = {
-    if (!ZoneMapStore.isCurrent(s, dir, variant)) {
-      val p = new org.apache.hadoop.fs.Path(root(dir))
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(p, true)
-      fs.delete(foldedFlag(dir), true)
-      ZoneMapStore.build(s, dir, variant)
-    }
-  }
+  def ensureZoneBase(s: SparkSession, dir: String): Unit =
+    ensureGeneration(s, dir, ZoneMapStore.isCurrent(s, dir, variant))(
+      ZoneMapStore.build(s, dir, variant))
 
   /** The table's committed VIEW through transaction `maxTxn`: whether
     * the base participates and which layer ids do. A committed REPLACE
@@ -1318,48 +1294,22 @@ object StoreTxn {
     * rows and the commit row of each tick stand or fall together. Feed
     * staging + deterministic micro-batch order are the q151/q166 device
     * (two range files, mtime-ordered, maxFilesPerTrigger=1). */
+  /** The orders feed of the table tier's streams (q194, q205): two
+    * tranches, one tick each, staged once per corpus content. */
+  private def stageOrderTicks(s: SparkSession, dir: String, name: String): Unit = {
+    val orders = Tables.t(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+    StoreMeta.stageTicks(s, name, dir)(
+      () => orders.where("o_orderkey % 10 IN (7, 8)"),
+      () => orders.where("o_orderkey % 10 = 9"))
+  }
+
   private def streamTableAppend(s: SparkSession, dir: String): DataFrame = {
     reset(s, dir)
     ensureZoneBase(s, dir)
     vacuumTable(s, dir)
-    val h = Tables.dirHash(dir)
-    val feed = s"${sys.props("java.io.tmpdir")}/graft_table_feed_$h"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_table_ckpt_$h"
-    val fs = new org.apache.hadoop.fs.Path(feed)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    // deterministic per-corpus feed — staged once per corpus content
-    // (Tables.stagedOnce, the q40 staged-events device)
-    Tables.stagedOnce(s, dir, feed, "table_feed;ticks=2") { () =>
-      val orders = Tables.t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      orders.where("o_orderkey % 10 IN (7, 8)")
-        .coalesce(1).write.mode("overwrite").parquet(feed)
-      val base = System.currentTimeMillis() - 3600000L
-      val feedPath = new org.apache.hadoop.fs.Path(feed)
-      val aParts = fs.listStatus(feedPath)
-        .filter(_.getPath.getName.startsWith("part-"))
-      aParts.foreach(st => fs.setTimes(st.getPath, base, -1))
-      orders.where("o_orderkey % 10 = 9")
-        .coalesce(1).write.mode("append").parquet(feed)
-      val aNames = aParts.map(_.getPath.getName).toSet
-      fs.listStatus(feedPath)
-        .filter(st => st.getPath.getName.startsWith("part-") &&
-          !aNames(st.getPath.getName))
-        .foreach(st => fs.setTimes(st.getPath, base + 60000L, -1))
-    }
-    val stream = s.readStream.schema(s.read.parquet(feed).schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-    // explicit function value — the inline lambda is ambiguous between
-    // the Scala and Java foreachBatch overloads on 2.13 (q131's note)
-    val commitBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => { absorbTableAppend(s, dir, batch.toDF()); () }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(commitBatch)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    stageOrderTicks(s, dir, "table")
+    StoreMeta.drain(s, "table", dir)(absorbTableAppend(s, dir, _))
     tableRangeAggregateTx(s, dir)
   }
 
@@ -2123,52 +2073,14 @@ object StoreTxn {
     // pre-stream registration (Registration.ensureAllNative's note):
     // the in-batch dedup judge needs minhash_sig bound before .start()
     graft.functions.Registration.ensureAllNative(s)
-    val h = Tables.dirHash(dir)
-    val feed = s"${sys.props("java.io.tmpdir")}/graft_txn_feed_$h"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_txn_ckpt_$h"
-    val fs = new org.apache.hadoop.fs.Path(feed)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    // feed rows carry the PLANTED dedup text plus the raw stats columns.
-    // Deterministic per-corpus — staged once per corpus content
-    // (Tables.stagedOnce, the q40 staged-events device).
-    Tables.stagedOnce(s, dir, feed, "txn_feed;ticks=2") { () =>
-      val meta = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      def staged(batch: DataFrame): DataFrame = batch.join(meta, Seq("doc_id"))
-      staged(DedupIndex.batch1Docs(s, dir))
-        .coalesce(1).write.mode("overwrite").parquet(feed)
-      val base = System.currentTimeMillis() - 3600000L
-      val feedPath = new org.apache.hadoop.fs.Path(feed)
-      val aParts = fs.listStatus(feedPath)
-        .filter(_.getPath.getName.startsWith("part-"))
-      aParts.foreach(st => fs.setTimes(st.getPath, base, -1))
-      staged(DedupIndex.batch2Docs(s, dir))
-        .coalesce(1).write.mode("append").parquet(feed)
-      val aNames = aParts.map(_.getPath.getName).toSet
-      fs.listStatus(feedPath)
-        .filter(st => st.getPath.getName.startsWith("part-") &&
-          !aNames(st.getPath.getName))
-        .foreach(st => fs.setTimes(st.getPath, base + 60000L, -1))
-    }
-
-    val schema = s.read.parquet(feed).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-    // explicit function value — the inline lambda is ambiguous between
-    // the Scala and Java foreachBatch overloads on 2.13 (q131's note)
-    val commitBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        absorbBoth(s, dir, b.select(col("doc_id"), col("text")), b)
-        ()
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(commitBatch)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // feed rows carry the PLANTED dedup text plus the raw stats columns
+    val meta = Tables.t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+    StoreMeta.stageTicks(s, "txn", dir)(
+      () => DedupIndex.batch1Docs(s, dir).join(meta, Seq("doc_id")),
+      () => DedupIndex.batch2Docs(s, dir).join(meta, Seq("doc_id")))
+    StoreMeta.drain(s, "txn", dir)(b =>
+      absorbBoth(s, dir, b.select(col("doc_id"), col("text")), b))
 
     // the ingest dashboard: both stores, no live input
     ingestDashboard(s, dir)
@@ -2223,53 +2135,20 @@ object StoreTxn {
     // copied at stream start (Registration.ensureAllNative's note) —
     // the embed judge's cosine_similarity must be bound BEFORE .start()
     graft.functions.Registration.ensureAllNative(s)
-    val h = Tables.dirHash(dir)
-    val feed = s"${sys.props("java.io.tmpdir")}/graft_ingest_feed_$h"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_ingest_ckpt_$h"
-    val feedPath = new org.apache.hadoop.fs.Path(feed)
-    val fs = feedPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    // deterministic per-corpus feed — staged once per corpus content
-    // (Tables.stagedOnce, the q40 staged-events device)
-    Tables.stagedOnce(s, dir, feed, "ingest_feed;ticks=2") { () =>
-      EmbedIndex.batch1Vecs(s, dir).withColumn("epoch", lit(1))
-        .coalesce(1).write.mode("overwrite").parquet(feed)
-      val base = System.currentTimeMillis() - 3600000L
-      val aParts = fs.listStatus(feedPath)
-        .filter(_.getPath.getName.startsWith("part-"))
-      aParts.foreach(st => fs.setTimes(st.getPath, base, -1))
-      EmbedIndex.batch2Vecs(s, dir).withColumn("epoch", lit(2))
-        .coalesce(1).write.mode("append").parquet(feed)
-      val aNames = aParts.map(_.getPath.getName).toSet
-      fs.listStatus(feedPath)
-        .filter(st => st.getPath.getName.startsWith("part-") &&
-          !aNames(st.getPath.getName))
-        .foreach(st => fs.setTimes(st.getPath, base + 60000L, -1))
-    }
-
-    val schema = s.read.parquet(feed).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
+    StoreMeta.stageTicks(s, "ingest", dir)(
+      () => EmbedIndex.batch1Vecs(s, dir).withColumn("epoch", lit(1)),
+      () => EmbedIndex.batch2Vecs(s, dir).withColumn("epoch", lit(2)))
     val op = Tables.t(s, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-    val commitTick: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        // the tick tag — a batch-sized driver agg, same bounded class as
-        // the commit-log read (maxFilesPerTrigger=1 makes it single-valued)
-        val epoch = b.agg(max(col("epoch"))).head().getInt(0)
-        val tranche =
-          if (epoch == 1) op.where("o % 10 >= 7 AND o % 10 < 9")
-          else op.where("o % 10 = 9")
-        absorbIngest(s, dir, b.drop("epoch"), Graph.coPairsOf(tranche))
-        ()
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(commitTick)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StoreMeta.drain(s, "ingest", dir) { b =>
+      // the tick tag — a batch-sized driver agg, same bounded class as
+      // the commit-log read (maxFilesPerTrigger=1 makes it single-valued)
+      val epoch = b.agg(max(col("epoch"))).head().getInt(0)
+      val tranche =
+        if (epoch == 1) op.where("o % 10 >= 7 AND o % 10 < 9")
+        else op.where("o % 10 = 9")
+      absorbIngest(s, dir, b.drop("epoch"), Graph.coPairsOf(tranche))
+    }
     Graph.triangleCountsOf(Graph.backboneOf(mergedEdgesTx(s, dir)))
   }
 
@@ -2473,48 +2352,14 @@ object StoreTxn {
       ensureZoneBase(s, dir)
       vacuumTable(s, dir)
       mvEnsureBase(s, dir)
-      val h = Tables.dirHash(dir)
-      val feed = s"${sys.props("java.io.tmpdir")}/graft_mv_feed_$h"
-      val ckpt = s"${sys.props("java.io.tmpdir")}/graft_mv_ckpt_$h"
-      val fs = new org.apache.hadoop.fs.Path(feed)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-      // deterministic per-corpus feed — staged once per corpus content
-      // (Tables.stagedOnce, the q40 staged-events device)
-      Tables.stagedOnce(s, dir, feed, "mv_feed;ticks=2") { () =>
-        val orders = Tables.t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        orders.where("o_orderkey % 10 IN (7, 8)")
-          .coalesce(1).write.mode("overwrite").parquet(feed)
-        val base = System.currentTimeMillis() - 3600000L
-        val feedPath = new org.apache.hadoop.fs.Path(feed)
-        val aParts = fs.listStatus(feedPath)
-          .filter(_.getPath.getName.startsWith("part-"))
-        aParts.foreach(st => fs.setTimes(st.getPath, base, -1))
-        orders.where("o_orderkey % 10 = 9")
-          .coalesce(1).write.mode("append").parquet(feed)
-        val aNames = aParts.map(_.getPath.getName).toSet
-        fs.listStatus(feedPath)
-          .filter(st => st.getPath.getName.startsWith("part-") &&
-            !aNames(st.getPath.getName))
-          .foreach(st => fs.setTimes(st.getPath, base + 60000L, -1))
+      stageOrderTicks(s, dir, "mv")
+      StoreMeta.drain(s, "mv", dir) { b =>
+        val id = nextTxnId(s, dir)
+        val n = newNonce()
+        stageTableAppend(s, dir, b, id, n)
+        mvStage(s, dir, id, n)
+        commit(s, dir, id, n)
       }
-      val stream = s.readStream.schema(s.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-      val commitBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (batch, _) => {
-          val id = nextTxnId(s, dir)
-          val n = newNonce()
-          stageTableAppend(s, dir, batch.toDF(), id, n)
-          mvStage(s, dir, id, n)
-          commit(s, dir, id, n)
-        }
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(commitBatch)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
       matViewTx(s, dir)
     }),
     // OPTIMIZE: appends + upsert fragment the layout and leave a live

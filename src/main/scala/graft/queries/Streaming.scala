@@ -178,8 +178,7 @@ object Streaming {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private def stagedEventsDir(s: SparkSession, dir: String, eventType: String): String = {
-    val h = Tables.dirHash(dir)
-    val out = s"${sys.props("java.io.tmpdir")}/graft_staged_${eventType}_$h"
+    val out = StoreMeta.root(s"staged_$eventType", dir)
     // The staged feed is DETERMINISTIC per corpus (content + relative
     // mtime order; the file source replays oldest-first regardless of
     // absolute age) — re-staging every bench lap pays three write jobs
@@ -412,8 +411,7 @@ object Streaming {
     // growing directory in production (GraftBinStreamSpec pins the
     // incremental file-discovery path).
     "q119_stream_graftbin" -> ((s, dir) => {
-      val h = Tables.dirHash(dir)
-      val staged = s"${sys.props("java.io.tmpdir")}/graft_binstream_$h"
+      val staged = StoreMeta.root("binstream", dir)
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("lang"), col("text"), col("n_chars"))
         .write.format(graft.sources.GraftBin.format).mode("overwrite").save(staged)
@@ -434,9 +432,8 @@ object Streaming {
     // whole stream→binary-sink→scan chain must land on the parquet
     // source's numbers.
     "q120_stream_to_graftbin" -> ((s, dir) => {
-      val h = Tables.dirHash(dir)
-      val sink = s"${sys.props("java.io.tmpdir")}/graft_binsink_$h"
-      val ckpt = s"${sys.props("java.io.tmpdir")}/graft_binsink_ckpt_$h"
+      val sink = StoreMeta.root("binsink", dir)
+      val ckpt = StoreMeta.root("binsink_ckpt", dir)
       for (d <- Seq(sink, ckpt)) {
         def rm(x: java.io.File): Unit = {
           if (x.isDirectory) x.listFiles().foreach(rm)
@@ -487,10 +484,9 @@ object Streaming {
     // is a key-partitioned aggregate of batch-sized input against a
     // state table that grows with |users|, never with the stream.
     "q131_stream_upsert" -> ((s, dir) => {
-      val h = Tables.dirHash(dir)
-      val staged = s"${sys.props("java.io.tmpdir")}/graft_upsert_feed_$h"
-      val stateRoot = s"${sys.props("java.io.tmpdir")}/graft_upsert_state_$h"
-      val ckpt = s"${sys.props("java.io.tmpdir")}/graft_upsert_ckpt_$h"
+      val staged = StoreMeta.root("upsert_feed", dir)
+      val stateRoot = StoreMeta.root("upsert_state", dir)
+      val ckpt = StoreMeta.root("upsert_ckpt", dir)
       // 4 time-ranged feed files, mtime-ordered so the 4 micro-batches
       // replay roughly in time order (correctness does NOT depend on it —
       // that is the point of the associative merge; the spec shuffles
@@ -549,24 +545,15 @@ object Streaming {
     * over the union. */
   private[graft] def upsertRun(s: SparkSession, stream: DataFrame,
       stateRoot: String, ckpt: String): DataFrame = {
-    // explicit Scala function value: an inline lambda is ambiguous
-    // between the Scala and Java foreachBatch overloads on 2.13
-    val merge: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val reduced = latestPerUser(batch)
-        val cur = stateVersion(s, stateRoot)
-        val merged =
-          if (cur < 0) reduced
-          else reduced.unionByName(s.read.parquet(s"$stateRoot/v$cur"))
-            .groupBy(col("user_id")).agg(max(col("st")).as("st"))
-        merged.write.mode("overwrite").parquet(s"$stateRoot/v${cur + 1}")
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(merge)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StoreMeta.drainStream(stream, ckpt) { batch =>
+      val reduced = latestPerUser(batch)
+      val cur = stateVersion(s, stateRoot)
+      val merged =
+        if (cur < 0) reduced
+        else reduced.unionByName(s.read.parquet(s"$stateRoot/v$cur"))
+          .groupBy(col("user_id")).agg(max(col("st")).as("st"))
+      merged.write.mode("overwrite").parquet(s"$stateRoot/v${cur + 1}")
+    }
     s.read.parquet(s"$stateRoot/v${stateVersion(s, stateRoot)}")
       .select(col("user_id"), col("st.ts").as("last_ts"),
         col("st.event_id").as("last_event_id"),

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
 object Tables {
 
   /** The store family's path-keying hash: an 8-byte md5 fragment of the
-    * data dir (NOT `hashCode` — see DedupIndex.root's collision note).
+    * data dir (NOT `hashCode` — see StoreMeta.root's collision note).
     * One definition so the keying scheme has one place to change. */
   private[graft] def dirHash(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -129,8 +129,10 @@ object TextDiag {
     * shuffles on fp — at 100 TB the store side is corpus-scale, so the
     * shuffle is the honest cost; a deployment co-buckets the store by
     * fp so only the O(delta) probe side moves (q57's device). */
-  private def cdcRoot(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cdc_store_${Tables.dirHash(dir)}"
+  private val cdcStore = new StoreMeta.Store("cdc_store",
+    cdcStoreFingerprint, StoreMeta.pristine)
+
+  private def cdcRoot(dir: String): String = cdcStore.root(dir)
 
   private def cdcCorpus(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).where("doc_id % 10 < 7")
@@ -144,37 +146,23 @@ object TextDiag {
   private def cdcStoreFingerprint(s: SparkSession, dir: String): String =
     // memoized behind the source file-stat stamp like the other store
     // probes (r21) — steady-state laps pay a metadata stat, not a scan
-    Tables.memoFingerprint(s, dir, "cdc.base") {
-      val r = cdcCorpus(s, dir)
-        .selectExpr("cast(conv(substring(md5(text), 1, 8), 16, 10) AS bigint) AS h")
-        .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-        .head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-  }
+    Tables.memoFingerprint(s, dir, "cdc.base")(
+      StoreMeta.fingerprintOf(cdcCorpus(s, dir), "text"))
 
   def buildCdcStore(s: SparkSession, dir: String): Unit = {
-    val path = cdcRoot(dir)
-    cdcFps(cdcCorpus(s, dir)).write.mode("overwrite").parquet(s"$path/fps")
-    import s.implicits._
-    Seq(cdcStoreFingerprint(s, dir)).toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    cdcFps(cdcCorpus(s, dir)).write.mode("overwrite").parquet(s"${cdcRoot(dir)}/fps")
+    cdcStore.built(s, dir)
   }
 
   def isCdcStoreCurrent(s: SparkSession, dir: String): Boolean =
-    try s.read.parquet(s"${cdcRoot(dir)}/meta").head().getString(0) ==
-      cdcStoreFingerprint(s, dir)
-    catch { case _: Exception => false }
+    cdcStore.isCurrent(s, dir)
 
   def buildCdcStoreIfStale(s: SparkSession, dir: String): Unit =
-    if (!isCdcStoreCurrent(s, dir)) buildCdcStore(s, dir)
+    cdcStore.buildIfStale(s, dir)(buildCdcStore(s, dir))
 
-  def absorbCdcStore(s: SparkSession, dir: String, batch: DataFrame): Unit = {
-    import s.implicits._
-    Seq("absorbed").toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"${cdcRoot(dir)}/meta")
-    cdcFps(batch)
-      .write.mode("append").parquet(s"${cdcRoot(dir)}/fps")
-  }
+  def absorbCdcStore(s: SparkSession, dir: String, batch: DataFrame): Unit =
+    cdcStore.absorb(s, dir)(
+      cdcFps(batch).write.mode("append").parquet(s"${cdcRoot(dir)}/fps"))
 
   /** Judge a batch against the store's committed layers: per document,
     * total chunks vs chunks whose fingerprint is already stored — the

@@ -21,16 +21,15 @@ import org.apache.spark.sql.functions._
  */
 object VocabStore {
 
-  // md5-fragment path keying — see DedupIndex.root. `variant` separates
-  // independent store instances: q140's absorbing lifecycle flips its
-  // store non-pristine every lap, so q144 — which needs the FROZEN
-  // corpus-only vocabulary in its steady state — gets its own root
-  // (the same isolation rule as DedupIndex/StatsStore variants).
-  private def root(dir: String, variant: String = ""): String = {
-    val h = Tables.dirHash(dir)
-    val v = if (variant.isEmpty) "" else s"_$variant"
-    s"${sys.props("java.io.tmpdir")}/graft_vocab_store_$h$v"
-  }
+  // `variant` separates independent store instances: q140's absorbing
+  // lifecycle flips its store non-pristine every lap, so q144 — which
+  // needs the FROZEN corpus-only vocabulary in its steady state — gets
+  // its own root (the same isolation rule as DedupIndex/StatsStore).
+  private val store = new StoreMeta.Store("vocab_store", fingerprint,
+    StoreMeta.pristine)
+
+  private def root(dir: String, variant: String = ""): String =
+    store.root(dir, variant)
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents").where("doc_id % 10 < 7")
@@ -47,60 +46,37 @@ object VocabStore {
 
   /** Corpus-slice content fingerprint (same device as StatsStore). */
   private def fingerprint(s: SparkSession, dir: String): String =
-    Tables.memoFingerprint(s, dir, "vocab.base") {
-      val r = corpusDocs(s, dir)
-        .selectExpr("cast(conv(substring(md5(text), 1, 8), 16, 10) AS bigint) AS h")
-        .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-        .head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-    }
+    Tables.memoFingerprint(s, dir, "vocab.base")(
+      StoreMeta.fingerprintOf(corpusDocs(s, dir), "text"))
 
   def build(s: SparkSession, dir: String, variant: String = ""): String = {
     val path = root(dir, variant)
     partials(corpusDocs(s, dir))
       .write.mode("overwrite").parquet(s"$path/partials")
-    import s.implicits._
-    Seq(fingerprint(s, dir)).toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    store.built(s, dir, variant)
     path
   }
 
   def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean =
-    try s.read.parquet(s"${root(dir, variant)}/meta").head().getString(0) ==
-      fingerprint(s, dir)
-    catch { case _: Exception => false }
+    store.isCurrent(s, dir, variant)
 
   def buildIfStale(s: SparkSession, dir: String, variant: String = ""): String =
-    if (isCurrent(s, dir, variant)) root(dir, variant) else build(s, dir, variant)
+    store.buildIfStale(s, dir, variant)(build(s, dir, variant))
 
-  def absorb(s: SparkSession, dir: String): Unit = {
-    val path = root(dir)
-    partials(deltaDocs(s, dir))
-      .write.mode("append").parquet(s"$path/partials")
-    import s.implicits._
-    Seq("absorbed").toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+  def absorb(s: SparkSession, dir: String): Unit =
+    store.absorb(s, dir)(partials(deltaDocs(s, dir))
+      .write.mode("append").parquet(s"${root(dir)}/partials"))
 
   /** COMPACT the layered word counts back to one row per word — the
-    * merge IS the compaction (counts sum), [[StatsStore.compact]]'s
-    * discipline verbatim: staged rewrite, meta bracketed. */
+    * merge IS the compaction (counts sum), under the kernel's staged
+    * compact. */
   def compact(s: SparkSession, dir: String, variant: String = ""): Unit = {
     val path = root(dir, variant)
-    val staging = s"$path/staging_compact"
-    val meta = s.read.parquet(s"$path/meta").head().getString(0)
-    s.read.parquet(s"$path/partials")
-      .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
-      .coalesce(1).write.mode("overwrite").parquet(staging)
-    import s.implicits._
-    Seq("compacting").toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    StoreMeta.swapIn(s, staging, s"$path/partials")
-    Seq(meta).toDF("fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    store.compact(s, dir, variant, Seq("partials")) { staging =>
+      s.read.parquet(s"$path/partials")
+        .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/partials")
+    }
   }
 
   // root is private; the spec reaches the partials through this.
@@ -111,10 +87,7 @@ object VocabStore {
     * store owns its own layout; [[StoreTxn]] invalidates through this
     * instead of carving paths from outside. */
   private[queries] def invalidate(s: SparkSession, dir: String,
-      variant: String = ""): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${root(dir, variant)}/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+      variant: String = ""): Unit = store.invalidate(s, dir, variant)
 
   /** q83's coverage read from the STORE ALONE: merge the layered counts
     * (one |vocab|-bounded groupBy), then rank/coverage over the top-25 —

@@ -39,10 +39,11 @@ import org.apache.spark.sql.functions._
  */
 object ZoneMapStore {
 
-  private def root(dir: String, variant: String = ""): String = {
-    val v = if (variant.isEmpty) "" else s"_$variant"
-    s"${sys.props("java.io.tmpdir")}/graft_zonemap_store_${Tables.dirHash(dir)}$v"
-  }
+  private val store = new StoreMeta.Store("zonemap_store", fingerprint,
+    StoreMeta.pristine)
+
+  private def root(dir: String, variant: String = ""): String =
+    store.root(dir, variant)
 
   private def baseOrders(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "orders").where("o_orderkey % 10 < 7")
@@ -52,20 +53,10 @@ object ZoneMapStore {
   private def cols(df: DataFrame): DataFrame =
     df.select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
 
-  private def writeMeta(s: SparkSession, path: String, v: String): Unit = {
-    import s.implicits._
-    Seq(v).toDF("fp").coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
   /** Base-slice content fingerprint (the family's md5-sum device). */
   private def fingerprint(s: SparkSession, dir: String): String =
-    Tables.memoFingerprint(s, dir, "zonemap.base") {
-      val r = baseOrders(s, dir)
-        .selectExpr("cast(conv(substring(md5(cast(o_orderkey AS string)), 1, 8), 16, 10) AS bigint) AS h")
-        .agg(count(lit(1)).as("n"), sum(col("h")).as("hsum"))
-        .head()
-      s"${r.getLong(0)}:${r.getLong(1)}"
-    }
+    Tables.memoFingerprint(s, dir, "zonemap.base")(
+      StoreMeta.fingerprintOf(baseOrders(s, dir), "cast(o_orderkey AS string)"))
 
   /** Scheme-free path ("/tmp/...") so zone rows, Hadoop listings
     * (file:/...), and input_file_name URIs (file:///...) all compare. */
@@ -96,25 +87,22 @@ object ZoneMapStore {
     // overwrite semantics cover the delete vector too: a stale folded
     // delete set surviving a rebuild would hide rows the fresh layout
     // legitimately contains
-    val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    del.getFileSystem(s.sparkContext.hadoopConfiguration).delete(del, true)
-    writeMeta(s, path, fingerprint(s, dir))
+    StoreMeta.delete(s, s"$path/deletes")
+    store.built(s, dir, variant)
     path
   }
 
   def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean =
-    try s.read.parquet(s"${root(dir, variant)}/meta").head().getString(0) ==
-      fingerprint(s, dir)
-    catch { case _: Exception => false }
+    store.isCurrent(s, dir, variant)
 
   def buildIfStale(s: SparkSession, dir: String, variant: String = ""): String =
-    if (isCurrent(s, dir, variant)) root(dir, variant) else build(s, dir, variant)
+    store.buildIfStale(s, dir, variant)(build(s, dir, variant))
 
   /** Append the delta's files (their key ranges may overlap the base's —
     * per-file zones stay exact under overlap), then zone ONLY the new
     * files: the layout listing minus the zone table's file set, a
     * #files-sized driver diff, then one read over just those files. */
-  def absorb(s: SparkSession, dir: String): Unit = {
+  def absorb(s: SparkSession, dir: String): Unit = store.absorb(s, dir) {
     val path = root(dir)
     cols(deltaOrders(s, dir))
       .repartitionByRange(4, col("o_orderkey"))
@@ -129,14 +117,10 @@ object ZoneMapStore {
     if (fresh.nonEmpty)
       zonesOf(s.read.parquet(fresh.toIndexedSeq: _*))
         .coalesce(1).write.mode("append").parquet(s"$path/zones")
-    writeMeta(s, path, "absorbed")
   }
 
   private[graft] def invalidate(s: SparkSession, dir: String,
-      variant: String = ""): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${root(dir, variant)}/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+      variant: String = ""): Unit = store.invalidate(s, dir, variant)
 
   private[graft] def zonesPath(dir: String, variant: String = ""): String =
     s"${root(dir, variant)}/zones"
@@ -172,33 +156,30 @@ object ZoneMapStore {
     * pruning's false-positive set. The rewrite re-ranges the WHOLE
     * layout into disjoint files and re-derives the zones — after it, a
     * range predicate selects the minimal file set again (the spec pins
-    * both: fewer files picked, pairwise-disjoint zones). Staged-rewrite
-    * discipline: layout staged first, meta flipped, swap, zones
-    * recomputed from the FINAL files (zone rows must reference the
-    * file names readers will open), meta restored. O(|store|) by
-    * design — the periodic maintenance pass that buys back every
-    * interim absorb, Delta OPTIMIZE's cost model. */
+    * both: fewer files picked, pairwise-disjoint zones). It is the
+    * kernel's staged compact over TWO tables: the re-ranged layout and
+    * its zones are both staged, the zones derived from the staged files
+    * with their directory rewritten to the live layout's (the swap is a
+    * rename, so each file keeps its name), and both swap in under one
+    * torn meta. O(|store|) by design — the periodic maintenance pass
+    * that buys back every interim absorb, Delta OPTIMIZE's cost model. */
   def recluster(s: SparkSession, dir: String): Unit = {
     val path = root(dir)
-    val staging = s"$path/staging_recluster"
-    val meta = s.read.parquet(s"$path/meta").head().getString(0)
-    s.read.parquet(s"$path/layout")
-      .repartitionByRange(16, col("o_orderkey"))
-      .sortWithinPartitions(col("o_orderkey"))
-      .write.mode("overwrite").parquet(staging)
-    writeMeta(s, path, "reclustering")
-    // swap is a RENAME: the staged files (one disjoint range each, from
-    // the repartitionByRange write above) move as-is, so the
-    // disjointness the verb exists to restore is preserved exactly —
-    // the old rewrite-swap had to re-range because a task-packed rewrite
-    // could span two non-adjacent ranges in one output file
-    StoreMeta.swapIn(s, staging, s"$path/layout")
-    zonesOf(s.read.parquet(s"$path/layout"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/zones")
-    writeMeta(s, path, meta)
-    val fs = new org.apache.hadoop.fs.Path(staging)
+    val live = normPath(new org.apache.hadoop.fs.Path(s"$path/layout")
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+      .makeQualified(new org.apache.hadoop.fs.Path(s"$path/layout")).toUri.toString)
+    store.compact(s, dir, "", Seq("layout", "zones")) { staging =>
+      // one disjoint range per staged file, moved as-is by the swap — the
+      // disjointness the verb exists to restore is preserved exactly
+      s.read.parquet(s"$path/layout")
+        .repartitionByRange(16, col("o_orderkey"))
+        .sortWithinPartitions(col("o_orderkey"))
+        .write.mode("overwrite").parquet(s"$staging/layout")
+      zonesOf(s.read.parquet(s"$staging/layout"))
+        .withColumn("file", concat(lit(s"$live/"),
+          regexp_extract(col("file"), "[^/]+$", 0)))
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/zones")
+    }
   }
 
   /** The files whose zone intersects [lo, hi] — the manifest-pruning

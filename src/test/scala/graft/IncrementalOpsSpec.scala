@@ -135,8 +135,9 @@ class IncrementalOpsSpec extends AnyFunSuite {
     assert(parquetFiles("bands") <= 4 && parquetFiles("bands") <= filesBefore,
       s"bands not compacted: $filesBefore -> ${parquetFiles("bands")}")
     // meta restored: still non-pristine (absorbed), not 'compacting'
-    val meta = spark.read.parquet(s"${DedupIndex.root(sf, v)}/meta").head()
-    assert(!meta.getBoolean(1) && meta.getString(0) != "compacting")
+    val meta = graft.queries.StoreMeta.rows(spark, DedupIndex.root(sf, v))
+    assert(meta.get("batch1").contains("absorbed") &&
+      !meta.values.exists(_ == "compacting"))
   }
 
   test("StatsStore.compact: stored stats unchanged, partials collapse to #groups") {

@@ -10,7 +10,9 @@ import graft.SparkTestSession
  * the legitimate "rebuild me" state — while a PRESENT-but-unreadable
  * meta rethrows. Swallowing the latter as "empty" would silently turn a
  * transient IO failure into a full store rebuild (the r18 ADVICE
- * finding); the commit log's refuse-loudly policy applies here too.
+ * finding); the commit log's refuse-loudly policy applies here too —
+ * through the kernel's lifecycle verbs on the formerly flat stores as
+ * well, whose compact must also refuse a torn meta.
  */
 class StoreMetaSpec extends AnyFunSuite {
 
@@ -100,6 +102,67 @@ class StoreMetaSpec extends AnyFunSuite {
       spark.read.parquet(s"$root/meta")
     }
     assert(sidecar.getCondition === "UNABLE_TO_INFER_SCHEMA")
+  }
+
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Replace `root`'s meta with a parquet-named file that is not parquet. */
+  private def corruptMeta(root: String): Unit = {
+    StoreMeta.delete(spark, s"$root/meta")
+    val meta = new java.io.File(root, "meta")
+    assert(meta.mkdirs())
+    java.nio.file.Files.write(
+      new java.io.File(meta, "part-00000.snappy.parquet").toPath,
+      "this is not parquet".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  test("a corrupt meta in a flat store surfaces; a missing one reads stale") {
+    // StatsStore and DedupIndex once swallowed every meta-read failure
+    // into "stale", so an unreadable meta silently rebuilt the store
+    val v = "metaspec"
+    val flat = Seq[(String, () => Boolean, () => Any, () => Unit)](
+      (StatsStore.root(sf, v), () => StatsStore.isCurrent(spark, sf, v),
+        () => StatsStore.buildIfStale(spark, sf, v),
+        () => StatsStore.invalidate(spark, sf, v)),
+      (DedupIndex.root(sf, v), () => DedupIndex.isCurrent(spark, sf, v),
+        () => DedupIndex.buildIfStale(spark, sf, v),
+        () => DedupIndex.invalidate(spark, sf, v)))
+    for ((root, isCurrent, buildIfStale, invalidate) <- flat) {
+      buildIfStale()
+      assert(isCurrent(), s"$root: fresh build read stale")
+      corruptMeta(root)
+      intercept[Exception](isCurrent()) match {
+        case e: org.apache.spark.sql.AnalysisException =>
+          fail(s"$root: corrupt meta misread as schema-less: $e")
+        case _ => ()
+      }
+      intercept[Exception](buildIfStale())
+      assert(new java.io.File(root, "meta/part-00000.snappy.parquet").exists(),
+        s"$root: the refused probe rebuilt the store")
+      invalidate()
+      assert(!isCurrent(), s"$root: missing meta read as current")
+      buildIfStale()
+      assert(isCurrent(), s"$root: rebuild left the store stale")
+    }
+  }
+
+  test("compact on a flat store refuses torn meta and leaves it as it was") {
+    val v = "tornspec"
+    VocabStore.build(spark, sf, v)
+    val root = VocabStore.partialsPath(sf, v).stripSuffix("/partials")
+    val base = StoreMeta.rows(spark, root)("base")
+    for (torn <- Seq(Seq("base" -> "compacting"),
+        Seq("base" -> base, "batch1" -> "absorbing"))) {
+      StoreMeta.write(spark, root, torn)
+      intercept[IllegalStateException](VocabStore.compact(spark, sf, v))
+      assert(StoreMeta.rows(spark, root) === torn.toMap,
+        "the refused compact rewrote the torn meta")
+      assert(!VocabStore.isCurrent(spark, sf, v), s"torn meta $torn read current")
+    }
+    VocabStore.buildIfStale(spark, sf, v)
+    VocabStore.compact(spark, sf, v)
+    assert(StoreMeta.rows(spark, root) === Map("base" -> base),
+      "compact of a healed store did not restore its meta")
   }
 
   test("round-trips the (kind, fp) rows") {
