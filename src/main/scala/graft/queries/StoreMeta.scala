@@ -95,9 +95,13 @@ private[graft] object StoreMeta {
 
   /** MISSING or WRONG-SHAPED meta reads as EMPTY — the stale default
     * every ladder rebuilds from. Two benign classes:
-    *   - missing/never-written: FileNotFound from the scan, or Spark's
-    *     AnalysisException carrying one of the two never-written
-    *     conditions ([[benignMetaCondition]]);
+    *   - missing/never-written: an existence probe first (a missing
+    *     meta — every first build and every invalidated store — never
+    *     reaches the scan, whose directory probe would log a WARN with
+    *     a full FileNotFoundException trace); then, for a meta deleted
+    *     between the probe and the read, FileNotFound from the scan or
+    *     Spark's AnalysisException carrying one of the two
+    *     never-written conditions ([[benignMetaCondition]]);
     *   - legacy/foreign LAYOUT: a readable parquet whose schema is not
     *     two leading string columns — the pre-kernel `fp` and
     *     `(fp, pristine)` stamps, which therefore rebuild once on first
@@ -109,8 +113,11 @@ private[graft] object StoreMeta {
     * refuse-loudly policy the commit log enforces for the same class of
     * failure. This is the ONLY meta read in the package. */
   def rows(s: SparkSession, path: String): Map[String, String] = {
+    val meta = new org.apache.hadoop.fs.Path(s"$path/meta")
+    if (!meta.getFileSystem(s.sparkContext.hadoopConfiguration).exists(meta))
+      return Map.empty
     val df =
-      try s.read.parquet(s"$path/meta")
+      try s.read.parquet(meta.toString)
       catch {
         case _: java.io.FileNotFoundException => return Map.empty
         case e: org.apache.spark.sql.AnalysisException

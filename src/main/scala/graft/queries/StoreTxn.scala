@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -50,15 +50,18 @@ import org.apache.spark.sql.functions._
  *
  * The protocol is store-count-AGNOSTIC: a transaction stages one layer
  * set per participating store and the single commit row flips them all.
- * Five stores ride it today — dedup keepers, stats partials, and the
- * delta's vocabulary counts via [[absorbBoth]] (q155 reads q83's
- * coverage off the transactional state, q140's oracle verbatim), plus
- * the ingest pair — graph edge partials and embed bucket rows — via
- * [[absorbIngest]] (q162/q163). A transaction stages only the stores
- * its verb covers; readers union base ∪ the committed layers that
- * exist for their store (see [[layered]]'s crash-safety note). Adding
- * another store is a stage-writer plus a layered reader, nothing in
- * the commit path changes.
+ * A transaction stages only the stores its verb covers, and every
+ * reader resolves its store's committed layers through one resolver
+ * ([[layers]] — see its crash-safety note). The TIER TABLE ([[tiers]])
+ * is the one place a tier is declared: the text trio (dedup, stats,
+ * vocab — [[absorbBoth]]), the ingest pair (graph edges, embed buckets
+ * — [[absorbIngest]]), the ANN buckets, the search index and the
+ * transactional table with its materialized views. Each entry names
+ * the base paths whose existence makes the tier take part in a
+ * [[checkpoint]] and, per folded table, its staged name, fold frame,
+ * base target and publish shape; the checkpoint's stage and publish
+ * and [[reset]]'s invalidation all iterate it. Every write goes
+ * through one transaction verb ([[transact]]).
  */
 object StoreTxn {
 
@@ -99,16 +102,9 @@ object StoreTxn {
       new org.apache.hadoop.fs.Path(s"${root(dir)}/commits").toString + "/"
     nonceMemo.keySet.removeIf(_._1.startsWith(prefix))
     val folded = foldedFlag(dir)
-    if (fs.exists(folded)) {
+    if (exists(s, folded.toString)) {
       fs.delete(folded, true)
-      DedupIndex.invalidate(s, dir, variant)
-      StatsStore.invalidate(s, dir, variant)
-      VocabStore.invalidate(s, dir, variant)
-      GraphStore.invalidate(s, dir, variant)
-      EmbedIndex.invalidate(s, dir, variant)
-      AnnTxStore.invalidate(s, dir)
-      SearchStore.invalidate(s, dir, variant)
-      ZoneMapStore.invalidate(s, dir, variant)
+      tiers(s, dir).foreach(_.invalidate())
     }
   }
 
@@ -136,21 +132,6 @@ object StoreTxn {
   private[queries] def committedTxns(s: SparkSession, dir: String): Seq[Long] =
     committedTxnDirs(s, dir).map(_._1)
 
-  /** Committed ids paired with their RESOLVED layer dirs, ascending by
-    * id. The marker's CONTENT names the winning writer's staging nonce
-    * (layer dir `t<id>-<nonce>`); an empty marker is the pre-nonce
-    * legacy format and resolves to the un-nonced `t<id>`. One marker
-    * read per transaction per call — the metadata price of writer-unique
-    * staging (the Delta `_delta_log` shape: the log entry, not the path
-    * convention, says which files the transaction owns).
-    *
-    * REFUSE-LOUDLY on foreign layouts: a commits dir holding entries
-    * that are neither `c<id>` markers nor benign sidecars (`_`/`.`
-    * prefixed — _SUCCESS, checksum files) is some OTHER format's log
-    * (e.g. an old parquet-table commit log). Listing it as "zero
-    * committed transactions" would silently serve base-only state and
-    * re-allocate id 0 over a live layer — exactly the skew the loud
-    * IOException policy below exists to prevent — so it throws too. */
   /** Thread-local FROZEN commit-log override, keyed by store root.
     * [[checkpointStage]] resolves the log ONCE at entry and pins it
     * here for the duration of its staged reads, so every table folds
@@ -195,6 +176,21 @@ object StoreTxn {
   private[graft] def endStageGuard(dir: String): Unit =
     activeStage.remove(root(dir))
 
+  /** Committed ids paired with their RESOLVED layer dirs, ascending by
+    * id. The marker's CONTENT names the winning writer's staging nonce
+    * (layer dir `t<id>-<nonce>`); an empty marker is the pre-nonce
+    * legacy format and resolves to the un-nonced `t<id>`. One marker
+    * read per transaction per call — the metadata price of writer-unique
+    * staging (the Delta `_delta_log` shape: the log entry, not the path
+    * convention, says which files the transaction owns).
+    *
+    * REFUSE-LOUDLY on foreign layouts: a commits dir holding entries
+    * that are neither `c<id>` markers nor benign sidecars (`_`/`.`
+    * prefixed — _SUCCESS, checksum files) is some OTHER format's log
+    * (e.g. an old parquet-table commit log). Listing it as "zero
+    * committed transactions" would silently serve base-only state and
+    * re-allocate id 0 over a live layer — exactly the skew the loud
+    * IOException policy below exists to prevent — so it throws too. */
   private[graft] def committedTxnDirs(
       s: SparkSession, dir: String): Seq[(Long, String)] = {
     val frozen = frozenLog.get().get(root(dir))
@@ -218,7 +214,7 @@ object StoreTxn {
     // loud-IOException policy exists to prevent.
     val names =
       try {
-        if (!fs.exists(p)) Seq.empty[String]
+        if (!exists(s, p.toString)) Seq.empty[String]
         else fs.listStatus(p).toSeq.map(_.getPath.getName)
       } catch {
         case _: java.io.FileNotFoundException => Seq.empty[String]
@@ -246,13 +242,6 @@ object StoreTxn {
       }
   }
 
-  /** The staging nonce a commit marker's content names; "" for the
-    * legacy empty marker (resolves to the un-nonced `t<id>` dir). A
-    * zero-length read can also be the instruction-scale window between
-    * a winner's claim and its content write — the id then resolves to a
-    * dir that does not exist and every layer existence probe skips it,
-    * which is the correct "not yet visible" answer for a commit whose
-    * content is not yet durable. */
   /** Process-wide nonce memo. Marker content is WRITE-ONCE (the claim
     * is create-if-absent and only the winner writes content; checkpoint
     * DELETES markers, never rewrites one), so a cached read revalidated
@@ -270,6 +259,13 @@ object StoreTxn {
   private val nonceMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), String]()
 
+  /** The staging nonce a commit marker's content names; "" for the
+    * legacy empty marker (resolves to the un-nonced `t<id>` dir). A
+    * zero-length read can also be the instruction-scale window between
+    * a winner's claim and its content write — the id then resolves to a
+    * dir that does not exist and every layer existence probe skips it,
+    * which is the correct "not yet visible" answer for a commit whose
+    * content is not yet durable. */
   private def readNonce(fs: org.apache.hadoop.fs.FileSystem,
       m: org.apache.hadoop.fs.Path): String = {
     val st = fs.getFileStatus(m)
@@ -338,32 +334,47 @@ object StoreTxn {
   def nextTxnId(s: SparkSession, dir: String): Long =
     committedTxns(s, dir).lastOption.map(_ + 1).getOrElse(0L)
 
-  /** Base table ∪ the matching layer of every COMMITTED transaction
-    * THAT STAGED ONE. Uncommitted staging is structurally invisible: the
-    * candidate path list is built from the commit log, not from a
-    * directory listing. A committed transaction may not have touched
-    * every store (absorbBoth stages dedup+stats+vocab; absorbIngest
-    * stages graph+embed), so each store keeps only the layers that
-    * exist — a bounded O(#txns) existence probe that is crash-safe
-    * because staging completes strictly before the commit row lands:
-    * for a COMMITTED id, a store's layer dir exists iff that
-    * transaction staged that store. */
-  private def layered(s: SparkSession, dir: String, base: String,
-      layer: String => String): DataFrame = {
-    requireNoCheckpoint(s, dir)
-    s.read.parquet((base +: existingLayers(s, dir, layer)): _*)
+  /** The one Hadoop existence probe every path decision of this module
+    * goes through. */
+  private def exists(s: SparkSession, p: String): Boolean = {
+    val hp = new org.apache.hadoop.fs.Path(p)
+    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
   }
 
-  /** `layer` maps a committed transaction's RESOLVED dir (nonce'd or
-    * legacy — [[committedTxnDirs]]) to that store's layer path. */
-  private def existingLayers(s: SparkSession, dir: String,
-      layer: String => String): Seq[String] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    committedTxnDirs(s, dir).map { case (_, td) => layer(td) }.filter { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
+  /** THE LAYER RESOLVER: `(id, <txnDir>/<sub>)` for every COMMITTED
+    * transaction with id ≤ `maxTxn` THAT STAGED `sub`, ascending.
+    * Uncommitted staging is structurally invisible: the candidate list
+    * is built from the commit log, not from a directory listing. A
+    * committed transaction may not have touched every store
+    * (absorbBoth stages dedup+stats+vocab; absorbIngest stages
+    * graph+embed), so only the layers that exist are kept — a bounded
+    * O(#txns) existence probe that is crash-safe because staging
+    * completes strictly before the commit row lands: for a COMMITTED
+    * id, a store's layer dir exists iff that transaction staged that
+    * store.
+    *
+    * Refuses while a checkpoint publish is pending, and — for an as-of
+    * read (`maxTxn` below the top) — once a checkpoint has FOLDED
+    * layers into the base: history before the fold is no longer
+    * reconstructable from a log prefix, so the read refuses loudly
+    * rather than silently return the full folded state labeled as
+    * historical. */
+  private def layers(s: SparkSession, dir: String, sub: String,
+      maxTxn: Long = Long.MaxValue): Seq[(Long, String)] = {
+    requireNoCheckpoint(s, dir)
+    if (maxTxn < Long.MaxValue && exists(s, foldedFlag(dir).toString))
+      throw new IllegalStateException(
+        s"store-txn history at ${root(dir)} was folded by a checkpoint; " +
+          "as-of reads cannot reconstruct pre-checkpoint states — keep " +
+          "the log (skip checkpoints) where time travel is required")
+    committedTxnDirs(s, dir).filter(_._1 <= maxTxn)
+      .map { case (id, td) => id -> s"$td/$sub" }.filter(l => exists(s, l._2))
   }
+
+  /** Base table ∪ its committed layers, one scan. */
+  private def layered(s: SparkSession, dir: String, base: String,
+      sub: String, maxTxn: Long = Long.MaxValue): DataFrame =
+    s.read.parquet((base +: layers(s, dir, sub, maxTxn).map(_._2)): _*)
 
   private def marker(dir: String) =
     new org.apache.hadoop.fs.Path(s"${root(dir)}/ckpt_pending")
@@ -493,37 +504,38 @@ object StoreTxn {
     * on-disk state double-counts folded layers, so serving it silently
     * would be the corruption the protocol exists to prevent. The heal is
     * redo: re-run [[checkpoint]]. */
-  private def requireNoCheckpoint(s: SparkSession, dir: String): Unit = {
-    val m = marker(dir)
-    if (m.getFileSystem(s.sparkContext.hadoopConfiguration).exists(m))
+  private def requireNoCheckpoint(s: SparkSession, dir: String): Unit =
+    if (exists(s, marker(dir).toString))
       throw new IllegalStateException(
         s"store-txn checkpoint at ${root(dir)} is in flight or crashed " +
           "mid-publish; rerun StoreTxn.checkpoint to heal before reading")
-  }
+
+  // ---- the base tables the layers stack on ----
+
+  private def dedupBase(dir: String, t: String) = s"${DedupIndex.root(dir, variant)}/$t"
+  private def statsBase(dir: String) = s"${StatsStore.root(dir, variant)}/partials"
+  private def vocabBase(dir: String) = VocabStore.partialsPath(dir, variant)
+  private def graphBase(dir: String) = s"${GraphStore.root(dir, variant)}/edges"
+  private def embedBase(dir: String) = s"${EmbedIndex.root(dir, variant)}/buckets"
+  private def annBase(dir: String) = s"${AnnTxStore.root(dir)}/buckets"
+  private def mvBase(dir: String, suffix: String) =
+    s"${ZoneMapStore.zonesPath(dir, variant)}$suffix"
 
   private def dedupTable(s: SparkSession, dir: String, t: String): DataFrame =
-    layered(s, dir, s"${DedupIndex.root(dir, variant)}/$t",
-      td => s"$td/dedup/$t")
+    layered(s, dir, dedupBase(dir, t), s"dedup/$t")
 
-  private def statsPartials(s: SparkSession, dir: String): DataFrame =
-    layered(s, dir, s"${StatsStore.root(dir, variant)}/partials",
-      td => s"$td/stats/partials")
+  private def statsPartials(s: SparkSession, dir: String,
+      maxTxn: Long = Long.MaxValue): DataFrame =
+    layered(s, dir, statsBase(dir), "stats/partials", maxTxn)
 
   private def vocabPartials(s: SparkSession, dir: String): DataFrame =
-    layered(s, dir, VocabStore.partialsPath(dir, variant),
-      td => s"$td/vocab/partials")
-
-  private def graphEdgeLayers(s: SparkSession, dir: String): DataFrame =
-    layered(s, dir, s"${GraphStore.root(dir, variant)}/edges",
-      td => s"$td/graph/edges")
+    layered(s, dir, vocabBase(dir), "vocab/partials")
 
   private[graft] def embedBuckets(s: SparkSession, dir: String): DataFrame =
-    layered(s, dir, s"${EmbedIndex.root(dir, variant)}/buckets",
-      td => s"$td/embed/buckets")
+    layered(s, dir, embedBase(dir), "embed/buckets")
 
   private[graft] def annBucketsTx(s: SparkSession, dir: String): DataFrame =
-    layered(s, dir, s"${AnnTxStore.root(dir)}/buckets",
-      td => s"$td/ann/buckets")
+    layered(s, dir, annBase(dir), "ann/buckets")
 
   /** The search index's pruned postings over the transactional state.
     * NOT [[layered]]: the base is hive-partitioned on `tb=` while the
@@ -533,30 +545,15 @@ object StoreTxn {
     * predicate as a pushed filter, then the frames union. */
   private def allSearchPostingsTx(s: SparkSession, dir: String,
       maxTxn: Long = Long.MaxValue): DataFrame = {
-    requireNoCheckpoint(s, dir)
-    val cols = Seq("tb", "term", "doc_id", "tf", "dl", "positions")
-    val conf = s.sparkContext.hadoopConfiguration
-    val layers = committedTxnDirs(s, dir).filter(_._1 <= maxTxn)
-      .map { case (_, td) => s"$td/search/postings" }
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-    val frames =
-      s.read.parquet(SearchStore.postingsPath(dir, variant)) +:
-        layers.map(p => s.read.parquet(p))
-    frames.map(_.select(cols.map(col): _*)).reduce(_.unionByName(_))
+    val cols = Seq("tb", "term", "doc_id", "tf", "dl", "positions").map(col)
+    (SearchStore.postingsPath(dir, variant) +:
+      layers(s, dir, "search/postings", maxTxn).map(_._2))
+      .map(s.read.parquet(_).select(cols: _*)).reduce(_.unionByName(_))
   }
 
-  private def searchPostingsTx(s: SparkSession, dir: String,
-      terms: Seq[String]): DataFrame =
-    // the predicate pushes through the union to every leg (partition
-    // pruning on the hive-layout base, a pushed filter on the layers)
-    allSearchPostingsTx(s, dir).where(SearchStore.termFilter(s, terms))
-
-  private def searchStatsTx(s: SparkSession, dir: String): DataFrame =
-    layered(s, dir, SearchStore.statsPath(dir, variant),
-      td => s"$td/search/stats")
+  private def searchStatsTx(s: SparkSession, dir: String,
+      maxTxn: Long = Long.MaxValue): DataFrame =
+    layered(s, dir, SearchStore.statsPath(dir, variant), "search/stats", maxTxn)
 
   /** The tick-i BATCH ingest absorb — the non-streaming equivalent of
     * one q166 micro-batch (tick 1 = embed batch 1 + the o%10 ∈ {7,8}
@@ -642,7 +639,7 @@ object StoreTxn {
     * base edges ∪ committed graph layers, one additive groupBy (the
     * GraphStore.mergedEdges read against layered paths). */
   def mergedEdgesTx(s: SparkSession, dir: String): DataFrame =
-    graphEdgeLayers(s, dir)
+    layered(s, dir, graphBase(dir), "graph/edges")
       .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
 
   /** q141's embedding-dedup judge against the transactional state —
@@ -681,24 +678,12 @@ object StoreTxn {
     * the committed id list: no snapshots, no tags, and (unlike q148's
     * per-store epoch tagging) the as-of point is CROSS-STORE consistent
     * by construction — "the world as of transaction k" means the same k
-    * for every store the transaction touched. */
-  def storedStatsTxAsOf(s: SparkSession, dir: String, maxTxn: Long): DataFrame = {
-    requireNoCheckpoint(s, dir)
-    // a checkpoint FOLDS committed layers into the base — history before
-    // the fold is no longer reconstructable from a log prefix, so an
-    // as-of read against a folded generation must refuse loudly rather
-    // than silently return the full folded state labeled as historical
-    val folded = foldedFlag(dir)
-    if (folded.getFileSystem(s.sparkContext.hadoopConfiguration).exists(folded))
-      throw new IllegalStateException(
-        s"store-txn history at ${root(dir)} was folded by a checkpoint; " +
-          "as-of reads cannot reconstruct pre-checkpoint states — keep " +
-          "the log (skip checkpoints) where time travel is required")
-    val paths = s"${StatsStore.root(dir, variant)}/partials" +:
-      committedTxnDirs(s, dir).filter(_._1 <= maxTxn)
-        .map { case (_, td) => s"$td/stats/partials" }
-    StatsStore.finalize(s.read.parquet(paths: _*))
-  }
+    * for every store the transaction touched. A transaction that staged
+    * no stats layer (an ingest or search one) is skipped, and a
+    * checkpoint-folded history refuses — both the resolver's rules
+    * ([[layers]]). */
+  def storedStatsTxAsOf(s: SparkSession, dir: String, maxTxn: Long): DataFrame =
+    StatsStore.finalize(statsPartials(s, dir, maxTxn))
 
   /** q84's judge against the transactional state — base ∪ committed
     * layers, so a batch is judged against everything previous
@@ -754,8 +739,9 @@ object StoreTxn {
     * ways: crash BEFORE the marker → redo re-stages and re-commits the
     * same id; crash AFTER → nextTxnId already sees the commit and moves
     * on, and the retry's refusal here is the correct signal that the
-    * transaction is already durable. */
-  /** The SAME-ID race is closed end-to-end (the r16/r17 residual): the
+    * transaction is already durable.
+    *
+    * The SAME-ID race is closed end-to-end (the r16/r17 residual): the
     * marker arbitrates the commit AND its content names the winner's
     * staging nonce, so a loser still mid-stage when the winner's marker
     * lands is writing into its OWN `t<id>-<nonce>/` — it cannot touch
@@ -781,8 +767,7 @@ object StoreTxn {
     // after the checkpoint completes (ids allocated before the fold
     // stay valid: the retained high-water marker keeps allocation
     // monotone).
-    val pend = marker(dir)
-    if (pend.getFileSystem(s.sparkContext.hadoopConfiguration).exists(pend))
+    if (exists(s, marker(dir).toString))
       throw new IllegalStateException(
         s"store-txn checkpoint at ${root(dir)} is publishing " +
           "(ckpt_pending is up) — commit refused; retry after " +
@@ -897,16 +882,22 @@ object StoreTxn {
     }
   }
 
-  /** The atomic absorb: stage both stores' increments under a fresh
-    * writer-unique nonce, then commit that nonce. */
-  def absorbBoth(s: SparkSession, dir: String, dedupDelta: DataFrame,
-      statsDelta: DataFrame): Long = {
+  /** THE TRANSACTION VERB every absorb shares: allocate the next id,
+    * stage its layers under a fresh writer-unique nonce (`body(id,
+    * nonce)`), then commit that nonce. Returns the committed id. */
+  private def transact(s: SparkSession, dir: String)(
+      body: (Long, String) => Unit): Long = {
     val id = nextTxnId(s, dir)
     val nonce = newNonce()
-    stage(s, dir, dedupDelta, statsDelta, id, nonce)
+    body(id, nonce)
     commit(s, dir, id, nonce)
     id
   }
+
+  /** The atomic absorb: stage both stores' increments under one commit. */
+  def absorbBoth(s: SparkSession, dir: String, dedupDelta: DataFrame,
+      statsDelta: DataFrame): Long =
+    transact(s, dir)(stage(s, dir, dedupDelta, statsDelta, _, _))
 
   /** Stage transaction `id` for the INGEST pair — the two stores whose
     * absorbs previously committed independently (the r15 residual: a
@@ -970,16 +961,11 @@ object StoreTxn {
     * overload): one tick's embed rows and ITS OWN graph pair partials
     * land under one commit row. */
   def absorbIngest(s: SparkSession, dir: String, embedDelta: DataFrame,
-      graphPairs: DataFrame, withAnn: Boolean = false): Long = {
-    val id = nextTxnId(s, dir)
-    val nonce = newNonce()
-    stageIngest(s, dir, embedDelta, graphPairs, id, withAnn, nonce)
-    commit(s, dir, id, nonce)
-    id
-  }
+      graphPairs: DataFrame, withAnn: Boolean = false): Long =
+    transact(s, dir)(stageIngest(s, dir, embedDelta, graphPairs, _, withAnn, _))
 
   /** Stage a document tranche's search-index increment: its postings
-    * (tb kept as an ordinary column — see [[searchPostingsTx]]) and its
+    * (tb kept as an ordinary column — see [[allSearchPostingsTx]]) and its
     * one additive stat row, both invisible until [[commit]]. Overwrite
     * mode: a crashed-stage retry replaces the partial layer. */
   def stageSearch(s: SparkSession, dir: String, batch: DataFrame,
@@ -997,46 +983,24 @@ object StoreTxn {
     * land under one commit row. Doc-disjoint tranches union to the
     * one-shot index exactly, so the committed read serves q99's
     * full-table oracle verbatim. */
-  def absorbSearch(s: SparkSession, dir: String, batch: DataFrame): Long = {
-    val id = nextTxnId(s, dir)
-    val nonce = newNonce()
-    stageSearch(s, dir, batch, id, nonce)
-    commit(s, dir, id, nonce)
-    id
-  }
+  def absorbSearch(s: SparkSession, dir: String, batch: DataFrame): Long =
+    transact(s, dir)(stageSearch(s, dir, batch, _, _))
 
   /** q99's BM25 off the TRANSACTIONAL index — base ∪ committed layers
     * through [[SearchStore.bm25Of]]. */
-  def bm25Tx(s: SparkSession, dir: String): DataFrame =
-    SearchStore.bm25Of(searchPostingsTx(s, dir, SearchStore.bm25Terms),
-      searchStatsTx(s, dir))
+  def bm25Tx(s: SparkSession, dir: String): DataFrame = bm25TxAsOf(s, dir, Long.MaxValue)
 
   /** SEARCH-TIER TIME TRAVEL (q197): BM25 as of transaction `maxTxn` —
     * the index snapshot is a log-prefix filter over postings AND stats
     * layers together, so the ranker's N/Σdl normalizer and its postings
     * always describe the same historical corpus (the skew a per-store
     * as-of would reintroduce). Inherits the folded-generation refusal. */
-  def bm25TxAsOf(s: SparkSession, dir: String, maxTxn: Long): DataFrame = {
-    requireNoCheckpoint(s, dir)
-    val folded = foldedFlag(dir)
-    if (folded.getFileSystem(s.sparkContext.hadoopConfiguration).exists(folded))
-      throw new IllegalStateException(
-        s"store-txn history at ${root(dir)} was folded by a checkpoint; " +
-          "as-of reads cannot reconstruct pre-checkpoint states — keep " +
-          "the log (skip checkpoints) where time travel is required")
-    val conf = s.sparkContext.hadoopConfiguration
-    val statPaths = SearchStore.statsPath(dir, variant) +:
-      committedTxnDirs(s, dir).filter(_._1 <= maxTxn)
-        .map { case (_, td) => s"$td/search/stats" }
-        .filter { p =>
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(conf).exists(hp)
-        }
-    SearchStore.bm25Of(
-      allSearchPostingsTx(s, dir, maxTxn)
-        .where(SearchStore.termFilter(s, SearchStore.bm25Terms)),
-      s.read.parquet(statPaths: _*))
-  }
+  def bm25TxAsOf(s: SparkSession, dir: String, maxTxn: Long): DataFrame =
+    // the predicate pushes through the union to every leg (partition
+    // pruning on the hive-layout base, a pushed filter on the layers)
+    SearchStore.bm25Of(allSearchPostingsTx(s, dir, maxTxn)
+      .where(SearchStore.termFilter(s, SearchStore.bm25Terms)),
+      searchStatsTx(s, dir, maxTxn))
 
   // ---- transactional parquet table (q191): ACID appends over plain
   // files. The zone table IS the manifest: appended data files land in
@@ -1052,24 +1016,18 @@ object StoreTxn {
     ensureGeneration(s, dir, ZoneMapStore.isCurrent(s, dir, variant))(
       ZoneMapStore.build(s, dir, variant))
 
-  /** The table's committed VIEW through transaction `maxTxn`: whether
-    * the base participates and which layer ids do. A committed REPLACE
-    * transaction (q198 — INSERT OVERWRITE) is a boundary: the view is
-    * the replace's own layers onward, base and earlier layers excluded
-    * — truncate-and-load as one commit row, old files left on disk for
-    * time travel until [[vacuumTable]] reclaims them. */
-  private def isReplaceDir(s: SparkSession, td: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(s"$td/table/replace")
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  private def tableView(s: SparkSession, dir: String,
+  /** The table's committed VIEW of layer `sub` through transaction
+    * `maxTxn`: whether the base participates, and the layers that do. A
+    * committed REPLACE transaction (q198 — INSERT OVERWRITE) is a
+    * boundary: the view is the replace's own layers onward, base and
+    * earlier layers excluded — truncate-and-load as one commit row, old
+    * files left on disk for time travel until [[vacuumTable]] reclaims
+    * them. */
+  private def tableLayers(s: SparkSession, dir: String, sub: String,
       maxTxn: Long = Long.MaxValue): (Boolean, Seq[(Long, String)]) = {
-    val ids = committedTxnDirs(s, dir).filter(_._1 <= maxTxn)
-    ids.filter(t => isReplaceDir(s, t._2)).lastOption match {
-      case Some((r, _)) => (false, ids.filter(_._1 >= r))
-      case None => (true, ids)
-    }
+    val boundary = layers(s, dir, "table/replace", maxTxn).lastOption.map(_._1)
+    (boundary.isEmpty,
+      layers(s, dir, sub, maxTxn).filter(l => boundary.forall(l._1 >= _)))
   }
 
   /** Base manifest ∪ committed zone layers — the transactional file
@@ -1079,19 +1037,10 @@ object StoreTxn {
     * four columns. */
   private def zoneManifestTx(s: SparkSession, dir: String,
       maxTxn: Long = Long.MaxValue): DataFrame = {
-    requireNoCheckpoint(s, dir)
-    val conf = s.sparkContext.hadoopConfiguration
-    val (withBase, ids) = tableView(s, dir, maxTxn)
+    val (withBase, zones) = tableLayers(s, dir, "table/zones", maxTxn)
     val cols = Seq("file", "min_key", "max_key", "n_rows").map(col)
-    val layerPaths = ids.map { case (_, td) => s"$td/table/zones" }
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-    val paths =
-      (if (withBase) Seq(ZoneMapStore.zonesPath(dir, variant)) else Seq.empty) ++
-        layerPaths
-    paths.map(p => s.read.parquet(p).select(cols: _*)).reduce(_.unionByName(_))
+    (Seq(ZoneMapStore.zonesPath(dir, variant)).filter(_ => withBase) ++ zones.map(_._2))
+      .map(s.read.parquet(_).select(cols: _*)).reduce(_.unionByName(_))
   }
 
   /** Stage one tranche: its data files append to the layout (invisible —
@@ -1107,7 +1056,7 @@ object StoreTxn {
     val hp = new org.apache.hadoop.fs.Path(layout)
     val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
     val known =
-      if (fs.exists(hp))
+      if (exists(s, layout))
         fs.listStatus(hp).map(_.getPath.toString)
           .filter(_.endsWith(".parquet")).map(ZoneMapStore.normPath).toSet
       else Set.empty[String]
@@ -1120,13 +1069,8 @@ object StoreTxn {
   /** The atomic table append: data files + manifest rows behind one
     * commit row. */
   def absorbTableAppend(s: SparkSession, dir: String,
-      tranche: DataFrame): Long = {
-    val id = nextTxnId(s, dir)
-    val nonce = newNonce()
-    stageTableAppend(s, dir, tranche, id, nonce)
-    commit(s, dir, id, nonce)
-    id
-  }
+      tranche: DataFrame): Long =
+    transact(s, dir)(stageTableAppend(s, dir, tranche, _, _))
 
   /** The committed DELETE VECTOR with SEQUENCE NUMBERS: every delete row
     * carries the txn that issued it (`dtxn` — written at stage time, so
@@ -1138,16 +1082,9 @@ object StoreTxn {
     * delete has ever committed — the common case pays nothing. */
   private def tableDeletesTx(s: SparkSession, dir: String,
       maxTxn: Long = Long.MaxValue): Option[DataFrame] = {
-    requireNoCheckpoint(s, dir)
-    val conf = s.sparkContext.hadoopConfiguration
-    val (withBase, ids) = tableView(s, dir, maxTxn)
-    val paths =
-      ((if (withBase) Seq(ZoneMapStore.deletesPath(dir, variant)) else Seq.empty) ++
-        ids.map { case (_, td) => s"$td/table/deletes" })
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
+    val (withBase, dels) = tableLayers(s, dir, "table/deletes", maxTxn)
+    val paths = Seq(ZoneMapStore.deletesPath(dir, variant))
+      .filter(p => withBase && exists(s, p)) ++ dels.map(_._2)
     if (paths.isEmpty) None else Some(s.read.parquet(paths: _*))
   }
 
@@ -1157,22 +1094,16 @@ object StoreTxn {
     * each layer separately so mixed schemas never meet one scan. */
   private def fileTxnMap(s: SparkSession, dir: String,
       maxTxn: Long = Long.MaxValue): DataFrame = {
-    val (withBase, ids) = tableView(s, dir, maxTxn)
+    val (withBase, zones) = tableLayers(s, dir, "table/zones", maxTxn)
     val baseTagged = if (withBase) {
       val base = s.read.parquet(ZoneMapStore.zonesPath(dir, variant))
       if (base.columns.contains("ftxn"))
         Seq(base.select(col("file"), col("ftxn")))
       else Seq(base.select(col("file"), lit(-1L).as("ftxn")))
     } else Seq.empty
-    val conf = s.sparkContext.hadoopConfiguration
-    val layers = ids.flatMap { case (id, td) =>
-      val p = s"$td/table/zones"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (hp.getFileSystem(conf).exists(hp))
-        Some(s.read.parquet(p).select(col("file"), lit(id).as("ftxn")))
-      else None
-    }
-    (baseTagged ++ layers).reduce(_.unionByName(_))
+    (baseTagged ++ zones.map { case (id, p) =>
+      s.read.parquet(p).select(col("file"), lit(id).as("ftxn")) })
+      .reduce(_.unionByName(_))
   }
 
   /** Stage a MERGE-ON-READ delete (q193): the victims' keys land as a
@@ -1189,13 +1120,8 @@ object StoreTxn {
       .parquet(s"${stagingDir(dir, id, nonce)}/table/deletes")
 
   /** The atomic table delete: one commit row flips the delete vector. */
-  def absorbTableDelete(s: SparkSession, dir: String, pred: String): Long = {
-    val id = nextTxnId(s, dir)
-    val nonce = newNonce()
-    stageTableDelete(s, dir, pred, id, nonce)
-    commit(s, dir, id, nonce)
-    id
-  }
+  def absorbTableDelete(s: SparkSession, dir: String, pred: String): Long =
+    transact(s, dir)(stageTableDelete(s, dir, pred, _, _))
 
   /** UPSERT (q195) — MERGE INTO as one transaction: a delete vector for
     * the incoming keys plus the replacing rows' files, both at the same
@@ -1212,13 +1138,8 @@ object StoreTxn {
       () => stageTableAppend(s, dir, tranche, id, nonce))
 
   def absorbTableUpsert(s: SparkSession, dir: String, pred: String,
-      tranche: DataFrame): Long = {
-    val id = nextTxnId(s, dir)
-    val nonce = newNonce()
-    stageTableUpsert(s, dir, pred, tranche, id, nonce)
-    commit(s, dir, id, nonce)
-    id
-  }
+      tranche: DataFrame): Long =
+    transact(s, dir)(stageTableUpsert(s, dir, pred, tranche, _, _))
 
   /** The sequence-number scrub: keep a row iff no committed delete with
     * a higher sequence number than its file's names its key. Two
@@ -1263,37 +1184,22 @@ object StoreTxn {
   /** q183's range aggregate over the transactional manifest, with the
     * committed delete vector resolved out between scan and rollup. */
   def tableRangeAggregateTx(s: SparkSession, dir: String): DataFrame =
-    ZoneMapStore.rangeAggregateOf(s,
-      ZoneMapStore.prunedFilesOf(zoneManifestTx(s, dir)),
-      deleteScrub(s, dir))
+    tableRangeAggregateTxAsOf(s, dir, Long.MaxValue)
 
   /** TIME TRAVEL on the transactional table (q192): the manifest as of
     * transaction `maxTxn` — base zones ∪ committed zone layers with id
     * ≤ maxTxn — IS the table snapshot, because data files are immutable
     * once written: no data is copied, no file is rewritten, history is
     * a filter on the commit log exactly like [[storedStatsTxAsOf]]
-    * (whose folded-generation refusal this inherits: after a checkpoint
-    * the log prefix no longer reconstructs the snapshot). */
+    * (whose folded-generation refusal this inherits from [[layers]]:
+    * after a checkpoint the log prefix no longer reconstructs the
+    * snapshot). */
   def tableRangeAggregateTxAsOf(s: SparkSession, dir: String,
-      maxTxn: Long): DataFrame = {
-    requireNoCheckpoint(s, dir)
-    val folded = foldedFlag(dir)
-    if (folded.getFileSystem(s.sparkContext.hadoopConfiguration).exists(folded))
-      throw new IllegalStateException(
-        s"store-txn history at ${root(dir)} was folded by a checkpoint; " +
-          "as-of reads cannot reconstruct pre-checkpoint states — keep " +
-          "the log (skip checkpoints) where time travel is required")
+      maxTxn: Long): DataFrame =
     ZoneMapStore.rangeAggregateOf(s,
       ZoneMapStore.prunedFilesOf(zoneManifestTx(s, dir, maxTxn)),
       deleteScrub(s, dir, maxTxn))
-  }
 
-  /** STREAMING table appends (q194): each micro-batch lands as its own
-    * ACID commit — the continuously-ingesting deployment where a crash
-    * between ticks can never expose a torn tranche, because the manifest
-    * rows and the commit row of each tick stand or fall together. Feed
-    * staging + deterministic micro-batch order are the q151/q166 device
-    * (two range files, mtime-ordered, maxFilesPerTrigger=1). */
   /** The orders feed of the table tier's streams (q194, q205): two
     * tranches, one tick each, staged once per corpus content. */
   private def stageOrderTicks(s: SparkSession, dir: String, name: String): Unit = {
@@ -1304,13 +1210,35 @@ object StoreTxn {
       () => orders.where("o_orderkey % 10 = 9"))
   }
 
+  /** STREAMING table appends (q194): each micro-batch lands as its own
+    * ACID commit — the continuously-ingesting deployment where a crash
+    * between ticks can never expose a torn tranche, because the manifest
+    * rows and the commit row of each tick stand or fall together. Feed
+    * staging + deterministic micro-batch order are the q151/q166 device
+    * (two range files, mtime-ordered, maxFilesPerTrigger=1). */
   private def streamTableAppend(s: SparkSession, dir: String): DataFrame = {
-    reset(s, dir)
-    ensureZoneBase(s, dir)
-    vacuumTable(s, dir)
+    freshTable(s, dir)
     stageOrderTicks(s, dir, "table")
     StoreMeta.drain(s, "table", dir)(absorbTableAppend(s, dir, _))
     tableRangeAggregateTx(s, dir)
+  }
+
+  /** The table lifecycles' common start: a fresh log over the clustered
+    * base, with the files the previous lap's reset stranded reclaimed. */
+  private def freshTable(s: SparkSession, dir: String): Unit = {
+    reset(s, dir)
+    ensureZoneBase(s, dir)
+    vacuumTable(s, dir)
+  }
+
+  /** [[freshTable]], then the two order tranches (o%10 ∈ {7,8}, then
+    * o%10 = 9) as two append commits. Returns the orders table. */
+  private def tableTwoTranches(s: SparkSession, dir: String): DataFrame = {
+    freshTable(s, dir)
+    val orders = Tables.t(s, dir, "orders")
+    absorbTableAppend(s, dir, orders.where("o_orderkey % 10 IN (7, 8)"))
+    absorbTableAppend(s, dir, orders.where("o_orderkey % 10 = 9"))
+    orders
   }
 
   // ---- incremental materialized view (q203): a status-rollup MV kept
@@ -1333,7 +1261,7 @@ object StoreTxn {
       .select("file").collect().map(_.getString(0)).toIndexedSeq
     mvPartialOf(s.read.parquet(files: _*), 1)
       .coalesce(1).write.mode("overwrite")
-      .parquet(s"${ZoneMapStore.zonesPath(dir, variant)}_mvbase")
+      .parquet(mvBase(dir, "_mvbase"))
   }
 
   /** Stage txn `id`'s MV delta next to its table layers (same commit row
@@ -1343,24 +1271,24 @@ object StoreTxn {
     *    visible as of `id − 1` whose key the vector names. Candidate
     *    files prune through the zones against the vector's key range
     *    (the point-lookup path of the zone store), then one broadcast
-    *    semi-join; cost is files-containing-the-keys, not the table. */
+    *    semi-join; cost is files-containing-the-keys, not the table.
+    * "Visible before this txn" is the committed view: `id` is
+    * uncommitted while it stages, and under the log's monotone
+    * allocation no later id commits before it (a writer that loses `id`
+    * loses its commit too) — so the read needs no as-of filter, and
+    * stays legal on a checkpoint-folded root. */
   def mvStage(s: SparkSession, dir: String, id: Long,
       nonce: String = ""): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    def exists(p: String) = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
     val zp = s"${stagingDir(dir, id, nonce)}/table/zones"
     val dp = s"${stagingDir(dir, id, nonce)}/table/deletes"
     val adds =
-      if (exists(zp)) {
+      if (exists(s, zp)) {
         val files = s.read.parquet(zp)
           .select("file").collect().map(_.getString(0)).toIndexedSeq
         Some(mvPartialOf(s.read.parquet(files: _*), 1))
       } else None
     val retracts =
-      if (exists(dp)) {
+      if (exists(s, dp)) {
         val keys = s.read.parquet(dp).select(col("o_orderkey"))
         val bounds = keys.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
         // a delete predicate that matched nothing stages an empty
@@ -1369,10 +1297,10 @@ object StoreTxn {
         else {
           val (kmin, kmax) = (bounds.getLong(0), bounds.getLong(1))
           // zone-pruned candidates among files visible BEFORE this txn
-          val cand = zoneManifestTx(s, dir, id - 1)
+          val cand = zoneManifestTx(s, dir)
             .where(col("max_key") >= kmin && col("min_key") <= kmax)
             .select("file").collect().map(_.getString(0)).toIndexedSeq
-          val victims = deleteScrub(s, dir, id - 1)(s.read.parquet(cand: _*))
+          val victims = deleteScrub(s, dir)(s.read.parquet(cand: _*))
             .join(broadcast(keys), Seq("o_orderkey"), "left_semi")
           Some(mvPartialOf(victims, -1))
         }
@@ -1396,8 +1324,7 @@ object StoreTxn {
     * is [[checkpoint]], whose MV fold REBASES from the post-replace
     * committed rows. */
   private def requireNoReplaceForMv(s: SparkSession, dir: String): Unit = {
-    val replaced = committedTxnDirs(s, dir)
-      .filter(t => isReplaceDir(s, t._2)).map(_._1)
+    val replaced = layers(s, dir, "table/replace").map(_._1)
     if (replaced.nonEmpty) throw new IllegalStateException(
       s"transactions ${replaced.mkString(",")} at ${root(dir)} are REPLACE " +
         "boundaries; additive MV partials cannot express a replace — run " +
@@ -1408,21 +1335,26 @@ object StoreTxn {
   /** The MV read: base partial ∪ committed per-txn deltas, one
     * #statuses-sized fold — the table itself is never opened (the spec
     * pins no layout path in the plan). */
-  def matViewTx(s: SparkSession, dir: String): DataFrame = {
-    requireNoCheckpoint(s, dir)
+  def matViewTx(s: SparkSession, dir: String): DataFrame =
+    mvRead(s, dir, "_mvbase", "mv", "o_orderstatus")
+
+  private def mvRead(s: SparkSession, dir: String, suffix: String,
+      sub: String, key: String): DataFrame = {
     requireNoReplaceForMv(s, dir)
-    val conf = s.sparkContext.hadoopConfiguration
-    val paths = (s"${ZoneMapStore.zonesPath(dir, variant)}_mvbase" +:
-      committedTxnDirs(s, dir).map { case (_, td) => s"$td/mv" })
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-    s.read.parquet(paths: _*)
-      .groupBy(col("o_orderstatus"))
-      .agg(sum(col("d_n")).as("n_orders"),
-        sum(col("d_cents")).as("revenue_cents"))
-      .orderBy(col("o_orderstatus"))
+    mvFold(s, dir, suffix, sub, key).select(col(key),
+      col("d_n").as("n_orders"), col("d_cents").as("revenue_cents"))
+      .orderBy(col(key))
+  }
+
+  /** An MV's base partial ∪ its committed `sub` deltas, summed per `key`
+    * — itself a partial: the read's input and the checkpoint's fold. */
+  private def mvFold(s: SparkSession, dir: String, suffix: String,
+      sub: String, key: String): DataFrame = {
+    val base = mvBase(dir, suffix)
+    s.read.parquet((Seq(base).filter(exists(s, _)) ++
+      layers(s, dir, sub).map(_._2)): _*)
+      .groupBy(col(key))
+      .agg(sum(col("d_n")).as("d_n"), sum(col("d_cents")).as("d_cents"))
   }
 
   /** The join-MV partial (q204): the delta joined to the customer→nation
@@ -1460,7 +1392,7 @@ object StoreTxn {
         Seq("o_orderkey"))
     mvJoinPartialOf(s, dir, base, 1)
       .coalesce(1).write.mode("overwrite")
-      .parquet(s"${ZoneMapStore.zonesPath(dir, variant)}_mvjbase")
+      .parquet(mvBase(dir, "_mvjbase"))
   }
 
   def mvJoinStage(s: SparkSession, dir: String, tranche: DataFrame,
@@ -1469,22 +1401,8 @@ object StoreTxn {
       .coalesce(1).write.mode("overwrite")
       .parquet(s"${stagingDir(dir, id, nonce)}/mvj")
 
-  def matViewJoinTx(s: SparkSession, dir: String): DataFrame = {
-    requireNoCheckpoint(s, dir)
-    requireNoReplaceForMv(s, dir)
-    val conf = s.sparkContext.hadoopConfiguration
-    val paths = (s"${ZoneMapStore.zonesPath(dir, variant)}_mvjbase" +:
-      committedTxnDirs(s, dir).map { case (_, td) => s"$td/mvj" })
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-    s.read.parquet(paths: _*)
-      .groupBy(col("n_name"))
-      .agg(sum(col("d_n")).as("n_orders"),
-        sum(col("d_cents")).as("revenue_cents"))
-      .orderBy(col("n_name"))
-  }
+  def matViewJoinTx(s: SparkSession, dir: String): DataFrame =
+    mvRead(s, dir, "_mvjbase", "mvj", "n_name")
 
   /** TABLE CHANGELOG (q196): what each transaction did, recovered from
     * the commit log alone — rows added (manifest layer n_rows sums) and
@@ -1492,24 +1410,14 @@ object StoreTxn {
     * batch or touching a data file. One bounded driver loop over the
     * committed ids (#txns, the same class as committedTxns itself). */
   def tableChangelogTx(s: SparkSession, dir: String): DataFrame = {
-    requireNoCheckpoint(s, dir)
-    val conf = s.sparkContext.hadoopConfiguration
-    def exists(p: String) = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
-    val rows = committedTxnDirs(s, dir).map { case (id, td) =>
-      val zp = s"$td/table/zones"
-      val dp = s"$td/table/deletes"
-      val added =
-        if (exists(zp))
-          s.read.parquet(zp).agg(sum(col("n_rows"))).head().getLong(0)
-        else 0L
-      val deleted = if (exists(dp)) s.read.parquet(dp).count() else 0L
-      (id, added, deleted)
-    }
+    val added = layers(s, dir, "table/zones").map { case (id, p) =>
+      id -> s.read.parquet(p).agg(sum(col("n_rows"))).head().getLong(0) }.toMap
+    val deleted = layers(s, dir, "table/deletes")
+      .map { case (id, p) => id -> s.read.parquet(p).count() }.toMap
     import s.implicits._
-    rows.toDF("txn", "rows_added", "keys_deleted").orderBy(col("txn"))
+    committedTxns(s, dir)
+      .map(id => (id, added.getOrElse(id, 0L), deleted.getOrElse(id, 0L)))
+      .toDF("txn", "rows_added", "keys_deleted").orderBy(col("txn"))
   }
 
   /** VACUUM for the table tier: delete layout files no manifest row —
@@ -1522,19 +1430,14 @@ object StoreTxn {
     val layout = ZoneMapStore.layoutPath(dir, variant)
     val hp = new org.apache.hadoop.fs.Path(layout)
     val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) return Seq.empty
+    if (!exists(s, layout)) return Seq.empty
     // referenced = EVERY manifest in the log, replace boundaries
     // ignored: a replaced generation's files stay reclaim-exempt while
     // their commits exist (time travel still reads them); they become
     // orphans only after a checkpoint folds the post-replace view and
     // truncates the log — the Delta retention story in two verbs
-    val conf = s.sparkContext.hadoopConfiguration
-    val manifestPaths = (ZoneMapStore.zonesPath(dir, variant) +:
-      committedTxnDirs(s, dir).map { case (_, td) => s"$td/table/zones" })
-      .filter { p =>
-        val mp = new org.apache.hadoop.fs.Path(p)
-        mp.getFileSystem(conf).exists(mp)
-      }
+    val manifestPaths = Seq(ZoneMapStore.zonesPath(dir, variant))
+      .filter(exists(s, _)) ++ layers(s, dir, "table/zones").map(_._2)
     val referenced = manifestPaths
       .flatMap(p => s.read.parquet(p).select("file")
         .collect().map(_.getString(0)))
@@ -1562,13 +1465,8 @@ object StoreTxn {
   }
 
   def absorbTableReplace(s: SparkSession, dir: String,
-      tranche: DataFrame): Long = {
-    val id = nextTxnId(s, dir)
-    val nonce = newNonce()
-    stageTableReplace(s, dir, tranche, id, nonce)
-    commit(s, dir, id, nonce)
-    id
-  }
+      tranche: DataFrame): Long =
+    transact(s, dir)(stageTableReplace(s, dir, tranche, _, _))
 
   // ---- checkpoint: fold committed layers into the base ----
 
@@ -1581,7 +1479,10 @@ object StoreTxn {
     * the folded base — sequence numbers already make that read
     * correctly. */
   private def foldedFile(dir: String) =
-    new org.apache.hadoop.fs.Path(s"${root(dir)}/staging_ckpt/_folded")
+    new org.apache.hadoop.fs.Path(s"${stagingCkpt(dir)}/_folded")
+
+  /** Where [[checkpointStage]] writes the staged copies. */
+  private def stagingCkpt(dir: String) = s"${root(dir)}/staging_ckpt"
 
   private def writeFolded(s: SparkSession, dir: String,
       frozen: Seq[(Long, String)]): Unit = {
@@ -1601,7 +1502,7 @@ object StoreTxn {
       dir: String): Option[Seq[(Long, String)]] = {
     val f = foldedFile(dir)
     val fs = f.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(f)) return None
+    if (!exists(s, f.toString)) return None
     val in = fs.open(f)
     val body = try {
       val len = fs.getFileStatus(f).getLen.toInt
@@ -1631,122 +1532,126 @@ object StoreTxn {
     * commit would land. */
   private[graft] def checkpointStage(s: SparkSession, dir: String,
       midStage: () => Unit = () => ()): Unit = {
-    val staging = s"${root(dir)}/staging_ckpt"
     val frozen = committedTxnDirs(s, dir)
     writeFolded(s, dir, frozen)
     midStage()
     beginStageGuard(dir)
-    try withFrozenLog(dir, frozen) { stageFrozen(s, dir, staging) }
+    try withFrozenLog(dir, frozen) { stageFrozen(s, dir, stagingCkpt(dir)) }
     finally endStageGuard(dir)
     val m = marker(dir)
     m.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(m)
   }
 
   /** The staged-fold body of [[checkpointStage]] — runs entirely under
-    * the frozen commit log. */
+    * the frozen commit log. A tier folds iff it participates (its bases
+    * exist — see [[Tier]]). */
   private def stageFrozen(s: SparkSession, dir: String,
-      staging: String): Unit = {
-    // the text trio folds by the same participation test as the other
-    // tiers (a search- or ingest-only session never built these bases —
-    // and by the stage-before-commit bracket has no committed text
-    // layers to lose either)
-    if (hasTextBases(s, dir)) {
-      dedupTable(s, dir, "exact")
-        .coalesce(4).write.mode("overwrite").parquet(s"$staging/dedup/exact")
-      dedupTable(s, dir, "shingles")
-        .coalesce(4).write.mode("overwrite").parquet(s"$staging/dedup/shingles")
-      dedupTable(s, dir, "bands")
-        .coalesce(4).write.mode("overwrite").parquet(s"$staging/dedup/bands")
-      statsPartials(s, dir)
-        .groupBy(col("lang"), col("source"))
-        .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"),
-          sum(col("s2")).as("s2"), min(col("mn")).as("mn"),
-          max(col("mx")).as("mx"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/stats/partials")
-      vocabPartials(s, dir)
-        .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/vocab/partials")
-    }
-    // the ingest pair folds too — without this, dropping t<id> dirs at
-    // publish would silently delete committed graph/embed layers. A
-    // session that never ran ensureIngestBases has no ingest bases (and
-    // by the stage-before-commit bracket, no committed ingest layers
-    // either), so those stores are skipped — base existence is the
-    // participation test.
-    if (hasIngestBases(s, dir)) {
-      mergedEdgesTx(s, dir)
-        .coalesce(4).write.mode("overwrite").parquet(s"$staging/graph/edges")
-      embedBuckets(s, dir)
-        .coalesce(4).write.mode("overwrite").parquet(s"$staging/embed/buckets")
-    }
-    // the ANN tier folds by the same participation test
-    if (hasAnnBase(s, dir)) {
-      annBucketsTx(s, dir)
-        .coalesce(4).write.mode("overwrite").parquet(s"$staging/ann/buckets")
-    }
-    // ... and the search tier: postings union-fold (plain layout in
-    // staging; the publish re-partitions into the base's tb= dirs),
-    // stats fold to one additive row
-    if (hasSearchBase(s, dir)) {
-      allSearchPostingsTx(s, dir)
-        .coalesce(4).write.mode("overwrite").parquet(s"$staging/search/postings")
-      searchStatsTx(s, dir)
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/search/stats")
-    }
-    // the table tier folds its MANIFEST only — the data files already
-    // live outside the log and stay referenced by the folded base zones
-    if (hasZoneBase(s, dir)) {
-      // the fold PRESERVES sequence numbers: each manifest row carries
-      // its file's ftxn and each delete row its dtxn, so the
-      // delete-applies-to-earlier-files rule keeps resolving correctly
-      // after the t<id> dirs drop (folding them away would let a folded
-      // delete re-kill the upsert rows that superseded it)
-      zoneManifestTx(s, dir)
-        .join(fileTxnMap(s, dir), Seq("file"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/table/zones")
-      // the delete vector folds alongside (dropping t<id> dirs at
-      // publish would otherwise resurrect every deleted row); only the
-      // per-key MAX sequence matters to the resolution rule
-      tableDeletesTx(s, dir).foreach(
-        _.groupBy(col("o_orderkey")).agg(max(col("dtxn")).as("dtxn"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$staging/table/deletes"))
-      // the MV partials fold alongside the manifest too — dropping the
-      // t<id> dirs at publish would otherwise silently rewind matViewTx
-      // to base-only state (it has no per-layer existence signal to
-      // notice the loss, unlike the as-of readers' foldedFlag refusal).
-      // Across a REPLACE boundary additive partials are meaningless
-      // (base + pre-replace deltas no longer describe the table), so
-      // the fold REBASES: one aggregation of the post-replace committed
-      // rows — O(table) once, at the verb that is already O(table).
-      val conf = s.sparkContext.hadoopConfiguration
-      def existsP(p: String) = {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
-      }
-      val hasReplace = committedTxnDirs(s, dir).exists(t => isReplaceDir(s, t._2))
-      def foldMv(baseSuffix: String, layerSub: String, keyCol: String,
-          rebase: () => DataFrame, stagedName: String): Unit = {
-        val basePath = s"${ZoneMapStore.zonesPath(dir, variant)}$baseSuffix"
-        if (existsP(basePath)) {
-          val out =
-            if (hasReplace) rebase()
-            else {
-              val paths = (basePath +: committedTxnDirs(s, dir)
-                .map { case (_, td) => s"$td/$layerSub" }).filter(existsP)
-              s.read.parquet(paths: _*).groupBy(col(keyCol))
-                .agg(sum(col("d_n")).as("d_n"),
-                  sum(col("d_cents")).as("d_cents"))
-            }
-          out.coalesce(1).write.mode("overwrite")
-            .parquet(s"$staging/table/$stagedName")
-        }
-      }
-      foldMv("_mvbase", "mv", "o_orderstatus",
-        () => mvPartialOf(tableRowsTx(s, dir), 1), "mvbase")
-      foldMv("_mvjbase", "mvj", "n_name",
+      staging: String): Unit =
+    for (t <- tiers(s, dir) if t.bases.forall(exists(s, _)); f <- t.folds;
+         df <- f.fold())
+      df.coalesce(f.parts).write.mode("overwrite").parquet(s"$staging/${f.name}")
+
+  // ---- the tier table: the one place a tier is declared ----
+
+  /** One table a checkpoint folds: staged as `staging_ckpt/<name>` from
+    * `fold` (the merged frame over the frozen log; None = nothing to
+    * fold) in `parts` files, then published over `base` through
+    * `publish` (the write shape). `dropUnstaged`: when the tier folds
+    * but this table staged nothing, publish deletes its base instead. */
+  private final case class Fold(name: String, base: String, parts: Int,
+      fold: () => Option[DataFrame],
+      publish: DataFrame => DataFrameWriter[Row] = _.write,
+      dropUnstaged: Boolean = false)
+
+  /** One tier of stores that ride the log. It takes part in a
+    * checkpoint iff every path of `bases` exists — a session that never
+    * built a tier's bases has, by the stage-before-commit bracket, no
+    * committed layers of it either — and its folded tables publish iff
+    * its first one was staged (the same test, applied to the redo
+    * side). `invalidate` drops its bases' metas when [[reset]] discards
+    * a folded history. */
+  private final case class Tier(bases: Seq[String], invalidate: () => Unit,
+      folds: Seq[Fold])
+
+  private def tiers(s: SparkSession, dir: String): Seq[Tier] = {
+    val single: DataFrame => DataFrameWriter[Row] = _.coalesce(1).write
+    // Across a REPLACE boundary additive MV partials are meaningless
+    // (base + pre-replace deltas no longer describe the table), so the
+    // MV fold REBASES: one aggregation of the post-replace committed
+    // rows — O(table) once, at the verb that is already O(table).
+    lazy val replaced = layers(s, dir, "table/replace").nonEmpty
+    def mv(name: String, suffix: String, sub: String, key: String,
+        rebase: => DataFrame) = Fold(name, mvBase(dir, suffix), 1, () =>
+      if (!exists(s, mvBase(dir, suffix))) None
+      else Some(if (replaced) rebase else mvFold(s, dir, suffix, sub, key)),
+      single)
+    val zones = ZoneMapStore.zonesPath(dir, variant)
+    val postings = SearchStore.postingsPath(dir, variant)
+    Seq(
+      Tier(Seq(dedupBase(dir, "exact"), statsBase(dir), vocabBase(dir)),
         () => {
+          DedupIndex.invalidate(s, dir, variant)
+          StatsStore.invalidate(s, dir, variant)
+          VocabStore.invalidate(s, dir, variant)
+        },
+        Seq("exact", "shingles", "bands").map(t => Fold(s"dedup/$t",
+          dedupBase(dir, t), 4, () => Some(dedupTable(s, dir, t)))) ++ Seq(
+        Fold("stats/partials", statsBase(dir), 1, () => Some(
+          statsPartials(s, dir).groupBy(col("lang"), col("source"))
+            .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"),
+              sum(col("s2")).as("s2"), min(col("mn")).as("mn"),
+              max(col("mx")).as("mx")))),
+        Fold("vocab/partials", vocabBase(dir), 1, () => Some(vocabPartials(s, dir)
+          .groupBy(col("word")).agg(sum(col("cnt")).as("cnt")))))),
+      // the ingest pair — without its fold, dropping t<id> dirs at
+      // publish would silently delete committed graph/embed layers
+      Tier(Seq(graphBase(dir), embedBase(dir)),
+        () => {
+          GraphStore.invalidate(s, dir, variant)
+          EmbedIndex.invalidate(s, dir, variant)
+        },
+        Seq(Fold("graph/edges", graphBase(dir), 4, () => Some(mergedEdgesTx(s, dir))),
+          Fold("embed/buckets", embedBase(dir), 4, () => Some(embedBuckets(s, dir))))),
+      Tier(Seq(annBase(dir)), () => AnnTxStore.invalidate(s, dir),
+        Seq(Fold("ann/buckets", annBase(dir), 4, () => Some(annBucketsTx(s, dir))))),
+      // the search tier: postings union-fold (plain layout in staging;
+      // the publish re-partitions into the base's tb= dirs), stats fold
+      // to one additive row
+      Tier(Seq(postings), () => SearchStore.invalidate(s, dir, variant), Seq(
+        Fold("search/postings", postings, 4, () => Some(allSearchPostingsTx(s, dir)),
+          _.repartition(col("tb")).write.partitionBy("tb")),
+        Fold("search/stats", SearchStore.statsPath(dir, variant), 1,
+          () => Some(searchStatsTx(s, dir)
+            .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))),
+          single))),
+      // the table tier folds its MANIFEST only — the data files already
+      // live outside the log and stay referenced by the folded base zones
+      Tier(Seq(zones), () => ZoneMapStore.invalidate(s, dir, variant), Seq(
+        // the fold PRESERVES sequence numbers: each manifest row carries
+        // its file's ftxn and each delete row its dtxn, so the
+        // delete-applies-to-earlier-files rule keeps resolving correctly
+        // after the t<id> dirs drop (folding them away would let a folded
+        // delete re-kill the upsert rows that superseded it)
+        Fold("table/zones", zones, 1,
+          () => Some(zoneManifestTx(s, dir).join(fileTxnMap(s, dir), Seq("file"))),
+          single),
+        // the delete vector folds alongside (dropping t<id> dirs at
+        // publish would otherwise resurrect every deleted row); only the
+        // per-key MAX sequence matters to the resolution rule. A folded
+        // view with NO deletes (e.g. a replace boundary dropped the
+        // vector) deletes the base vector: a stale one from an earlier
+        // fold would re-apply to the new generation.
+        Fold("table/deletes", ZoneMapStore.deletesPath(dir, variant), 1,
+          () => tableDeletesTx(s, dir).map(
+            _.groupBy(col("o_orderkey")).agg(max(col("dtxn")).as("dtxn"))),
+          single, dropUnstaged = true),
+        // the MV partials fold alongside the manifest too — dropping the
+        // t<id> dirs at publish would otherwise silently rewind matViewTx
+        // to base-only state (it has no per-layer existence signal to
+        // notice the loss, unlike the as-of readers' foldedFlag refusal)
+        mv("table/mvbase", "_mvbase", "mv", "o_orderstatus",
+          mvPartialOf(tableRowsTx(s, dir), 1)),
+        mv("table/mvjbase", "_mvjbase", "mvj", "n_name", {
           // rebase keeps the COMMITTED totalprice (an upsert may have
           // rewritten it) and takes only the join key from the source
           val rows = tableRowsTx(s, dir)
@@ -1754,42 +1659,7 @@ object StoreTxn {
             .join(Tables.t(s, dir, "orders")
               .select(col("o_orderkey"), col("o_custkey")), Seq("o_orderkey"))
           mvJoinPartialOf(s, dir, rows, 1)
-        }, "mvjbase")
-    }
-  }
-
-  private def hasIngestBases(s: SparkSession, dir: String): Boolean = {
-    val conf = s.sparkContext.hadoopConfiguration
-    Seq(s"${GraphStore.root(dir, variant)}/edges",
-        s"${EmbedIndex.root(dir, variant)}/buckets").forall { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
-  }
-
-  private def hasAnnBase(s: SparkSession, dir: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(s"${AnnTxStore.root(dir)}/buckets")
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  private def hasSearchBase(s: SparkSession, dir: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(SearchStore.postingsPath(dir, variant))
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  private def hasZoneBase(s: SparkSession, dir: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(ZoneMapStore.zonesPath(dir, variant))
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  private def hasTextBases(s: SparkSession, dir: String): Boolean = {
-    val conf = s.sparkContext.hadoopConfiguration
-    Seq(s"${DedupIndex.root(dir, variant)}/exact",
-        s"${StatsStore.root(dir, variant)}/partials",
-        VocabStore.partialsPath(dir, variant)).forall { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
+        }))))
   }
 
   /** CHECKPOINT the commit log: fold every committed layer into a new
@@ -1831,11 +1701,10 @@ object StoreTxn {
 
   private[graft] def checkpoint(s: SparkSession, dir: String,
       leaseTtlMs: Long): Unit = withMaintLease(s, dir, leaseTtlMs) {
-    val r = root(dir)
-    val staging = s"$r/staging_ckpt"
+    val staging = stagingCkpt(dir)
     val m = marker(dir)
     val fs = m.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(m)) checkpointStage(s, dir)
+    if (!exists(s, m.toString)) checkpointStage(s, dir)
     // Publish deletes EXACTLY the fold set the stage persisted
     // (`staging_ckpt/_folded`) — never a re-listed one: a transaction
     // that committed after the freeze is absent from the staged fold,
@@ -1846,70 +1715,15 @@ object StoreTxn {
     // or already-emptied log reads as "nothing left to fold", and a
     // listing failure rethrows (committedTxns' policy).
     val folded = readFolded(s, dir).getOrElse(committedTxnDirs(s, dir))
-    // staged text copies exist iff the stage saw the text bases — the
-    // participation test, applied to the redo side like graph/ann below
-    val stagedDedup = new org.apache.hadoop.fs.Path(s"$staging/dedup/exact")
-    if (fs.exists(stagedDedup)) {
-      for (t <- Seq("exact", "shingles", "bands"))
-        s.read.parquet(s"$staging/dedup/$t")
-          .write.mode("overwrite").parquet(s"${DedupIndex.root(dir, variant)}/$t")
-      s.read.parquet(s"$staging/stats/partials")
-        .write.mode("overwrite")
-        .parquet(s"${StatsStore.root(dir, variant)}/partials")
-      s.read.parquet(s"$staging/vocab/partials")
-        .write.mode("overwrite")
-        .parquet(VocabStore.partialsPath(dir, variant))
-    }
-    // staged ingest copies exist iff the stage saw ingest bases — the
-    // same participation test, applied to the redo side
-    val stagedGraph = new org.apache.hadoop.fs.Path(s"$staging/graph/edges")
-    if (fs.exists(stagedGraph)) {
-      s.read.parquet(stagedGraph.toString)
-        .write.mode("overwrite")
-        .parquet(s"${GraphStore.root(dir, variant)}/edges")
-      s.read.parquet(s"$staging/embed/buckets")
-        .write.mode("overwrite")
-        .parquet(s"${EmbedIndex.root(dir, variant)}/buckets")
-    }
-    val stagedAnn = new org.apache.hadoop.fs.Path(s"$staging/ann/buckets")
-    if (fs.exists(stagedAnn)) {
-      s.read.parquet(stagedAnn.toString)
-        .write.mode("overwrite")
-        .parquet(s"${AnnTxStore.root(dir)}/buckets")
-    }
-    val stagedSearch = new org.apache.hadoop.fs.Path(s"$staging/search/postings")
-    if (fs.exists(stagedSearch)) {
-      s.read.parquet(stagedSearch.toString).repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb")
-        .parquet(SearchStore.postingsPath(dir, variant))
-      s.read.parquet(s"$staging/search/stats")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(SearchStore.statsPath(dir, variant))
-    }
-    val stagedZones = new org.apache.hadoop.fs.Path(s"$staging/table/zones")
-    if (fs.exists(stagedZones)) {
-      s.read.parquet(stagedZones.toString)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(ZoneMapStore.zonesPath(dir, variant))
-      val stagedDeletes = new org.apache.hadoop.fs.Path(s"$staging/table/deletes")
-      if (fs.exists(stagedDeletes))
-        s.read.parquet(stagedDeletes.toString)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(ZoneMapStore.deletesPath(dir, variant))
-      else
-        // the folded view carries NO deletes (e.g. a replace boundary
-        // dropped the vector): a stale base vector from an earlier fold
-        // must go with it, or it would re-apply to the new generation
-        fs.delete(new org.apache.hadoop.fs.Path(
-          ZoneMapStore.deletesPath(dir, variant)), true)
-      // folded MV bases land with the manifest they were staged against
-      for ((stagedName, baseSuffix) <- Seq("mvbase" -> "_mvbase",
-          "mvjbase" -> "_mvjbase")) {
-        val sp = new org.apache.hadoop.fs.Path(s"$staging/table/$stagedName")
-        if (fs.exists(sp))
-          s.read.parquet(sp.toString).coalesce(1).write.mode("overwrite")
-            .parquet(s"${ZoneMapStore.zonesPath(dir, variant)}$baseSuffix")
-      }
+    // publish each folded table from its immutable staged copy, tier by
+    // tier in table order — a tier whose first table was not staged did
+    // not take part in the stage
+    for (t <- tiers(s, dir) if exists(s, s"$staging/${t.folds.head.name}");
+         f <- t.folds) {
+      val staged = s"$staging/${f.name}"
+      if (exists(s, staged))
+        f.publish(s.read.parquet(staged)).mode("overwrite").parquet(f.base)
+      else if (f.dropUnstaged) fs.delete(new org.apache.hadoop.fs.Path(f.base), true)
     }
     // truncate the log: drop the folded commit markers, RETAINING the
     // highest one. Transaction ids must keep ascending for the life of
@@ -1987,9 +1801,7 @@ object StoreTxn {
     // no-op BEFORE the lease: acquiring would mkdirs the store root, so
     // a vacuum against a path that never existed (typo, decommissioned
     // store) must keep returning empty without creating anything
-    val pre = new org.apache.hadoop.fs.Path(root(dir))
-    if (!pre.getFileSystem(s.sparkContext.hadoopConfiguration).exists(pre))
-      return Seq.empty
+    if (!exists(s, root(dir))) return Seq.empty
     withMaintLease(s, dir, leaseTtlMs) { vacuumLocked(s, dir, retentionMs) }
   }
 
@@ -1998,7 +1810,7 @@ object StoreTxn {
     requireNoCheckpoint(s, dir)
     val p = new org.apache.hadoop.fs.Path(root(dir))
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
+    if (!exists(s, root(dir))) return Seq.empty
     val cutoff = System.currentTimeMillis() - retentionMs
     // a t-dir is live iff it IS the dir its id's commit marker resolves
     // to — a LOSING same-id staging (same id, different nonce) is an
@@ -2016,12 +1828,32 @@ object StoreTxn {
     // is a pre-marker crash remnant, never a redo source — but a LIVE
     // checkpointStage's staging is exactly as pre-marker, so the same
     // retention gate applies
-    val ckpt = new org.apache.hadoop.fs.Path(s"${root(dir)}/staging_ckpt")
-    if (fs.exists(ckpt) &&
+    val ckpt = new org.apache.hadoop.fs.Path(stagingCkpt(dir))
+    if (exists(s, ckpt.toString) &&
         fs.getFileStatus(ckpt).getModificationTime <= cutoff)
       fs.delete(ckpt, true)
     orphans.map(_.getName.drop(1).takeWhile(_.isDigit).toLong)
       .distinct.sorted
+  }
+
+  /** The text lifecycles' common start (q147, q155, q158): a fresh log
+    * over the pristine text bases, then the whole delta (doc_id % 10 ≥
+    * 7) absorbed into dedup + stats + vocab as ONE transaction. */
+  private def textDeltaTx(s: SparkSession, dir: String): Unit = {
+    reset(s, dir)
+    ensureBases(s, dir)
+    absorbBoth(s, dir, DedupIndex.deltaDocs(s, dir),
+      Tables.t(s, dir, "documents").where("doc_id % 10 >= 7"))
+  }
+
+  /** The search lifecycles' common start (q185, q197): a fresh log over
+    * the inverted-index base, then two doc tranches as two commits. */
+  private def searchTwoTranches(s: SparkSession, dir: String): Unit = {
+    reset(s, dir)
+    ensureSearchBase(s, dir)
+    val docs = Tables.t(s, dir, "documents")
+    absorbSearch(s, dir, docs.where("doc_id % 10 IN (7, 8)"))
+    absorbSearch(s, dir, docs.where("doc_id % 10 = 9"))
   }
 
   /** q147: the q134 composed mix run through the TRANSACTIONAL lifecycle
@@ -2032,11 +1864,7 @@ object StoreTxn {
     * q147 next to q134 is the cross-engine proof that the commit-log
     * indirection is semantics-free. */
   private def txStoreMix(s: SparkSession, dir: String): DataFrame = {
-    reset(s, dir)
-    ensureBases(s, dir)
-    absorbBoth(s, dir,
-      DedupIndex.deltaDocs(s, dir),
-      Tables.t(s, dir, "documents").where("doc_id % 10 >= 7"))
+    textDeltaTx(s, dir)
     StoreMix.mixFrom(s, dir, keeperIdsTx(s, dir),
       storedStatsTx(s, dir)
         .select(col("lang"), col("source"), col("n_docs"), col("total_chars")))
@@ -2163,11 +1991,7 @@ object StoreTxn {
     // protocol is store-count-agnostic by construction (a layer set per
     // store, one log).
     "q155_tx_vocab_coverage" -> ((s, dir) => {
-      reset(s, dir)
-      ensureBases(s, dir)
-      absorbBoth(s, dir,
-        DedupIndex.deltaDocs(s, dir),
-        Tables.t(s, dir, "documents").where("doc_id % 10 >= 7"))
+      textDeltaTx(s, dir)
       vocabCoverageTx(s, dir)
     }),
     // TIME TRAVEL on the commit log: two transactions land (batch 1 =
@@ -2240,11 +2064,7 @@ object StoreTxn {
     // closes the lifecycle because doc-disjoint union layers ARE the
     // one-shot index.
     "q185_tx_search" -> ((s, dir) => {
-      reset(s, dir)
-      ensureSearchBase(s, dir)
-      val docs = Tables.t(s, dir, "documents")
-      absorbSearch(s, dir, docs.where("doc_id % 10 IN (7, 8)"))
-      absorbSearch(s, dir, docs.where("doc_id % 10 = 9"))
+      searchTwoTranches(s, dir)
       bm25Tx(s, dir)
     }),
     // TRANSACTIONAL TABLE APPENDS: two order tranches land as ACID
@@ -2256,12 +2076,7 @@ object StoreTxn {
     // between histories leaves the committed read untouched — q183's
     // oracle closes the whole lifecycle).
     "q191_tx_table_append" -> ((s, dir) => {
-      reset(s, dir)
-      ensureZoneBase(s, dir)
-      vacuumTable(s, dir)
-      val orders = Tables.t(s, dir, "orders")
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 IN (7, 8)"))
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 = 9"))
+      tableTwoTranches(s, dir)
       require(vacuumTable(s, dir).isEmpty,
         "committed table files read as orphans — manifest diverged")
       tableRangeAggregateTx(s, dir)
@@ -2273,12 +2088,7 @@ object StoreTxn {
     // recomputes over exactly the docs ingested through txn 0 (base ∪
     // tranche 1), including the snapshot-local key-space bounds.
     "q192_tx_table_asof" -> ((s, dir) => {
-      reset(s, dir)
-      ensureZoneBase(s, dir)
-      vacuumTable(s, dir)
-      val orders = Tables.t(s, dir, "orders")
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 IN (7, 8)"))
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 = 9"))
+      tableTwoTranches(s, dir)
       tableRangeAggregateTxAsOf(s, dir, maxTxn = 0L)
     }),
     // STREAMING ACID APPENDS: the two tranches arrive as micro-batches,
@@ -2291,11 +2101,7 @@ object StoreTxn {
     // log prefix. Oracle: q99 over exactly the docs ingested through
     // txn 0 (base corpus ∪ tranche 1).
     "q197_tx_search_asof" -> ((s, dir) => {
-      reset(s, dir)
-      ensureSearchBase(s, dir)
-      val docs = Tables.t(s, dir, "documents")
-      absorbSearch(s, dir, docs.where("doc_id % 10 IN (7, 8)"))
-      absorbSearch(s, dir, docs.where("doc_id % 10 = 9"))
+      searchTwoTranches(s, dir)
       bm25TxAsOf(s, dir, maxTxn = 0L)
     }),
     // INCREMENTAL MATERIALIZED VIEW: each transaction stages its own MV
@@ -2305,21 +2111,18 @@ object StoreTxn {
     // partials only; the oracle recomputes the rollup from the raw
     // table, closing the IVM loop cross-engine.
     "q203_tx_mat_view" -> ((s, dir) => {
-      reset(s, dir)
-      ensureZoneBase(s, dir)
-      vacuumTable(s, dir)
+      freshTable(s, dir)
       mvEnsureBase(s, dir)
       val orders = Tables.t(s, dir, "orders")
-      var id = nextTxnId(s, dir)
-      var n = newNonce()
-      stageTableAppend(s, dir, orders.where("o_orderkey % 10 IN (7, 8)"), id, n)
-      mvStage(s, dir, id, n); commit(s, dir, id, n)
-      id = nextTxnId(s, dir); n = newNonce()
-      stageTableAppend(s, dir, orders.where("o_orderkey % 10 = 9"), id, n)
-      mvStage(s, dir, id, n); commit(s, dir, id, n)
-      id = nextTxnId(s, dir); n = newNonce()
-      stageTableDelete(s, dir, "o_orderkey % 13 = 5", id, n)
-      mvStage(s, dir, id, n); commit(s, dir, id, n)
+      for (pred <- Seq("o_orderkey % 10 IN (7, 8)", "o_orderkey % 10 = 9"))
+        transact(s, dir) { (id, n) =>
+          stageTableAppend(s, dir, orders.where(pred), id, n)
+          mvStage(s, dir, id, n)
+        }
+      transact(s, dir) { (id, n) =>
+        stageTableDelete(s, dir, "o_orderkey % 13 = 5", id, n)
+        mvStage(s, dir, id, n)
+      }
       matViewTx(s, dir)
     }),
     // IVM THROUGH A JOIN: the nation-revenue view refreshes from
@@ -2328,18 +2131,14 @@ object StoreTxn {
     // table layers and view delta alike; the oracle recomputes the
     // three-table rollup from raw data
     "q204_tx_mv_join" -> ((s, dir) => {
-      reset(s, dir)
-      ensureZoneBase(s, dir)
-      vacuumTable(s, dir)
+      freshTable(s, dir)
       mvJoinEnsureBase(s, dir)
       val orders = Tables.t(s, dir, "orders")
-      for (pred <- Seq("o_orderkey % 10 IN (7, 8)", "o_orderkey % 10 = 9")) {
-        val id = nextTxnId(s, dir)
-        val n = newNonce()
-        stageTableAppend(s, dir, orders.where(pred), id, n)
-        mvJoinStage(s, dir, orders.where(pred), id, n)
-        commit(s, dir, id, n)
-      }
+      for (pred <- Seq("o_orderkey % 10 IN (7, 8)", "o_orderkey % 10 = 9"))
+        transact(s, dir) { (id, n) =>
+          stageTableAppend(s, dir, orders.where(pred), id, n)
+          mvJoinStage(s, dir, orders.where(pred), id, n)
+        }
       matViewJoinTx(s, dir)
     }),
     // STREAMING IVM: each micro-batch commits its table layers AND its
@@ -2348,18 +2147,13 @@ object StoreTxn {
     // give. Drained state = base ∪ both tranches, no deletes, so the
     // oracle is the plain full-table rollup.
     "q205_stream_mv" -> ((s, dir) => {
-      reset(s, dir)
-      ensureZoneBase(s, dir)
-      vacuumTable(s, dir)
+      freshTable(s, dir)
       mvEnsureBase(s, dir)
       stageOrderTicks(s, dir, "mv")
-      StoreMeta.drain(s, "mv", dir) { b =>
-        val id = nextTxnId(s, dir)
-        val n = newNonce()
+      StoreMeta.drain(s, "mv", dir)(b => transact(s, dir) { (id, n) =>
         stageTableAppend(s, dir, b, id, n)
         mvStage(s, dir, id, n)
-        commit(s, dir, id, n)
-      }
+      })
       matViewTx(s, dir)
     }),
     // OPTIMIZE: appends + upsert fragment the layout and leave a live
@@ -2369,12 +2163,7 @@ object StoreTxn {
     // on content). The require pins that the post-optimize read path
     // really dropped the delete anti-join.
     "q206_tx_table_optimize" -> ((s, dir) => {
-      reset(s, dir)
-      ensureZoneBase(s, dir)
-      vacuumTable(s, dir)
-      val orders = Tables.t(s, dir, "orders")
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 IN (7, 8)"))
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 = 9"))
+      val orders = tableTwoTranches(s, dir)
       absorbTableUpsert(s, dir, "o_orderkey % 10 = 9",
         orders.where("o_orderkey % 10 = 9")
           .withColumn("o_totalprice", col("o_totalprice") * 2))
@@ -2405,12 +2194,7 @@ object StoreTxn {
     // Oracle: the range aggregate over just the replacing tranche,
     // bounds from its own key space.
     "q198_tx_table_replace" -> ((s, dir) => {
-      reset(s, dir)
-      ensureZoneBase(s, dir)
-      vacuumTable(s, dir)
-      val orders = Tables.t(s, dir, "orders")
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 IN (7, 8)"))
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 = 9"))
+      val orders = tableTwoTranches(s, dir)
       absorbTableReplace(s, dir, orders.where("o_orderkey % 10 IN (7, 8)"))
       tableRangeAggregateTx(s, dir)
     }),
@@ -2421,12 +2205,7 @@ object StoreTxn {
     // the replacing files survive it. Oracle: full table with tranche
     // 2's prices doubled.
     "q195_tx_table_upsert" -> ((s, dir) => {
-      reset(s, dir)
-      ensureZoneBase(s, dir)
-      vacuumTable(s, dir)
-      val orders = Tables.t(s, dir, "orders")
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 IN (7, 8)"))
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 = 9"))
+      val orders = tableTwoTranches(s, dir)
       absorbTableUpsert(s, dir, "o_orderkey % 10 = 9",
         orders.where("o_orderkey % 10 = 9")
           .withColumn("o_totalprice", col("o_totalprice") * 2))
@@ -2436,12 +2215,7 @@ object StoreTxn {
     // from the log alone — no batch replay, no data file read; the
     // oracle recomputes each tranche's cardinality from the predicates
     "q196_tx_table_changelog" -> ((s, dir) => {
-      reset(s, dir)
-      ensureZoneBase(s, dir)
-      vacuumTable(s, dir)
-      val orders = Tables.t(s, dir, "orders")
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 IN (7, 8)"))
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 = 9"))
+      tableTwoTranches(s, dir)
       absorbTableDelete(s, dir, "o_orderkey % 13 = 5")
       tableChangelogTx(s, dir)
     }),
@@ -2451,12 +2225,7 @@ object StoreTxn {
     // FULL-table key bounds (a delete vector does not rewrite manifests)
     // and drops the victims from the aggregate only.
     "q193_tx_table_delete" -> ((s, dir) => {
-      reset(s, dir)
-      ensureZoneBase(s, dir)
-      vacuumTable(s, dir)
-      val orders = Tables.t(s, dir, "orders")
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 IN (7, 8)"))
-      absorbTableAppend(s, dir, orders.where("o_orderkey % 10 = 9"))
+      tableTwoTranches(s, dir)
       absorbTableDelete(s, dir, "o_orderkey % 13 = 5")
       tableRangeAggregateTx(s, dir)
     }),
@@ -2500,14 +2269,14 @@ object StoreTxn {
       val retained = vacuum(s, dir, retentionMs = 3600000L)
       require(retained == Seq(abandoned),
         s"guarded vacuum must reclaim exactly the aged staging, got $retained")
-      require(fs.exists(inflight.getParent),
+      require(exists(s, inflight.getParent.toString),
         "guarded vacuum reclaimed a fresh (possibly in-flight) staging")
       // the in-flight writer abandons too; the legacy retentionMs=0 pass
       // (the pre-guard contract) reclaims it
       val rest = vacuum(s, dir)
       require(rest == Seq(abandoned),
         s"legacy vacuum must reclaim the remaining orphan, got $rest")
-      require(!fs.exists(inflight.getParent),
+      require(!exists(s, inflight.getParent.toString),
         "legacy vacuum left the abandoned in-flight staging behind")
       absorbBoth(s, dir, DedupIndex.batch2Docs(s, dir),
         docs.where("doc_id % 10 = 9"))
@@ -2524,11 +2293,7 @@ object StoreTxn {
     // from scratch — the one-query proof that the whole store family
     // COMPOSES into the pipeline it exists for.
     "q158_tx_full_loop" -> ((s, dir) => {
-      reset(s, dir)
-      ensureBases(s, dir)
-      absorbBoth(s, dir,
-        DedupIndex.deltaDocs(s, dir),
-        Tables.t(s, dir, "documents").where("doc_id % 10 >= 7"))
+      textDeltaTx(s, dir)
       DecontamIndex.buildIfStale(s, dir)
       DecontamIndex.absorb(s, dir)
       val flagged = DecontamIndex.judgeDocs(s, dir,

@@ -40,7 +40,13 @@ class PipelineBridgeSpec extends AnyFunSuite {
     // copy of graft_iforest is never tested in its place.
     val pythonPath = (pythonDir.getAbsolutePath +: sys.env.get("PYTHONPATH").toSeq)
       .mkString(java.io.File.pathSeparator)
-    val exit = Process(cmd, Some(pythonDir), "PYTHONPATH" -> pythonPath).!(logger)
+    // The pyspark JVM gets this JVM's tmpdir (build.sbt points it under
+    // target/), so the stores the script builds stay out of the system
+    // tmpdir; the script appends its --driver-class-path to these args.
+    val submitArgs = (s"--driver-java-options -Djava.io.tmpdir=${sys.props("java.io.tmpdir")}" +:
+      sys.env.get("PYSPARK_SUBMIT_ARGS").toSeq).mkString(" ")
+    val exit = Process(cmd, Some(pythonDir), "PYTHONPATH" -> pythonPath,
+      "PYSPARK_SUBMIT_ARGS" -> submitArgs).!(logger)
     assert(exit == 0, s"python pipeline bridge test failed (exit $exit):\n$out")
     assert(out.toString.contains("PY_PIPELINE_OK"),
       s"python pipeline bridge test did not report success:\n$out")

@@ -1007,6 +1007,96 @@ class TxStoreSpec extends AnyFunSuite {
     Caches.releaseAll()
   }
 
+  test("as-of stats skip the layers a text-less transaction never staged") {
+    StoreTxn.reset(spark, sf)
+    StoreTxn.ensureBases(spark, sf)
+    StoreTxn.ensureIngestBases(spark, sf)
+    val baseStats = statsRows
+    // txn 0 stages graph + embed layers only: it has no stats layer
+    val t0 = StoreTxn.absorbIngest(spark, sf,
+      graft.queries.EmbedIndex.batch1Vecs(spark, sf))
+    val t1 = StoreTxn.absorbBoth(spark, sf, DedupIndex.deltaDocs(spark, sf),
+      statsDelta("doc_id % 10 >= 7"))
+    assert((t0, t1) == (0L, 1L))
+    def asOf(id: Long): Seq[String] = Caches.scoped(
+      StoreTxn.storedStatsTxAsOf(spark, sf, id).collect().toSeq.map(_.toString))
+    assert(asOf(1L) == statsRows, "as-of the last txn must equal the live read")
+    assert(asOf(0L) == baseStats, "as-of the ingest txn must equal the base")
+    Caches.releaseAll()
+  }
+
+  test("one root, every tier, one checkpoint: the staged layout and every read hold") {
+    StoreTxn.reset(spark, sf)
+    StoreTxn.ensureBases(spark, sf)
+    StoreTxn.ensureIngestBases(spark, sf)
+    StoreTxn.ensureAnnBase(spark, sf)
+    StoreTxn.ensureSearchBase(spark, sf)
+    StoreTxn.ensureZoneBase(spark, sf)
+    StoreTxn.vacuumTable(spark, sf)
+    StoreTxn.mvEnsureBase(spark, sf)
+    StoreTxn.mvJoinEnsureBase(spark, sf)
+    val docs = Tables.t(spark, sf, "documents")
+    val orders = Tables.t(spark, sf, "orders")
+    StoreTxn.absorbBoth(spark, sf, DedupIndex.deltaDocs(spark, sf),
+      statsDelta("doc_id % 10 >= 7"))
+    StoreTxn.absorbIngestTick(spark, sf, 1, withAnn = true)
+    StoreTxn.absorbSearch(spark, sf, docs.where("doc_id % 10 IN (7, 8)"))
+    val tranche = orders.where("o_orderkey % 10 >= 7")
+    var id = StoreTxn.nextTxnId(spark, sf)
+    var n = StoreTxn.newNonce()
+    StoreTxn.stageTableAppend(spark, sf, tranche, id, n)
+    StoreTxn.mvStage(spark, sf, id, n)
+    StoreTxn.mvJoinStage(spark, sf, tranche, id, n)
+    StoreTxn.commit(spark, sf, id, n)
+    id = StoreTxn.nextTxnId(spark, sf)
+    n = StoreTxn.newNonce()
+    StoreTxn.stageTableDelete(spark, sf, "o_orderkey % 13 = 5", id, n)
+    StoreTxn.mvStage(spark, sf, id, n)
+    StoreTxn.commit(spark, sf, id, n)
+
+    def rows(df: => org.apache.spark.sql.DataFrame): Seq[String] =
+      Caches.scoped(df.collect().toSeq.map(_.toString).sorted)
+    def reads: Seq[Seq[String]] = Seq(
+      keeperSet.toSeq.sorted.map(_.toString), statsRows, vocabRows,
+      rows(StoreTxn.mergedEdgesTx(spark, sf)),
+      rows(StoreTxn.embedBuckets(spark, sf)),
+      rows(StoreTxn.annBucketsTx(spark, sf)),
+      rows(StoreTxn.bm25Tx(spark, sf)),
+      rows(StoreTxn.tableRangeAggregateTx(spark, sf)),
+      rows(StoreTxn.matViewTx(spark, sf)),
+      rows(StoreTxn.matViewJoinTx(spark, sf)))
+    val before = reads
+    assert(before.forall(_.nonEmpty), "a tier read came back empty")
+
+    StoreTxn.checkpointStage(spark, sf)
+    val fs = new org.apache.hadoop.fs.Path(StoreTxn.root(sf))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new org.apache.hadoop.fs.Path(s"${StoreTxn.root(sf)}/staging_ckpt")
+    val staged = fs.listStatus(staging).toSeq.flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isDirectory)
+        .map(c => s"${st.getPath.getName}/${c.getPath.getName}")
+      else Seq(st.getPath.getName)
+    }.toSet
+    assert(staged == Set("dedup/exact", "dedup/shingles", "dedup/bands",
+      "stats/partials", "vocab/partials", "graph/edges", "embed/buckets",
+      "ann/buckets", "search/postings", "search/stats", "table/zones",
+      "table/deletes", "table/mvbase", "table/mvjbase", "_folded"),
+      s"staged layout moved: $staged")
+
+    StoreTxn.checkpoint(spark, sf)
+    val after = reads
+    before.zip(after).zipWithIndex.foreach { case ((b, a), i) =>
+      assert(a == b, s"read $i changed across the checkpoint") }
+    val last = StoreTxn.nextTxnId(spark, sf) - 1
+    assert(StoreTxn.committedTxnDirs(spark, sf).map(_._1) == Seq(last),
+      "the log must keep the high-water marker alone")
+    val left = fs.listStatus(new org.apache.hadoop.fs.Path(StoreTxn.root(sf)))
+      .map(_.getPath.getName).toSet
+    assert(left == Set("commits"), s"checkpoint left residue: $left")
+    StoreTxn.reset(spark, sf) // heal the folded base for later lifecycles
+    Caches.releaseAll()
+  }
+
   test("q147 (transactional) == q134 (independent absorbs) row-identically") {
     val tx = Caches.scoped(
       StoreTxn.queries("q147_tx_store_mix")(spark, sf).collect().toSeq.map(_.toString))
