@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.iforest.IForest
 import graft.multimodal.Multimodal
-import graft.queries.{Advanced, Audit, ClusterStore, Clustering, DecontamIndex, DedupIndex, EmbedIndex, Graph, GraphStore, Physical, QualityModel, Relational, SearchStore, SketchStore, ZoneMapStore, StatsStore, StoreMix, StoreTxn, Streaming, TextDiag, TextPipeline, VocabStore}
+import graft.queries.{Advanced, Audit, ClusterStore, Clustering, DecontamIndex, DedupIndex, EmbedIndex, Graph, GraphStore, Physical, QualityModel, Relational, SearchStore, SketchStore, ZoneMapStore, StatsStore, StoreMix, StoreTxn, Streaming, Tables, TextDiag, TextPipeline, VocabStore}
 import graft.similarity.{AnnIvf, AnnLsh}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -123,16 +123,13 @@ object SparkEntry {
    * escape alone is lossy), so two data roots can never collide onto one
    * index.
    */
-  private[graft] def annIndexPath(dir: String, leaf: String): String = {
+  private[graft] def annIndexPath(dir: String, leaf: String): String =
     // The readable escape is LOSSY ("/data/x" and "/data_x" both escape to
-    // "_data_x"), so an md5 fragment of the raw dir disambiguates — two
-    // data roots colliding onto one index path would otherwise alternate
-    // fingerprint-stale and rebuild on every access.
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"${sys.props("java.io.tmpdir")}/" +
-      s"graft_ann_index_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}_$h/$leaf"
-  }
+    // "_data_x"), so the store family's md5 fragment of the raw dir
+    // disambiguates — two data roots colliding onto one index path would
+    // otherwise alternate fingerprint-stale and rebuild on every access.
+    s"${sys.props("java.io.tmpdir")}/graft_ann_index_" +
+      s"${dir.replaceAll("[^A-Za-z0-9._-]", "_")}_${Tables.dirHash(dir)}/$leaf"
 
   /** Build-if-absent-or-stale without paying the corpus fingerprint twice:
     * the load path validates internally (and throws on missing/half-built/

@@ -85,8 +85,9 @@ class IForest(override val uid: String)
 
   private def fitImpl(dataset: Dataset[_]): IForestModel = {
     val sc = dataset.sparkSession.sparkContext
+    // null feature vectors are skipped, as transform scores them null
     val features: RDD[Vector] = dataset.select(col($(featuresCol))).rdd
-      .map { case Row(v: Vector) => v }
+      .collect { case Row(v: Vector) => v }
     val partitionSizes = JobPhase(sc, "iforest:size") {
       sc.runJob(features, (it: Iterator[Vector]) => {
         var n = 0L

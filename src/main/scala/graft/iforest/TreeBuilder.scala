@@ -109,8 +109,10 @@ object TreeBuilder {
         if (v > mx) mx = v
         i += 1
       }
-      if (mn == mx) {
-        // retire the constant feature for this subtree: swap-to-end
+      if (!(mn < mx)) {
+        // retire the constant feature for this subtree: swap-to-end. An
+        // all-NaN column leaves mn/mx at ±MaxValue (mn > mx): it has no
+        // cut to take either, so it retires too.
         candidates(pick) = candidates(n - 1)
         candidates(n - 1) = f
         n -= 1

@@ -1,14 +1,21 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.io.{FileNotFoundException, IOException}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods
 
 /** The STORE KERNEL — the one owner of what every persisted store in
   * `graft.queries` shares: the md5-keyed tmpdir root, the (kind, fp)
-  * meta record under `<root>/meta`, the content fingerprint, and the
-  * lifecycle verbs (invalidate, isCurrent/buildIfStale, the absorbs,
-  * the staged compact, the AvailableNow drain of a staged feed).
+  * meta record — one JSON object in `<root>/meta.json`, written and read
+  * through the [[record]] verbs without a Spark job — the content
+  * fingerprint, and the lifecycle verbs (invalidate,
+  * isCurrent/buildIfStale, the absorbs, the staged compact, the
+  * AvailableNow drain of a staged feed).
   * A store keeps only its tables, partials, fold and read verbs, and
   * passes its staleness ladder as a predicate over the meta rows.
   *
@@ -37,7 +44,7 @@ private[graft] object StoreMeta {
   }
 
   def delete(s: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
@@ -61,73 +68,73 @@ private[graft] object StoreMeta {
     * [[Store.compact]] flips the meta torn BEFORE the swap, so a failure
     * between them reads as torn and the next lifecycle heals by rebuild. */
   def swapIn(s: SparkSession, staging: String, live: String): Unit = {
-    val src = new org.apache.hadoop.fs.Path(staging)
+    val src = new Path(staging)
     val fs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(live)
+    val dst = new Path(live)
     fs.delete(dst, true)
     if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"swap rename $src -> $dst failed")
+      throw new IOException(s"swap rename $src -> $dst failed")
   }
 
-  /** Built from Rows against a fixed schema: a tuple `toDF` derives its
-    * encoder by Scala reflection on every call, which a store lifecycle
-    * pays on each meta write. */
+  /** The one COMMIT-RECORD device of `graft.queries` and
+    * `graft.similarity`: a record is a few bytes in one file, read and
+    * written through the Hadoop FileSystem of the path — no Spark job.
+    * None only when nothing is at `path` (never written, or deleted by
+    * an invalidation); a directory there, or bytes the FileSystem cannot
+    * read, throw: a present record that fails to read is a present-store
+    * problem, never a silent "rebuild me". */
+  def record(s: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val st = try fs.getFileStatus(p) catch { case _: FileNotFoundException => return None }
+    if (st.isDirectory) throw new IOException(s"record $p is a directory")
+    val in = fs.open(p)
+    try Some(new String(in.readAllBytes(), UTF_8)) finally in.close()
+  }
+
+  /** Replace the record at `path` with `body`: write a hidden temp
+    * sibling (`.`-prefixed, so the file stream source and parquet
+    * listings skip it, as they skip one a dead writer leaves), then
+    * rename it over `path`. A reader sees the old record or the new one;
+    * only where the FileSystem's rename refuses an existing target (HDFS)
+    * is the old one deleted first, and a crash in that window leaves no
+    * record — which every caller reads as unbuilt or stale. */
+  def putRecord(s: SparkSession, path: String, body: String): Unit = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val tmp = new Path(p.getParent, s".${p.getName}.${java.util.UUID.randomUUID}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(body.getBytes(UTF_8)) finally out.close()
+    if (!fs.rename(tmp, p) && !(fs.delete(p, false) && fs.rename(tmp, p)))
+      throw new IOException(s"record rename $tmp -> $p failed")
+  }
+
+  private def metaPath(path: String): String = s"$path/meta.json"
+
+  /** The meta rows as one JSON object in `<path>/meta.json`. */
   def write(s: SparkSession, path: String,
-      rows: Seq[(String, String)]): Unit = {
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.map { case (k, v) => Row(k, v) }.asJava, metaSchema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+      rows: Seq[(String, String)]): Unit =
+    putRecord(s, metaPath(path), JsonMethods.compact(JsonMethods.render(
+      JObject(rows.map { case (k, v) => k -> JString(v) }.toList))))
 
-  private val metaSchema = StructType(Seq(
-    StructField("kind", StringType), StructField("fp", StringType)))
-
-  /** The two AnalysisException conditions that genuinely mean "meta was
-    * never written": a nonexistent path, and a dir holding no readable
-    * parquet footers (the crashed-mid-write sidecar-only shape — Spark
-    * cannot infer a schema from _SUCCESS alone). Every OTHER condition
-    * an AnalysisException can carry (access/permission surfaced through
-    * the analyzer, schema-resolution failures, a null legacy condition)
-    * is a present-store problem and must rethrow. Factored on the
-    * condition STRING so the classifier is directly spec-able. */
-  private[queries] def benignMetaCondition(condition: String): Boolean =
-    condition == "PATH_NOT_FOUND" || condition == "UNABLE_TO_INFER_SCHEMA"
-
-  /** MISSING or WRONG-SHAPED meta reads as EMPTY — the stale default
-    * every ladder rebuilds from. Two benign classes:
-    *   - missing/never-written: an existence probe first (a missing
-    *     meta — every first build and every invalidated store — never
-    *     reaches the scan, whose directory probe would log a WARN with
-    *     a full FileNotFoundException trace); then, for a meta deleted
-    *     between the probe and the read, FileNotFound from the scan or
-    *     Spark's AnalysisException carrying one of the two
-    *     never-written conditions ([[benignMetaCondition]]);
-    *   - legacy/foreign LAYOUT: a readable parquet whose schema is not
-    *     two leading string columns — the pre-kernel `fp` and
-    *     `(fp, pristine)` stamps, which therefore rebuild once on first
-    *     use. The shape is checked BEFORE collecting so the heal stays a
-    *     schema decision, never an exception-classification one.
-    * Any OTHER failure rethrows: a transient IO error (corrupt footer,
-    * permission failure) swallowed as "empty" would silently trigger a
-    * full store rebuild instead of a retry — the opposite of the
-    * refuse-loudly policy the commit log enforces for the same class of
-    * failure. This is the ONLY meta read in the package. */
-  def rows(s: SparkSession, path: String): Map[String, String] = {
-    val meta = new org.apache.hadoop.fs.Path(s"$path/meta")
-    if (!meta.getFileSystem(s.sparkContext.hadoopConfiguration).exists(meta))
-      return Map.empty
-    val df =
-      try s.read.parquet(meta.toString)
-      catch {
-        case _: java.io.FileNotFoundException => return Map.empty
-        case e: org.apache.spark.sql.AnalysisException
-            if benignMetaCondition(e.getCondition) => return Map.empty
+  /** A MISSING meta reads as EMPTY — the stale default every ladder
+    * rebuilds from (never built, invalidated, or a `meta/` parquet dir
+    * from before the JSON record, which is never read). A present meta
+    * that is not a JSON object of strings throws: swallowed as "empty",
+    * a torn or foreign record would silently trigger a full store
+    * rebuild — the opposite of the refuse-loudly policy the commit log
+    * enforces for the same class of failure. This is the ONLY meta read
+    * in the package. */
+  def rows(s: SparkSession, path: String): Map[String, String] =
+    record(s, metaPath(path)).fold(Map.empty[String, String]) { body =>
+      def bad = throw new IllegalStateException(
+        s"store meta ${metaPath(path)} is not a JSON object of strings: $body")
+      JsonMethods.parseOpt(body) match {
+        case Some(JObject(fields)) =>
+          fields.map { case (k, JString(v)) => k -> v; case _ => bad }.toMap
+        case _ => bad
       }
-    val shapeOk = df.schema.length >= 2 &&
-      df.schema.take(2).forall(_.dataType == StringType)
-    if (!shapeOk) return Map.empty // legacy/foreign layout ⇒ stale
-    df.collect().map(r => (r.getString(0), r.getString(1))).toMap
-  }
+    }
 
   /** Values a verb leaves behind when it dies mid-write. */
   val torn: Set[String] = Set("absorbing", "compacting", "purging")
@@ -175,7 +182,7 @@ private[graft] object StoreMeta {
       * store-owned invalidation verb ([[StoreTxn]] invalidates through it
       * instead of carving paths from outside). */
     def invalidate(s: SparkSession, dir: String, variant: String = ""): Unit =
-      delete(s, s"${root(dir, variant)}/meta")
+      delete(s, metaPath(root(dir, variant)))
 
     /** Absorb a batch the store cannot fingerprint-verify. The meta
       * becomes the one OPAQUE row `batch1 = absorbed` BEFORE `append`
@@ -248,19 +255,28 @@ private[graft] object StoreMeta {
       ticks: (() => DataFrame)*): Unit = {
     val feed = root(s"${name}_feed", dir)
     Tables.stagedOnce(s, dir, feed, s"${name}_feed;ticks=${ticks.size}") { () =>
-      val feedPath = new org.apache.hadoop.fs.Path(feed)
-      val fs = feedPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       val base = System.currentTimeMillis() - 3600000L
       var seen = Set.empty[String]
       ticks.zipWithIndex.foreach { case (tick, i) =>
         tick().coalesce(1)
           .write.mode(if (i == 0) "overwrite" else "append").parquet(feed)
-        val fresh = fs.listStatus(feedPath).filter(st =>
-          st.getPath.getName.startsWith("part-") && !seen(st.getPath.getName))
-        fresh.foreach(st => fs.setTimes(st.getPath, base + 60000L * i, -1))
-        seen ++= fresh.map(_.getPath.getName)
+        seen = touchParts(s, feed, seen)(_ => base + 60000L * i)
       }
     }
+  }
+
+  /** Order a staged feed for `maxFilesPerTrigger=1` replay: set the
+    * mtime of each `part-` file under `dir` not in `seen` to `mtime(j)`,
+    * j its rank by name among them, through the Hadoop FileSystem; return
+    * every part name now under `dir`. */
+  private[queries] def touchParts(s: SparkSession, dir: String, seen: Set[String] = Set.empty)(
+      mtime: Int => Long): Set[String] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val parts = fs.listStatus(p).map(_.getPath).filter(_.getName.startsWith("part-"))
+    parts.filterNot(f => seen(f.getName)).sortBy(_.getName).zipWithIndex
+      .foreach { case (f, j) => fs.setTimes(f, mtime(j), -1) }
+    seen ++ parts.map(_.getName)
   }
 
   /** Drain the staged feed `<tmpdir>/graft_<name>_feed_<h>` to completion:

@@ -120,6 +120,26 @@ object Streaming {
     s.table(table)
   }
 
+  /** Time-range files per staged topic. Two is the measured sweet spot:
+    * each micro-batch carries ~600-800 ms of FIXED cost at local[32]
+    * (profiled per-batch: addBatch dominates and is flat for 0-row
+    * batches — scheduler + state-commit floor, provider-independent),
+    * so batch count is what the replay pays for. Two ranges + two
+    * sentinels + the trailing no-data flush = 5 batches, preserving
+    * every eviction regime the 4-range feed exercised: nulls emit
+    * across a REAL data-data boundary (range-1 clicks whose window
+    * closes under range-2's watermark), a data-sentinel boundary, and
+    * the sentinel-sentinel terminal flush. Bust-on-change: the value
+    * is folded into the staging stamp below. */
+  private val feedRanges = 2
+
+  /** Stamps whose events table already passed the sentinel-domain
+    * check — keyed on (dir, [[Tables.dirStamp]] of the events table) so a
+    * regenerated corpus re-checks. Bounded: one short string per corpus
+    * state seen. */
+  private val sentinelDomainChecked =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** Stage the events table as `feedRanges` time-range parquet files
     * plus two far-future SENTINEL rows, with strictly increasing file
     * mtimes in range order — the multi-batch, watermark-advancing feed
@@ -138,112 +158,60 @@ object Streaming {
     * stream reads the live event log and new arrivals play the sentinel's
     * role; this staging exists only to make a bounded replay behave like
     * one. */
-  /** Cheap file-stat stamp of a source table — (name, length, mtime) of
-    * every data file under `$dir/<table>.parquet`. Metadata only (no
-    * Spark job): the corpora are generated once and immutable, so a
-    * stat change is exactly a corpus regeneration. Resolved through the
-    * Hadoop FileSystem, not java.io.File: a scheme-qualified data dir
-    * (`file:/…`, `hdfs:/…`) makes java.io probes silently false — the
-    * stamp would go CONSTANT and a regenerated corpus would keep
-    * replaying the stale staged feed — and a permission failure must
-    * throw, not NPE (java.io listFiles returns null on IO error). */
-  private def sourceStamp(s: SparkSession, dir: String, table: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def files(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files)
-      else Seq(st)
-    files(fs.getFileStatus(p)).sortBy(_.getPath.toString)
-      .map(x => s"${x.getPath.getName}:${x.getLen}:${x.getModificationTime}")
-      .mkString(";")
-  }
-
-  /** Time-range files per staged topic. Two is the measured sweet spot:
-    * each micro-batch carries ~600-800 ms of FIXED cost at local[32]
-    * (profiled per-batch: addBatch dominates and is flat for 0-row
-    * batches — scheduler + state-commit floor, provider-independent),
-    * so batch count is what the replay pays for. Two ranges + two
-    * sentinels + the trailing no-data flush = 5 batches, preserving
-    * every eviction regime the 4-range feed exercised: nulls emit
-    * across a REAL data-data boundary (range-1 clicks whose window
-    * closes under range-2's watermark), a data-sentinel boundary, and
-    * the sentinel-sentinel terminal flush. Bust-on-change: the value
-    * is folded into the staging stamp below. */
-  private val feedRanges = 2
-
-  /** Stamps whose events table already passed the sentinel-domain
-    * check — keyed on (dir, content stamp) so a regenerated corpus
-    * re-checks. Bounded: one short string per corpus state seen. */
-  private val sentinelDomainChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private def stagedEventsDir(s: SparkSession, dir: String, eventType: String): String = {
     val out = StoreMeta.root(s"staged_$eventType", dir)
+    val events = s"$dir/events.parquet"
     // The staged feed is DETERMINISTIC per corpus (content + relative
     // mtime order; the file source replays oldest-first regardless of
     // absolute age) — re-staging every bench lap pays three write jobs
-    // per topic for bytes that cannot differ. The `_staged_meta` stamp
-    // (written LAST, so a crashed staging re-stages) skips the whole
-    // staging when the source table's file stats are unchanged; the
-    // underscore prefix keeps it invisible to the file stream source.
-    val stamp = s"${sourceStamp(s, dir, "events")};ranges=$feedRanges"
-    val meta = new java.io.File(out, "_staged_meta")
-    if (meta.isFile && new String(
-        java.nio.file.Files.readAllBytes(meta.toPath),
-        java.nio.charset.StandardCharsets.UTF_8) == stamp)
-      return out
-    val ev = Tables.t(s, dir, "events")
-    // SENTINEL DOMAIN GUARD (r19 ADVICE): the q104 outer join excludes
-    // the sentinel rows by `click_id >= 0` and relies on user_id = -1
-    // never matching — sound only while real data never enters the
-    // negative-id range. A corpus that does would have genuine
-    // unmatched clicks silently dropped, so staging refuses loudly
-    // instead. The property is per-TABLE, not per-topic, so the check
-    // memoizes on the source stamp: one aggregate per (corpus, content)
-    // per JVM, not one per staged topic.
-    val sentinelKey = s"$dir;${sourceStamp(s, dir, "events")}"
-    if (!sentinelDomainChecked.contains(sentinelKey)) {
-      val negatives = ev.where(col("event_id") < 0 || col("user_id") < 0).count()
-      require(negatives == 0L,
-        s"events table at $dir carries $negatives rows with negative " +
-          "event_id/user_id — the staged-feed sentinels (event_id/user_id " +
-          "= -1) would collide with real data; regenerate the corpus or " +
-          "move the sentinel domain")
-      // Memoize only AFTER the require passes: adding the key first would
-      // leave a FAILED check memoized, so a same-JVM retry against the
-      // same colliding corpus would silently skip the guard and stage the
-      // feed — the silent unmatched-click drop the guard exists to refuse.
-      sentinelDomainChecked.add(sentinelKey)
+    // per topic for bytes that cannot differ, so it stages once per
+    // events-table stamp ([[Tables.stagedOnce]]).
+    Tables.stagedOnce(s, events, out, s"ranges=$feedRanges") { () =>
+      val ev = Tables.t(s, dir, "events")
+      // SENTINEL DOMAIN GUARD (r19 ADVICE): the q104 outer join excludes
+      // the sentinel rows by `click_id >= 0` and relies on user_id = -1
+      // never matching — sound only while real data never enters the
+      // negative-id range. A corpus that does would have genuine
+      // unmatched clicks silently dropped, so staging refuses loudly
+      // instead. The property is per-TABLE, not per-topic, so the check
+      // memoizes on the source stamp: one aggregate per (corpus, content)
+      // per JVM, not one per staged topic.
+      val sentinelKey = s"$dir;${Tables.dirStamp(s, events)}"
+      if (!sentinelDomainChecked.contains(sentinelKey)) {
+        val negatives = ev.where(col("event_id") < 0 || col("user_id") < 0).count()
+        require(negatives == 0L,
+          s"events table at $dir carries $negatives rows with negative " +
+            "event_id/user_id — the staged-feed sentinels (event_id/user_id " +
+            "= -1) would collide with real data; regenerate the corpus or " +
+            "move the sentinel domain")
+        // Memoize only AFTER the require passes: adding the key first would
+        // leave a FAILED check memoized, so a same-JVM retry against the
+        // same colliding corpus would silently skip the guard and stage the
+        // feed — the silent unmatched-click drop the guard exists to refuse.
+        sentinelDomainChecked.add(sentinelKey)
+      }
+      ev.where(col("event_type") === eventType)
+        .repartitionByRange(feedRanges, col("ts")).write.mode("overwrite").parquet(out)
+      val base = System.currentTimeMillis() - 3600000L
+      var seen = StoreMeta.touchParts(s, out)(j => base + j * 1000L)
+      // TWO sentinel files, two micro-batches beyond the data: the
+      // watermark only moves BETWEEN batches, and an outer row's null
+      // emission lands in the batch after the one whose watermark closed
+      // its window — with a single sentinel exactly the max-ts click stays
+      // unemitted (observed). Sentinel ts derives from the UNFILTERED
+      // events max so both per-type feeds advance past the same instant;
+      // its user_id −1 never matches, and the left sentinel's own
+      // unmatched emission is dropped by the query's output filter.
+      for (i <- 1 to 2) {
+        ev.agg(max(col("ts")).as("mts"))
+          .selectExpr("cast(-1 AS bigint) AS event_id",
+            s"mts + INTERVAL ${240 * i} HOURS AS ts", "cast(-1 AS bigint) AS user_id",
+            s"'$eventType' AS event_type", "cast(0.0 AS double) AS value",
+            "cast(null AS string) AS props")
+          .coalesce(1).write.mode("append").parquet(out)
+        seen = StoreMeta.touchParts(s, out, seen)(_ => base + 1000000L * i)
+      }
     }
-    ev.where(col("event_type") === eventType)
-      .repartitionByRange(feedRanges, col("ts")).write.mode("overwrite").parquet(out)
-    val fs = new java.io.File(out)
-    def parts = fs.listFiles().filter(f => f.getName.startsWith("part-"))
-    val base = System.currentTimeMillis() - 3600000L
-    val ranges = parts.sortBy(_.getName)
-    ranges.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 1000L) }
-    // TWO sentinel files, two micro-batches beyond the data: the
-    // watermark only moves BETWEEN batches, and an outer row's null
-    // emission lands in the batch after the one whose watermark closed
-    // its window — with a single sentinel exactly the max-ts click stays
-    // unemitted (observed). Sentinel ts derives from the UNFILTERED
-    // events max so both per-type feeds advance past the same instant;
-    // its user_id −1 never matches, and the left sentinel's own
-    // unmatched emission is dropped by the query's output filter.
-    var seen = ranges.map(_.getName).toSet
-    for (i <- 1 to 2) {
-      Tables.t(s, dir, "events").agg(max(col("ts")).as("mts"))
-        .selectExpr("cast(-1 AS bigint) AS event_id",
-          s"mts + INTERVAL ${240 * i} HOURS AS ts", "cast(-1 AS bigint) AS user_id",
-          s"'$eventType' AS event_type", "cast(0.0 AS double) AS value",
-          "cast(null AS string) AS props")
-        .coalesce(1).write.mode("append").parquet(out)
-      val fresh = parts.filterNot(f => seen.contains(f.getName))
-      fresh.foreach(_.setLastModified(base + 1000000L * i))
-      seen ++= fresh.map(_.getName)
-    }
-    java.nio.file.Files.write(meta.toPath,
-      stamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out
   }
 
@@ -434,13 +402,7 @@ object Streaming {
     "q120_stream_to_graftbin" -> ((s, dir) => {
       val sink = StoreMeta.root("binsink", dir)
       val ckpt = StoreMeta.root("binsink_ckpt", dir)
-      for (d <- Seq(sink, ckpt)) {
-        def rm(x: java.io.File): Unit = {
-          if (x.isDirectory) x.listFiles().foreach(rm)
-          x.delete()
-        }
-        rm(new java.io.File(d))
-      }
+      for (d <- Seq(sink, ckpt)) StoreMeta.delete(s, d)
       val raw = s.read.parquet(s"$dir/documents.parquet")
       val q = s.readStream.schema(raw.schema).parquet(s"$dir/documents*.parquet")
         .select(col("doc_id"), col("lang"), col("text"), col("n_chars"))
@@ -493,17 +455,9 @@ object Streaming {
       // arrival order to pin exactly this)
       Tables.t(s, dir, "events")
         .repartitionByRange(4, col("ts")).write.mode("overwrite").parquet(staged)
-      val parts = new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
       val base = System.currentTimeMillis() - 3600000L
-      parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 1000L) }
-      for (d <- Seq(stateRoot, ckpt)) {
-        def rm(x: java.io.File): Unit = {
-          if (x.isDirectory) x.listFiles().foreach(rm)
-          x.delete()
-        }
-        rm(new java.io.File(d))
-      }
+      StoreMeta.touchParts(s, staged)(j => base + j * 1000L)
+      for (d <- Seq(stateRoot, ckpt)) StoreMeta.delete(s, d)
       val schema = s.read.parquet(staged).schema
       val stream = Tables.streamTsFixup(
         s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(staged))

@@ -70,7 +70,10 @@ object Tables {
   private val fpMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
-  private def dirStamp(s: SparkSession, dir: String): String = {
+  /** The one file stamp: (name, length, mtime) of every file under
+    * `dir`, recursively, through the Hadoop FileSystem of the path — a
+    * metadata sweep, no Spark job. A missing `dir` throws. */
+  private[graft] def dirStamp(s: SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     def walk(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
@@ -103,32 +106,17 @@ object Tables {
     * (r21): several streaming lifecycles re-wrote identical mtime-ordered
     * feed files every lap (two to three write jobs per lap for bytes
     * that cannot differ). `stage` must write the feed files AND set
-    * their relative mtimes; the meta stamp (source-dir stat sweep +
-    * caller tag) is written LAST so a crashed staging re-stages, and any
-    * corpus change moves the stamp and re-stages. The underscore-
-    * prefixed meta file is invisible to the file stream source. */
+    * their relative mtimes; the `<feed>/_staged_meta` record
+    * ([[StoreMeta.putRecord]]: the [[dirStamp]] of `srcDir` + caller tag)
+    * is written LAST so a crashed staging re-stages, and any source
+    * change moves the stamp and re-stages. The underscore-prefixed
+    * record is invisible to the file stream source. */
   private[queries] def stagedOnce(s: SparkSession, srcDir: String,
       feed: String, tag: String)(stage: () => Unit): Unit = {
     val stamp = s"${dirStamp(s, srcDir)};$tag"
-    // The stamp goes through the Hadoop FileSystem like every other
-    // staging path (ADVICE r21): a scheme-qualified feed dir would make
-    // java.io probes silently false — the memo would never hit and the
-    // write would throw — while the Hadoop API follows the feed wherever
-    // the staging itself can write.
-    val meta = new org.apache.hadoop.fs.Path(feed, "_staged_meta")
-    val fs = meta.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val hit = fs.exists(meta) && {
-      val in = fs.open(meta)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 4096, false)
-        new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8) == stamp
-      } finally in.close()
-    }
-    if (hit) return
+    val meta = s"$feed/_staged_meta"
+    if (StoreMeta.record(s, meta).contains(stamp)) return
     stage()
-    val out = fs.create(meta, true)
-    try out.write(stamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    StoreMeta.putRecord(s, meta, stamp)
   }
 }

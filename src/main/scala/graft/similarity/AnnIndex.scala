@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.queries.StoreMeta
+
 /**
  * The persist-and-probe core of the four ANN tiers. A real deployment
  * builds an index ONCE next to the data and every query session loads
@@ -16,11 +18,14 @@ import org.json4s.jackson.JsonMethods
  *
  * Layout under `<path>/`, the same for every tier:
  *
- *  - `metadata/` — one JSON row: the method, the tier's knobs (including
- *    query-side ones such as LSH's vote threshold, which change results,
- *    so a loader never guesses them), `dim`, `trainedRows` for the tiers
- *    with a drift bound, and the corpus fingerprint and listing digest.
- *    It is the COMMIT RECORD;
+ *  - `metadata.json` — one JSON object, written and read through
+ *    [[StoreMeta.putRecord]]/[[StoreMeta.record]] (no Spark job): the
+ *    method, the tier's knobs (including query-side ones such as LSH's
+ *    vote threshold, which change results, so a loader never guesses
+ *    them), `dim`, `trainedRows` for the tiers with a drift bound, the
+ *    corpus fingerprint, and the corpus file listing row by row
+ *    ([[corpusListing]]) for the staleness and adds-only guards. It is the
+ *    COMMIT RECORD;
  *  - `model/` — the geometry: (plane_id, weights) hyperplanes for LSH,
  *    (list_id, center) centroids for IVF, (sub_id, code_id, center)
  *    codebooks for PQ, and for IVF-PQ both, tagged by a `kind` column.
@@ -32,12 +37,14 @@ import org.json4s.jackson.JsonMethods
  *    exact-scored tiers never duplicate embeddings — queries join back to
  *    the corpus on vec_id, which stays the single source of truth for
  *    vectors; the PQ codes ARE the compressed representation the scan
- *    reads;
- *  - `listing/` — the corpus file listing, row by row, for the adds-only
- *    guard.
+ *    reads.
+ *
+ * An index written before `metadata.json` (a Spark-text `metadata/` dir
+ * and a `listing/` parquet) has no commit record, so it reads stale and
+ * the heal rebuilds it once; the old dirs stay in place unread.
  *
  * CRASH BRACKET: every verb that mutates an index deletes the metadata
- * FIRST and writes it LAST ([[clearMeta]]). Every interrupted prefix —
+ * FIRST and writes it LAST. Every interrupted prefix —
  * model written, assignments half-written or half-appended — is then an
  * index the loaders refuse (no metadata, or an old fingerprint that
  * mismatches the live corpus), and the build-if-stale retry heals it; a
@@ -59,29 +66,11 @@ import org.json4s.jackson.JsonMethods
  */
 object AnnIndex {
 
-  private def writeMeta(s: SparkSession, path: String, json: String): Unit = {
-    import s.implicits._
-    s.createDataset(Seq(json)).repartition(1).write.mode("overwrite").text(s"$path/metadata")
-  }
+  private def metaPath(path: String): String = s"$path/metadata.json"
 
-  /** Invalidate the index BEFORE a rebuild touches any artifact: with the
-    * metadata gone, every interrupted rebuild prefix — model written,
-    * assignments half-written, anything — is an index the loaders refuse
-    * (readMeta fails loud), never one that validates over mixed-build
-    * artifacts. Paired with writing metadata LAST in every mutating verb,
-    * the (delete-meta, build, write-meta) bracket makes the fingerprint
-    * guard crash-safe for corpus AND knob changes alike. */
-  private def clearMeta(s: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/metadata")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  private def readMeta(s: SparkSession, path: String): JValue = {
-    import s.implicits._
-    JsonMethods.parse(
-      s.read.text(s"$path/metadata").as[String].collect().mkString("\n"))
-  }
+  /** The commit record, None when absent. */
+  private def record(s: SparkSession, path: String): Option[JValue] =
+    StoreMeta.record(s, metaPath(path)).map(JsonMethods.parse(_))
 
   /**
    * Cheap corpus fingerprint, written into index metadata at save and
@@ -114,6 +103,9 @@ object AnnIndex {
     (idRow.getLong(0), idRow.getLong(1) ^ contentChk)
   }
 
+  /** One [[corpusListing]] row: (relative name, length, mtime, checksum). */
+  private[similarity] type Entry = (String, Long, Long, String)
+
   /**
    * FILE-LEVEL corpus listing: (relative name, length, modificationTime,
    * checksum) of every DATA file under the corpus parquet (Spark's
@@ -137,12 +129,11 @@ object AnnIndex {
    * validates — for content-addressed or mtime-less stores the 1% sample
    * is the only content guard, which is why it stays alongside.
    */
-  private[similarity] def corpusListing(
-      s: SparkSession, dir: String): Seq[(String, Long, Long, String)] = {
+  private[similarity] def corpusListing(s: SparkSession, dir: String): Seq[Entry] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val base = p.toUri.getPath
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, String)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[Entry]
     val it = fs.listFiles(p, true)
     while (it.hasNext) {
       val st = it.next()
@@ -167,40 +158,23 @@ object AnnIndex {
     out.sortBy(_._1).toSeq
   }
 
-  /** Order-canonical md5 of a [[corpusListing]] — the value persisted in
-    * index metadata and compared at load. */
-  private[similarity] def listingDigest(
-      entries: Seq[(String, Long, Long, String)]): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.map { case (n, l, m, c) => s"$n:$l:$m:$c" }.mkString("\n")
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+  private def listingJson(entries: Seq[Entry]): JArray =
+    JArray(entries.map { case (n, l, m, c) =>
+      JArray(List(JString(n), JInt(l), JInt(m), JString(c))) }.toList)
 
-  /** The digest an index persisted BEFORE the checksum field existed
-    * (name:len:mtime only). Validation accepts it so a fleet upgrade does
-    * not flip every existing current index stale at once — the
-    * simultaneous full re-index storm that a digest-format change would
-    * otherwise cause on deploy. Appends still REQUIRE the checksummed
-    * listing ([[appendableNewRows]] refuses pre-chk listings), so the
-    * stronger per-file proof is mandatory exactly where a weaker one
-    * could corrupt the index rather than merely serve it. */
-  private[similarity] def legacyListingDigest(
-      entries: Seq[(String, Long, Long, String)]): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.map { case (n, l, m, _) => s"$n:$l:$m" }.mkString("\n")
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-
-  /** The listing is ALSO persisted row-by-row (not only as a digest) under
-    * `<path>/listing`, because [[append]] needs to verify
-    * per-file that nothing the index was built over changed — a digest can
-    * only say "something differs", not "only additions happened". */
-  private def writeListing(s: SparkSession, path: String,
-      entries: Seq[(String, Long, Long, String)]): Unit = {
-    import s.implicits._
-    s.createDataset(entries).toDF("name", "len", "mtime", "chk")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/listing")
+  /** The listing the record saved, in [[corpusListing]]'s order. */
+  private def listingOf(meta: JValue): Seq[Entry] = meta \ "corpusListing" match {
+    case JArray(rows) => rows.map { row =>
+      val JArray(List(JString(n), JInt(l), JInt(m), JString(c))) = row
+      (n, l.toLong, m.toLong, c)
+    }
+    case _ => Nil
   }
+
+  /** The first entry of `a` that `b` lacks ("-" when none), for the stale
+    * message. */
+  private def firstMissing(a: Seq[Entry], b: Seq[Entry]): String =
+    a.find(e => !b.contains(e)).fold("-")(_.toString)
 
   /** Validate a loaded index against the live corpus; throws with a
     * rebuild hint on mismatch. Indexes written before the fingerprint
@@ -211,18 +185,13 @@ object AnnIndex {
     implicit val formats: Formats = DefaultFormats
     // FILE-LISTING check first: zero data read, and it catches every
     // rewrite the 1% content sample is blind to (see corpusListing).
-    val savedListing = (meta \ "corpusListing").extractOpt[String]
-    val liveEntries = corpusListing(s, dir)
-    val liveListing = listingDigest(liveEntries)
-    // pre-checksum indexes persisted the 3-field digest; accept it for
-    // VALIDATION (the fingerprint check below still runs) so an upgrade
-    // doesn't storm the fleet with simultaneous rebuilds — appends alone
-    // insist on the checksummed listing (see legacyListingDigest).
-    if (!savedListing.contains(liveListing) &&
-        !savedListing.contains(legacyListingDigest(liveEntries)))
+    val savedListing = listingOf(meta)
+    val liveListing = corpusListing(s, dir)
+    if (savedListing != liveListing)
       throw new IllegalStateException(
         s"ANN index at $path is stale for corpus $dir: built over file listing " +
-          s"$savedListing, corpus listing is now $liveListing — ${rebuildHint(meta)}")
+          s"${firstMissing(savedListing, liveListing)}, corpus listing is now " +
+          s"${firstMissing(liveListing, savedListing)} — ${rebuildHint(meta)}")
     val saved = (meta \ "corpusRows").extractOpt[Long]
       .zip((meta \ "corpusChecksum").extractOpt[Long])
     val live = corpusFingerprint(s, dir)
@@ -234,25 +203,25 @@ object AnnIndex {
 
   /** True iff the index at `path` exists, is completely written, and its
     * persisted corpus fingerprint matches `dir`'s current contents. The
-    * COMMIT RECORD is the metadata (deleted first, rewritten LAST by the
-    * saves — see [[clearMeta]]), so readMeta failing covers every
-    * interrupted-rebuild state; the `assignments/_SUCCESS` probe is only
-    * the cheap fast-path existence check before the metadata read. The
-    * probe goes through the Hadoop FileSystem resolved from the path (same
-    * as the save/load paths) — a `java.io.File` probe here would report
-    * every HDFS/S3 index as absent and put remote callers that probe
-    * first into a perpetual-rebuild loop. */
+    * COMMIT RECORD is `metadata.json` (deleted first, rewritten LAST by
+    * the saves), so its absence covers every interrupted-rebuild state;
+    * the `assignments/_SUCCESS` probe is only the cheap fast-path
+    * existence check before the metadata read. Both go through the Hadoop
+    * FileSystem resolved from the path (same as the save/load paths) — a
+    * local-file probe here would report every HDFS/S3 index as absent and
+    * put remote callers that probe first into a perpetual-rebuild loop. */
   def isCurrent(s: SparkSession, dir: String, path: String): Boolean = {
     val success = new org.apache.hadoop.fs.Path(s"$path/assignments/_SUCCESS")
     val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.exists(success) &&
-      (try { requireCurrent(s, dir, path, readMeta(s, path)); true }
+      (try record(s, path).exists { m => requireCurrent(s, dir, path, m); true }
        catch { case _: Exception => false })
   }
 
   /** The HEAL-TIER probe: true only on a DEFINITIVE staleness verdict —
-    * the commit record (metadata) is absent, which by the clearMeta/
-    * meta-LAST bracket covers every interrupted rebuild, or the
+    * the commit record (`metadata.json`) is absent, which by the
+    * delete-first/write-LAST bracket covers every interrupted rebuild and
+    * every index written before the record existed, or the
     * validation itself concluded stale (requireCurrent's
     * IllegalStateException, including unverifiable pre-fingerprint
     * metadata). Anything that prevents the probe from RUNNING — an FS
@@ -268,11 +237,10 @@ object AnnIndex {
   def definitelyStale(s: SparkSession, dir: String, path: String): Boolean = {
     val success = new org.apache.hadoop.fs.Path(s"$path/assignments/_SUCCESS")
     val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) return true
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/metadata"))) return true
-    val meta = readMeta(s, path) // unreadable under a present record: propagate
-    try { requireCurrent(s, dir, path, meta); false }
-    catch { case _: IllegalStateException => true } // infra exceptions propagate
+    !fs.exists(success) || record(s, path).forall { m => // unreadable: propagate
+      try { requireCurrent(s, dir, path, m); false }
+      catch { case _: IllegalStateException => true } // infra exceptions propagate
+    }
   }
 
   /**
@@ -299,21 +267,11 @@ object AnnIndex {
    * full re-index an append exists to avoid.
    */
   private def appendableNewRows(s: SparkSession, dir: String, path: String,
-      meta: JValue): (DataFrame, Seq[(String, Long, Long, String)]) = {
+      meta: JValue): (DataFrame, Seq[Entry]) = {
     implicit val formats: Formats = DefaultFormats
     val liveListing = corpusListing(s, dir)
     val live = liveListing.toSet
-    val listingDf = s.read.parquet(s"$path/listing")
-    // listings written before the checksum column are UNVERIFIABLE for the
-    // per-file adds-only proof — refuse (the caller's rebuild fallback
-    // rewrites the listing in the current shape), same policy as
-    // pre-fingerprint metadata in requireCurrent.
-    if (!listingDf.columns.contains("chk"))
-      throw new IllegalStateException(
-        s"ANN index at $path has a pre-checksum listing — ${rebuildHint(meta)}")
-    val savedListing = listingDf
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3)))
-    val changed = savedListing.filterNot(live.contains)
+    val changed = listingOf(meta).filterNot(live.contains)
     if (changed.nonEmpty)
       throw new IllegalStateException(
         s"ANN index at $path cannot be appended for corpus $dir: " +
@@ -392,7 +350,8 @@ object AnnIndex {
     * at a different index. */
   private def open(s: SparkSession, path: String, method: String,
       verb: String): (JValue, AnnTier) = {
-    val meta = readMeta(s, path)
+    val meta = record(s, path).getOrElse(throw new IllegalStateException(
+      s"$verb for method '$method': no ANN index at $path (no ${metaPath(path)})"))
     val recorded = methodOf(meta)
     if (recorded != method)
       throw new IllegalStateException(
@@ -403,13 +362,13 @@ object AnnIndex {
   private def jsonOf(v: JValue): String = JsonMethods.compact(JsonMethods.render(v))
 
   private def metaJson(t: AnnTier, dim: Int, trainedRows: Long, rows: Long, chk: Long,
-      listing: Seq[(String, Long, Long, String)]): String = {
+      listing: Seq[Entry]): String = {
     import org.json4s.JsonDSL._
     val trained: JObject =
       if (t.driftBound.isDefined) ("trainedRows" -> trainedRows) else JObject()
     jsonOf(("method" -> t.method) ~ t.knobs ~ ("dim" -> dim) ~ trained ~
       ("corpusRows" -> rows) ~ ("corpusChecksum" -> chk) ~
-      ("corpusListing" -> listingDigest(listing)))
+      ("corpusListing" -> listingJson(listing)))
   }
 
   /** Build (or rebuild) the `method` index at its default knobs. */
@@ -418,7 +377,7 @@ object AnnIndex {
 
   /** Build (or rebuild) `tier`'s index for `dir`'s embeddings at `path`:
     * resolve and fit the geometry, then the crash bracket around the
-    * geometry, assignments and listing writes. trainedRows records the
+    * geometry and assignments writes. trainedRows records the
     * corpus size the geometry was fit at; appends advance corpusRows but
     * never trainedRows, so a drift bound always measures growth against
     * the fit, not the last append. */
@@ -429,11 +388,10 @@ object AnnIndex {
     val g = t.fit(s, dir, dim)
     val (rows, chk) = corpusFingerprint(s, dir)
     val listing = corpusListing(s, dir)
-    clearMeta(s, path)
+    StoreMeta.delete(s, metaPath(path))
     t.writeGeometry(s, path, g)
     t.encode(s, g, emb).write.mode("overwrite").parquet(s"$path/assignments")
-    writeListing(s, path, listing)
-    writeMeta(s, path, metaJson(t, dim, rows, rows, chk, listing))
+    StoreMeta.putRecord(s, metaPath(path), metaJson(t, dim, rows, rows, chk, listing))
   }
 
   /**
@@ -476,13 +434,12 @@ object AnnIndex {
     val newAssign = t.encode(s, t.readGeometry(s, path), newRows).persist()
     try {
       newAssign.count()
-      clearMeta(s, path)
+      StoreMeta.delete(s, metaPath(path))
       newAssign.write.mode("append").parquet(s"$path/assignments")
-      writeListing(s, path, liveListing)
       implicit val formats: Formats = DefaultFormats
       // every knob preserved verbatim; only the corpus fields advance
-      writeMeta(s, path, metaJson(t, (meta \ "dim").extract[Int], trainedRows, rows, chk,
-        liveListing))
+      StoreMeta.putRecord(s, metaPath(path), metaJson(t, (meta \ "dim").extract[Int],
+        trainedRows, rows, chk, liveListing))
     } finally newAssign.unpersist(blocking = false)
   }
 
@@ -490,8 +447,8 @@ object AnnIndex {
    * COMPACT an index's assignments: every [[append]] stacks another file
    * layer under `assignments/`, and after months of daily appends each
    * probe pays the listing/open cost of thousands of small files. The
-   * rewrite copies rows verbatim into a few coalesced files — geometry,
-   * listing and metadata are untouched in content — so the compacted
+   * rewrite copies rows verbatim into a few coalesced files — geometry
+   * and metadata are untouched in content — so the compacted
    * index answers BIT-FOR-BIT what the layered one did (AnnIndexSpec pins
    * assignments-set and top-k equality). Every tier keeps its growing
    * table under `assignments/` and writes its geometry once, so one
@@ -506,12 +463,10 @@ object AnnIndex {
     val staging = s"$path/staging_compact"
     s.read.parquet(s"$path/assignments").coalesce(4)
       .write.mode("overwrite").parquet(staging)
-    clearMeta(s, path)
+    StoreMeta.delete(s, metaPath(path))
     s.read.parquet(staging).write.mode("overwrite").parquet(s"$path/assignments")
-    writeMeta(s, path, jsonOf(meta))
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    StoreMeta.putRecord(s, metaPath(path), jsonOf(meta))
+    StoreMeta.delete(s, staging)
   }
 
   /**

@@ -56,39 +56,20 @@ object AnnIvf {
     math.min(65536, math.max(16, 1 << math.max(4, math.min(16, exp))))
   }
 
-  /** Cheap file-level signature of the corpus parquet (file count, total
-    * bytes, max mtime — a directory listing, NO data scan), mixed into
-    * the row-count memo below and [[AnnLloyd.geometry]]'s: a corpus
-    * REPLACED mid-session must not serve the old corpus's memoized row
-    * count or geometry. A rebuilt index would otherwise inherit
-    * old-corpus state under a fresh content fingerprint — the
-    * adaptive-knob regression the memos' round-10 review flagged. Listed
-    * through the Hadoop FileSystem of the path's own scheme (a
-    * java.io.File listing would silently return nothing —
-    * a CONSTANT signature, i.e. no invalidation at all — for file:/hdfs:/
-    * s3a: URIs that spark.read handles fine). The content fingerprint in
-    * AnnIndex stays the load-time guard; this is only memo invalidation,
-    * so the listing-level signature is the right cost. */
-  private[similarity] def corpusSignature(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files =
-      if (fs.exists(p)) fs.listStatus(p).filter(_.isFile)
-      else Array.empty[org.apache.hadoop.fs.FileStatus]
-    s"${files.length}:${files.map(_.getLen).sum}:" +
-      files.map(_.getModificationTime).foldLeft(0L)(math.max)
-  }
-
   /** Memoized corpus row count, keyed by dir and stamped with the file
-    * signature it was computed under — a changed signature recomputes IN
-    * PLACE (one live entry per dir, no growth across replacements). */
+    * stamp of the corpus parquet it was computed under
+    * ([[graft.queries.Tables.dirStamp]] — a listing, no data scan): a
+    * corpus REPLACED mid-session must not serve the old corpus's row
+    * count, or a rebuilt index would inherit old-corpus knobs under a
+    * fresh content fingerprint. A changed stamp recomputes IN PLACE (one
+    * live entry per dir, no growth across replacements). */
   private val corpusCounts =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
   /** Memoized corpus row count (signature-stamped like the fits) —
     * shared with [[AnnPq]]'s adaptive re-rank resolution. */
   private[graft] def corpusCount(s: SparkSession, dir: String): Long = {
-    val sig = corpusSignature(s, dir)
+    val sig = graft.queries.Tables.dirStamp(s, s"$dir/embeddings.parquet")
     corpusCounts.compute(dir, (d, prev) =>
       if (prev != null && prev._1 == sig) prev
       else (sig, s.read.parquet(s"$d/embeddings.parquet").count()))._2

@@ -27,9 +27,9 @@ object AnnLloyd {
   /** Lloyd rounds after the k-means++ seeding (MLlib's maxIter default). */
   val rounds = 10
 
-  /** Fitted geometries keyed by (dir, the fit's own knobs) and STAMPED with
-    * [[AnnIvf.corpusSignature]], so a corpus replaced under the same dir
-    * refits in place. A refit (one sample job plus ~0.6 s of arithmetic
+  /** Fitted geometries keyed by (dir, the fit's own knobs) and STAMPED
+    * with the corpus parquet's [[graft.queries.Tables.dirStamp]], so a
+    * corpus replaced under the same dir refits in place. A refit (one sample job plus ~0.6 s of arithmetic
     * for sf0.1's IVF) still costs more than a q49 probe. */
   private val fits =
     new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Any)]()
@@ -41,7 +41,7 @@ object AnnLloyd {
     * rows per centroid of the largest codebook, at most [[maxSample]]. */
   private[similarity] def geometry[G](s: SparkSession, dir: String, key: String,
       centroids: Int)(fit: Array[Array[Double]] => G): G = {
-    val sig = AnnIvf.corpusSignature(s, dir)
+    val sig = graft.queries.Tables.dirStamp(s, s"$dir/embeddings.parquet")
     fits.compute((dir, key), (_, prev) => if (prev != null && prev._1 == sig) prev
       else (sig, fit(sample(s, dir, math.min(maxSample, perCentroid * centroids)))))._2
       .asInstanceOf[G]

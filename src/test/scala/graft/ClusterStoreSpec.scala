@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.queries.{Caches, ClusterStore}
+import graft.queries.{Caches, ClusterStore, StoreMeta}
 
 /**
  * Steady-state contract of the cluster-profile store (q211/q212): the
@@ -67,12 +67,9 @@ class ClusterStoreSpec extends AnyFunSuite {
     val p1 = profile
     // plant the crash: meta says an absorb is in flight (the partial
     // layer may or may not have landed — both must heal identically)
-    val metaPath = s"${ClusterStore.root(sf, v)}/meta"
-    val base = spark.read.parquet(metaPath)
-      .where(col("kind") === "base").head().getString(1)
-    import spark.implicits._
-    Seq(("base", base), ("batch1", "absorbing")).toDF("kind", "fp")
-      .coalesce(1).write.mode("overwrite").parquet(metaPath)
+    val root = ClusterStore.root(sf, v)
+    val base = StoreMeta.rows(spark, root)("base")
+    StoreMeta.write(spark, root, Seq("base" -> base, "batch1" -> "absorbing"))
     assert(!ClusterStore.isCurrent(spark, sf, v),
       "a torn absorb read as current")
     // compact must REFUSE on the torn meta: folding now could bless a

@@ -108,10 +108,10 @@ class DedupIndexSpec extends AnyFunSuite {
     // append-only: every pre-existing store file is untouched
     val postAbsorb = storeFiles(path)
     // _SUCCESS markers (and their .crc sidecars) are rewritten by any
-    // append commit, and meta/ is the mutable commit record absorb
+    // append commit, and meta.json is the mutable commit record absorb
     // updates by design — the append-only contract is on the DATA files
     // of exact/, bands/, and shingles/
-    for ((f, t) <- preAbsorb if !f.contains("_SUCCESS") && !f.contains("/meta/"))
+    for ((f, t) <- preAbsorb if !f.contains("_SUCCESS") && !f.contains("meta.json"))
       assert(postAbsorb.get(f).contains(t), s"absorb rewrote store file $f")
 
     // the same batch re-judged: every previously-kept doc now matches

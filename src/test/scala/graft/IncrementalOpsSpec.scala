@@ -211,9 +211,7 @@ class IncrementalOpsSpec extends AnyFunSuite {
 
   test("StatsStore staleness: a foreign fingerprint forces rebuild") {
     StatsStore.buildIfStale(spark, sf)
-    import spark.implicits._
-    Seq("bogus:fp").toDF("fp").coalesce(1)
-      .write.mode("overwrite").parquet(s"${StatsStore.root(sf)}/meta")
+    graft.queries.StoreMeta.write(spark, StatsStore.root(sf), Seq("base" -> "bogus:fp"))
     assert(!StatsStore.isCurrent(spark, sf), "foreign fingerprint read as current")
     StatsStore.buildIfStale(spark, sf)
     assert(StatsStore.isCurrent(spark, sf), "rebuild must restore currency")

@@ -260,7 +260,7 @@ class TxStoreSpec extends AnyFunSuite {
     StoreTxn.absorbBoth(spark, sf, DedupIndex.batch2Docs(spark, sf),
       statsDelta("doc_id % 10 = 9"))
     fs.delete(new org.apache.hadoop.fs.Path(
-      s"${graft.queries.StatsStore.root(sf, "tx")}/meta"), true)
+      s"${graft.queries.StatsStore.root(sf, "tx")}/meta.json"), true)
     StoreTxn.ensureBases(spark, sf)
     assert(StoreTxn.nextTxnId(spark, sf) == 0L,
       "base rebuild kept the old generation's commit log")

@@ -127,4 +127,27 @@ class IForestRobustnessSpec extends AnyFunSuite {
       messages.mkString("\n"))
     assert(sc.getPersistentRDDs.keySet == before)
   }
+
+  test("null feature vectors: fit skips them, transform scores them null; NaN entries fit") {
+    val vecs = randomVecs(30, 13)
+    val withNulls = vecs.grouped(6).flatMap(_ :+ null).toSeq
+    assert(withNulls.count(_ == null) == 5)
+    def fit(vs: Seq[Vector]) =
+      new IForest().setNumTrees(6).setMaxSamples(16).setSeed(14L).fit(frame(vs))
+    val (clean, mixed) = (fit(vecs), fit(withNulls))
+    assert(mixed.trees.toSeq.map(NodeData.flatten) == clean.trees.toSeq.map(NodeData.flatten))
+    assert(java.lang.Double.doubleToLongBits(mixed.getThreshold) ==
+      java.lang.Double.doubleToLongBits(clean.getThreshold))
+    val scored = mixed.transform(frame(withNulls)).select("features", "anomalyScore").collect()
+    assert(scored.count(_.isNullAt(0)) == 5)
+    assert(scored.forall(r => r.isNullAt(0) == r.isNullAt(1)),
+      "a null vector got a score, or a vector got none")
+    // a NaN in half the rows: feature 0 turns all-NaN below some splits
+    val nan = vecs.zipWithIndex.map { case (v, i) =>
+      if (i % 2 == 0) Vectors.dense(v.toArray.updated(0, Double.NaN)) else v }
+    def nanScores = scores(fit(nan), frame(nan))
+    val first = nanScores
+    assert(first.size == 30 && first.values.forall(x => x > 0.0 && x <= 1.0), first)
+    assert(nanScores == first, "the same seed scored NaN rows differently")
+  }
 }

@@ -118,4 +118,20 @@ class TreeSpec extends AnyFunSuite {
       assert(forest.pathLengthSum(v) == TreeOracle.pathLength(tree, v))
     }
   }
+
+  test("buildTree retires an all-NaN feature instead of splitting it at -Inf or NaN") {
+    def internals(n: IFNode): Seq[IFInternalNode] = n match {
+      case _: IFLeafNode => Nil
+      case i: IFInternalNode => i +: (internals(i.left) ++ internals(i.right))
+    }
+    for (seed <- 0 until 20) {
+      val rng = new Random(seed)
+      val rows = Array.fill(64)(Array(Double.NaN, rng.nextDouble()))
+      val nodes = internals(TreeBuilder.buildTree(rows, 8, Array(0, 1), new Random(seed)))
+      assert(nodes.nonEmpty, s"seed $seed: the finite feature was never split")
+      for (n <- nodes)
+        assert(n.featureIndex == 1 && java.lang.Double.isFinite(n.featureValue),
+          s"seed $seed: split on feature ${n.featureIndex} at ${n.featureValue}")
+    }
+  }
 }

@@ -4,6 +4,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.queries.StoreMeta
 
 /** Round-trip proof for the persisted ANN indexes: an index written to
   * parquet and loaded back must reproduce the live top-k of its tier
@@ -30,6 +31,14 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Int)] =
     df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1),
       java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
+
+  test("annIndexPath keys on the escaped dir plus its md5 fragment (pinned paths)") {
+    val tmpdir = sys.props("java.io.tmpdir")
+    assert(graft.SparkEntry.annIndexPath("/data/x", "lsh_q58") ==
+      s"$tmpdir/graft_ann_index__data_x_8d59db1e8bb75159/lsh_q58")
+    assert(graft.SparkEntry.annIndexPath("/data_x", "lsh_q58") ==
+      s"$tmpdir/graft_ann_index__data_x_610c05327bc3f5ce/lsh_q58")
+  }
 
   test("LSH: persisted index reproduces the live annTopK bit-for-bit") {
     val path = s"$root/lsh"
@@ -197,53 +206,32 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       topkBefore, "compaction changed a topk answer")
   }
 
-  test("upgrade path: a pre-checksum index validates as current but refuses appends") {
-    // Simulate an index persisted BEFORE the listing gained its checksum
-    // field: metadata carries the legacy 3-field digest, the listing
-    // parquet has no chk column. Validation must ACCEPT it (a fleet
-    // upgrade must not flip every current index stale at once — the
-    // simultaneous re-index storm), while the append tier still refuses
-    // (its per-file adds-only proof needs the checksummed listing) and a
-    // REAL corpus change still reads stale through the legacy digest.
-    import org.apache.spark.sql.functions.col
+  test("upgrade path: an index in the pre-record shape is stale and heals by rebuild") {
+    // An index written before the `metadata.json` record: a Spark-text
+    // `metadata/` dir (the listing as a digest) and a `listing/` parquet.
+    // It has no commit record, so the heal probe reads it stale and
+    // annPersistedTopK rebuilds it once; the old dirs stay, unread.
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val corpus = s"$tmp/legacy_corpus"
-    val all = spark.read.parquet(s"$sf/embeddings.parquet")
-    all.filter(col("vec_id") < 400)
-      .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-    val path = s"$root/lsh_legacy"
-    AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
-    // downgrade the persisted shape to the pre-upgrade format
-    val legacy = AnnIndex.legacyListingDigest(AnnIndex.corpusListing(spark, corpus))
-    val js = JsonMethods.parse(
-      spark.read.text(s"$path/metadata").collect().map(_.getString(0)).mkString("\n"))
-    val downgraded = js.transformField {
-      case JField("corpusListing", _) => JField("corpusListing", JString(legacy))
-    }
     import spark.implicits._
-    spark.createDataset(Seq(JsonMethods.compact(JsonMethods.render(downgraded))))
+    val path = s"$root/lsh_preshape"
+    AnnIndex.build(spark, sf, path, "lsh")
+    val js = JsonMethods.parse(StoreMeta.record(spark, s"$path/metadata.json").get)
+      .transformField { case JField("corpusListing", _) =>
+        JField("corpusListing", JString("0123456789abcdef0123456789abcdef")) }
+    spark.createDataset(Seq(JsonMethods.compact(JsonMethods.render(js))))
       .repartition(1).write.mode("overwrite").text(s"$path/metadata")
-    val listing3 = spark.read.parquet(s"$path/listing")
-      .select("name", "len", "mtime").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    spark.createDataset(listing3).toDF("name", "len", "mtime")
+    AnnIndex.corpusListing(spark, sf).toDF("name", "len", "mtime", "chk")
       .repartition(1).write.mode("overwrite").parquet(s"$path/listing")
-    // the pre-upgrade index VALIDATES and serves
-    assert(AnnIndex.isCurrent(spark, corpus, path))
-    assert(AnnIndex.topK(spark, corpus, path, "lsh", numProbes = 5, k = 5)
-      .collect().nonEmpty)
-    // pure growth: stale as usual — but the append tier refuses LOUDLY on
-    // the unverifiable listing instead of guessing adds-only
-    all.filter(col("vec_id") >= 400)
-      .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-    assert(!AnnIndex.isCurrent(spark, corpus, path))
-    val e = intercept[IllegalStateException] { AnnIndex.append(spark, corpus, path, "lsh") }
-    assert(e.getMessage.contains("pre-checksum"), e.getMessage)
-    // the rebuild fallback heals and re-persists the checksummed shape
-    AnnIndex.build(spark, corpus, path, LshTier(numTables = 6, probesPerTable = 64))
-    assert(AnnIndex.isCurrent(spark, corpus, path))
-    assert(spark.read.parquet(s"$path/listing").columns.contains("chk"))
+    StoreMeta.delete(spark, s"$path/metadata.json")
+    assert(AnnIndex.definitelyStale(spark, sf, path))
+    assert(!AnnIndex.isCurrent(spark, sf, path))
+    val healed = rows(graft.SparkEntry.annPersistedTopK(spark, sf, path, "lsh"))
+    assert(healed == rows(AnnLsh.annTopK(spark, sf, numProbes = 5, k = 5)))
+    assert(AnnIndex.isCurrent(spark, sf, path))
+    assert(!AnnIndex.definitelyStale(spark, sf, path))
+    for (old <- Seq("metadata", "listing"))
+      assert(new java.io.File(s"$path/$old").isDirectory, s"the old $old/ dir was removed")
   }
 
   test("LSH append refuses when the change was not a pure add") {
@@ -336,7 +324,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     // simulate the mid-rebuild kill window: metadata deleted, old
     // model/assignments still on disk
-    deleteRec(new java.io.File(s"$path/metadata"))
+    StoreMeta.delete(spark, s"$path/metadata.json")
     assert(!AnnIndex.isCurrent(spark, sf, path))
     intercept[Exception] { AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5).collect() }
     // rebuild heals and reproduces the original answers
@@ -385,7 +373,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the refusal mutated NOTHING: the index still answers for the corpus
     // it last committed (240 rows) — stale for the live one, not broken
     assert(!AnnIndex.isCurrent(spark, corpus, path))
-    assert(spark.read.text(s"$path/metadata").count() == 1,
+    assert(StoreMeta.record(spark, s"$path/metadata.json").isDefined,
       "refusal must not clear the metadata commit record")
     // the rebuild tier heals with refit geometry and a fresh trainedRows
     AnnIndex.build(spark, corpus, path, "ivf")
@@ -545,7 +533,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = intercept[IllegalStateException] { AnnIndex.append(spark, corpus, path, "ivfpq") }
     assert(e.getMessage.contains("trained at 200"), e.getMessage)
     assert(!AnnIndex.isCurrent(spark, corpus, path))
-    assert(spark.read.text(s"$path/metadata").count() == 1,
+    assert(StoreMeta.record(spark, s"$path/metadata.json").isDefined,
       "refusal must not clear the metadata commit record")
     // rebuild heals with refit coarse + residual geometry
     AnnLloyd.clearFits()
@@ -601,7 +589,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(stale.getMessage.contains("rebuild the 'pq' index with AnnIndex.build"),
       stale.getMessage)
-    assert(spark.read.text(s"$path/metadata").count() == 1,
+    assert(StoreMeta.record(spark, s"$path/metadata.json").isDefined,
       "refusal must not clear the metadata commit record")
     // the rebuild tier heals with refit codebooks and fresh trainedRows
     AnnLloyd.clearFits() // corpus files changed; drop the fit memo

@@ -4,7 +4,8 @@ test run, read from the JUnit XML reports sbt writes to
 target/test-reports/. Stdlib only.
 
   python3 tools/test_ledger.py                      # target/test-reports
-  python3 tools/test_ledger.py --before OLD_DIR     # before/after columns
+  python3 tools/test_ledger.py --before OLD_DIR     # before/after columns,
+                                                    # plus the cases added and gone
 
 Suite seconds are the reports' own `time` attribute (the suite's wall
 time inside sbt); they sum to less than the sbt wall time, which also
@@ -81,6 +82,16 @@ def main(argv):
         if len(label) > 60:
             label = label[:57] + "..."
         print(row(label, t, before_cases.get((suite, case)) if args.before else None))
+
+    if args.before:
+        added = sorted((k for k in cases if k not in before_cases), key=lambda k: -cases[k])
+        gone = sorted(k for k in before_cases if k not in cases)
+        print()
+        print(f"{len(added)} cases new since before, {len(gone)} gone")
+        for suite, case in added:
+            print(f"  {cases[(suite, case)]:7.2f} s  {short(suite)}: {case}")
+        for suite, case in gone:
+            print(f"  gone       {short(suite)}: {case}")
     return 0
 
 
