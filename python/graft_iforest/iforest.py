@@ -95,10 +95,13 @@ class IForestModel(JavaModel, JavaMLWritable, _GraftMLReadable):
     """Model fitted by :class:`IForest`.
 
     Appends ``anomalyScore`` and 0/1 ``prediction`` columns. The prediction
-    threshold is computed lazily from the first transformed dataset, is NOT
-    persisted with the model, and can be overridden via
-    :meth:`setThreshold` (reference semantics: threshold statefulness,
-    reference IForest.scala:50, 101-105).
+    threshold is a value of the model: fit sets it to the ``1 -
+    contamination`` quantile of the training scores, :meth:`setThreshold`
+    replaces it, ``save`` writes it and ``load`` restores it, and
+    ``transform`` only reads it. A model without one (saved by the reference
+    or before thresholds were saved, or after ``setThreshold(float("nan"))``)
+    labels each transformed dataset against that dataset's own quantile,
+    cached nowhere.
     """
 
     @property
@@ -120,15 +123,15 @@ class IForestModel(JavaModel, JavaMLWritable, _GraftMLReadable):
         return self._call_java("numTreesFitted")
 
     def hasThreshold(self):
-        """Whether a threshold is set (first transform sets it)."""
+        """Whether a threshold is set (by fit, load or :meth:`setThreshold`)."""
         return self._call_java("hasThreshold")
 
     def getThreshold(self):
-        """Current anomaly-score cutoff (NaN until first transform)."""
+        """The anomaly-score cutoff; NaN when each transform takes its own."""
         return self._call_java("getThreshold")
 
     def setThreshold(self, value):
-        """Override the anomaly-score cutoff used for the 0/1 prediction."""
+        """Set the anomaly-score cutoff for the 0/1 prediction (NaN clears it)."""
         self._call_java("setThreshold", float(value))
         return self
 

@@ -15,6 +15,7 @@ Exit code 0 = all assertions passed.
 
 import os
 import re
+import struct
 import sys
 
 
@@ -92,22 +93,21 @@ def main():
     scored = model.transform(df).select("id", "anomalyScore", "prediction")
     assert_scores_match(rows_by_id(scored), expected_rows, "python fit")
 
-    # Threshold: set by the summary's fit-time transform, not persisted.
+    # Threshold: fixed by fit, saved with the forest.
     threshold = model.getThreshold()
     assert 0.0 < threshold < 1.0
 
-    # Model save -> load -> re-score: identical scores; threshold is
-    # recomputed from the first transformed dataset (same data, exact
-    # quantile => same cutoff => same predictions).
+    # Model save -> load -> re-score: the loaded model carries the fitted
+    # threshold bit for bit, so scores and predictions are identical.
     model_path = os.path.join(workdir, "model")
     model.save(model_path)
     loaded = IForestModel.load(model_path)
     assert not loaded.hasSummary
-    assert not loaded.hasThreshold()
+    assert loaded.hasThreshold()
+    assert struct.pack("<d", loaded.getThreshold()) == struct.pack("<d", threshold)
     assert loaded.getOrDefault(loaded.numTrees) == 50
     rescored = loaded.transform(df).select("id", "anomalyScore", "prediction")
     assert_scores_match(rows_by_id(rescored), expected_rows, "loaded model")
-    assert abs(loaded.getThreshold() - threshold) <= 1e-12
 
     # Manual threshold override flips predictions without refitting.
     override = IForestModel.load(model_path).setThreshold(0.0)

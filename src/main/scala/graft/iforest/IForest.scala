@@ -38,8 +38,8 @@ import graft.JobPhase
  *     only the forest (megabytes) is collected to the driver.
  *
  * The jobs carry the descriptions `graft:iforest:size`,
- * `graft:iforest:build` and (from the summary's transform)
- * `graft:iforest:threshold`.
+ * `graft:iforest:build` and (from the summary's quantile, which becomes the
+ * model's threshold) `graft:iforest:threshold`.
  *
  * Scale posture (100 TB): the full dataset is never materialized, the only
  * shuffle moves numTrees * maxSamples vectors, and driver memory is bounded
@@ -167,12 +167,12 @@ class IForest(override val uid: String)
     }
 
     val model = copyValues(new IForestModel(uid, builtTrees).setParent(this))
-    // Materialize the training summary; this runs the prediction lifecycle
-    // including the threshold quantile (reference: IForest.scala:542-547).
-    val predictions = model.transform(dataset)
-    model.setSummary(new IForestSummary(
+    // The training summary labels the training set against the quantile of
+    // its own scores (reference: IForest.scala:542-547); that quantile is
+    // the model's threshold from here on, and `write` saves it.
+    val (predictions, threshold) = model.labelled(dataset, Double.NaN)
+    model.setThreshold(threshold).setSummary(new IForestSummary(
       predictions, $(featuresCol), $(predictionCol), $(anomalyScoreCol)))
-    model
   }
 
   override def transformSchema(schema: StructType): StructType =

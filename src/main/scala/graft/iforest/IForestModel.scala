@@ -3,13 +3,17 @@ package graft.iforest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.Model
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.ml.param.{Param, ParamMap}
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods._
 
 import graft.JobPhase
+import graft.queries.StoreMeta
 
 /**
  * Fitted isolation forest.
@@ -22,21 +26,19 @@ import graft.JobPhase
  * and the 0/1 label is a plain `when(score > threshold)` Catalyst
  * expression instead of a second UDF (reference: IForest.scala:108-111).
  *
- * Threshold semantics match the reference (reference: IForest.scala:50,
- * 68-75, 101-105): computed lazily from the first transformed dataset as the
- * `1 - contamination` quantile of the non-null scores, cached on the
- * instance, not persisted, overridable via [[setThreshold]]. At the default
- * `approxQuantileRelativeError = 0` it is the score at 1-based rank
- * `ceil((1 - contamination) * n)` among the `n` non-null scores, bit for bit
- * what `approxQuantile(…, 0.0)` returns, found by [[ExactQuantile]] in two
- * jobs instead of a GK merge of every score in one task: the first sorts
- * and caches each partition's scores and samples their order statistics,
- * the second collects only the scores in a bracket round that rank (or,
- * past about a million of them, samples the bracket for one more round).
- * So the driver holds a bounded number of scores whatever `n` is, and the
- * cached scores are dropped before `transform` returns. A positive relative
- * error keeps Spark's bounded GK sketch (`approxQuantile`), which caches
- * nothing. The threshold jobs carry the description
+ * The threshold is a value of the fitted model: [[IForest.fit]] sets it to
+ * the `1 - contamination` quantile of the non-null training scores,
+ * [[setThreshold]] replaces it, `write` saves it and `load` restores it,
+ * and `transform` only reads it, so a loaded model scores its input once.
+ * A model without one (a reference-written model, one saved before the
+ * threshold was saved, or `setThreshold(Double.NaN)`) labels each call's
+ * input against that input's own quantile, cached nowhere (reference
+ * semantics: IForest.scala:101-105, minus its caching). At the default
+ * `approxQuantileRelativeError = 0` the quantile is the score at 1-based
+ * rank `ceil((1 - contamination) * n)` among the `n` non-null scores, bit
+ * for bit what `approxQuantile(…, 0.0)` returns, found by [[ExactQuantile]]
+ * in two jobs that cache nothing past the call; a positive relative error
+ * keeps Spark's bounded GK sketch. The quantile jobs carry the description
  * `graft:iforest:threshold` (and the dataset count, when `maxSamples <= 1`
  * needs one, `graft:iforest:count`). With no non-null score to take the
  * quantile of, `transform` throws an `IllegalArgumentException`.
@@ -54,7 +56,7 @@ class IForestModel(
   def setAnomalyScoreCol(value: String): this.type = set(anomalyScoreCol, value)
   def setPredictionCol(value: String): this.type = set(predictionCol, value)
 
-  /** Anomaly-score cutoff; NaN until first transform or manual set. */
+  /** Anomaly-score cutoff; NaN means each transform takes its input's quantile. */
   private var thresholdValue: Double = Double.NaN
   def getThreshold: Double = thresholdValue
   def setThreshold(value: Double): this.type = { thresholdValue = value; this }
@@ -68,16 +70,18 @@ class IForestModel(
 
   def numTreesFitted: Int = trees.length
 
+  /** Append `anomalyScore` and `prediction` columns. */
+  override def transform(dataset: Dataset[_]): DataFrame = labelled(dataset, thresholdValue)._1
+
   /**
-   * Append `anomalyScore` and `prediction` columns.
-   *
-   * The dataset is counted only when `maxSamples <= 1` (fraction form),
-   * because only then does the score normalizer depend on dataset size
-   * (reference always counts, IForest.scala:87 — skipping it saves a full
-   * scan per transform at scale). The quantile jobs for the threshold run
-   * over a score-only projection so Catalyst prunes every other column.
+   * `dataset` scored, and labelled against `threshold` or, when that is NaN,
+   * against the quantile of its own scores; with the threshold used. The
+   * dataset is counted only when `maxSamples <= 1` (fraction form), because
+   * only then does the score normalizer depend on dataset size (reference
+   * always counts, IForest.scala:87). The quantile jobs run over a
+   * score-only projection so Catalyst prunes every other column.
    */
-  override def transform(dataset: Dataset[_]): DataFrame = {
+  private[iforest] def labelled(dataset: Dataset[_], threshold: Double): (DataFrame, Double) = {
     transformSchema(dataset.schema)
     val sc = dataset.sparkSession.sparkContext
     val possibleMaxSamples =
@@ -92,22 +96,18 @@ class IForestModel(
     val scoreCol = ColumnBridge.column(
       IForestScore(ColumnBridge.expression(col($(featuresCol))), bcForest, normFactor))
     val scored = dataset.withColumn($(anomalyScoreCol), scoreCol)
-    if (!hasThreshold) {
+    val t = if (!threshold.isNaN) threshold else JobPhase(sc, "iforest:threshold") {
       val scores = scored.select($(anomalyScoreCol))
-      val q = 1 - $(contamination)
-      val relErr = $(approxQuantileRelativeError)
-      val t = JobPhase(sc, "iforest:threshold") {
-        if (relErr == 0) ExactQuantile(scores, q)
-        else scores.stat.approxQuantile($(anomalyScoreCol), Array(q), relErr)
-          .headOption.getOrElse(Double.NaN)
-      }
-      if (t.isNaN) throw new IllegalArgumentException(
-        "no non-null anomaly scores to take the 1 - contamination quantile of; " +
-          "setThreshold sets a threshold without the quantile")
-      thresholdValue = t
+      val (q, relErr) = (1 - $(contamination), $(approxQuantileRelativeError))
+      if (relErr == 0) ExactQuantile(scores, q)
+      else scores.stat.approxQuantile($(anomalyScoreCol), Array(q), relErr)
+        .headOption.getOrElse(Double.NaN)
     }
-    scored.withColumn($(predictionCol),
-      when(col($(anomalyScoreCol)) > lit(thresholdValue), 1.0).otherwise(0.0))
+    if (t.isNaN) throw new IllegalArgumentException(
+      "no non-null anomaly scores to take the 1 - contamination quantile of; " +
+        "setThreshold sets a threshold without the quantile")
+    (scored.withColumn($(predictionCol),
+      when(col($(anomalyScoreCol)) > lit(t), 1.0).otherwise(0.0)), t)
   }
 
   override def transformSchema(schema: StructType): StructType =
@@ -128,14 +128,17 @@ object IForestModel extends MLReadable[IForestModel] {
   /**
    * Model format parity with the reference (reference:
    * IForest.scala:283-310): `<path>/data` holds one parquet row per
-   * [[EnsembleNodeData]]; `<path>/metadata` holds a params JSON.
-   * Metadata read/write is hand-rolled with json4s because Spark's
-   * `DefaultParamsWriter/Reader` helpers are `private[ml]` (SURVEY §7).
+   * [[EnsembleNodeData]]; `<path>/metadata/part-00000` holds one params JSON
+   * line, the file `DefaultParamsWriter` writes. Metadata is hand-rolled
+   * with json4s because Spark's `DefaultParamsWriter/Reader` helpers are
+   * `private[ml]` (SURVEY §7), and read and written through the Hadoop
+   * FileSystem, without a Spark job. The threshold is a top-level
+   * `threshold` key next to `numTrees` (a stock reader rejects an unknown
+   * param in `paramMap`): a JSON number when finite, `"Inf"`/`"-Inf"` as
+   * Spark's `DoubleParam` writes infinities, and no key for NaN.
    */
   private[iforest] class IForestModelWriter(instance: IForestModel) extends MLWriter {
     override protected def saveImpl(path: String): Unit = {
-      import org.json4s.JsonDSL._
-      import org.json4s.jackson.JsonMethods._
       val spark = sparkSession
       import spark.implicits._
       // field set mirrors Spark's DefaultParamsWriter metadata so stock
@@ -145,44 +148,46 @@ object IForestModel extends MLReadable[IForestModel] {
         ("class" -> instance.getClass.getName) ~
           ("timestamp" -> System.currentTimeMillis()) ~
           ("sparkVersion" -> spark.version) ~
-          ("defaultParamMap" -> org.json4s.JObject()) ~
+          ("defaultParamMap" -> JObject()) ~
           ("uid" -> instance.uid) ~
           ("numTrees" -> instance.trees.length) ~
-          ("paramMap" ->
-            (("numTrees" -> instance.getNumTrees) ~
-              ("maxSamples" -> instance.getMaxSamples) ~
-              ("maxFeatures" -> instance.getMaxFeatures) ~
-              ("maxDepth" -> instance.getMaxDepth) ~
-              ("contamination" -> instance.getContamination) ~
-              ("approxQuantileRelativeError" -> instance.getApproxQuantileRelativeError) ~
-              ("bootstrap" -> instance.getBootstrap) ~
-              ("seed" -> instance.getSeed) ~
-              ("featuresCol" -> instance.getFeaturesCol) ~
-              ("anomalyScoreCol" -> instance.getAnomalyScoreCol) ~
-              ("predictionCol" -> instance.getPredictionCol) ~
-              ("labelCol" -> instance.getLabelCol)))
-      val metadataPath = new Path(path, "metadata").toString
-      spark.createDataset(Seq(compact(render(metadata)))).repartition(1).write.text(metadataPath)
+          ("threshold" -> thresholdJson(instance.getThreshold)) ~
+          ("paramMap" -> JObject(instance.params.toList.map { case param: Param[Any] @unchecked =>
+            param.name -> parse(param.jsonEncode(instance.getOrDefault(param)))
+          }))
+      StoreMeta.putRecord(spark, s"$path/metadata/part-00000", compact(render(metadata)) + "\n")
       val rows = instance.trees.zipWithIndex.flatMap { case (tree, treeId) =>
         NodeData.flatten(tree).map(EnsembleNodeData(treeId, _))
       }.toSeq
-      val dataPath = new Path(path, "data").toString
-      spark.createDataset(rows).repartition(1).write.parquet(dataPath)
+      spark.createDataset(rows).repartition(1).write.parquet(new Path(path, "data").toString)
     }
+  }
+
+  private[iforest] def thresholdJson(t: Double): JValue =
+    if (t.isNaN) JNothing
+    else if (t.isInfinite) JString(if (t > 0) "Inf" else "-Inf")
+    else JDouble(t)
+
+  private[iforest] def thresholdOf(v: JValue): Double = v match {
+    case JNothing => Double.NaN
+    case JString("Inf") => Double.PositiveInfinity
+    case JString("-Inf") => Double.NegativeInfinity
+    case JDouble(t) => t
+    case other => throw new IllegalArgumentException(s"model threshold $other is not a number")
   }
 
   private class IForestModelReader extends MLReader[IForestModel] {
     override def load(path: String): IForestModel = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods._
-      implicit val formats: Formats = DefaultFormats
       val spark = sparkSession
       import spark.implicits._
-      val metadataStr = spark.read.text(new Path(path, "metadata").toString)
-        .as[String].collect().mkString("\n")
-      val meta = parse(metadataStr)
-      val uid = (meta \ "uid").extract[String]
-      val p = meta \ "paramMap"
+      // the first part file, as Spark's text source reads a metadata dir
+      // (`_SUCCESS`, `.crc` and other `_`/`.` names are not data)
+      val dir = new Path(path, "metadata")
+      val part = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+        .map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .sortBy(_.getName).headOption
+        .getOrElse(throw new java.io.FileNotFoundException(s"no metadata part file in $dir"))
+      val meta = parse(StoreMeta.record(spark, part.toString).get)
       // The forest is numTrees * O(2^maxDepth) nodes — megabytes, not data
       // scale — so rebuild driver-side and skip the reference's shuffle
       // (reference: IForest.scala:244-250 groupByKey).
@@ -190,21 +195,12 @@ object IForestModel extends MLReadable[IForestModel] {
         .as[EnsembleNodeData].collect()
       val trees = nodeRows.groupBy(_.treeID).toArray.sortBy(_._1)
         .map { case (_, rows) => NodeData.rebuild(rows.map(_.nodeData)) }
-      val model = new IForestModel(uid, trees)
-      model.set(model.numTrees, (p \ "numTrees").extract[Int])
-      model.set(model.maxSamples, (p \ "maxSamples").extract[Double])
-      model.set(model.maxFeatures, (p \ "maxFeatures").extract[Double])
-      model.set(model.maxDepth, (p \ "maxDepth").extract[Int])
-      model.set(model.contamination, (p \ "contamination").extract[Double])
-      model.set(model.approxQuantileRelativeError,
-        (p \ "approxQuantileRelativeError").extract[Double])
-      model.set(model.bootstrap, (p \ "bootstrap").extract[Boolean])
-      model.set(model.seed, (p \ "seed").extract[Long])
-      model.set(model.featuresCol, (p \ "featuresCol").extract[String])
-      model.set(model.anomalyScoreCol, (p \ "anomalyScoreCol").extract[String])
-      model.set(model.predictionCol, (p \ "predictionCol").extract[String])
-      model.set(model.labelCol, (p \ "labelCol").extract[String])
-      model
+      implicit val formats: Formats = DefaultFormats
+      val model = new IForestModel((meta \ "uid").extract[String], trees)
+      model.params.foreach { case param: Param[Any] @unchecked =>
+        model.set(param, param.jsonDecode(compact(meta \ "paramMap" \ param.name)))
+      }
+      model.setThreshold(thresholdOf(meta \ "threshold"))
     }
   }
 

@@ -1,11 +1,13 @@
 package graft.iforest
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.monotonically_increasing_id
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -140,12 +142,114 @@ class IForestSpec extends AnyFunSuite {
       loaded.getMaxDepth == 5 && loaded.getContamination == 0.15 && loaded.getSeed == 11L)
     assert(loaded.trees.toSeq == model.trees.toSeq) // structural equality via case classes
     assert(!loaded.hasSummary)
-    assert(!loaded.hasThreshold) // threshold is deliberately not persisted
-    // loaded model recomputes threshold from the first transformed dataset
-    loaded.setThreshold(model.getThreshold)
-    val a = model.transform(df).select("anomalyScore").collect().map(_.getDouble(0)).toSeq
-    val b = loaded.transform(df).select("anomalyScore").collect().map(_.getDouble(0)).toSeq
+    assert(bits(loaded.getThreshold) == bits(model.getThreshold)) // saved with the forest
+    val a = model.transform(df).select("anomalyScore", "prediction").collect().toSeq
+    val b = loaded.transform(df).select("anomalyScore", "prediction").collect().toSeq
     assert(a == b)
+  }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+
+  /** 120 rows in [-3, 3]^2 with ids: wider than [[outlierData]]'s inliers,
+    * so its own quantile is not the threshold fitted on that set. */
+  private def wideData() = {
+    import spark.implicits._
+    val rng = new scala.util.Random(21)
+    (0 until 120).map(i => (i.toLong, Vectors.dense(rng.nextDouble() * 6 - 3,
+      rng.nextDouble() * 6 - 3))).toDF("id", "features")
+  }
+
+  /** (id, score bits, prediction) per row, by id. */
+  private def labels(model: IForestModel, df: DataFrame): Seq[(Long, Long, Double)] =
+    model.transform(df).select("id", "anomalyScore", "prediction").collect()
+      .map(r => (r.getLong(0), bits(r.getDouble(1)), r.getDouble(2))).sortBy(_._1).toSeq
+
+  private def fittedAndSaved(): (IForestModel, String) = {
+    val model = new IForest().setNumTrees(10).setMaxSamples(32).setMaxDepth(6)
+      .setContamination(0.1).setSeed(23L).fit(outlierData())
+    val dir = Files.createTempDirectory("iforest-threshold").toString + "/m"
+    model.write.overwrite().save(dir)
+    (model, dir)
+  }
+
+  test("a loaded model scores and predicts bit-identically to the fitted one, with no threshold job") {
+    val (model, dir) = fittedAndSaved()
+    val df = wideData()
+    val expected = labels(model, df)
+    val loaded = IForestModel.load(dir)
+    assert(bits(loaded.getThreshold) == bits(model.getThreshold))
+    val (got, phases) = phasesOf(labels(loaded, df))
+    assert(!phases.exists(_.startsWith("graft:iforest:")), phases)
+    assert(got == expected)
+  }
+
+  test("two threads transforming one loaded model get identical output") {
+    val (model, dir) = fittedAndSaved()
+    val loaded = IForestModel.load(dir)
+    val df = wideData()
+    val expected = labels(model, df)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val runs = Seq.fill(2)(Future(Seq.fill(3)(labels(loaded, df))))
+    runs.flatMap(Await.result(_, 2.minutes)).foreach(out => assert(out == expected))
+    assert(bits(loaded.getThreshold) == bits(model.getThreshold))
+  }
+
+  /** The model saved at `dir`, its `threshold` key stripped (as a
+    * reference-written or older model reads), loaded. */
+  private def unkeyed(dir: String): IForestModel = {
+    import org.json4s.jackson.JsonMethods._
+    val part = Paths.get(dir, "metadata").toFile.listFiles().map(_.toPath)
+      .find(p => !p.getFileName.toString.matches("[._].*")).get
+    val meta = parse(Files.readString(part)).removeField(_._1 == "threshold")
+    Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
+    Files.writeString(part, compact(meta) + "\n")
+    IForestModel.load(dir)
+  }
+
+  test("a model without a saved threshold labels each input against its own quantile") {
+    val (model, dir) = fittedAndSaved()
+    val loaded = unkeyed(dir)
+    assert(!loaded.hasThreshold)
+    val training = outlierData().withColumn("id", monotonically_increasing_id())
+    assert(labels(loaded, training) == labels(model, training), "the first transform's output")
+    val wide = wideData()
+    val scores = model.transform(wide).select("id", "anomalyScore")
+    val t = ExactQuantile(scores.select("anomalyScore"), 1 - model.getContamination)
+    assert(bits(t) != bits(model.getThreshold))
+    val own = scores.collect().map(r => (r.getLong(0), bits(r.getDouble(1)),
+      if (r.getDouble(1) > t) 1.0 else 0.0)).sortBy(_._1).toSeq
+    assert(labels(loaded, wide) == own, "a later call reused an earlier call's quantile")
+    assert(loaded.getThreshold.isNaN)
+  }
+
+  test("finite and infinite thresholds round-trip bit-exactly; NaN writes no key") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods._
+    val model = fittedAndSaved()._1
+    val dir = Files.createTempDirectory("iforest-roundtrip").toString
+    val values = Seq(model.getThreshold, 0.1 + 0.2, Double.MinPositiveValue, -0.0, 2e23,
+      Double.MaxValue, Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN)
+    for ((t, i) <- values.zipWithIndex) {
+      val path = s"$dir/m$i"
+      model.copy(ParamMap.empty).setThreshold(t).write.save(path)
+      val saved = parse(Files.readString(Paths.get(path, "metadata", "part-00000")))
+      (t, saved \ "threshold") match {
+        case (t, JNothing) if t.isNaN =>
+        case (Double.PositiveInfinity, JString("Inf")) | (Double.NegativeInfinity, JString("-Inf")) =>
+        case (t, JDouble(_)) if !t.isNaN && !t.isInfinite =>
+        case (t, other) => fail(s"threshold $t saved as $other")
+      }
+      assert(bits(IForestModel.load(path).getThreshold) == bits(t), s"threshold $t")
+    }
+    val rng = new scala.util.Random(7)
+    for (_ <- 0 until 10000) {
+      val t = java.lang.Double.longBitsToDouble(rng.nextLong())
+      val back = IForestModel.thresholdOf(
+        parse(compact(render(JObject("t" -> IForestModel.thresholdJson(t))))) \ "t")
+      assert(bits(back) == bits(t) || (t.isNaN && back.isNaN), s"threshold $t")
+    }
   }
 
   test("estimator write/load round-trip") {
@@ -216,7 +320,9 @@ class IForestSpec extends AnyFunSuite {
     assert(copied.hasSummary)
   }
 
-  test("fit and transform label their jobs graft:iforest:<phase> and restore the caller's") {
+  /** `body`'s result and the distinct descriptions, in order, of the Spark
+    * jobs it ran from this thread (the caller's own read `outer`). */
+  private def phasesOf[T](body: => T): (T, List[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"job-descriptions-${System.nanoTime()}"
@@ -227,24 +333,28 @@ class IForestSpec extends AnyFunSuite {
           seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
         }
     }
-    val df = rampData(200, 2).cache()
-    df.count()
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "outer")
     try {
       // The bus is asynchronous but ordered: once the end marker's job
       // start arrives, every earlier one has. A phase may run more than
       // one job (adaptive execution), so phases are compared distinct.
-      def phasesOf[T](body: => T): (T, List[String]) = {
-        val result = body
-        assert(sc.getLocalProperty("spark.job.description") == "outer")
-        graft.JobPhase(sc, "end")(sc.parallelize(Seq(1), 1).count())
-        val deadline = System.nanoTime() + 30e9.toLong
-        while (!seen.contains("graft:end") && System.nanoTime() < deadline) Thread.sleep(20)
-        val jobs = List.from(seen.iterator().asScala)
-        seen.clear()
-        (result, jobs.takeWhile(_ != "graft:end").distinct)
-      }
+      val result = body
+      assert(sc.getLocalProperty("spark.job.description") == "outer")
+      graft.JobPhase(sc, "end")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.contains("graft:end") && System.nanoTime() < deadline) Thread.sleep(20)
+      (result, List.from(seen.iterator().asScala).takeWhile(_ != "graft:end").distinct)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("fit and transform label their jobs graft:iforest:<phase> and restore the caller's") {
+    val df = rampData(200, 2).cache()
+    df.count()
+    try {
       // maxSamples = 1.0 (the default) makes transform count its input
       val (model, fitPhases) = phasesOf(new IForest().setNumTrees(4).setSeed(1L).fit(df))
       assert(fitPhases == List("graft:iforest:size", "graft:iforest:build",
@@ -252,10 +362,6 @@ class IForestSpec extends AnyFunSuite {
       val (_, transformPhases) =
         phasesOf(model.copy(ParamMap.empty).setThreshold(Double.NaN).transform(df))
       assert(transformPhases == List("graft:iforest:count", "graft:iforest:threshold"))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-      df.unpersist()
-    }
+    } finally df.unpersist()
   }
 }

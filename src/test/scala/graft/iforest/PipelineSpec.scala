@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -33,10 +34,14 @@ class PipelineSpec extends AnyFunSuite {
     val loaded = PipelineModel.load(dir)
     val ifm = loaded.stages(1).asInstanceOf[IForestModel]
     assert(ifm.numTreesFitted == 10)
-    // loaded model has no threshold; seed it to compare scores exactly
-    ifm.setThreshold(model.stages(1).asInstanceOf[IForestModel].getThreshold)
-    val a = scored.select("anomalyScore").collect().map(_.getDouble(0)).sorted
-    val b = loaded.transform(li).select("anomalyScore").collect().map(_.getDouble(0)).sorted
+    // the fitted threshold is saved with the forest, bit for bit
+    val fitted = model.stages(1).asInstanceOf[IForestModel].getThreshold
+    assert(java.lang.Double.doubleToLongBits(ifm.getThreshold) ==
+      java.lang.Double.doubleToLongBits(fitted))
+    val cols = Seq("l_orderkey", "l_linenumber", "anomalyScore", "prediction")
+    val a = scored.select(cols.map(col): _*).collect().map(_.toSeq).sortBy(_.take(2).mkString(","))
+    val b = loaded.transform(li).select(cols.map(col): _*).collect().map(_.toSeq)
+      .sortBy(_.take(2).mkString(","))
     assert(a.toSeq == b.toSeq)
   }
 }

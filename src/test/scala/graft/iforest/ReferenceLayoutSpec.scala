@@ -55,6 +55,7 @@ class ReferenceLayoutSpec extends AnyFunSuite {
       case other => fail(s"unexpected tree shape: $other")
     }
     assert(model.trees(1) === IFLeafNode(10L))
+    assert(!model.hasThreshold, "the reference saves no threshold")
 
     // the loaded model scores: left branch (f0 < 5) vs right branch
     val df = Seq(Tuple1(Vectors.dense(1.0)), Tuple1(Vectors.dense(9.0)))
