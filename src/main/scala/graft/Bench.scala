@@ -33,21 +33,6 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // SPARK_GRAFT_BENCH_DIAG=1: per-run stderr lines with GC / heap /
-    // codegen-compilation deltas, for diagnosing long-session drift
-    // without touching the timed region or the emitted artifact.
-    val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG").contains("1")
-    def gcSnapshot(): (Long, Long) = {
-      import scala.jdk.CollectionConverters._
-      val beans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      (beans.map(_.getCollectionCount).sum, beans.map(_.getCollectionTime).sum)
-    }
-    // CodegenMetrics is Spark-internal (not stable API): degrade to -1 if a
-    // future Spark hides it rather than failing the whole bench.
-    def codegenCount(): Long =
-      scala.util.Try(
-        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      ).getOrElse(-1L)
     // Repeats are INTERLEAVED (run the full query cycle `repeats` times)
     // rather than back-to-back per query: a transient contention window —
     // GC storm, driver-side concurrent work, OS noise — spans tens of
@@ -58,44 +43,62 @@ object Bench {
     // reproduced in isolation. Cycling visits each query once per ~40 s
     // lap, so a window corrupts at most one of its runs and the min
     // recovers the clean time.
-    def runOnce(name: String, fn: (SparkSession, String) => DataFrame, i: Int): Double = {
-      val (gcc0, gct0) = if (diag) gcSnapshot() else (0L, 0L)
-      val cg0 = if (diag) codegenCount() else 0L
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch {
-        case e: Throwable =>
-          val (n, first) = errors.getOrElse(name, (0, e.toString.take(200)))
-          errors(name) = (n + 1, first)
-      }
-      finally graft.queries.Caches.releaseAll()
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (diag) {
-        val (gcc1, gct1) = gcSnapshot()
-        val heapMb = {
-          val m = java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
-          m.getUsed / (1024 * 1024)
+    val profile = Profile.register(spark)
+    def runOnce(name: String, fn: (SparkSession, String) => DataFrame): Double =
+      profile.run(name) {
+        try runEntry(spark, sfDir, fn)
+        catch {
+          case e: Throwable =>
+            val (n, first) = errors.getOrElse(name, (0, e.toString.take(200)))
+            errors(name) = (n + 1, first)
         }
-        System.err.println(
-          f"DIAG $name run=$i sec=$sec%.3f gcCount=${gcc1 - gcc0} gcMs=${gct1 - gct0} " +
-            s"codegen=${codegenCount() - cg0} heapMB=$heapMb")
       }
-      sec
-    }
     val byQuery = selected.map { case (name, _) =>
       name -> scala.collection.mutable.ArrayBuffer.empty[Double]
     }.toMap
-    for (i <- 0 until repeats; (name, fn) <- selected)
-      byQuery(name) += runOnce(name, fn, i)
+    for (_ <- 0 until repeats; (name, fn) <- selected)
+      byQuery(name) += runOnce(name, fn)
     val results = selected.map { case (name, _) =>
-      val runs = byQuery(name).toSeq.sorted
-      // True median: mean of the two middle runs when repeats is even
-      // (runs(n/2) alone biases high).
-      val med =
-        if (runs.length % 2 == 1) runs(runs.length / 2)
-        else (runs(runs.length / 2 - 1) + runs(runs.length / 2)) / 2.0
-      name -> (med, runs.head)
+      val runs = byQuery(name).toSeq
+      // true median: the mean of the two middle runs when repeats is even
+      name -> (Profile.median(runs), runs.min)
     }
+    val layers = profile.layers()
+    profile.close()
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+    val out = lines(results, errors.toSeq, layers, repeats, cpus, sfDir, outFile)
+    println(out.head)
+    // The driver's BENCH_r{N}.json artifact keeps only a 2,000-char tail of
+    // the sbt output, which truncates the grid to ~58 of 161 queries and
+    // blinds round-over-round comparison for the rest (the r15 q59
+    // investigation). Persist the FULL grid to a committed file as well —
+    // overwritten per run, committed with the round docs.
+    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+      (out.head + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Exception =>
+      System.err.println(s"BENCH: could not write $outFile: $e") }
+    out.tail.foreach(println)
+    if (errors.nonEmpty) {
+      System.err.println(s"BENCH FAILURES: ${errors.keys.mkString(", ")}")
+    }
+    spark.stop()
+  }
+
+  /** One run of an entry: build its frame, drain it into the noop sink —
+    * the sink's jobs labelled `graft:sink` — and release the caches. */
+  private[graft] def runEntry(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Unit =
+    try {
+      val df = fn(spark, sfDir)
+      JobPhase(spark.sparkContext, "sink")(df.write.format("noop").mode("overwrite").save())
+    } finally graft.queries.Caches.releaseAll()
+
+  /** The bench's stdout lines, in order: the full line (also written to
+    * `outFile`), the slowest entries ([[Profile.topLine]]) and the
+    * compact summary, which stays LAST. */
+  private[graft] def lines(results: Seq[(String, (Double, Double))],
+      errors: Seq[(String, (Int, String))], layers: Seq[(String, Profile.Layers)],
+      repeats: Int, cpus: String, sfDir: String, outFile: String): Seq[String] = {
     val qs = results.map { case (k, (med, _)) => s"\"" + k + "\":" + med }
       .mkString("{", ",", "}")
     val qsMin = results.map { case (k, (_, mn)) => s"\"" + k + "\":" + mn }
@@ -125,19 +128,10 @@ object Bench {
     // adjudicated by hand — an artifact field settles that up front).
     val line = s"""{"metric":"total","value":$total,"unit":"sec","repeats":$repeats,""" +
       s""""methodology":"interleaved","statistic":"median_of_repeats",""" +
-      s""""queries":$qs,"queries_min":$qsMin,"errors":$errs,"sf":"$sfDir"}"""
-    println(line)
-    // The driver's BENCH_r{N}.json artifact keeps only a 2,000-char tail of
-    // the sbt output, which truncates the grid to ~58 of 161 queries and
-    // blinds round-over-round comparison for the rest (the r15 q59
-    // investigation). Persist the FULL grid to a committed file as well —
-    // overwritten per run, committed with the round docs.
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Exception =>
-      System.err.println(s"BENCH: could not write $outFile: $e") }
-    // The full line above is ~8 KB for 222 queries; the driver keeps only a
+      s""""queries":$qs,"queries_min":$qsMin,"errors":$errs,"sf":"$sfDir",""" +
+      s""""layers":${Profile.json(layers)}}"""
+    // The full line above is ~8 KB for 222 queries before its layers map;
+    // the driver keeps only a
     // 2,000-char tail of the sbt output, so the full JSON gets decapitated
     // and the round-over-round comparison comes back empty (r20/r21 both had
     // `parsed: null`). Emit a compact, COMPLETE summary as the LAST stdout
@@ -148,10 +142,6 @@ object Bench {
       s""""repeats":$repeats,"methodology":"interleaved",""" +
       s""""statistic":"median_of_repeats","cpus":"$cpus",""" +
       s""""sf":"$sfDir","detail":"$outFile"}"""
-    println(summary)
-    if (errors.nonEmpty) {
-      System.err.println(s"BENCH FAILURES: ${errors.keys.mkString(", ")}")
-    }
-    spark.stop()
+    Seq(line, Profile.topLine(layers), summary)
   }
 }

@@ -12,8 +12,10 @@ import graft.similarity.{AnnIvf, AnnLsh}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
+  /** The read's one eager job, parquet's schema inference, is labelled
+    * `graft:read:<name>`, as in [[Tables.t]]. */
   private def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    JobPhase(spark.sparkContext, s"read:$name")(spark.read.parquet(s"$dir/$name.parquet"))
 
   /**
    * Flagship: isolation-forest anomaly scoring over lineitem numeric
@@ -26,43 +28,31 @@ object SparkEntry {
    * Planned task count of the scan stage, estimated from the PHYSICAL plan
    * (`queryExecution.sparkPlan`, pre-AQE) — never from `df.rdd`, which
    * would build the full RDD lineage and a second QueryExecution just to
-   * read a partition count. File scans replicate Spark's own
-   * `FilePartition` sizing arithmetic (bytes + per-file open cost, packed
-   * into min(maxPartitionBytes, max(openCost, bytesPerCore)) bins); Range
-   * leaves report their slice count; unknown leaves are assumed parallel
-   * enough (the guard then stays a no-op, never a surprise shuffle).
+   * read a partition count. File scans pack their splits with Spark's own
+   * `FilePartition` sizing, over the listing the planner already cached in
+   * the FileIndex (no extra FS round-trip); Range leaves report their
+   * slice count; unknown leaves are assumed parallel enough (the guard
+   * then stays a no-op, never a surprise shuffle).
    */
   private[graft] def plannedScanTasks(df: DataFrame): Int = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, RangeExec}
-    val conf = df.sparkSession.sessionState.conf
-    val cores = df.sparkSession.sparkContext.defaultParallelism
+    import org.apache.spark.sql.execution.{FileSourceScanExec, PartitionedFileUtil, RangeExec}
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    val spark = df.sparkSession
     df.queryExecution.sparkPlan.collectLeaves().map {
       case f: FileSourceScanExec =>
-        // Same arithmetic as FilePartition.maxSplitBytes + getFilePartitions
-        // (split each file at maxSplit, sort splits descending, first-fit
-        // pack with a per-file open-cost pad). The listing is the one the
-        // planner already cached in the FileIndex — no extra FS round-trip.
-        val openCost = conf.filesOpenCostInBytes
-        val fileLens = f.relation.location.listFiles(Nil, Nil)
-          .flatMap(_.files.map(_.getLen))
-        val totalBytes = fileLens.map(_ + openCost).sum
-        val bytesPerCore = totalBytes / math.max(1L, conf.filesMinPartitionNum.getOrElse(cores).toLong)
-        val maxSplit = math.min(conf.filesMaxPartitionBytes, math.max(openCost, bytesPerCore))
-        val splits = fileLens
-          .flatMap(len => (0L until len by maxSplit).map(off => math.min(maxSplit, len - off)))
-          .sortBy(-_)
-        var nParts = 0
-        var cur = 0L
-        var open = false
-        splits.foreach { s =>
-          if (open && cur + s > maxSplit) { nParts += 1; cur = 0L; open = false }
-          cur += s + openCost
-          open = true
-        }
-        if (open) nParts += 1
-        math.max(1, nParts)
+        val rel = f.relation
+        val dirs = rel.location.listFiles(Nil, Nil)
+        val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+        // sorted largest first, as FileSourceScanExec does before packing
+        val splits = dirs.flatMap { d =>
+          d.files.flatMap { file =>
+            PartitionedFileUtil.splitFiles(file, file.getPath,
+              rel.fileFormat.isSplitable(spark, rel.options, file.getPath), maxSplit, d.values)
+          }
+        }.sortBy(-_.length)
+        math.max(1, FilePartition.getFilePartitions(spark, splits, maxSplit).size)
       case r: RangeExec => r.numSlices
-      case _ => cores
+      case _ => spark.sparkContext.defaultParallelism
     }.foldLeft(Int.MaxValue)(math.min)
   }
 

@@ -85,15 +85,16 @@ class IForest(override val uid: String)
 
   private def fitImpl(dataset: Dataset[_]): IForestModel = {
     val sc = dataset.sparkSession.sparkContext
-    // null feature vectors are skipped, as transform scores them null
-    val features: RDD[Vector] = dataset.select(col($(featuresCol))).rdd
-      .collect { case Row(v: Vector) => v }
-    val partitionSizes = JobPhase(sc, "iforest:size") {
-      sc.runJob(features, (it: Iterator[Vector]) => {
+    // null feature vectors are skipped, as transform scores them null;
+    // `.rdd` runs the jobs of any shuffle stage under the input
+    val (features, partitionSizes) = JobPhase(sc, "iforest:size") {
+      val features: RDD[Vector] = dataset.select(col($(featuresCol))).rdd
+        .collect { case Row(v: Vector) => v }
+      (features, sc.runJob(features, (it: Iterator[Vector]) => {
         var n = 0L
         while (it.hasNext) { it.next(); n += 1 }
         n
-      })
+      }))
     }
     val firstRowIds = partitionSizes.scanLeft(0L)(_ + _)
     val numRows = firstRowIds.last

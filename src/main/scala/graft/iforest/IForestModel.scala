@@ -5,7 +5,7 @@ import org.apache.spark.ml.Model
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param.{Param, ParamMap}
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.json4s._
@@ -190,8 +190,10 @@ object IForestModel extends MLReadable[IForestModel] {
       val meta = parse(StoreMeta.record(spark, part.toString).get)
       // The forest is numTrees * O(2^maxDepth) nodes — megabytes, not data
       // scale — so rebuild driver-side and skip the reference's shuffle
-      // (reference: IForest.scala:244-250 groupByKey).
-      val nodeRows = spark.read.parquet(new Path(path, "data").toString)
+      // (reference: IForest.scala:244-250 groupByKey). The schema is the
+      // fixed EnsembleNodeData one, so the read runs no inference job.
+      val nodeRows = spark.read.schema(Encoders.product[EnsembleNodeData].schema)
+        .parquet(new Path(path, "data").toString)
         .as[EnsembleNodeData].collect()
       val trees = nodeRows.groupBy(_.treeID).toArray.sortBy(_._1)
         .map { case (_, rows) => NodeData.rebuild(rows.map(_.nodeData)) }

@@ -159,14 +159,12 @@ object Graph {
     * and pay the m^1.5; the backbone cap is the declared contract here,
     * applied identically by the oracle.) */
   /** The deterministic top-M co-purchase backbone (canonical a < b
-    * edges) — the corpus-scale stage shared by q128 and q132. The query
-    * surface always cuts at [[backboneM]]; the M parameter exists for
-    * GraphTune's sensitivity grid (TUNE_r15: how do triangle counts and
-    * runtime move with the cut?). */
-  private[graft] def coPurchaseBackbone(s: SparkSession, dir: String,
-      m: Int = backboneM): DataFrame =
+    * edges) — the corpus-scale stage shared by q128 and q132, cut at
+    * [[backboneM]] (TUNE_r15.txt's sensitivity grid: how triangle
+    * counts and runtime move with the cut). */
+  private[graft] def coPurchaseBackbone(s: SparkSession, dir: String): DataFrame =
     backboneOf(coPairsOf(Tables.t(s, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))), m)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))), backboneM)
 
   /** Weighted canonical co-occurrence pairs of an (o, p) frame: distinct
     * (order, part), within-order pair fan-out (bounded by lines-per-order),

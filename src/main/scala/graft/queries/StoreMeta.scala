@@ -151,9 +151,14 @@ private[graft] object StoreMeta {
 
   /** One persisted store family: the root `name`, the base-slice
     * fingerprint `fp` (memoized by the caller) and the `ladder` that
-    * decides which meta states beyond a matching base count as current. */
+    * decides which meta states beyond a matching base count as current.
+    * Each lifecycle verb labels its Spark jobs `graft:store:<name>:<verb>`
+    * ([[graft.JobPhase]]). */
   final class Store(name: String, fp: (SparkSession, String) => String,
       ladder: Ladder) {
+
+    private def phase[T](s: SparkSession, verb: String)(body: => T): T =
+      graft.JobPhase(s.sparkContext, s"store:$name:$verb")(body)
 
     def root(dir: String, variant: String = ""): String =
       StoreMeta.root(name, dir, variant)
@@ -161,13 +166,14 @@ private[graft] object StoreMeta {
     def rows(s: SparkSession, dir: String, variant: String = ""): Map[String, String] =
       StoreMeta.rows(s, root(dir, variant))
 
-    def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean = {
-      val r = rows(s, dir, variant)
-      r.get("base").exists(_ == fp(s, dir)) && ladder(r)
-    }
+    def isCurrent(s: SparkSession, dir: String, variant: String = ""): Boolean =
+      phase(s, "isCurrent") {
+        val r = rows(s, dir, variant)
+        r.get("base").exists(_ == fp(s, dir)) && ladder(r)
+      }
 
     def buildIfStale(s: SparkSession, dir: String, variant: String = "")(
-        build: => Any): String = {
+        build: => Any): String = phase(s, "buildIfStale") {
       if (!isCurrent(s, dir, variant)) build
       root(dir, variant)
     }
@@ -176,13 +182,13 @@ private[graft] object StoreMeta {
       * stamp and tombstone row — a crashed build leaves no meta and
       * rebuilds. */
     def built(s: SparkSession, dir: String, variant: String = ""): Unit =
-      write(s, root(dir, variant), Seq("base" -> fp(s, dir)))
+      phase(s, "built")(write(s, root(dir, variant), Seq("base" -> fp(s, dir))))
 
     /** Delete the meta record so the next buildIfStale rebuilds — the
       * store-owned invalidation verb ([[StoreTxn]] invalidates through it
       * instead of carving paths from outside). */
     def invalidate(s: SparkSession, dir: String, variant: String = ""): Unit =
-      delete(s, metaPath(root(dir, variant)))
+      phase(s, "invalidate")(delete(s, metaPath(root(dir, variant))))
 
     /** Absorb a batch the store cannot fingerprint-verify. The meta
       * becomes the one OPAQUE row `batch1 = absorbed` BEFORE `append`
@@ -191,7 +197,7 @@ private[graft] object StoreMeta {
       * mid-append leaves that same stale state — which is also why a
       * compact may fold it (its restored meta stays stale). */
     def absorb(s: SparkSession, dir: String, variant: String = "")(
-        append: => Unit): Unit = {
+        append: => Unit): Unit = phase(s, "absorb") {
       write(s, root(dir, variant), Seq("batch1" -> "absorbed"))
       append
     }
@@ -204,16 +210,17 @@ private[graft] object StoreMeta {
       * `absorbing` before the append and to `batchFp` after, so a crash
       * between the two reads stale, never as silently current. */
     def absorbOnce(s: SparkSession, dir: String, variant: String,
-        batchFp: String, rebuild: => Any)(append: => Unit): Unit = {
+        batchFp: String, rebuild: => Any)(append: => Unit): Unit = phase(s, "absorbOnce") {
       val path = root(dir, variant)
       val r = StoreMeta.rows(s, path)
       val base = fp(s, dir)
       val current = r.get("base").contains(base) && ladder(r)
-      if (current && r.get("batch1").contains(batchFp)) return
-      if (!current || r.contains("batch1")) rebuild
-      write(s, path, Seq("base" -> base, "batch1" -> "absorbing"))
-      append
-      write(s, path, Seq("base" -> base, "batch1" -> batchFp))
+      if (!(current && r.get("batch1").contains(batchFp))) {
+        if (!current || r.contains("batch1")) rebuild
+        write(s, path, Seq("base" -> base, "batch1" -> "absorbing"))
+        append
+        write(s, path, Seq("base" -> base, "batch1" -> batchFp))
+      }
     }
 
     /** The staged compact. `stage` writes each of `tables` complete
@@ -227,7 +234,7 @@ private[graft] object StoreMeta {
       * is a no-op. */
     def compact(s: SparkSession, dir: String, variant: String,
         tables: Seq[String], flip: String = "compacting",
-        foldOnce: Boolean = false)(stage: String => Unit): Unit = {
+        foldOnce: Boolean = false)(stage: String => Unit): Unit = phase(s, "compact") {
       val path = root(dir, variant)
       val saved = StoreMeta.rows(s, path)
       if (saved.isEmpty || saved.values.exists(torn))
@@ -235,15 +242,16 @@ private[graft] object StoreMeta {
           s"store at $path is torn or unbuilt (meta = $saved) — run " +
             "absorb/buildIfStale to heal before compacting")
       val fold = s"${saved.getOrElse("base", "")}|${saved.getOrElse("batch1", "")}"
-      if (foldOnce && saved.get("compacted").contains(fold)) return
-      val staging = s"$path/staging_compact"
-      stage(staging)
-      write(s, path, Seq("base" -> flip))
-      tables.foreach(t => swapIn(s, s"$staging/$t", s"$path/$t"))
-      write(s, path,
-        if (foldOnce) (saved - "compacted").toSeq :+ ("compacted" -> fold)
-        else saved.toSeq)
-      delete(s, staging)
+      if (!(foldOnce && saved.get("compacted").contains(fold))) {
+        val staging = s"$path/staging_compact"
+        stage(staging)
+        write(s, path, Seq("base" -> flip))
+        tables.foreach(t => swapIn(s, s"$staging/$t", s"$path/$t"))
+        write(s, path,
+          if (foldOnce) (saved - "compacted").toSeq :+ ("compacted" -> fold)
+          else saved.toSeq)
+        delete(s, staging)
+      }
     }
   }
 

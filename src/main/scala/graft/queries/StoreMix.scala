@@ -57,7 +57,7 @@ object StoreMix {
     val docs = Tables.t(s, dir, "documents")
     // respread (the planned-scan-tasks guard): the repetition+quality
     // gate kernels are the pipeline's per-row CPU and ran as ONE task on
-    // the one-row-group testdata scan (JobProfile r22: a 784 ms
+    // the one-row-group testdata scan (TUNE_r22.txt: a 784 ms
     // single-task job inside q158's lap); guard-false at cluster scale
     val kept = TextPipeline.withRepetitionChars(
         graft.SparkEntry.respread(

@@ -75,6 +75,10 @@ object StoreTxn {
 
   private[graft] def root(dir: String): String = StoreMeta.root("store_txn", dir)
 
+  /** Label a verb's Spark jobs `graft:store:store_txn:<verb>`. */
+  private def phase[T](s: SparkSession, verb: String)(body: => T): T =
+    graft.JobPhase(s.sparkContext, s"store:store_txn:$verb")(body)
+
   /** Drop every transaction (layers + commit log). The lifecycle queries
     * reset first so each lap replays a deterministic history.
     *
@@ -84,7 +88,7 @@ object StoreTxn {
     * commits no longer exist — so the bases' meta is deleted too and the
     * next [[ensureBases]] rebuilds them pristine. In production there is
     * no reset: the folded base IS the steady state. */
-  def reset(s: SparkSession, dir: String): Unit = {
+  def reset(s: SparkSession, dir: String): Unit = phase(s, "reset") {
     val p = new org.apache.hadoop.fs.Path(root(dir))
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(p, true)
@@ -886,7 +890,7 @@ object StoreTxn {
     * stage its layers under a fresh writer-unique nonce (`body(id,
     * nonce)`), then commit that nonce. Returns the committed id. */
   private def transact(s: SparkSession, dir: String)(
-      body: (Long, String) => Unit): Long = {
+      body: (Long, String) => Unit): Long = phase(s, "transact") {
     val id = nextTxnId(s, dir)
     val nonce = newNonce()
     body(id, nonce)
@@ -1700,7 +1704,7 @@ object StoreTxn {
     checkpoint(s, dir, defaultMaintLeaseTtlMs)
 
   private[graft] def checkpoint(s: SparkSession, dir: String,
-      leaseTtlMs: Long): Unit = withMaintLease(s, dir, leaseTtlMs) {
+      leaseTtlMs: Long): Unit = phase(s, "checkpoint")(withMaintLease(s, dir, leaseTtlMs) {
     val staging = stagingCkpt(dir)
     val m = marker(dir)
     val fs = m.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1752,7 +1756,7 @@ object StoreTxn {
     // harmless (the next checkpoint overwrites it).
     fs.delete(m, true)
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-  }
+  })
 
   /** VACUUM orphaned staging — the reclamation verb of the protocol.
     * The redo discipline means a crashed absorb's `t<id>/` staging is
@@ -1801,8 +1805,10 @@ object StoreTxn {
     // no-op BEFORE the lease: acquiring would mkdirs the store root, so
     // a vacuum against a path that never existed (typo, decommissioned
     // store) must keep returning empty without creating anything
-    if (!exists(s, root(dir))) return Seq.empty
-    withMaintLease(s, dir, leaseTtlMs) { vacuumLocked(s, dir, retentionMs) }
+    if (!exists(s, root(dir))) Seq.empty
+    else phase(s, "vacuum")(withMaintLease(s, dir, leaseTtlMs) {
+      vacuumLocked(s, dir, retentionMs)
+    })
   }
 
   private def vacuumLocked(s: SparkSession, dir: String,

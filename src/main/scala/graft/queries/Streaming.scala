@@ -39,8 +39,9 @@ object Streaming {
     * was exactly this. On a real cluster, size `graft.streaming
     * .statePartitions` to state volume (results are partition-invariant).
     *
-    * r22 sweep (Q104Tune + 12-query pack A/B, alternating order so JIT
-    * doesn't bias a config): a GLOBAL cut below 8 does not pay — at 2
+    * r22 sweep (TUNE_r22.txt: q104 per-batch table + 12-query pack A/B,
+    * alternating order so JIT doesn't bias a config): a GLOBAL cut below
+    * 8 does not pay — at 2
     * the pack ran 1.044x (q55's per-batch dedup compute serializes), at
     * 4 it was 0.979x with q55 still +16%. What DOES pay is the
     * stream-stream JOIN's own count (`defaultParts` below): a join
@@ -71,7 +72,7 @@ object Streaming {
     * batch's DELTA instead of a full state snapshot (snapshots go
     * async/periodic), which is flat-cost in state size where the
     * snapshot upload grows linearly. MEASURED at real state volume
-    * (graft.tools.StateTune, 10⁶-key streaming dedup, 4 batches):
+    * (TUNE_r20.txt, 10⁶-key streaming dedup, 4 batches):
     * addBatch 1.0-1.7 s/batch on snapshot-per-commit RocksDB vs
     * 0.73-0.95 s with changelog — ~1.3× end-to-end; the r19 experiments
     * saw a no-op only because q104's join state is kilobytes. Results

@@ -46,8 +46,10 @@ object Tables {
     })
   }
 
+  /** Table `name` of the corpus at `dir`. The read's one eager job,
+    * parquet's schema inference, is labelled `graft:read:<name>`. */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = graft.JobPhase(s.sparkContext, s"read:$name")(s.read.parquet(s"$dir/$name.parquet"))
     tsFixup(df.schema).map(df.select(_: _*)).getOrElse(df)
   }
 

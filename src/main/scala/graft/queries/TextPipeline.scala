@@ -1444,8 +1444,8 @@ object TextPipeline {
     // respread (the planned-scan-tasks guard): the one-row-group testdata
     // scan gives the persisted shingle frame ONE partition, and the
     // candidate self-join + pair-verify stages — this operator's CPU —
-    // inherit that single-task parallelism from the cache (JobProfile
-    // r22: a 2.1 s one-task job in a 3.9 s q102 lap). Guard-false at
+    // inherit that single-task parallelism from the cache (TUNE_r22.txt:
+    // a 2.1 s one-task job in a 3.9 s q102 lap). Guard-false at
     // cluster scale, so no shuffle is paid there. Applied HERE and not
     // in docShingles: the light shingle consumers (q63/q80) measured
     // the shuffle as pure overhead (+0.3-0.45 s) with nothing

@@ -68,6 +68,10 @@ object AnnIndex {
 
   private def metaPath(path: String): String = s"$path/metadata.json"
 
+  /** Label a verb's Spark jobs `graft:ann:<method>:<verb>`. */
+  private def phase[T](s: SparkSession, method: String, verb: String)(body: => T): T =
+    graft.JobPhase(s.sparkContext, s"ann:$method:$verb")(body)
+
   /** The commit record, None when absent. */
   private def record(s: SparkSession, path: String): Option[JValue] =
     StoreMeta.record(s, metaPath(path)).map(JsonMethods.parse(_))
@@ -214,7 +218,9 @@ object AnnIndex {
     val success = new org.apache.hadoop.fs.Path(s"$path/assignments/_SUCCESS")
     val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.exists(success) &&
-      (try record(s, path).exists { m => requireCurrent(s, dir, path, m); true }
+      (try record(s, path).exists { m =>
+         phase(s, methodOf(m), "isCurrent")(requireCurrent(s, dir, path, m)); true
+       }
        catch { case _: Exception => false })
   }
 
@@ -238,7 +244,7 @@ object AnnIndex {
     val success = new org.apache.hadoop.fs.Path(s"$path/assignments/_SUCCESS")
     val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
     !fs.exists(success) || record(s, path).forall { m => // unreadable: propagate
-      try { requireCurrent(s, dir, path, m); false }
+      try { phase(s, methodOf(m), "definitelyStale")(requireCurrent(s, dir, path, m)); false }
       catch { case _: IllegalStateException => true } // infra exceptions propagate
     }
   }
@@ -381,7 +387,8 @@ object AnnIndex {
     * corpus size the geometry was fit at; appends advance corpusRows but
     * never trainedRows, so a drift bound always measures growth against
     * the fit, not the last append. */
-  def build(s: SparkSession, dir: String, path: String, tier: AnnTier): Unit = {
+  def build(s: SparkSession, dir: String, path: String,
+      tier: AnnTier): Unit = phase(s, tier.method, "build") {
     val t = tier.resolve(s, dir)
     val emb = AnnTier.vectors(s, dir)
     val dim = AnnTier.dimOf(emb)
@@ -415,7 +422,8 @@ object AnnIndex {
    * [[build]] (SparkEntry's append-or-rebuild). The new rows are cached
    * between encoding and the write, and released however the write ends.
    */
-  def append(s: SparkSession, dir: String, path: String, method: String): Unit = {
+  def append(s: SparkSession, dir: String, path: String,
+      method: String): Unit = phase(s, method, "append") {
     val (meta, t) = open(s, path, method, "append")
     val (newRows, liveListing) = appendableNewRows(s, dir, path, meta)
     val (rows, chk) = corpusFingerprint(s, dir)
@@ -458,7 +466,8 @@ object AnnIndex {
    * the directory it overwrites), metadata is cleared FIRST and rewritten
    * verbatim LAST.
    */
-  def compact(s: SparkSession, path: String, method: String): Unit = {
+  def compact(s: SparkSession, path: String,
+      method: String): Unit = phase(s, method, "compact") {
     val (meta, _) = open(s, path, method, "compact")
     val staging = s"$path/staging_compact"
     s.read.parquet(s"$path/assignments").coalesce(4)
@@ -492,7 +501,7 @@ object AnnIndex {
       path: String,
       method: String,
       numProbes: Int = 5,
-      k: Int = 5): DataFrame = {
+      k: Int = 5): DataFrame = phase(s, method, "topK") {
     val (meta, t) = open(s, path, method, "topK")
     requireCurrent(s, dir, path, meta)
     val emb = AnnTier.vectors(s, dir)

@@ -607,6 +607,28 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(estimated < cores, s"tiny single-file scan estimated $estimated tasks")
     assert(estimated == li.rdd.getNumPartitions, // test-side .rdd is the oracle
       "planned-scan estimate diverges from Spark's actual file packing")
+    // A 7-file directory, then one file split by a lowered
+    // maxPartitionBytes: the estimate still equals Spark's packing.
+    val tmp = java.nio.file.Files.createTempDirectory("planned-scan").toString
+    try {
+      spark.range(0, 70000, 1, 7).selectExpr("id", "cast(id * 7 AS string) AS s")
+        .write.parquet(s"$tmp/seven")
+      val seven = spark.read.parquet(s"$tmp/seven")
+      assert(seven.inputFiles.length == 7)
+      assert(SparkEntry.plannedScanTasks(seven) == seven.rdd.getNumPartitions)
+      spark.range(0, 200000, 1, 1).selectExpr("id", "cast(id * 7 AS string) AS s")
+        .write.parquet(s"$tmp/one")
+      val key = "spark.sql.files.maxPartitionBytes"
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, "65536")
+      try {
+        val one = spark.read.parquet(s"$tmp/one")
+        assert(one.inputFiles.length == 1)
+        val parts = one.rdd.getNumPartitions
+        assert(parts > 1, s"one file planned $parts partitions at a 64 KiB split")
+        assert(SparkEntry.plannedScanTasks(one) == parts)
+      } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("q44 theta join is the one query allowed to nested-loop (dims only)") {

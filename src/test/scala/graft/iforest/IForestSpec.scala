@@ -183,6 +183,13 @@ class IForestSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
+  test("a model load runs one Spark job: the forest rows' collect, with no schema inference") {
+    val (_, dir) = fittedAndSaved()
+    val (loaded, jobs) = jobsOf(IForestModel.load(dir))
+    assert(jobs == List("outer"), jobs)
+    assert(loaded.trees.length == 10)
+  }
+
   test("two threads transforming one loaded model get identical output") {
     val (model, dir) = fittedAndSaved()
     val loaded = IForestModel.load(dir)
@@ -321,8 +328,17 @@ class IForestSpec extends AnyFunSuite {
   }
 
   /** `body`'s result and the distinct descriptions, in order, of the Spark
-    * jobs it ran from this thread (the caller's own read `outer`). */
+    * jobs it ran from this thread (the caller's own read `outer`). A phase
+    * may run more than one job (adaptive execution), so phases are
+    * compared distinct. */
   private def phasesOf[T](body: => T): (T, List[String]) = {
+    val (result, jobs) = jobsOf(body)
+    (result, jobs.distinct)
+  }
+
+  /** `body`'s result and the description of each Spark job it ran from
+    * this thread, in order (the caller's own read `outer`). */
+  private def jobsOf[T](body: => T): (T, List[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"job-descriptions-${System.nanoTime()}"
@@ -337,14 +353,13 @@ class IForestSpec extends AnyFunSuite {
     sc.setJobGroup(group, "outer")
     try {
       // The bus is asynchronous but ordered: once the end marker's job
-      // start arrives, every earlier one has. A phase may run more than
-      // one job (adaptive execution), so phases are compared distinct.
+      // start arrives, every earlier one has.
       val result = body
       assert(sc.getLocalProperty("spark.job.description") == "outer")
       graft.JobPhase(sc, "end")(sc.parallelize(Seq(1), 1).count())
       val deadline = System.nanoTime() + 30e9.toLong
       while (!seen.contains("graft:end") && System.nanoTime() < deadline) Thread.sleep(20)
-      (result, List.from(seen.iterator().asScala).takeWhile(_ != "graft:end").distinct)
+      (result, List.from(seen.iterator().asScala).takeWhile(_ != "graft:end"))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
