@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Murmur3Hash}
 import org.apache.spark.sql.functions._
 
 import graft.iforest.IForest
@@ -63,13 +64,35 @@ object SparkEntry {
    * input has thousands of row groups, the guard is false, and no shuffle
    * is paid (an unconditional repartition here would full-shuffle 100 TB
    * for nothing).
+   *
+   * Key contract: the input's LEADING column is its row key (lineitem's
+   * `l_orderkey`, `doc_id` for the text operators), and the split is a
+   * hash of that column over `cores` partitions. Not round-robin: Spark
+   * puts a local sort before every round-robin split
+   * (`spark.sql.execution.sortBeforeRepartition`) so a retried task
+   * re-deals the same rows to the same partitions, and on a one-task scan
+   * that sort of every row was about half the lineitem scoring lap
+   * (TUNE_r28.txt). A hash split needs no sort to be safe under retry: a
+   * row's partition depends only on its own key, not on its position in
+   * the scan. The key is referenced by its back-quoted name, so a dotted
+   * name is a column and not a struct-field path; a key Spark cannot hash
+   * (a map) is refused here, naming the column.
    */
   private[graft] def respread(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (plannedScanTasks(df) < cores) df.repartition(cores) else df
+    if (plannedScanTasks(df) >= cores) df
+    else {
+      val key = df.schema.head
+      require(new Murmur3Hash(Seq(AttributeReference(key.name, key.dataType)()))
+          .checkInputDataTypes().isSuccess,
+        s"respread keys on the leading column, and `${key.name}` of type " +
+          s"${key.dataType.simpleString} cannot be hashed")
+      df.repartition(cores, col(s"`${key.name.replace("`", "``")}`"))
+    }
   }
 
   private def iforestScore(spark: SparkSession, dir: String): DataFrame = {
+    // respread hashes the leading column: lineitem's row key l_orderkey
     val li = respread(table(spark, dir, "lineitem"))
     // Caller-owned cache (released by the consumer's releaseAll, the repo's
     // standard protocol): fit sees a persisted input so it skips its own

@@ -58,7 +58,8 @@ object StoreMix {
     // respread (the planned-scan-tasks guard): the repetition+quality
     // gate kernels are the pipeline's per-row CPU and ran as ONE task on
     // the one-row-group testdata scan (TUNE_r22.txt: a 784 ms
-    // single-task job inside q158's lap); guard-false at cluster scale
+    // single-task job inside q158's lap); guard-false at cluster scale.
+    // doc_id leads the select: respread hashes its input's leading column
     val kept = TextPipeline.withRepetitionChars(
         graft.SparkEntry.respread(
           docs.select(col("doc_id"), col("lang"), col("source"),

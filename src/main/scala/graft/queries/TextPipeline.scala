@@ -1449,7 +1449,8 @@ object TextPipeline {
     // cluster scale, so no shuffle is paid there. Applied HERE and not
     // in docShingles: the light shingle consumers (q63/q80) measured
     // the shuffle as pure overhead (+0.3-0.45 s) with nothing
-    // downstream to parallelize.
+    // downstream to parallelize. respread hashes the leading column,
+    // and shinglesOf leads with the row key doc_id.
     val sh = Caches.persist(graft.SparkEntry.respread(shDocs))
     val ex = Caches.persist(
       sh.select(col("doc_id"), explode(col("sh")).as("shingle")))
@@ -1481,7 +1482,8 @@ object TextPipeline {
 
   def containmentOf(shDocs: DataFrame, dfMin: Long = 2, dfMax: Long = 20,
       threshold: Double = 0.8, minShared: Long = 3): DataFrame = {
-    // respread: same rationale (and measurement) as sparseCosineOf
+    // respread: same rationale (and measurement) and the same doc_id
+    // leading key as sparseCosineOf
     val sh = Caches.persist(graft.SparkEntry.respread(shDocs))
     val ex = Caches.persist(
       sh.select(col("doc_id"), explode(col("sh")).as("shingle")))
@@ -1519,7 +1521,8 @@ object TextPipeline {
     // the consumer via Caches.releaseAll after the terminal action.
     // respread: the band self-join and jaccard verify read this cache —
     // without it they inherit the scan's one partition (see
-    // sparseCosineOf; q66/q69 measured 0.91x/0.95x with it).
+    // sparseCosineOf; q66/q69 measured 0.91x/0.95x with it). Hashed on
+    // the leading column, docShingles' row key doc_id.
     val docs = Caches.persist(graft.SparkEntry.respread(docShingles(s, dir)))
     val bandsP = Caches.persist(minhashBands(docs)) // both sides of the candidate self-join
     val cand = bandsP.withColumnRenamed("doc_id", "a_id")
@@ -1640,13 +1643,14 @@ object TextPipeline {
       .select("doc_id")
     // both gates compute IN-ROW on the dedup survivors — one scan, no
     // gate joins; the semi-join against the keeper set is the only
-    // exchange stage 1+2 pay. respread: the gate kernels are this scan's
-    // per-row CPU and ran single-task on the one-row-group testdata
-    // (see StoreMix.mixFrom's measurement); guard-false at cluster scale
+    // exchange stage 1+2 pay. No respread here (unlike StoreMix.mixFrom):
+    // the gate kernels over the one-row-group scan cost about what the
+    // extra shuffle does. At sf0.1 the hashed respread read 0.94-1.03x
+    // the round-robin one over three A/Bs; dropping it read 0.88-1.07x
+    // (median 0.94x) over four, in 8 tasks instead of 12 (TUNE_r28.txt)
     val kept = withRepetitionChars(
-        graft.SparkEntry.respread(
-          docs.select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"), col("text"))),
+        docs.select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"), col("text")),
         withQuality = true)
       .join(keepers, Seq("doc_id"), "left_semi")
       .where(s"quality_e4 >= $minQualityE4 AND NOT ${repetitivePredAt(repThreshold)}")

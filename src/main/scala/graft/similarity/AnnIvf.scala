@@ -67,12 +67,30 @@ object AnnIvf {
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
   /** Memoized corpus row count (signature-stamped like the fits) —
-    * shared with [[AnnPq]]'s adaptive re-rank resolution. */
+    * shared with [[AnnPq]]'s adaptive re-rank resolution. The count is
+    * the sum of the row counts in the parquet footers of the corpus's
+    * data files (names starting `_` or `.` are metadata, not data), read
+    * through the Hadoop FileSystem: no Spark job. */
   private[graft] def corpusCount(s: SparkSession, dir: String): Long = {
     val sig = graft.queries.Tables.dirStamp(s, s"$dir/embeddings.parquet")
     corpusCounts.compute(dir, (d, prev) =>
       if (prev != null && prev._1 == sig) prev
-      else (sig, s.read.parquet(s"$d/embeddings.parquet").count()))._2
+      else (sig, footerRows(s, s"$d/embeddings.parquet")))._2
+  }
+
+  private def footerRows(s: SparkSession, path: String): Long = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = s.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    p.getFileSystem(conf).listStatus(p)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
   }
 
   /** Resolve (nlist, nprobe) where 0 means corpus-adaptive. */

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, spark_partition_id}
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -591,13 +592,22 @@ class PlanAuditSpec extends AnyFunSuite {
   test("iforest re-spread is conditional: already-parallel input adds no Exchange") {
     val cores = spark.sparkContext.defaultParallelism
     val wide = spark.range(0, 10000, 1, cores).toDF("id")
-    // respread must be the identity (same plan, no RoundRobin shuffle) when
+    // respread must be the identity (same plan, no shuffle at all) when
     // the planned scan already has >= cores tasks
     val out = SparkEntry.respread(wide)
     assert(out eq wide, "respread shuffled an already-parallel input")
     val narrow = spark.range(0, 100, 1, 1).toDF("id")
     assert(SparkEntry.respread(narrow).rdd.getNumPartitions == cores,
       "respread did not spread a single-partition input")
+    // ...and when it spreads, it hashes the leading column: no round-robin
+    // split, so no sort in front of the Exchange
+    val spread = SparkEntry.respread(narrow)
+    spread.collect()
+    val sp = spread.queryExecution.executedPlan.toString
+    assert(s"Exchange hashpartitioning\\(id#\\d+L, $cores\\)".r.findFirstIn(sp).isDefined,
+      s"respread is not a hash split on the leading column:\n$sp")
+    assert(!sp.contains("RoundRobinPartitioning") && !sp.contains("Sort"),
+      s"respread sorts or deals round-robin:\n$sp")
     // The probe must read the PLAN, not df.rdd (materializing RDD lineage
     // at plan-build time was the r6-r8 blemish): a one-row-group testdata
     // parquet file plans fewer tasks than cores, so the guard fires, and
@@ -607,6 +617,32 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(estimated < cores, s"tiny single-file scan estimated $estimated tasks")
     assert(estimated == li.rdd.getNumPartitions, // test-side .rdd is the oracle
       "planned-scan estimate diverges from Spark's actual file packing")
+    // The spread keeps the flagship's column pruning: the scan still reads
+    // only the 6 columns the assembler and the select consume.
+    val flagship = new org.apache.spark.ml.feature.VectorAssembler()
+      .setInputCols(Array("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
+      .setOutputCol("features").transform(SparkEntry.respread(li))
+      .select("l_orderkey", "l_linenumber", "features")
+    // (the plan string truncates ReadSchema, so read the scan node's own)
+    val readSchema = flagship.queryExecution.sparkPlan.collectLeaves().collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.requiredSchema.fieldNames.toSet
+    }
+    assert(readSchema == Seq(Set("l_orderkey", "l_linenumber", "l_quantity",
+      "l_extendedprice", "l_discount", "l_tax")), s"respread widened the scan: $readSchema")
+    // Even partitions, and the same partition for every row on a re-run:
+    // a hash split's assignment depends on the key alone.
+    // (sf0.001 repeats some (l_orderkey, l_linenumber) pairs, so compare the
+    // sorted (key, partition) rows, not a map)
+    def assignment(): Seq[(Long, Int, Int)] = SparkEntry.respread(li)
+      .select(col("l_orderkey"), col("l_linenumber"), spark_partition_id())
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq.sorted
+    val first = assignment()
+    val n = li.count()
+    assert(first.size == n, "respread lost or doubled rows")
+    val sizes = first.groupBy(_._3).view.mapValues(_.size).toMap
+    assert(sizes.size == cores && sizes.values.forall(c =>
+      c >= 0.75 * n / cores && c <= 1.25 * n / cores), s"uneven spread: $sizes")
+    assert(assignment() == first, "a re-run moved rows to other partitions")
     // A 7-file directory, then one file split by a lowered
     // maxPartitionBytes: the estimate still equals Spark's packing.
     val tmp = java.nio.file.Files.createTempDirectory("planned-scan").toString
@@ -629,6 +665,21 @@ class PlanAuditSpec extends AnyFunSuite {
         assert(SparkEntry.plannedScanTasks(one) == parts)
       } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("respread keys on a dotted leading column as a column, not a struct path") {
+    val df = spark.range(0, 100, 1, 1).selectExpr("id AS `a.b`", "id * 2 AS v")
+    val spread = SparkEntry.respread(df)
+    assert(spread.count() == 100)
+    val p = spread.queryExecution.executedPlan.toString
+    assert("hashpartitioning\\(a\\.b#\\d+".r.findFirstIn(p).isDefined, p)
+  }
+
+  test("respread refuses a leading column Spark cannot hash, naming it") {
+    val df = spark.range(0, 10, 1, 1).selectExpr("map(id, id) AS m", "id")
+    val e = intercept[IllegalArgumentException](SparkEntry.respread(df))
+    assert(e.getMessage.contains("`m`") && e.getMessage.contains("map<bigint,bigint>"),
+      e.getMessage)
   }
 
   test("q44 theta join is the one query allowed to nested-loop (dims only)") {

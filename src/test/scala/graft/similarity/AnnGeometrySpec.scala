@@ -112,6 +112,13 @@ class AnnGeometrySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("the corpus row count sums parquet footers and runs no Spark job") {
+    val dir = corpusIn(s"$tmp/count", 3)
+    val (n, jobs) = jobsOf(AnnIvf.corpusCount(spark, dir))
+    assert(jobs.isEmpty, s"the count ran Spark jobs: $jobs")
+    assert(n == spark.read.parquet(s"$dir/embeddings.parquet").count())
+  }
+
   test("a cold fit runs at most 5 Spark jobs (sf0.1's 2,000 vectors)") {
     for ((method, tier) <- tiers) {
       // a fresh corpus dir: the row-count memo is cold as well
