@@ -120,10 +120,8 @@ _ALIASES = {
                  "min_quality_e4=6100 rep_threshold=0.10 cap_k=5 "
                  "total_budget=15000"),
     # ANN: live and persisted tiers (method in lsh, ivf, pq, ivfpq)
-    "ann_topk_lsh": ("similarity.AnnLsh.annTopK",
-                     "num_probes=5 k=5 14 16 768 7919 False 2 0.0 False"),
-    "ann_topk_pq": ("similarity.AnnPq.annTopK",
-                    "num_probes=5 k=5 rerank=0 16 16 4099"),
+    "ann_topk_lsh": ("PipelineBridge.annTopK", "'lsh' num_probes=5 k=5"),
+    "ann_topk_pq": ("PipelineBridge.annTopK", "'pq' num_probes=5 k=5"),
     "build_ann_index": ("similarity.AnnIndex.build",
                         "index_path method='lsh'"),
     "append_ann_index": ("similarity.AnnIndex.append",

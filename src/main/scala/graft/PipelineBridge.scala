@@ -24,6 +24,12 @@ object PipelineBridge {
 
   def queryNames(): Array[String] = SparkEntry.queries.keys.toSeq.sorted.toArray
 
+  /** The live top k of the `method` ANN tier (lsh, ivf, pq or ivfpq) at
+    * its default knobs — the live twin of [[SparkEntry.annPersistedTopK]]. */
+  def annTopK(s: SparkSession, dir: String, method: String, numProbes: Int,
+      k: Int): DataFrame =
+    similarity.AnnTier.topK(s, dir, similarity.AnnTier.defaults(method), numProbes, k)
+
   /** The q79 redaction chain over the RAW documents table with a
     * caller-chosen pattern set: parallel arrays of (category name, Java
     * regex, replacement token), applied in order, per-category counts +

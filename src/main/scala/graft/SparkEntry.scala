@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.iforest.IForest
 import graft.multimodal.Multimodal
 import graft.queries.{Advanced, Audit, ClusterStore, Clustering, DecontamIndex, DedupIndex, EmbedIndex, Graph, GraphStore, Physical, QualityModel, Relational, SearchStore, SketchStore, ZoneMapStore, StatsStore, StoreMix, StoreTxn, Streaming, Tables, TextDiag, TextPipeline, VocabStore}
-import graft.similarity.{AnnIvf, AnnLsh}
+import graft.similarity.{AnnTier, IvfPqTier, IvfTier, LshTier, PqTier}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -203,8 +203,8 @@ object SparkEntry {
       Physical.queries ++ DedupIndex.queries ++ Graph.queries ++ StatsStore.queries ++
       StoreMix.queries ++ StoreTxn.queries ++ GraphStore.queries ++ DecontamIndex.queries ++ VocabStore.queries ++ EmbedIndex.queries ++ QualityModel.queries ++ SketchStore.queries ++ TextDiag.queries ++ SearchStore.queries ++ ZoneMapStore.queries ++ Audit.queries ++ Clustering.queries ++ ClusterStore.queries ++ Map(
       "q30_binary_meta" -> ((s: SparkSession, dir: String) => Multimodal.binaryMetaQuery(s, dir)),
-      "q31_ann_lsh" -> ((s: SparkSession, dir: String) => AnnLsh.annTopK(s, dir)),
-      "q49_ann_ivf" -> ((s: SparkSession, dir: String) => AnnIvf.annTopK(s, dir)),
+      "q31_ann_lsh" -> ((s: SparkSession, dir: String) => AnnTier.topK(s, dir, LshTier())),
+      "q49_ann_ivf" -> ((s: SparkSession, dir: String) => AnnTier.topK(s, dir, IvfTier())),
       "q58_ann_persisted" -> ((s: SparkSession, dir: String) =>
         annPersistedTopK(s, dir, annIndexPath(dir, "lsh_q58"), "lsh")),
       "q59_ann_ivf_persisted" -> ((s: SparkSession, dir: String) =>
@@ -218,19 +218,19 @@ object SparkEntry {
       // tables, but the budgeted mode's measured operating point was
       // established at 12 and is a deliberate knob here, not a default.
       "q60_ann_budgeted" -> ((s: SparkSession, dir: String) =>
-        AnnLsh.annTopK(s, dir, numTables = 12, probesPerTable = 1024, poolFrac = 0.85)),
+        AnnTier.topK(s, dir, LshTier(numTables = 12, probesPerTable = 1024, poolFrac = 0.85))),
       // Default-knob LSH with int8-quantized candidate scoring: same
       // buckets, vote, and pool bounds as q31; only the rehydration join
       // and cosine kernel run 8x narrower (QuantizeVec). Measured recall
       // identical to q31 on both gated corpora (ModulesSpec).
       "q62_ann_quantized" -> ((s: SparkSession, dir: String) =>
-        AnnLsh.annTopK(s, dir, quantized = true)),
+        AnnTier.topK(s, dir, LshTier(quantized = true))),
       // Product-quantization ANN (Jégou et al. 2011): 16-byte codes,
       // per-probe ADC lookup tables over a compressed exhaustive scan,
       // exact re-rank of the top n/16 pool. The memory-bound scale path —
       // see AnnPq's doc and the ModulesSpec recall gates.
       "q130_ann_pq" -> ((s: SparkSession, dir: String) =>
-        graft.similarity.AnnPq.annTopK(s, dir)),
+        AnnTier.topK(s, dir, PqTier())),
       "q133_ann_pq_persisted" -> ((s: SparkSession, dir: String) =>
         annPersistedTopK(s, dir, annIndexPath(dir, "pq_q133"), "pq")),
       // IVF-PQ (Jégou et al. 2011 §IV, the FAISS IVFADC composition):
@@ -238,7 +238,7 @@ object SparkEntry {
       // residual codes decide HOW CHEAPLY — <q,x> ≈ <q,c_list> + ADC on
       // the residual codebooks, exact re-rank of the pool. See AnnIvfPq.
       "q137_ann_ivfpq" -> ((s: SparkSession, dir: String) =>
-        graft.similarity.AnnIvfPq.annTopK(s, dir)),
+        AnnTier.topK(s, dir, IvfPqTier())),
       "q138_ann_ivfpq_persisted" -> ((s: SparkSession, dir: String) =>
         annPersistedTopK(s, dir, annIndexPath(dir, "ivfpq_q138"), "ivfpq")),
       "iforest_score" -> ((s: SparkSession, dir: String) => iforestScore(s, dir)),

@@ -26,31 +26,6 @@ object Streaming {
     Tables.streamTsFixup(stream)
   }
 
-  /** Run a streaming aggregation to completion and return the result.
-    *
-    * State partitions are sized DOWN from the session's batch shuffle
-    * default before the query starts (`spark.sql.shuffle.partitions` is
-    * baked into a streaming query's state layout at first start): every
-    * micro-batch commits one state-store delta per partition per stateful
-    * operator, so partition count multiplies fixed commit I/O while state
-    * volume stays the same. Measured at sf0.1 local[32]: the stream-stream
-    * interval join ran 7-11 s (and swung 30% run-to-run) on 32 state
-    * partitions vs a stable 3.2 s on 8 — the r4/r5 "streaming variance"
-    * was exactly this. On a real cluster, size `graft.streaming
-    * .statePartitions` to state volume (results are partition-invariant).
-    *
-    * r22 sweep (TUNE_r22.txt: q104 per-batch table + 12-query pack A/B,
-    * alternating order so JIT doesn't bias a config): a GLOBAL cut below
-    * 8 does not pay — at 2
-    * the pack ran 1.044x (q55's per-batch dedup compute serializes), at
-    * 4 it was 0.979x with q55 still +16%. What DOES pay is the
-    * stream-stream JOIN's own count (`defaultParts` below): a join
-    * commits FOUR state-store instances per partition per batch (two
-    * keyToNumValues + two keyWithIndexToValue) where an aggregation
-    * commits one, so its fixed commit I/O is 4x an aggregation's at
-    * equal partitions — q104 measured 0.88x at 4 partitions in the
-    * mixed pack while every aggregation query kept 8. Production
-    * streams size via the conf either way. */
   /** State-store provider for the streaming pack. RocksDB is the default:
     * the HDFS-backed provider keeps every partition's state map ON HEAP, so
     * at 100 TB stream-stream join state outgrows executor memory; RocksDB
@@ -67,8 +42,36 @@ object Streaming {
       case fqcn => fqcn
     }
 
-  /** CHANGELOG CHECKPOINTING rides the RocksDB default (override with
-    * `graft.streaming.changelogCheckpointing=false`): commits upload the
+  /** Run a streaming aggregation to completion and return the result.
+    *
+    * State partitions are sized DOWN from the session's batch shuffle
+    * default before the query starts (`spark.sql.shuffle.partitions` is
+    * baked into a streaming query's state layout at first start): every
+    * micro-batch commits one state-store delta per partition per stateful
+    * operator, so partition count multiplies fixed commit I/O while state
+    * volume stays the same. Measured at sf0.1 local[32]: the stream-stream
+    * interval join ran 7-11 s (and swung 30% run-to-run) on 32 state
+    * partitions vs a stable 3.2 s on 8 — the r4/r5 "streaming variance"
+    * was exactly this. The count is min(`defaultParts`, the session's
+    * `spark.sql.shuffle.partitions`), so a session set below the default
+    * sizes its state to match (results are partition-invariant).
+    *
+    * r22 sweep (TUNE_r22.txt: q104 per-batch table + 12-query pack A/B,
+    * alternating order so JIT doesn't bias a config): a GLOBAL cut below
+    * 8 does not pay — at 2
+    * the pack ran 1.044x (q55's per-batch dedup compute serializes), at
+    * 4 it was 0.979x with q55 still +16%. What DOES pay is the
+    * stream-stream JOIN's own count (`defaultParts` below): a join
+    * commits FOUR state-store instances per partition per batch (two
+    * keyToNumValues + two keyWithIndexToValue) where an aggregation
+    * commits one, so its fixed commit I/O is 4x an aggregation's at
+    * equal partitions — q104 measured 0.88x at 4 partitions in the
+    * mixed pack while every aggregation query kept 8.
+    *
+    * CHANGELOG CHECKPOINTING rides the RocksDB default (a session that
+    * already sets Spark's own
+    * `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`
+    * keeps its value): commits upload the
     * batch's DELTA instead of a full state snapshot (snapshots go
     * async/periodic), which is flat-cost in state size where the
     * snapshot upload grows linearly. MEASURED at real state volume
@@ -88,13 +91,9 @@ object Streaming {
     val prev = s.conf.get(key)
     val prevProvider = s.conf.getOption(providerKey)
     val prevClog = s.conf.getOption(clogKey)
-    val stateParts = s.conf.getOption("graft.streaming.statePartitions")
-      .getOrElse(math.min(defaultParts, prev.toInt).toString)
-    s.conf.set(key, stateParts)
+    s.conf.set(key, math.min(defaultParts, prev.toInt).toString)
     s.conf.set(providerKey, providerClass(s))
-    if (providerClass(s).contains("RocksDB"))
-      s.conf.set(clogKey, s.conf
-        .getOption("graft.streaming.changelogCheckpointing").getOrElse("true"))
+    if (prevClog.isEmpty && providerClass(s).contains("RocksDB")) s.conf.set(clogKey, "true")
     try {
       val q = agg.writeStream
         .outputMode(mode)

@@ -35,13 +35,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
  * `probesPerTable == 1`: index side — the vector's own bucket per table
  * (one entry per table). `probesPerTable > 1`: probe side — each table's
  * margin-ordered probe sequence (Lv et al.'s query-directed probing),
- * allocated one of two ways:
+ * taken one of two ways:
  *
- *  - `adaptive = false` (the default): a FIXED quota — each table emits
- *    exactly its `probesPerTable` cheapest buckets.
- *  - `adaptive = true`: a GLOBAL budget of `numTables * probesPerTable`
- *    buckets, merged cheapest-flip-first across tables, so the scan
- *    budget concentrates where the margins are tightest.
+ *  - no `bcCounts` (the default): a FIXED per-table quota — each table
+ *    emits exactly its `probesPerTable` cheapest buckets (fewer when the
+ *    quota exceeds the 2^numPlanes lattice).
  *  - `bcCounts != null`: OCCUPANCY-BUDGETED probing — the candidate
  *    buckets of all tables merge cheapest-flip-first (own buckets, cost
  *    0, lead), and are taken greedily while the running sum of their
@@ -59,20 +57,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
  *    stays sub-MB at any data scale. `probesPerTable` becomes the
  *    per-table ENUMERATION cap for the merge.
  *
- * Measured head-to-head on the sandbox embeddings (TUNE_r9.txt, the
- * committed AnnTune grid; 25 probes, sf0.001, planes=10 tables=6
- * probes=64): fixed 0.808 recall@5 at 0.333 scan vs adaptive 0.760 at
- * 0.339 — the fixed quota wins on BOTH axes there and at every other
- * swept (planes, tables, probes) pair in the artifact, because
- * concentrating the budget in one low-margin table buys duplicate
- * candidates (tables hash the same vectors) while a guaranteed per-table
- * floor keeps the tables' independent-miss product working. The adaptive
- * merge is kept behind the flag for re-measurement, not used by the
- * shipped defaults. The occupancy-budgeted mode composes the global
- * merge with the count table, which changes the economics: the failure
- * mode the fixed quota guarded against (one table hogging the budget
- * with duplicate candidates) is now charged to the budget at its true
- * row cost, so the greedy walk self-corrects.
+ * Why the quota is fixed per table: a global merge of the same
+ * `numTables * probesPerTable` buckets, cheapest-flip-first across
+ * tables, lost to it on BOTH recall and scan at every swept point
+ * (TUNE_r9.txt, the committed AnnTune grid; 25 probes, sf0.001, e.g.
+ * planes=10 tables=6 probes=64: fixed 0.808 recall@5 at 0.333 scan vs
+ * merged 0.760 at 0.339). Concentrating the budget in one low-margin
+ * table buys duplicate candidates (tables hash the same vectors), while
+ * a guaranteed per-table floor keeps the tables' independent-miss
+ * product working. The occupancy budget merges across tables too, but
+ * charges each bucket its true row cost, so one table hogging the budget
+ * with duplicate candidates pays for them and the greedy walk
+ * self-corrects; the own bucket of every table, at cost 0, still leads.
  */
 case class LshBuckets(
     child: Expression,
@@ -80,19 +76,8 @@ case class LshBuckets(
     numTables: Int,
     numPlanes: Int,
     probesPerTable: Int,
-    adaptive: Boolean = false,
     bcCounts: Broadcast[Array[Long]] = null,
     poolBudget: Long = 0L) extends UnaryExpression {
-
-  // The budgeted branch replaces (not refines) the adaptive merge — both
-  // orders are the same global cheapest-flip-first walk, but the budget
-  // charges occupancy where adaptive charges a flat per-bucket count, so
-  // "adaptive AND budgeted" has no coherent meaning. Fail loud instead of
-  // silently ignoring one knob (callers and metadata round-trips would
-  // otherwise lose adaptive semantics whenever poolFrac > 0).
-  require(!(adaptive && bcCounts != null),
-    "LshBuckets: adaptive and occupancy-budgeted probing are mutually exclusive " +
-      "— pass adaptive=false with poolFrac/bcCounts, or drop the budget")
 
   @transient private lazy val planes: Array[Array[Double]] = bcPlanes.value
 
@@ -122,7 +107,7 @@ case class LshBuckets(
       new GenericArrayData(out)
     } else if (bcCounts != null) {
       // Occupancy-budgeted: merge every table's margin-ordered candidates
-      // cheapest-first (as in the adaptive branch), then take greedily
+      // cheapest-first, then take greedily
       // while the summed bucket occupancy fits poolBudget. Empty buckets
       // carry no candidates and are dropped; a bucket that would overflow
       // the REMAINING budget is skipped, not a stopping point — smaller
@@ -169,10 +154,10 @@ case class LshBuckets(
         i += 1
       }
       new GenericArrayData(java.util.Arrays.copyOf(out, m))
-    } else if (!adaptive) {
+    } else {
       // Fixed per-table quota: each table emits exactly its probesPerTable
       // cheapest buckets (fewer when the quota exceeds the 2^numPlanes
-      // lattice). Measured better than the global merge — see class doc.
+      // lattice). Measured better than a global merge — see class doc.
       val perTable = math.min(probesPerTable, tableSpan)
       val out = new Array[Int](numTables * perTable)
       var n = 0
@@ -189,37 +174,6 @@ case class LshBuckets(
         t += 1
       }
       new GenericArrayData(if (n == out.length) out else java.util.Arrays.copyOf(out, n))
-    } else {
-      // Adaptive global budget: each table enumerates up to the FULL budget
-      // (a table with uniformly tight margins may deserve most of it), then
-      // the per-table sequences merge into one cheapest-first order and the
-      // budget cuts it off. probeSequence emits fewer when the budget
-      // exceeds the 2^numPlanes lattice, so the merged pool can also run
-      // short of the budget.
-      val budget = numTables * probesPerTable
-      val all = new Array[(Double, Int)](numTables * math.min(budget, tableSpan))
-      var n = 0
-      var t = 0
-      while (t < numTables) {
-        val dots = AnnLsh.projections(vec, ps, t * numPlanes, numPlanes)
-        val seq = AnnLsh.probeSequenceWithCosts(dots, budget)
-        var i = 0
-        while (i < seq.length) {
-          all(n) = (seq(i)._1, t * tableSpan + seq(i)._2)
-          n += 1
-          i += 1
-        }
-        t += 1
-      }
-      val merged = java.util.Arrays.copyOf(all, n)
-      // stable secondary key (bucket id) keeps the order deterministic
-      // across equal costs (e.g. the numTables zero-cost own buckets)
-      java.util.Arrays.sort(merged, Ordering.Tuple2[Double, Int].asInstanceOf[java.util.Comparator[(Double, Int)]])
-      val take = math.min(budget, merged.length)
-      val out = new Array[Int](take)
-      var i = 0
-      while (i < take) { out(i) = merged(i)._2; i += 1 }
-      new GenericArrayData(out)
     }
   }
 

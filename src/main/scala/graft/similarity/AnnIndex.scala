@@ -10,7 +10,7 @@ import graft.queries.StoreMeta
  * The persist-and-probe core of the four ANN tiers. A real deployment
  * builds an index ONCE next to the data and every query session loads
  * it, instead of refitting the geometry per session (the live
- * `annTopK`s). A tier is only its geometry and its encoder — the
+ * [[AnnTier.topK]]). A tier is only its geometry and its encoder — the
  * [[AnnTier]] contract ([[LshTier]], [[IvfTier]], [[PqTier]],
  * [[IvfPqTier]]) — and this object writes the lifecycle once, over it:
  * [[build]], [[append]], [[compact]] and [[topK]], each checking first
@@ -482,8 +482,8 @@ object AnnIndex {
    * Top-k cosine neighbors of the probes (vec_id < numProbes) from the
    * PERSISTED `method` index: the loaded geometry drives the probe side,
    * the loaded assignments supply the candidates, and the tier's own scan
-   * and rank run over them — bit-identical to the live `annTopK` at the
-   * index's knobs. The PQ tiers' re-rank depth resolves from the
+   * and rank run over them — bit-identical to the live [[AnnTier.topK]]
+   * of the index's tier value. The PQ tiers' re-rank depth resolves from the
    * metadata's trainedRows, so an appended index keeps the pool it was
    * built with. Returns (q_id, neighbor_id, cosine, rn).
    *

@@ -153,33 +153,6 @@ object AnnIvf {
     if (n == 1) Array(nearest(cs, en, 0))
     else cs.indices.map(i => (dist2(cs(i), en, 0), i)).sortBy(_._1).take(n).map(_._2).toArray
 
-  /** Inverted-list-pruned, cosine-scored candidate pairs — the pool
-    * [[annTopK]] ranks, as (q_id, neighbor_id, cos). Exposed separately so
-    * tests can count pool sizes directly instead of ranking with a
-    * sentinel k. nlist/nprobe = 0 (the default) resolves corpus-adaptively
-    * (see the class doc): (256, 36) on sf0.001 = recall@5 0.936 at scan
-    * 0.209, (512, 73) on sf0.1 = 0.880 at 0.189 at the shipped seed
-    * (TUNE_r23.txt ivfseeds; gated in ModulesSpec at recall >= 0.85,
-    * scan <= 0.25 on both corpora, with 5-seed minima 0.920/0.848). */
-  def candidates(
-      s: SparkSession,
-      dir: String,
-      numProbes: Int = 5,
-      nlist: Int = 0,
-      nprobe: Int = 0,
-      seed: Long = 4099L): DataFrame =
-    AnnTier.liveCandidates(s, dir, IvfTier(nlist, nprobe, seed), numProbes)
-
-  def annTopK(
-      s: SparkSession,
-      dir: String,
-      numProbes: Int = 5,
-      k: Int = 5,
-      nlist: Int = 0,
-      nprobe: Int = 0,
-      seed: Long = 4099L): DataFrame =
-    AnnTier.liveTopK(s, dir, IvfTier(nlist, nprobe, seed), numProbes, k)
-
   /** The `nprobe` nearest lists per row, exploded, from the broadcast
     * centroids (the codegen'd [[IvfLists]] normalizes inside). */
   private[similarity] def probeLists(s: SparkSession, centroids: Array[Array[Double]],
@@ -197,7 +170,11 @@ object AnnIvf {
  * resolve corpus-adaptively ([[AnnIvf.resolveKnobs]]) and the metadata
  * records the RESOLVED values, so a loaded index keeps its build-time
  * operating point even if the corpus — and the auto rule's answer —
- * later grows. Appends assign to the FROZEN centroids, so for IVF
+ * later grows. The defaults resolve to (256, 36) on sf0.001 = recall@5
+ * 0.936 at scan 0.209, and (512, 73) on sf0.1 = 0.880 at 0.189 at the
+ * shipped seed (TUNE_r23.txt ivfseeds; gated in ModulesSpec at recall
+ * >= 0.85, scan <= 0.25 on both corpora, with 5-seed minima 0.920/0.848).
+ * Appends assign to the FROZEN centroids, so for IVF
  * "append ≡ rebuild" holds for the assignments given the geometry, not
  * for the geometry itself; past [[AnnIndex.ivfDriftBound]] the undersized
  * nlist and stale centroids decay scan and recall, and the append refuses.

@@ -58,35 +58,6 @@ object AnnIvfPq {
     while (i < en.length) { r(i) = en(i) - cent(i); i += 1 }
     (list, r)
   }
-
-  /** IVF-pruned, residual-ADC-scored candidates as
-    * (q_id, neighbor_id, adc) — only the probed lists' code rows are
-    * touched. nlist/nprobe = 0 resolve corpus-adaptively like q49. */
-  def prunedScan(
-      s: SparkSession,
-      dir: String,
-      numProbes: Int = 5,
-      nlist: Int = 0,
-      nprobe: Int = 0,
-      m: Int = AnnPq.defaultM,
-      k: Int = AnnPq.defaultK,
-      seed: Long = 4099L): DataFrame =
-    AnnTier.liveCandidates(s, dir, IvfPqTier(nlist, nprobe, m, k, seed), numProbes)
-
-  /** Pruned residual-ADC scan → top-`rerank` pool → exact-cosine re-rank
-    * → top-k; output matches every other ANN variant. */
-  def annTopK(
-      s: SparkSession,
-      dir: String,
-      numProbes: Int = 5,
-      k: Int = 5,
-      rerank: Int = 0,
-      nlist: Int = 0,
-      nprobe: Int = 0,
-      m: Int = AnnPq.defaultM,
-      kCodes: Int = AnnPq.defaultK,
-      seed: Long = 4099L): DataFrame =
-    AnnTier.liveTopK(s, dir, IvfPqTier(nlist, nprobe, m, kCodes, seed, rerank), numProbes, k)
 }
 
 /**

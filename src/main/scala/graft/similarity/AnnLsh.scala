@@ -144,7 +144,7 @@ object AnnLsh {
 
   /** [[probeSequence]] plus each bucket's total flip cost, so callers can
     * merge sequences from several tables into one global cheapest-first
-    * order (see [[LshBuckets]]'s adaptive budget allocation). */
+    * order (see [[LshBuckets]]'s occupancy-budgeted probing). */
   private[similarity] def probeSequenceWithCosts(dots: Array[Double], t: Int): Array[(Double, Int)] = {
     val planes = dots.length
     var base = 0
@@ -188,115 +188,32 @@ object AnnLsh {
     else col(c)
 
   /**
-   * Bucket-pruned, deduped, cosine-scored candidate pairs — the pool
-   * [[annTopK]] ranks, as (q_id, neighbor_id, cos). Exposed separately so
-   * tests can measure pool sizes / scan fraction by counting directly
-   * instead of ranking with a sentinel k (the top-k insert is O(k) per
-   * element, so an effectively unbounded k degrades to O(n^2) per group).
-   */
-  def candidates(
-      s: SparkSession,
-      dir: String,
-      numProbes: Int = 5,
-      numPlanes: Int = 14,
-      numTables: Int = 16,
-      probesPerTable: Int = 768,
-      seed: Long = 7919L,
-      adaptive: Boolean = false,
-      minCollisions: Int = 2,
-      poolFrac: Double = 0.0,
-      quantized: Boolean = false): DataFrame =
-    AnnTier.liveCandidates(s, dir, LshTier(numPlanes, numTables, probesPerTable, seed,
-      adaptive, minCollisions, poolFrac, quantized), numProbes)
-
-  /**
    * Diagnostic surface for the gates: the vote's INPUT (q_id, vec_id,
-   * n_hits) at the given knobs, over exactly the frames [[candidates]]
-   * joins. `sum(n_hits)` is the MULTIPLICITY pool — the rows the bucket
-   * join emits into the counting aggregate, i.e. the true id-only
+   * n_hits) of `tier`, over exactly the frames its scan joins.
+   * `sum(n_hits)` is the MULTIPLICITY pool — the rows the bucket join
+   * emits into the counting aggregate, i.e. the true id-only
    * shuffle/aggregation cost the scan fraction excludes; `count(*)` is
    * the DISTINCT pool RECALL.jsonl has always carried. Both are gated
    * (ModulesSpec) so neither can silently regress.
    */
-  def collisionStats(
-      s: SparkSession,
-      dir: String,
-      numProbes: Int = 5,
-      numPlanes: Int = 14,
-      numTables: Int = 16,
-      probesPerTable: Int = 768,
-      seed: Long = 7919L,
-      adaptive: Boolean = false,
-      poolFrac: Double = 0.0): DataFrame = {
-    val t = LshTier(numPlanes, numTables, probesPerTable, seed, adaptive, poolFrac = poolFrac)
+  def collisionStats(s: SparkSession, dir: String, tier: LshTier,
+      numProbes: Int = 5): DataFrame = {
     val emb = AnnTier.vectors(s, dir)
-    val planes = t.fit(s, dir, AnnTier.dimOf(emb))
-    val indexed = t.encode(s, planes, emb)
-    collisionCounts(t.probes(s, planes, emb, indexed, numProbes).select("q_id", "tb"), indexed)
+    val planes = tier.fit(s, dir, AnnTier.dimOf(emb))
+    val indexed = tier.encode(s, planes, emb)
+    collisionCounts(tier.probes(s, planes, emb, indexed, numProbes), indexed)
   }
 
-  /** The pre-threshold collision counts (q_id, vec_id, n_hits) — the
-    * id-only aggregation [[scoreVoted]] filters. Exposed so the gates can
-    * measure BOTH pool numbers the scan fraction excludes: sum(n_hits) is
-    * the MULTIPLICITY pool (the rows the bucket join actually emits into
-    * the counting aggregate — the true shuffle/aggregation cost at scale),
-    * count(*) the DISTINCT pool (unique candidate pairs). */
+  /** The pre-threshold collision counts (q_id, vec_id, n_hits) of probe
+    * buckets (q_id, tb) against index buckets (vec_id, tb) — the id-only
+    * aggregation [[LshTier.scan]]'s vote filters and [[collisionStats]]
+    * reports. */
   private[similarity] def collisionCounts(
       probeIds: DataFrame, indexIds: DataFrame): DataFrame =
     broadcast(probeIds)
       .join(indexIds, Seq("tb"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy("q_id", "vec_id").agg(count(lit(1)).as("n_hits"))
-
-  /**
-   * COLLISION VOTING: count bucket co-occurrences per (probe, vector)
-   * pair FIRST — ids only, no vectors through the shuffle — and score
-   * only pairs colliding in >= minCollisions probed buckets. A true
-   * neighbor multi-collides (its per-table collision probabilities
-   * compound); a background vector that stumbled into one probed
-   * bucket usually stops there, so the vote filter drops a large slice
-   * of the candidate pool while costing only the neighbors that
-   * collided exactly once. This trades a second (cheap, id-only)
-   * aggregation for fewer distance computations — the right trade
-   * whenever the vectors are wide. Vectors are rehydrated afterwards:
-   * probes from a broadcast (numProbes rows), candidates from a hash
-   * join against the corpus that scales with the filtered pool.
-   */
-  private[similarity] def scoreVoted(
-      probeIds: DataFrame,   // (q_id, tb)
-      indexIds: DataFrame,   // (vec_id, tb)
-      probeVecs: DataFrame,  // (q_id, ae)
-      corpusVecs: DataFrame, // (vec_id, be)
-      minCollisions: Int,
-      cosExpr: String = "cosine_similarity(ae, be)"): DataFrame = {
-    val hits = collisionCounts(probeIds, indexIds)
-      .filter(col("n_hits") >= minCollisions)
-    hits
-      .join(broadcast(probeVecs), Seq("q_id"))
-      .join(corpusVecs, Seq("vec_id"))
-      .selectExpr("q_id", "vec_id AS neighbor_id", s"$cosExpr AS cos")
-  }
-
-  /**
-   * Multi-table, multiprobe bucket-pruned top-k cosine neighbors for the
-   * probe vectors (vec_id < numProbes). Returns (q_id, neighbor_id,
-   * cosine, rn).
-   */
-  def annTopK(
-      s: SparkSession,
-      dir: String,
-      numProbes: Int = 5,
-      k: Int = 5,
-      numPlanes: Int = 14,
-      numTables: Int = 16,
-      probesPerTable: Int = 768,
-      seed: Long = 7919L,
-      adaptive: Boolean = false,
-      minCollisions: Int = 2,
-      poolFrac: Double = 0.0,
-      quantized: Boolean = false): DataFrame =
-    AnnTier.liveTopK(s, dir, LshTier(numPlanes, numTables, probesPerTable, seed,
-      adaptive, minCollisions, poolFrac, quantized), numProbes, k)
 }
 
 /**
@@ -315,17 +232,11 @@ final case class LshTier(
     numTables: Int = 16,
     probesPerTable: Int = 768,
     seed: Long = 7919L,
-    adaptive: Boolean = false,
     minCollisions: Int = 2,
     poolFrac: Double = 0.0,
     quantized: Boolean = false) extends AnnTier {
   import org.apache.spark.sql.graftbridge.ColumnBridge
   import org.json4s.JsonDSL._
-
-  // Fails when the tier is named, not at every later load: adaptive and
-  // budgeted probing are mutually exclusive (LshBuckets enforces the same).
-  require(!(adaptive && poolFrac > 0),
-    "LSH: adaptive and occupancy-budgeted (poolFrac > 0) probing are mutually exclusive")
 
   type Geometry = Array[Array[Double]]
 
@@ -333,8 +244,7 @@ final case class LshTier(
 
   def knobs: org.json4s.JObject =
     ("numPlanes" -> numPlanes) ~ ("numTables" -> numTables) ~
-      ("probesPerTable" -> probesPerTable) ~ ("adaptive" -> adaptive) ~
-      ("minCollisions" -> minCollisions) ~ ("poolFrac" -> poolFrac) ~ ("seed" -> seed)
+      ("probesPerTable" -> probesPerTable) ~ ("minCollisions" -> minCollisions) ~ ("poolFrac" -> poolFrac) ~ ("seed" -> seed)
 
   def fit(s: SparkSession, dir: String, dim: => Int): Geometry =
     AnnLsh.planes(numTables * numPlanes, dim, seed)
@@ -352,7 +262,7 @@ final case class LshTier(
       LshBuckets(ColumnBridge.expression(col("e")), bc, numTables, numPlanes, 1))).as("tb"))
   }
 
-  /** The probe side, (q_id, ae, tb): each table's `probesPerTable` most
+  /** The probe side, (q_id, tb): each table's `probesPerTable` most
     * probable buckets in margin order — query-time fan-out only, the
     * index is untouched. `poolFrac > 0` switches to OCCUPANCY-BUDGETED
     * probing: per-bucket occupancies come from an ids-only aggregation
@@ -378,46 +288,43 @@ final case class LshTier(
           totalAssign += r.getLong(1)
         }
         val budget = math.max(1L, math.ceil(poolFrac * (totalAssign / numTables)).toLong)
-        LshBuckets(e, bc, numTables, numPlanes, probesPerTable, adaptive,
+        LshBuckets(e, bc, numTables, numPlanes, probesPerTable,
           s.sparkContext.broadcast(counts), budget)
-      } else LshBuckets(e, bc, numTables, numPlanes, probesPerTable, adaptive)
+      } else LshBuckets(e, bc, numTables, numPlanes, probesPerTable)
     emb.filter(col("vec_id") < numProbes)
-      .select(col("vec_id").as("q_id"), AnnLsh.vecOf(s, quantized, "e").as("ae"),
-        explode(ColumnBridge.column(buckets)).as("tb"))
+      .select(col("vec_id").as("q_id"), explode(ColumnBridge.column(buckets)).as("tb"))
   }
 
-  /** probes x assignments is a bucket equi-join; candidate vectors are
-    * rehydrated from the corpus by vec_id (broadcast probes stay the small
-    * side; the rehydration scales with the candidate pool, not the
-    * corpus). `quantized` scores on TRUE int8 vectors (QuantizeVec →
-    * array<tinyint>, CosineSimilarityI8): the buckets and the vote — so
-    * the pool and every pool gate — are unchanged, only the carried
-    * vectors and the cosine kernel run 8x narrower. */
+  /**
+   * COLLISION VOTING: the probe buckets x `assignments` bucket equi-join
+   * counts co-occurrences per (probe, vector) pair FIRST — ids only, no
+   * vectors through the shuffle — and scores only pairs colliding in
+   * >= minCollisions probed buckets, each pair once. A true neighbor
+   * multi-collides (its per-table collision probabilities compound); a
+   * background vector that stumbled into one probed bucket usually stops
+   * there, so the vote drops a large slice of the candidate pool while
+   * costing only the neighbors that collided exactly once. minCollisions
+   * = 1 keeps every distinct colliding pair. Vectors are rehydrated
+   * afterwards: probes from a broadcast (numProbes rows), candidates from
+   * a hash join against the corpus that scales with the voted pool.
+   * `quantized` scores on TRUE int8 vectors (QuantizeVec →
+   * array<tinyint>, CosineSimilarityI8): the buckets and the vote — so
+   * the pool and every pool gate — are unchanged, only the carried
+   * vectors and the cosine kernel run 8x narrower.
+   */
   def scan(s: SparkSession, planes: Geometry, emb: DataFrame, assignments: DataFrame,
       numProbes: Int): DataFrame = {
-    val probed = probes(s, planes, emb, assignments, numProbes)
     val cosExpr =
       if (quantized) { graft.functions.CosineSimilarityI8.register(s)
         "cosine_similarity_i8(ae, be)" }
       else { graft.functions.CosineSimilarity.register(s)
         "cosine_similarity(ae, be)" }
-    val corpusVecs = emb.select(col("vec_id"), AnnLsh.vecOf(s, quantized, "e").as("be"))
-    if (minCollisions <= 1) {
-      // A neighbor sharing buckets in several tables/probes is joined more
-      // than once, so pairs are deduped — AFTER scoring: every duplicate
-      // scores the same pair, and the dedup exchange then shuffles
-      // (q_id, neighbor_id, cos) rows, not vectors.
-      broadcast(probed)
-        .join(assignments, Seq("tb"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .join(corpusVecs, Seq("vec_id"))
-        .selectExpr("q_id", "vec_id AS neighbor_id", s"$cosExpr AS cos")
-        .dropDuplicates("q_id", "neighbor_id")
-    } else {
-      AnnLsh.scoreVoted(probed.select("q_id", "tb"), assignments,
-        emb.filter(col("vec_id") < numProbes)
-          .select(col("vec_id").as("q_id"), AnnLsh.vecOf(s, quantized, "e").as("ae")),
-        corpusVecs, minCollisions, cosExpr)
-    }
+    val probeVecs = emb.filter(col("vec_id") < numProbes)
+      .select(col("vec_id").as("q_id"), AnnLsh.vecOf(s, quantized, "e").as("ae"))
+    AnnLsh.collisionCounts(probes(s, planes, emb, assignments, numProbes), assignments)
+      .filter(col("n_hits") >= minCollisions)
+      .join(broadcast(probeVecs), Seq("q_id"))
+      .join(emb.select(col("vec_id"), AnnLsh.vecOf(s, quantized, "e").as("be")), Seq("vec_id"))
+      .selectExpr("q_id", "vec_id AS neighbor_id", s"$cosExpr AS cos")
   }
 }

@@ -134,35 +134,6 @@ object AnnPq {
     out
   }
 
-  /** Exhaustive compressed scan: every corpus row scored by ADC lookups
-    * against each probe's broadcast LUT, as (q_id, neighbor_id, adc).
-    * This is the one ANN variant whose candidate set is ALL rows — the
-    * scale claim is bytes-per-row and ops-per-row, not pruning — so the
-    * pool is bounded by the TopKPerKey cut the caller applies, and no
-    * float column is read on this path (codes only). */
-  def compressedScan(
-      s: SparkSession,
-      dir: String,
-      numProbes: Int = 5,
-      m: Int = defaultM,
-      k: Int = defaultK,
-      seed: Long = 4099L): DataFrame =
-    AnnTier.liveCandidates(s, dir, PqTier(m, k, seed), numProbes)
-
-  /** ADC scan → top-`rerank` per probe → exact-cosine re-rank → top-k.
-    * Output matches the other ANN variants: (q_id, neighbor_id, cos, rn)
-    * ordered by (q_id, rn). */
-  def annTopK(
-      s: SparkSession,
-      dir: String,
-      numProbes: Int = 5,
-      k: Int = 5,
-      rerank: Int = 0,
-      m: Int = defaultM,
-      kCodes: Int = defaultK,
-      seed: Long = 4099L): DataFrame =
-    AnnTier.liveTopK(s, dir, PqTier(m, kCodes, seed, rerank), numProbes, k)
-
   /** The per-query ADC lookup table of `e` over codebooks `books`. */
   private[similarity] def lut(s: SparkSession, books: Array[Array[Array[Double]]]): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge

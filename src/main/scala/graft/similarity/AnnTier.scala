@@ -9,8 +9,10 @@ import org.json4s._
  * as the six parts the shared persist-and-probe core needs. Everything
  * else is written once, over this contract: [[AnnIndex]]'s build,
  * append, compact and top-k verbs (crash bracket, adds-only guard,
- * corpus fingerprint), and the live path below, which runs the SAME scan
- * over assignments encoded on the fly from a freshly fitted geometry.
+ * corpus fingerprint), and the live verbs [[AnnTier.topK]] and
+ * [[AnnTier.candidates]], which run the SAME scan over assignments
+ * encoded on the fly from a freshly fitted geometry. A tier is named one
+ * way, as a value of its case class; the case class holds its defaults.
  *
  *  1. [[method]] and [[knobs]]: the tier's fields of the metadata JSON,
  *     read back by [[AnnTier.fromMeta]];
@@ -65,11 +67,6 @@ trait AnnTier {
   def rank(s: SparkSession, scanned: DataFrame, emb: DataFrame, numProbes: Int, k: Int,
       trainedRows: => Long): DataFrame =
     AnnTier.topByCosine(scanned, k)
-
-  /** The live path's candidates: the corpus `emb` encoded against `g` on
-    * the fly, then the persisted path's scan. */
-  final def liveScan(s: SparkSession, emb: DataFrame, g: Geometry, numProbes: Int): DataFrame =
-    scan(s, g, emb, encode(s, g, emb), numProbes)
 }
 
 /** The exact re-rank the code-scored tiers share: the scan's ADC
@@ -100,17 +97,21 @@ trait AdcRerank extends AnnTier {
 
 object AnnTier {
 
-  /** The tier a persisted index's metadata records. Knobs that older
-    * LSH indexes predate read as the values those indexes ran with. */
+  /** The tier a persisted index's metadata records; every knob key is
+    * required. An `adaptive` key (indexes written before LSH's global
+    * probe merge was removed) is ignored when false and refused when true:
+    * no tier can probe that way any more. */
   def fromMeta(meta: JValue): AnnTier = {
     implicit val formats: Formats = DefaultFormats
     def int(f: String) = (meta \ f).extract[Int]
     def seed = (meta \ "seed").extract[Long]
     (meta \ "method").extract[String] match {
-      case "lsh" => LshTier(int("numPlanes"), int("numTables"), int("probesPerTable"), seed,
-        (meta \ "adaptive").extractOrElse[Boolean](false),
-        (meta \ "minCollisions").extractOrElse[Int](1),
-        (meta \ "poolFrac").extractOrElse[Double](0.0))
+      case "lsh" =>
+        require(!(meta \ "adaptive").extractOrElse[Boolean](false),
+          "LSH index metadata sets \"adaptive\": true — the adaptive probe allocation is " +
+            "gone; rebuild the 'lsh' index with AnnIndex.build")
+        LshTier(int("numPlanes"), int("numTables"), int("probesPerTable"), seed,
+          int("minCollisions"), (meta \ "poolFrac").extract[Double])
       case "ivf" => IvfTier(int("nlist"), int("nprobe"), seed)
       case "pq" => PqTier(int("m"), int("k"), seed)
       case "ivfpq" => IvfPqTier(int("nlist"), int("nprobe"), int("m"), int("k"), seed)
@@ -130,21 +131,33 @@ object AnnTier {
   private def unknown(method: String) = new IllegalArgumentException(
     s"unknown ANN index method '$method' — expected lsh, ivf, pq or ivfpq")
 
-  /** Candidates of the live `tier` over `dir`: fit on `dir`, encode, scan. */
-  private[graft] def liveCandidates(s: SparkSession, dir: String, tier: AnnTier,
-      numProbes: Int): DataFrame = {
-    val t = tier.resolve(s, dir)
-    val emb = vectors(s, dir)
-    t.liveScan(s, emb, t.fit(s, dir, dimOf(emb)), numProbes)
+  /** The candidates of `tier` over `dir`'s corpus, fit on the fly: as
+    * (q_id, neighbor_id, cos), or (q_id, neighbor_id, adc) for the
+    * code-scored tiers. The pool [[topK]] ranks, for counting pool sizes
+    * directly (ranking with a sentinel k costs O(k) per element). */
+  def candidates(s: SparkSession, dir: String, tier: AnnTier, numProbes: Int = 5): DataFrame =
+    fitScan(s, dir, tier, numProbes, dir)._3
+
+  /** The top k neighbors of each probe (vec_id < numProbes) under `tier`,
+    * fit on `dir`'s corpus on the fly: (q_id, neighbor_id, cos, rn)
+    * ordered by (q_id, rn). */
+  def topK(s: SparkSession, dir: String, tier: AnnTier, numProbes: Int = 5,
+      k: Int = 5): DataFrame = {
+    val (t, emb, scanned) = fitScan(s, dir, tier, numProbes, dir)
+    t.rank(s, scanned, emb, numProbes, k, AnnIvf.corpusCount(s, dir))
   }
 
-  /** Top-k of the live `tier` over `dir` — every `annTopK`. */
-  private[graft] def liveTopK(s: SparkSession, dir: String, tier: AnnTier, numProbes: Int,
-      k: Int): DataFrame = {
-    val t = tier.resolve(s, dir)
+  /** `tier` resolved and fit on `fitDir`'s corpus, then `dir`'s corpus
+    * encoded against that geometry on the fly and scanned: (the resolved
+    * tier, `dir`'s [[vectors]], the candidates). `fitDir` is `dir` for the
+    * live path; an older corpus gives the frozen geometry an appended
+    * index serves. */
+  private[graft] def fitScan(s: SparkSession, dir: String, tier: AnnTier, numProbes: Int,
+      fitDir: String): (AnnTier, DataFrame, DataFrame) = {
+    val t = tier.resolve(s, fitDir)
     val emb = vectors(s, dir)
-    val g = t.fit(s, dir, dimOf(emb))
-    t.rank(s, t.liveScan(s, emb, g, numProbes), emb, numProbes, k, AnnIvf.corpusCount(s, dir))
+    val g = t.fit(s, fitDir, dimOf(emb))
+    (t, emb, t.scan(s, g, emb, t.encode(s, g, emb), numProbes))
   }
 
   /** `dir`'s corpus as (vec_id, e array<double>). */

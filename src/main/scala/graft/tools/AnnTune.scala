@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.similarity.{AnnIndex, AnnIvf, AnnLsh, AnnTier, IvfPqTier, IvfTier, LshTier, PqTier}
+import graft.similarity.{AnnIndex, AnnIvf, AnnTier, IvfPqTier, IvfTier, LshTier, PqTier}
 
 /**
  * Offline knob sweep for the ANN operating point: prints mean recall@5 and
@@ -94,24 +94,31 @@ object AnnTune {
       * corpus's re-rank depth). Returns (candidates, top-k). */
     def frozen(tier: AnnTier, prefix: String)
         : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-      val t = tier.resolve(spark, prefix)
-      val emb = AnnTier.vectors(spark, dir)
-      val cands = t.liveScan(spark, emb, t.fit(spark, prefix, AnnTier.dimOf(emb)), nProbes)
+      val (t, emb, cands) = AnnTier.fitScan(spark, dir, tier, nProbes, prefix)
       (cands, t.rank(spark, cands, emb, nProbes, k, AnnIvf.corpusCount(spark, prefix)))
     }
 
+    /** `tier`'s candidates and top k on the corpus, fit on the fly. */
+    def evalTier(label: String, tier: AnnTier,
+        prevote: Option[org.apache.spark.sql.DataFrame] = None): Unit =
+      evalOne(label, AnnTier.candidates(spark, dir, tier, nProbes),
+        AnnTier.topK(spark, dir, tier, nProbes, k), prevote)
+
+    /** `tier` with its no-vote candidates as the prevote pool. */
+    def evalVoted(label: String, tier: LshTier): Unit =
+      evalTier(label, tier,
+        Some(AnnTier.candidates(spark, dir, tier.copy(minCollisions = 1), nProbes)))
+
     if (which == "lsh" || which == "both") {
-      // r7 shipped point for reference, then the grid — each point under
-      // BOTH probe-budget allocations (fixed per-table quota vs adaptive
-      // global merge), settling the r7 dominance claim by measurement.
+      // r7 shipped point for reference, then the grid under the fixed
+      // per-table quota (TUNE_r9.txt also swept a global merge of the
+      // same probe budget; it lost on both axes at every point).
       for {
         (planes, tables, probes) <- Seq((8, 5, 28)) ++ (for {
           p <- Seq(10, 12); t <- Seq(4, 6, 8); pr <- Seq(32, 48, 64, 96, 128)
         } yield (p, t, pr))
-        adaptive <- Seq(false, true)
-      } evalOne(s"lsh planes=$planes tables=$tables probes=$probes adaptive=$adaptive",
-        AnnLsh.candidates(spark, dir, nProbes, planes, tables, probes, adaptive = adaptive),
-        AnnLsh.annTopK(spark, dir, nProbes, k, planes, tables, probes, adaptive = adaptive))
+      } evalTier(s"lsh planes=$planes tables=$tables probes=$probes",
+        LshTier(planes, tables, probes))
     }
     if (which == "vote" || which == "both") {
       // Collision-voting variant: high-recall knobs + a >=minC-collision
@@ -142,11 +149,8 @@ object AnnTune {
           (14, 10, 1280, 2), (14, 12, 896, 2), (14, 14, 640, 2), (14, 14, 768, 2),
           (14, 16, 640, 2),
           (15, 12, 1536, 2), (15, 14, 1280, 2), (15, 16, 1024, 2))
-      } evalOne(s"lsh planes=$planes tables=$tables probes=$probes minC=$minC",
-        AnnLsh.candidates(spark, dir, nProbes, planes, tables, probes, minCollisions = minC),
-        AnnLsh.annTopK(spark, dir, nProbes, k, planes, tables, probes, minCollisions = minC),
-        prevote = Some(
-          AnnLsh.candidates(spark, dir, nProbes, planes, tables, probes, minCollisions = 1)))
+      } evalVoted(s"lsh planes=$planes tables=$tables probes=$probes minC=$minC",
+        LshTier(planes, tables, probes, minCollisions = minC))
     }
     if (which == "budget") {
       // Occupancy-budgeted probing (round 10): the probe side takes
@@ -172,14 +176,8 @@ object AnnTune {
           (14, 12), (14, 14))
         frac <- Seq(0.35, 0.40, 0.45, 0.55, 0.70, 0.85, 1.00, 1.20)
         minC <- Seq(2)
-      } evalOne(s"lsh planes=$planes tables=$tables budget=$frac minC=$minC",
-        AnnLsh.candidates(spark, dir, nProbes, planes, tables, 1024,
-          minCollisions = minC, poolFrac = frac),
-        AnnLsh.annTopK(spark, dir, nProbes, k, planes, tables, 1024,
-          minCollisions = minC, poolFrac = frac),
-        prevote = Some(
-          AnnLsh.candidates(spark, dir, nProbes, planes, tables, 1024,
-            minCollisions = 1, poolFrac = frac)))
+      } evalVoted(s"lsh planes=$planes tables=$tables budget=$frac minC=$minC",
+        LshTier(planes, tables, 1024, minCollisions = minC, poolFrac = frac))
     }
     if (which == "ship") {
       // Ship-point shortlist: the voted frontier's box-satisfying points,
@@ -192,11 +190,8 @@ object AnnTune {
         (planes, tables, probes, minC) <- Seq(
           (10, 10, 160, 3), (13, 14, 384, 2), (14, 12, 896, 2),
           (14, 12, 1024, 2), (13, 12, 512, 2))
-      } evalOne(s"lsh planes=$planes tables=$tables probes=$probes minC=$minC",
-        AnnLsh.candidates(spark, dir, nProbes, planes, tables, probes, minCollisions = minC),
-        AnnLsh.annTopK(spark, dir, nProbes, k, planes, tables, probes, minCollisions = minC),
-        prevote = Some(
-          AnnLsh.candidates(spark, dir, nProbes, planes, tables, probes, minCollisions = 1)))
+      } evalVoted(s"lsh planes=$planes tables=$tables probes=$probes minC=$minC",
+        LshTier(planes, tables, probes, minCollisions = minC))
     }
     if (which == "seeds") {
       // SEED-SENSITIVITY (r10 verdict: the sf0.001 gate passed 0.872 vs a
@@ -215,14 +210,8 @@ object AnnTune {
           (14, 12, 896, 2), (14, 14, 768, 2), (14, 14, 896, 2),
           (14, 16, 768, 2), (13, 14, 512, 2))
         seed <- Seq(7919L, 104729L, 1299709L, 15485863L, 32452843L)
-      } evalOne(s"lsh planes=$planes tables=$tables probes=$probes minC=$minC seed=$seed",
-        AnnLsh.candidates(spark, dir, nProbes, planes, tables, probes,
-          seed = seed, minCollisions = minC),
-        AnnLsh.annTopK(spark, dir, nProbes, k, planes, tables, probes,
-          seed = seed, minCollisions = minC),
-        prevote = Some(
-          AnnLsh.candidates(spark, dir, nProbes, planes, tables, probes,
-            seed = seed, minCollisions = 1)))
+      } evalVoted(s"lsh planes=$planes tables=$tables probes=$probes minC=$minC seed=$seed",
+        LshTier(planes, tables, probes, seed, minCollisions = minC))
     }
     if (which == "ivfseeds") {
       // IVF's analogue of the LSH seed sweep: the gated operating point
@@ -238,9 +227,7 @@ object AnnTune {
         seed <- Seq(4099L, 104729L, 1299709L, 15485863L, 32452843L)
       } {
         val np = math.max(1, rl / denom)
-        evalOne(s"ivf nlist=$rl nprobe=$np (rule /$denom) seed=$seed",
-          AnnIvf.candidates(spark, dir, nProbes, rl, np, seed = seed),
-          AnnIvf.annTopK(spark, dir, nProbes, k, rl, np, seed = seed))
+        evalTier(s"ivf nlist=$rl nprobe=$np (rule /$denom) seed=$seed", IvfTier(rl, np, seed))
       }
     }
     if (which == "ivfdrift") {
@@ -323,9 +310,7 @@ object AnnTune {
       for {
         nlist <- Seq(128, 192, 256)
         nprobe <- Seq(26, 28, 32, 40, 48)
-      } evalOne(s"ivf nlist=$nlist nprobe=$nprobe",
-        AnnIvf.candidates(spark, dir, nProbes, nlist, nprobe),
-        AnnIvf.annTopK(spark, dir, nProbes, k, nlist, nprobe))
+      } evalTier(s"ivf nlist=$nlist nprobe=$nprobe", IvfTier(nlist, nprobe))
     }
     if (which == "ivfwide") {
       // Larger-corpus IVF sweep (run with SPARK_GRAFT_SF_DIR=sf0.1): the
@@ -336,10 +321,13 @@ object AnnTune {
       for {
         nlist <- Seq(384, 512, 768)
         nprobe <- Seq(48, 64, 80, 96)
-      } evalOne(s"ivf nlist=$nlist nprobe=$nprobe",
-        AnnIvf.candidates(spark, dir, nProbes, nlist, nprobe),
-        AnnIvf.annTopK(spark, dir, nProbes, k, nlist, nprobe))
+      } evalTier(s"ivf nlist=$nlist nprobe=$nprobe", IvfTier(nlist, nprobe))
     }
+    /** A PQ-family tier's ADC pool at re-rank depth `rr` and its top k. */
+    def evalPool(label: String, tier: AnnTier, rr: Int): Unit =
+      evalOne(label, graft.plans.TopKPerKey.topK(AnnTier.candidates(spark, dir, tier, nProbes),
+        "q_id", "adc", "neighbor_id", rr, "adc", roundTo = 9),
+        AnnTier.topK(spark, dir, tier, nProbes, k))
     if (which == "pq") {
       // PQ sweep: codebook geometry (m subspaces × kc codes) × rerank
       // depth. The "scan" column here is the EXACT-distance fraction
@@ -347,28 +335,16 @@ object AnnTune {
       // by construction (that is PQ's deal: exhaustive but 8-byte rows),
       // so the number that must stay bounded is the float-rehydration
       // pool, not a pruning fraction.
-      import graft.similarity.AnnPq
       for {
         (m, kc) <- Seq((8, 16), (16, 16))
         rr <- Seq(16, 32, 64, 128)
-      } {
-        val scan = AnnPq.compressedScan(spark, dir, nProbes, m, kc)
-        val pool = graft.plans.TopKPerKey.topK(
-          scan, "q_id", "adc", "neighbor_id", rr, "adc", roundTo = 9)
-        evalOne(s"pq m=$m k=$kc rerank=$rr",
-          pool, AnnPq.annTopK(spark, dir, nProbes, k, rr, m, kc))
-      }
+      } evalPool(s"pq m=$m k=$kc rerank=$rr", PqTier(m, kc, rerank = rr), rr)
       // shipped point (m=16, k=16, rerank=n/16) across five k-means
       // initializations — the 5-seed-minimum discipline every shipped
       // ANN default follows
-      for (seed <- Seq(4099L, 17L, 293L, 7919L, 104729L)) {
-        val scan = AnnPq.compressedScan(spark, dir, nProbes, 16, 16, seed)
-        val rr = math.max(64, total / 16)
-        val pool = graft.plans.TopKPerKey.topK(
-          scan, "q_id", "adc", "neighbor_id", rr, "adc", roundTo = 9)
-        evalOne(s"pq ship m=16 k=16 rerank=$rr seed=$seed",
-          pool, AnnPq.annTopK(spark, dir, nProbes, k, 0, 16, 16, seed))
-      }
+      val rr = math.max(64, total / 16)
+      for (seed <- Seq(4099L, 17L, 293L, 7919L, 104729L))
+        evalPool(s"pq ship m=16 k=16 rerank=$rr seed=$seed", PqTier(seed = seed), rr)
     }
     if (which == "lshmix") {
       // MIXED-APPEND occupancy telemetry (r15, carried from the r12
@@ -419,7 +395,7 @@ object AnnTune {
               .map { case (id, v) => (cosineOf(qv, v), id) }
               .toSeq.sortBy { case (c, id) => (-c, id) }.take(k).map(_._2).toSet
           }.toMap
-          val cands = AnnLsh.candidates(spark, corpus, nProbes)
+          val cands = AnnTier.candidates(spark, corpus, LshTier(), nProbes)
           val scanned = cands.groupBy("q_id").count()
             .collect().map(_.getLong(1)).sum
           val frac = scanned.toDouble / (nProbes.toLong * live.size)
@@ -454,14 +430,8 @@ object AnnTune {
       // nprobe) — the grid prices what the 16-byte residual codes give
       // back vs whole-vector PQ (q130) and float-scored IVF (q49).
       // Also 5-seed minima at the shipped point (the ModulesSpec gate).
-      import graft.similarity.AnnIvfPq
-      for (rr <- Seq(0)) {
-        for (seed <- Seq(4099L, 17L, 291L, 5843L, 90001L)) {
-          val scan = AnnIvfPq.prunedScan(spark, dir, nProbes, seed = seed)
-          evalOne(s"ivfpq auto-knobs rerank=auto seed=$seed",
-            scan, AnnIvfPq.annTopK(spark, dir, nProbes, k, rr, seed = seed))
-        }
-      }
+      for (seed <- Seq(4099L, 17L, 291L, 5843L, 90001L))
+        evalTier(s"ivfpq auto-knobs rerank=auto seed=$seed", IvfPqTier(seed = seed))
     }
     if (which == "ivfpqdrift") {
       // COMPOSED frozen-geometry drift: coarse quantizer, residual

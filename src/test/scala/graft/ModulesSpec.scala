@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.{MediaMeta, Multimodal}
-import graft.similarity.AnnLsh
+import graft.similarity.{AnnLsh, AnnTier, IvfPqTier, IvfTier, LshTier, PqTier}
 import graft.streaming.{SessionEvent, StatefulSessionize}
 
 /** Unit tests for the non-oracled modules: LSH ANN, multimodal plumbing,
@@ -75,7 +75,7 @@ class ModulesSpec extends AnyFunSuite {
   }
 
   test("AnnLsh: every reported neighbor has the correct cosine and rank order") {
-    val result = AnnLsh.annTopK(spark, sf).collect()
+    val result = AnnTier.topK(spark, sf, LshTier()).collect()
     assert(result.nonEmpty)
     // load embeddings driver-side to recompute cosine exactly
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -101,8 +101,8 @@ class ModulesSpec extends AnyFunSuite {
     // Single-probe invariant: each probe scans only its own bucket per
     // table, a small fraction of the corpus (no vote, so the invariant
     // stays about bucketing alone).
-    val single = AnnLsh.candidates(spark, sf, numProbes = 5, probesPerTable = 1,
-      minCollisions = 1)
+    val single = AnnTier.candidates(spark, sf, LshTier(probesPerTable = 1, minCollisions = 1),
+      numProbes = 5)
       .groupBy("q_id").count().collect().map(_.getLong(1))
     assert(single.forall(_ < total / 4), s"single-probe pools ${single.mkString(",")} vs $total")
     // At the shipped default (fine buckets + wide multiprobe + collision
@@ -112,13 +112,13 @@ class ModulesSpec extends AnyFunSuite {
     // the scored pool far below that — measured 0.238 of the corpus on
     // average (TUNE_r11.txt); assert 0.5 per probe to leave room for
     // per-probe variance.
-    val multi = AnnLsh.candidates(spark, sf, numProbes = 5)
+    val multi = AnnTier.candidates(spark, sf, LshTier(), numProbes = 5)
       .groupBy("q_id").count().collect().map(_.getLong(1))
     assert(multi.forall(_ < total / 2), s"default-knob pools ${multi.mkString(",")} vs $total")
   }
 
   test("AnnIvf: cosines correct, ranks ordered, candidates pruned") {
-    val result = graft.similarity.AnnIvf.annTopK(spark, sf).collect()
+    val result = AnnTier.topK(spark, sf, IvfTier()).collect()
     assert(result.nonEmpty)
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS e")
@@ -137,7 +137,7 @@ class ModulesSpec extends AnyFunSuite {
     }
     // pruning: with nprobe=16 of nlist=64 lists, a probe's candidate pool is
     // a strict subset of the corpus
-    val poolSizes = graft.similarity.AnnIvf.candidates(spark, sf)
+    val poolSizes = AnnTier.candidates(spark, sf, IvfTier())
       .groupBy("q_id").count().collect().map(_.getLong(1))
     val total = spark.read.parquet(s"$sf/embeddings.parquet").count()
     assert(poolSizes.forall(_ < total), s"pools ${poolSizes.mkString(",")} vs $total")
@@ -231,10 +231,11 @@ class ModulesSpec extends AnyFunSuite {
       // Deterministic (seeded planes, fixed data), so margins cannot
       // flake.
       val nProbes = 25
-      val ann = AnnLsh.annTopK(spark, dir, numProbes = nProbes, k = 5).collect()
+      val ann = AnnTier.topK(spark, dir, LshTier(), numProbes = nProbes, k = 5).collect()
         .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
       val recall = meanRecall(dir, ann, nProbes, 5)
-      val frac = scanFraction(dir, AnnLsh.candidates(spark, dir, numProbes = nProbes), nProbes)
+      val frac = scanFraction(dir, AnnTier.candidates(spark, dir, LshTier(), numProbes = nProbes),
+        nProbes)
       // Honesty sidecars: the scan fraction above counts DISTANCE
       // COMPUTATIONS (the post-vote scored pool). The vote's input is
       // measured on BOTH axes the scan number excludes — the DISTINCT
@@ -245,7 +246,7 @@ class ModulesSpec extends AnyFunSuite {
       // costs 3 rows there, not 1). Logged AND gated so neither number is
       // hidden by the metric nor free to regress.
       val total = spark.read.parquet(s"$dir/embeddings.parquet").count()
-      val stats = AnnLsh.collisionStats(spark, dir, numProbes = nProbes)
+      val stats = AnnLsh.collisionStats(spark, dir, LshTier(), numProbes = nProbes)
         .selectExpr("count(*) AS distinct_pairs", "sum(n_hits) AS mult_rows").first()
       val prevote = stats.getLong(0).toDouble / (nProbes * total)
       val mult = stats.getLong(1).toDouble / (nProbes * total)
@@ -289,21 +290,20 @@ class ModulesSpec extends AnyFunSuite {
     for (frac <- Seq(0.2, 0.85)) {
       val bound = math.ceil(frac * total) / total
       val pool = scanFraction(sf,
-        AnnLsh.candidates(spark, sf, numProbes = nProbes, numTables = 12,
-          probesPerTable = 1024, minCollisions = 1, poolFrac = frac), nProbes)
+        AnnTier.candidates(spark, sf, LshTier(numTables = 12, probesPerTable = 1024,
+          minCollisions = 1, poolFrac = frac), numProbes = nProbes), nProbes)
       assert(pool <= bound + 1e-9,
         f"budgeted pool $pool%.3f exceeds the ceil($frac * $total)/$total = $bound%.5f bound")
     }
     // The measured operating point at (planes=14, tables=12, cap=1024,
     // budget=0.85, minC=2): recall 0.848 at scan 0.204, distinct pool
     // 0.515 (TUNE_r10.txt budget section).
-    val ann = AnnLsh.annTopK(spark, sf, numProbes = nProbes, k = 5,
-      numTables = 12, probesPerTable = 1024, poolFrac = 0.85).collect()
+    val budgeted = LshTier(numTables = 12, probesPerTable = 1024, poolFrac = 0.85)
+    val ann = AnnTier.topK(spark, sf, budgeted, numProbes = nProbes, k = 5).collect()
       .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val recall = meanRecall(sf, ann, nProbes, 5)
     val frac = scanFraction(sf,
-      AnnLsh.candidates(spark, sf, numProbes = nProbes, numTables = 12,
-        probesPerTable = 1024, poolFrac = 0.85), nProbes)
+      AnnTier.candidates(spark, sf, budgeted, numProbes = nProbes), nProbes)
     info(f"budgeted AnnLsh recall@5: $recall%.3f at scan fraction $frac%.3f")
     assert(recall >= 0.84, f"budgeted recall@5 $recall%.3f below the measured 0.848 point")
     assert(frac <= 0.21, f"budgeted scan $frac%.3f above the measured 0.204 point")
@@ -322,12 +322,12 @@ class ModulesSpec extends AnyFunSuite {
       // (256, 32 everywhere) measured 0.752 on sf0.1 — the corpus-size
       // and seed sensitivities these gates exist to catch.
       val nProbes = 25
-      val ann = graft.similarity.AnnIvf.annTopK(spark, dir, numProbes = nProbes, k = 5)
+      val ann = AnnTier.topK(spark, dir, IvfTier(), numProbes = nProbes, k = 5)
         .collect()
         .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
       val recall = meanRecall(dir, ann, nProbes, 5)
       val frac = scanFraction(dir,
-        graft.similarity.AnnIvf.candidates(spark, dir, numProbes = nProbes), nProbes)
+        AnnTier.candidates(spark, dir, IvfTier(), numProbes = nProbes), nProbes)
       info(f"AnnIvf recall@5 over $nProbes probes: $recall%.3f at scan fraction $frac%.3f")
       logRecall(dir, "ivf", recall, frac, nProbes, 5)
       assert(recall >= 0.85, f"IVF recall@5 $recall%.3f below the 0.85 floor")
@@ -346,12 +346,12 @@ class ModulesSpec extends AnyFunSuite {
       // at dim 64 the int8 width cut is free at these knobs.
       // Deterministic (seeded planes, floor arithmetic).
       val nProbes = 25
-      val ann = AnnLsh.annTopK(spark, dir, numProbes = nProbes, k = 5, quantized = true)
+      val ann = AnnTier.topK(spark, dir, LshTier(quantized = true), numProbes = nProbes, k = 5)
         .collect()
         .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
       val recall = meanRecall(dir, ann, nProbes, 5)
       val frac = scanFraction(dir,
-        AnnLsh.candidates(spark, dir, numProbes = nProbes, quantized = true), nProbes)
+        AnnTier.candidates(spark, dir, LshTier(quantized = true), numProbes = nProbes), nProbes)
       info(f"quantized AnnLsh recall@5 over $nProbes probes: $recall%.3f at scan $frac%.3f")
       logRecall(dir, "lsh_int8", recall, frac, nProbes, 5)
       assert(recall >= 0.85, f"quantized LSH recall@5 $recall%.3f below the 0.85 floor")
@@ -371,14 +371,14 @@ class ModulesSpec extends AnyFunSuite {
       // less at equal pool (0.816 vs 0.984 at rerank=64 on sf0.001),
       // which is why 16 subspaces ship. Deterministic at the gate seed.
       val nProbes = 25
-      val ann = graft.similarity.AnnPq.annTopK(spark, dir, numProbes = nProbes, k = 5)
+      val ann = AnnTier.topK(spark, dir, PqTier(), numProbes = nProbes, k = 5)
         .collect()
         .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
       val recall = meanRecall(dir, ann, nProbes, 5)
       val total = spark.read.parquet(s"$dir/embeddings.parquet").count()
       val rr = math.max(64L, total / 16L)
       val pool = graft.plans.TopKPerKey.topK(
-        graft.similarity.AnnPq.compressedScan(spark, dir, numProbes = nProbes),
+        AnnTier.candidates(spark, dir, PqTier(), numProbes = nProbes),
         "q_id", "adc", "neighbor_id", rr.toInt, "adc", roundTo = 9)
       val frac = scanFraction(dir, pool, nProbes)
       info(f"AnnPq recall@5 over $nProbes probes: $recall%.3f at exact-rerank fraction $frac%.3f")
@@ -388,7 +388,7 @@ class ModulesSpec extends AnyFunSuite {
       // the re-rank contract: REPORTED cosines are exact, never ADC
       // estimates — ADC only selects the pool
       val emb = embMap(dir)
-      val reported = graft.similarity.AnnPq.annTopK(spark, dir, numProbes = nProbes, k = 5)
+      val reported = AnnTier.topK(spark, dir, PqTier(), numProbes = nProbes, k = 5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       reported.foreach { case (q, n, cos) =>
         val truth = cosineOf(emb(q), emb(n))
@@ -409,12 +409,12 @@ class ModulesSpec extends AnyFunSuite {
       // the MLlib fit's 0.912/0.880) at scan 0.19-0.22 — so the same
       // (0.85, 0.25) box as q49 gates the composition.
       val nProbes = 25
-      val ann = graft.similarity.AnnIvfPq.annTopK(spark, dir, numProbes = nProbes, k = 5)
+      val ann = AnnTier.topK(spark, dir, IvfPqTier(), numProbes = nProbes, k = 5)
         .collect()
         .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
       val recall = meanRecall(dir, ann, nProbes, 5)
       val frac = scanFraction(dir,
-        graft.similarity.AnnIvfPq.prunedScan(spark, dir, numProbes = nProbes), nProbes)
+        AnnTier.candidates(spark, dir, IvfPqTier(), numProbes = nProbes), nProbes)
       info(f"AnnIvfPq recall@5 over $nProbes probes: $recall%.3f at scan $frac%.3f")
       logRecall(dir, "ivfpq", recall, frac, nProbes, 5)
       assert(recall >= 0.85, f"IVF-PQ recall@5 $recall%.3f below the 0.85 floor")
@@ -422,7 +422,7 @@ class ModulesSpec extends AnyFunSuite {
       // reported cosines are exact — ADC (+ the <q,c_l> term) only
       // selects the pool
       val emb = embMap(dir)
-      graft.similarity.AnnIvfPq.annTopK(spark, dir, numProbes = nProbes, k = 5)
+      AnnTier.topK(spark, dir, IvfPqTier(), numProbes = nProbes, k = 5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .foreach { case (q, n, cos) =>
           val truth = cosineOf(emb(q), emb(n))

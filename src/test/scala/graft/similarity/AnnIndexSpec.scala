@@ -43,7 +43,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("LSH: persisted index reproduces the live annTopK bit-for-bit") {
     val path = s"$root/lsh"
     AnnIndex.build(spark, sf, path, "lsh")
-    val live = rows(AnnLsh.annTopK(spark, sf, numProbes = 5, k = 5))
+    val live = rows(AnnTier.topK(spark, sf, LshTier(), numProbes = 5, k = 5))
     val loaded = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     assert(loaded == live)
   }
@@ -53,9 +53,9 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // knobs, not the library defaults — the loader reads them from
     // metadata, so a knob mismatch between writer and reader is impossible.
     val path = s"$root/lsh_alt"
-    AnnIndex.build(spark, sf, path, LshTier(numPlanes = 8, numTables = 5, probesPerTable = 28))
-    val live = rows(AnnLsh.annTopK(spark, sf, numProbes = 5, k = 5,
-      numPlanes = 8, numTables = 5, probesPerTable = 28))
+    val tier = LshTier(numPlanes = 8, numTables = 5, probesPerTable = 28)
+    AnnIndex.build(spark, sf, path, tier)
+    val live = rows(AnnTier.topK(spark, sf, tier, numProbes = 5, k = 5))
     val loaded = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     assert(loaded == live)
   }
@@ -66,9 +66,9 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // for the no-vote configuration must be queried without the vote even
     // though the library default is now the voting point.
     val path = s"$root/lsh_novote"
-    AnnIndex.build(spark, sf, path, LshTier(numTables = 6, probesPerTable = 64, minCollisions = 1))
-    val live = rows(AnnLsh.annTopK(spark, sf, numProbes = 5, k = 5,
-      numTables = 6, probesPerTable = 64, minCollisions = 1))
+    val tier = LshTier(numTables = 6, probesPerTable = 64, minCollisions = 1)
+    AnnIndex.build(spark, sf, path, tier)
+    val live = rows(AnnTier.topK(spark, sf, tier, numProbes = 5, k = 5))
     val loaded = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     assert(loaded == live)
   }
@@ -80,9 +80,9 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // from the fingerprint's corpusRows, so budgeted probing from a loaded
     // index is bit-identical to the live q60 path.
     val path = s"$root/lsh_budget"
-    AnnIndex.build(spark, sf, path, LshTier(probesPerTable = 1024, poolFrac = 0.85))
-    val live = rows(AnnLsh.annTopK(spark, sf, numProbes = 5, k = 5,
-      probesPerTable = 1024, poolFrac = 0.85))
+    val tier = LshTier(probesPerTable = 1024, poolFrac = 0.85)
+    AnnIndex.build(spark, sf, path, tier)
+    val live = rows(AnnTier.topK(spark, sf, tier, numProbes = 5, k = 5))
     val loaded = rows(AnnIndex.topK(spark, sf, path, "lsh", numProbes = 5, k = 5))
     assert(loaded == live)
   }
@@ -90,7 +90,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("IVF: persisted index reproduces the live annTopK bit-for-bit") {
     val path = s"$root/ivf"
     AnnIndex.build(spark, sf, path, "ivf")
-    val live = rows(AnnIvf.annTopK(spark, sf, numProbes = 5, k = 5))
+    val live = rows(AnnTier.topK(spark, sf, IvfTier(), numProbes = 5, k = 5))
     val loaded = rows(AnnIndex.topK(spark, sf, path, "ivf", numProbes = 5, k = 5))
     assert(loaded == live)
   }
@@ -227,7 +227,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(AnnIndex.definitelyStale(spark, sf, path))
     assert(!AnnIndex.isCurrent(spark, sf, path))
     val healed = rows(graft.SparkEntry.annPersistedTopK(spark, sf, path, "lsh"))
-    assert(healed == rows(AnnLsh.annTopK(spark, sf, numProbes = 5, k = 5)))
+    assert(healed == rows(AnnTier.topK(spark, sf, LshTier(), numProbes = 5, k = 5)))
     assert(AnnIndex.isCurrent(spark, sf, path))
     assert(!AnnIndex.definitelyStale(spark, sf, path))
     for (old <- Seq("metadata", "listing"))
@@ -462,7 +462,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("PQ: persisted index reproduces the live annTopK bit-for-bit") {
     val path = s"$root/pq"
     AnnIndex.build(spark, sf, path, "pq")
-    val live = rows(AnnPq.annTopK(spark, sf, numProbes = 5, k = 5))
+    val live = rows(AnnTier.topK(spark, sf, PqTier(), numProbes = 5, k = 5))
     val loaded = rows(AnnIndex.topK(spark, sf, path, "pq", numProbes = 5, k = 5))
     assert(loaded == live)
   }
@@ -479,7 +479,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("IVF-PQ: persisted index reproduces the live annTopK bit-for-bit") {
     val path = s"$root/ivfpq"
     AnnIndex.build(spark, sf, path, "ivfpq")
-    val live = rows(AnnIvfPq.annTopK(spark, sf, numProbes = 5, k = 5))
+    val live = rows(AnnTier.topK(spark, sf, IvfPqTier(), numProbes = 5, k = 5))
     val loaded = rows(AnnIndex.topK(spark, sf, path, "ivfpq", numProbes = 5, k = 5))
     assert(loaded == live)
   }
